@@ -202,8 +202,10 @@ def _normalize_reference_job(j: dict) -> dict:
             "version": sch.get("version", "latest"),
         }
     # HOCON dotted keys (kafka.security.protocol, delta.appendOnly) parse
-    # as nested objects; Spark option maps want them flat again — on BOTH
-    # the source and target sides, and inside transform entries
+    # as nested objects; Spark option maps want them flat again on the
+    # source and target sides. Transform entries stay nested: their
+    # mapping-valued options (winnow, fractions, ...) are mappings, and
+    # the transform registry rebuilds any dotted YAML spelling of them
     from lakehouse_ingestion_spark.hocon import flatten_keys
 
     for side in ("source", "target"):

@@ -4,8 +4,9 @@ The missing piece of incremental Gold maintenance
 (``operators/incremental.py``): count/sum/min/max merge trivially, but
 ``count_distinct`` does not — yesterday's distinct count plus today's
 cannot be added. The standard fix is to store a SKETCH per group
-instead of a number: HyperLogLog sketches union losslessly (union of
-sketches = sketch of union), so
+instead of a number: HyperLogLog sketches union without double counting
+(the union estimates the distinct count of the union within the
+sketch's error bound), so
 
 - fine-grained sketches (per nation, per day) roll up to any coarser
   grain (per region, per month) WITHOUT rescanning raw data;
@@ -48,8 +49,11 @@ def rollup_sketches(
     sketch_col: str = "sketch",
 ) -> DataFrame:
     """Union fine-grained sketches up to a coarser grouping (possibly
-    ``[]`` for a global sketch). Lossless: the result is exactly the
-    sketch that would have been built at the coarse grain directly."""
+    ``[]`` for a global sketch). Lossless in the HLL sense: values shared
+    by fine groups are not double counted, and the estimate stays within
+    the sketch's error bound of the coarse-grain distinct count. The
+    union is NOT bit-identical to the sketch built at the coarse grain
+    directly; estimates can differ by a few counts with merge order."""
     agg = F.hll_union_agg(sketch_col).alias(sketch_col)
     if to_group_by:
         return sketches.groupBy(*to_group_by).agg(agg)

@@ -33,125 +33,137 @@ from lakehouse_ingestion_spark.dq.checks import (
 )
 from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.operators import (
-    add_audit_columns,
-    aggregate,
-    cdc_apply,
-    dedup_exact,
-    dedup_latest_by_key,
-)
-from lakehouse_ingestion_spark.operators.gold import AggSpec
-from lakehouse_ingestion_spark.operators.scd import scd2_from_history
+from lakehouse_ingestion_spark.operators import add_audit_columns
+from lakehouse_ingestion_spark.registry import Registry
 from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
-from lakehouse_ingestion_spark.schema_validator import conform, validate_or_throw
+from lakehouse_ingestion_spark.schema_validator import validate_or_throw
 from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 from lakehouse_ingestion_spark.sources.base import get_reader
 from lakehouse_ingestion_spark.streaming.foreach_batch import dq_foreach_batch
 from lakehouse_ingestion_spark.streaming.manager import StreamManager
+from lakehouse_ingestion_spark.transforms import (  # noqa: F401  (public API)
+    apply_transform,
+    validate_transform_options,
+)
 
 log = logging.getLogger(__name__)
 
-_CHECK_TYPES = {
-    "not_null": lambda o: NotNullCheck(column=o["column"], failure_threshold=o.get("failure_threshold", 0.0)),
-    "range": lambda o: RangeCheck(
-        column=o["column"], min_value=o.get("min"), max_value=o.get("max"),
-        failure_threshold=o.get("failure_threshold", 0.0)),
-    "regex": lambda o: RegexCheck(
-        column=o["column"], pattern=o["pattern"], failure_threshold=o.get("failure_threshold", 0.0)),
-    "unique_key": lambda o: UniqueKeyCheck(
-        key_columns=list(o["columns"]), failure_threshold=o.get("failure_threshold", 0.0)),
-    "row_count": lambda o: RowCountCheck(min_rows=o.get("min_rows"), max_rows=o.get("max_rows")),
-    "in_set": lambda o: SetMembershipCheck(
-        column=o["column"], allowed_values=list(o["values"]),
-        failure_threshold=o.get("failure_threshold", 0.0)),
-    "freshness": lambda o: FreshnessCheck(
-        column=o["column"], max_age_hours=o.get("max_age_hours"),
-        failure_threshold=o.get("failure_threshold", 0.0)),
-    "drift": lambda o: DriftCheck(
-        column=o["column"], ref_mean=float(o["ref_mean"]),
-        ref_std=float(o["ref_std"]), max_sigmas=float(o.get("max_sigmas", 3.0)),
-        ref_null_fraction=o.get("ref_null_fraction"),
-        max_null_fraction_delta=o.get("max_null_fraction_delta")),
-}
+# DQ check types: one builder each, keyword-only parameters = spec keys
+# (registry.py); ``drift`` takes the session as context for profile_path
+CHECKS = Registry("DQ check", "type", context=("spark",))
+check = CHECKS.register
 
 
-# exact spec keys per DQ check type (r12: same load-time hardening as
-# sink/transform options — a misspelled "colunm" or "mins" must fail at
-# load naming the valid set, not silently no-op the check)
-_CHECK_OPTION_KEYS: dict[str, frozenset[str]] = {
-    k: frozenset(v) | {"type"}
-    for k, v in {
-        "not_null": {"column", "failure_threshold"},
-        "range": {"column", "min", "max", "failure_threshold"},
-        "regex": {"column", "pattern", "failure_threshold"},
-        "unique_key": {"columns", "failure_threshold"},
-        "row_count": {"min_rows", "max_rows"},
-        "in_set": {"column", "values", "failure_threshold"},
-        "freshness": {"column", "max_age_hours", "failure_threshold"},
-        "drift": {
-            "column", "ref_mean", "ref_std", "max_sigmas",
-            "ref_null_fraction", "max_null_fraction_delta",
-            "profile_path", "profile_column",
-        },
-    }.items()
-}
+@check("not_null")
+def _not_null(*, column, failure_threshold=0.0):
+    return NotNullCheck(column=column, failure_threshold=failure_threshold)
+
+
+@check("range")
+def _range(*, column, min=None, max=None, failure_threshold=0.0):  # noqa: A002
+    return RangeCheck(
+        column=column, min_value=min, max_value=max,
+        failure_threshold=failure_threshold,
+    )
+
+
+@check("regex")
+def _regex(*, column, pattern, failure_threshold=0.0):
+    return RegexCheck(
+        column=column, pattern=pattern, failure_threshold=failure_threshold
+    )
+
+
+@check("unique_key")
+def _unique_key(*, columns, failure_threshold=0.0):
+    return UniqueKeyCheck(
+        key_columns=list(columns), failure_threshold=failure_threshold
+    )
+
+
+@check("row_count")
+def _row_count(*, min_rows=None, max_rows=None):
+    return RowCountCheck(min_rows=min_rows, max_rows=max_rows)
+
+
+@check("in_set")
+def _in_set(*, column, values, failure_threshold=0.0):
+    return SetMembershipCheck(
+        column=column, allowed_values=list(values),
+        failure_threshold=failure_threshold,
+    )
+
+
+@check("freshness")
+def _freshness(*, column, max_age_hours=None, failure_threshold=0.0):
+    return FreshnessCheck(
+        column=column, max_age_hours=max_age_hours,
+        failure_threshold=failure_threshold,
+    )
+
+
+@check("drift")
+def _drift(
+    spark, *, column, ref_mean=None, ref_std=None, max_sigmas=3.0,
+    ref_null_fraction=None, max_null_fraction_delta=None, profile_path=None,
+    profile_column=None,
+):
+    """Reference moments are explicit, or come from a STORED profile
+    (the ``operators/profile.numeric_profile`` output at
+    ``profile_path``) so the gate deploys without hand-carried
+    constants; the stored null_fraction is used unless overridden."""
+    if profile_path is not None:
+        if ref_mean is not None or ref_std is not None:
+            raise ConfigError(
+                "drift check: give profile_path OR explicit ref_mean/ref_std,"
+                " not both"
+            )
+        if spark is None:
+            raise ConfigError(
+                "drift check with profile_path needs a SparkSession "
+                "(build_ruleset(..., spark=...))"
+            )
+        col = column if profile_column is None else profile_column
+        rows = {
+            r["col_name"]: r for r in spark.read.parquet(profile_path).collect()
+        }
+        if col not in rows:
+            raise ConfigError(
+                f"profile at {profile_path!r} has no row for column {col!r} "
+                f"(profiled: {sorted(rows)})"
+            )
+        r = rows[col]
+        if r["mean"] is None or r["std"] is None:
+            raise ConfigError(
+                f"profile row for {col!r} has no mean/std (empty or all-null"
+                " reference slice) — cannot gate drift against it"
+            )
+        ref_mean, ref_std = r["mean"], r["std"]
+        if ref_null_fraction is None and r["null_fraction"] is not None:
+            ref_null_fraction = float(r["null_fraction"])
+    elif ref_mean is None or ref_std is None:
+        raise ConfigError(
+            "drift check requires ref_mean and ref_std, or profile_path"
+        )
+    return DriftCheck(
+        column=column, ref_mean=float(ref_mean), ref_std=float(ref_std),
+        max_sigmas=float(max_sigmas), ref_null_fraction=ref_null_fraction,
+        max_null_fraction_delta=max_null_fraction_delta,
+    )
+
+
+def _check_options(spec: dict) -> dict:
+    return {k: v for k, v in spec.items() if k != "type"}
 
 
 def validate_check_spec(spec: dict) -> None:
     """Load-time schema check for one DQ check spec dict."""
-    kind = spec.get("type")
-    allowed = _CHECK_OPTION_KEYS.get(kind)
-    if allowed is None:
-        raise ConfigError(
-            f"unknown DQ check type: {kind!r}; known types: "
-            f"{sorted(_CHECK_OPTION_KEYS)}"
-        )
-    unknown = sorted(k for k in spec if k not in allowed)
-    if unknown:
-        raise ConfigError(
-            f"unknown key(s) {unknown} for DQ check '{kind}'; valid keys: "
-            f"{sorted(allowed)}"
-        )
+    CHECKS.bind(spec.get("type"), _check_options(spec))
 
 
-def _resolve_drift_spec(spec: dict, spark) -> dict:
-    """Fill a drift check's reference moments from a STORED profile
-    (the ``operators/profile.numeric_profile`` output at
-    ``profile_path``) so the gate deploys without hand-carried
-    constants. Explicit ref_mean/ref_std in the spec win; the stored
-    null_fraction is used unless overridden."""
-    path = spec.get("profile_path")
-    if path is None:
-        return spec
-    if "ref_mean" in spec or "ref_std" in spec:
-        raise ConfigError(
-            "drift check: give profile_path OR explicit ref_mean/ref_std,"
-            " not both"
-        )
-    if spark is None:
-        raise ConfigError(
-            "drift check with profile_path needs a SparkSession "
-            "(build_ruleset(..., spark=...))"
-        )
-    col = spec.get("profile_column", spec["column"])
-    rows = {
-        r["col_name"]: r for r in spark.read.parquet(path).collect()
-    }
-    if col not in rows:
-        raise ConfigError(
-            f"profile at {path!r} has no row for column {col!r} "
-            f"(profiled: {sorted(rows)})"
-        )
-    r = rows[col]
-    if r["mean"] is None or r["std"] is None:
-        raise ConfigError(
-            f"profile row for {col!r} has no mean/std (empty or all-null"
-            " reference slice) — cannot gate drift against it"
-        )
-    out = dict(spec, ref_mean=float(r["mean"]), ref_std=float(r["std"]))
-    if "ref_null_fraction" not in out and r["null_fraction"] is not None:
-        out["ref_null_fraction"] = float(r["null_fraction"])
-    return out
+def build_check(spec: dict, spark=None):
+    """One DQ check from its spec (``type`` plus that type's keys)."""
+    return CHECKS.call(spec.get("type"), _check_options(spec), spark=spark)
 
 
 def build_ruleset(job: JobConfig, schema, spark=None) -> DQRuleSet:
@@ -161,905 +173,8 @@ def build_ruleset(job: JobConfig, schema, spark=None) -> DQRuleSet:
         return DQRuleSet([])
     if dq.derive_from_schema and schema is not None:
         checks.extend(checks_from_schema(schema, failure_threshold=dq.failure_threshold))
-    for spec in dq.checks:
-        kind = spec.get("type")
-        if kind not in _CHECK_TYPES:
-            raise ConfigError(f"unknown DQ check type: {kind}")
-        if kind == "drift":
-            spec = _resolve_drift_spec(spec, spark)
-        checks.append(_CHECK_TYPES[kind](spec))
+    checks.extend(build_check(spec, spark) for spec in dq.checks)
     return DQRuleSet(checks)
-
-
-def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """Parquet frame, or None when the path does not exist yet (the
-    bootstrap run of a stateful stage)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
-        return None
-
-
-def _maintained_reps(df: DataFrame, pairs: DataFrame, o: dict) -> DataFrame | None:
-    """When the stage declares ``labels_path``, fold this run's pairs
-    into the persisted connected-components label table
-    (``operators/graph.incremental_components`` — batch-sized CC, no
-    history rescan), write the state back, and return the (node, rep)
-    frame. None when the stage is not label-maintaining (each run pays
-    a full CC over its pair set)."""
-    labels_path = o.get("labels_path")
-    if labels_path is None:
-        return None
-    from lakehouse_ingestion_spark.operators.graph import (
-        incremental_components,
-    )
-    from lakehouse_ingestion_spark.streaming.curation import current_labels
-
-    a_col = o.get("a_col", "doc_a")
-    b_col = o.get("b_col", "doc_b")
-    prev = _read_parquet_if_exists(df.sparkSession, labels_path)
-    if prev is not None:
-        # a streaming curation sink maintains the same state as an
-        # epoch-partitioned delta log — resolve to current rows first
-        # (the flat overwrite below converts the layout back; the
-        # stream re-adopts it via its one-time migration)
-        prev = current_labels(prev)
-    labels = incremental_components(prev, pairs, a_col, b_col)
-    # pin before the state overwrite: the updated-label plan READS
-    # labels_path when prev is set
-    labels = labels.localCheckpoint(eager=True)
-    labels.write.mode("overwrite").parquet(labels_path)
-    return labels.select("node", F.col("cluster_id").alias("rep"))
-
-
-def _pairs_frame(df: DataFrame, o: dict) -> DataFrame:
-    """Resolve a near-dup pair frame (doc_a, doc_b) for cluster-aware
-    stages: a precomputed table at ``pairs_path`` (columns
-    ``a_col``/``b_col``, default doc_a/doc_b — the output of any dedup
-    query), computed in-line from ``near_dup: {text_col, threshold,
-    n, mode}`` via the exact prefix-filter Jaccard join, or from
-    ``winnow: {text_col, k, w, min_shared, max_postings}`` via MOSS
-    winnowing fingerprints (operators/winnow.py) — the shared-SPAN
-    pair source (copied passages, boilerplate) where Jaccard is the
-    bag-of-shingles one."""
-    a_col = o.get("a_col", "doc_a")
-    b_col = o.get("b_col", "doc_b")
-    if "pairs_path" in o:
-        pairs = df.sparkSession.read.parquet(o["pairs_path"])
-        for c in (a_col, b_col):
-            if c not in pairs.columns:
-                raise ConfigError(f"pairs frame lacks column {c!r}")
-        return pairs.select(a_col, b_col)
-    if "near_dup" in o:
-        from lakehouse_ingestion_spark.operators.jaccard import jaccard_join
-
-        nd = o["near_dup"]
-        return jaccard_join(
-            df,
-            o.get("id_col", "doc_id"),
-            nd.get("text_col", "text"),
-            n=int(nd.get("n", 3)),
-            mode=nd.get("mode", "word"),
-            threshold=float(nd["threshold"]),
-        ).select(F.col("id_a").alias(a_col), F.col("id_b").alias(b_col))
-    if "winnow" in o:
-        from lakehouse_ingestion_spark.operators.winnow import (
-            winnow_fingerprints,
-            winnow_overlap,
-        )
-
-        wn = o["winnow"]
-        fps = winnow_fingerprints(
-            df.select(o.get("id_col", "doc_id"), wn.get("text_col", "text")),
-            text_col=wn.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            k=int(wn.get("k", 8)),
-            w=int(wn.get("w", 16)),
-        )
-        return winnow_overlap(
-            fps,
-            id_col=o.get("id_col", "doc_id"),
-            min_shared=int(wn.get("min_shared", 2)),
-            max_postings=int(wn.get("max_postings", 50)),
-        ).select(F.col("a").alias(a_col), F.col("b").alias(b_col))
-    raise ConfigError(
-        "cluster-aware stage requires 'pairs_path', 'near_dup' or 'winnow'"
-    )
-
-
-# Exact option keys each transform op consumes — the load-time schema
-# behind validate_transform_options (r11 verdict task #5).  Every
-# apply_transform branch has a row; a new op MUST add one or its configs
-# are rejected at load.  Keys listed in _TRANSFORM_MAPPING_KEYS may also
-# arrive dotted-flattened ("near_dup.threshold") from HOCON configs.
-_CLUSTER_STAGE_KEYS = {
-    "id_col", "rep_col", "a_col", "b_col", "pairs_path", "near_dup",
-    "winnow", "labels_path",
-}
-TRANSFORM_OPTION_KEYS: dict[str, frozenset[str]] = {
-    k: frozenset(v)
-    for k, v in {
-        "conform": {"drop_extra"},
-        "dedup": {
-            "priorities", "source_col", "text_col", "id_col", "hash_fn",
-            "default_priority", "provenance", "order_by", "keys",
-        },
-        "cdc_apply": {"keys", "order_by", "op_column"},
-        "scd2": {"keys", "ts_column", "attr_columns", "tiebreakers"},
-        "aggregate": {"aggs", "group_by"},
-        "enrich": {
-            "dim_path", "dim_table", "on", "how", "select", "broadcast",
-            "prefix",
-        },
-        "quality_filter": {
-            "min_tokens", "max_tokens", "min_mean_token_len",
-            "max_mean_token_len", "min_distinct_ratio", "min_alpha_ratio",
-            "stopwords", "text_col", "keep_only",
-        },
-        "repetition_signals": {"text_col"},
-        "hash_sample": {"key", "fraction", "seed"},
-        "hash_split": {"key", "fractions", "seed", "split_col"},
-        "numeric_profile": {"columns"},
-        "cluster_reps": _CLUSTER_STAGE_KEYS,
-        "near_dup_drop": _CLUSTER_STAGE_KEYS,
-        "leakage_safe_split": _CLUSTER_STAGE_KEYS
-        | {
-            "split_col", "seed", "fractions", "assignments_path",
-            "audit_path", "conflict_action",
-        },
-        "stratified_sample": {
-            "strata", "fractions", "key", "seed", "default_fraction",
-        },
-        "group_cap": {"group", "key", "cap", "order_by"},
-        "chunk": {"chunk_size", "stride", "id_col", "text_col", "keep"},
-        "redact_pii": {"text_col", "rules"},
-        "zscore_outliers": {"group_by", "value", "z", "min_group_count"},
-        "funnel": {"user", "ts", "step", "steps"},
-        "retention": {"user", "ts", "period_days"},
-        "weighted_sample": {"key", "weight", "expected_n", "seed"},
-        "frequent_items": {"item", "min_share"},
-        "quantile_sketch": {"group_by", "value", "compression", "quantiles"},
-        "scrub_text": {"text_col", "out_col", "count_cols"},
-        "line_dedup": {"text_col", "id_col", "max_occurrences", "drop_blank"},
-        "lm_perplexity": {"text_col", "id_col", "k"},
-        "semantic_dedup": {
-            "id_col", "vec_col", "threshold", "n_bits", "keep_only",
-        },
-        "dup_stats": {"text_col", "id_col", "k", "min_occurrences"},
-        "compress_filter": {"min_ratio", "text_col", "min_chars", "keep_only"},
-        "ngram_novelty": {"text_col", "id_col", "k"},
-        "html_extract": {
-            "output_col", "html_col", "line_filter", "min_line_chars",
-            "require_punct",
-        },
-        "token_budget_select": {
-            "score_col", "cost_col", "budget", "key_col", "cum_col",
-        },
-        "semantic_decontaminate": {
-            "eval_path", "id_col", "vec_col", "threshold", "max_eval",
-            "drop_contaminated",
-        },
-        "bm25_search": {
-            "queries", "k", "id_col", "text_col", "k1", "b",
-            "max_query_terms",
-        },
-        "contamination_report": {
-            "eval_path", "text_col", "id_col", "eval_id_col", "n",
-            "threshold",
-        },
-        "event_window_dedup": {"keys", "ts_col", "min_gap_seconds", "tiebreak"},
-        "bpe_tokenize": {
-            "num_merges", "text_col", "lowercase", "min_freq", "max_words",
-            "id_col",
-        },
-        "top_p_select": {"strata_col", "score_col", "p", "key_col", "cum_col"},
-        "stratified_budget_select": {
-            "strata_col", "score_col", "cost_col", "budgets", "key_col",
-            "default_budget", "cum_col",
-        },
-        "robust_scale": {
-            "value", "group_by", "p_lo", "p_hi", "scaled_col", "ndigits",
-        },
-        "cms_build": {"item", "group_by", "depth", "width", "weight"},
-        "entity_resolve": {
-            "id_col", "name_col", "max_edit_distance", "max_block",
-            "cluster_col",
-        },
-        "derive_column": {"name", "expr"},
-        "filter": {"predicate"},
-        "select": {"exprs"},
-        "sql": {"view", "query"},
-    }.items()
-}
-
-# mapping-valued options that HOCON loading may flatten to dotted keys
-_TRANSFORM_MAPPING_KEYS = (
-    "priorities", "fractions", "near_dup", "winnow", "budgets", "queries",
-)
-
-
-def validate_transform_options(op: str, options: dict) -> None:
-    """Load-time option-schema check for transform stages: unknown op or
-    unknown option key -> ConfigError naming the valid set, BEFORE any
-    Spark work (r11 verdict task #5 — silent option fall-through selected
-    wrong behavior once; never again)."""
-    allowed = TRANSFORM_OPTION_KEYS.get(op)
-    if allowed is None:
-        raise ConfigError(
-            f"unknown transform op: {op!r}; known ops: "
-            f"{sorted(TRANSFORM_OPTION_KEYS)}"
-        )
-    unknown = sorted(
-        k
-        for k in options
-        if k not in allowed
-        and not any(
-            k.startswith(p + ".")
-            for p in _TRANSFORM_MAPPING_KEYS
-            if p in allowed
-        )
-    )
-    if unknown:
-        raise ConfigError(
-            f"unknown option(s) {unknown} for transform '{op}'; valid keys: "
-            f"{sorted(allowed)}"
-        )
-
-
-def _reconstitute_mappings(op: str, o: dict) -> dict:
-    """Rebuild mapping-valued options that config loading flattened to
-    dotted keys (``winnow: {k: 5}`` arriving as ``winnow.k: 5``) — the
-    transform-side twin of ``sinks/budget._mapping_option``. Without
-    this, a dotted mapping PASSES load-time validation (dotted prefixes
-    are declared legal for these keys) but the dispatch below would
-    never see the mapping and fall through to the wrong branch — the
-    exact silent-wrong-behavior class the r11 sink bug exposed."""
-    allowed = TRANSFORM_OPTION_KEYS.get(op, frozenset())
-    out = dict(o)
-    for key in _TRANSFORM_MAPPING_KEYS:
-        if key not in allowed or key in out:
-            continue
-        pref = key + "."
-        sub = {k[len(pref):]: v for k, v in o.items() if k.startswith(pref)}
-        if sub:
-            out = {k: v for k, v in out.items() if not k.startswith(pref)}
-            out[key] = sub
-    return out
-
-
-def apply_transform(df: DataFrame, op: str, o: dict, schema=None) -> DataFrame:
-    """Config-driven transform dispatch (the reference's declared-only
-    ``TransformFn`` hook, ``docs/00-architecture-overview.md:344-355``,
-    made real)."""
-    o = _reconstitute_mappings(op, o)
-    if op == "conform":
-        # type normalization (SURVEY D13) against the job's registry schema
-        if schema is None:
-            raise ConfigError("conform transform requires the job to declare a schema")
-        return conform(df, schema, drop_extra=bool(o.get("drop_extra", False)))
-    if op == "dedup":
-        if "priorities" in o:
-            # cross-source canonicalization: highest-priority source
-            # wins per content fingerprint, provenance attached
-            from lakehouse_ingestion_spark.operators.dedup import (
-                dedup_by_priority,
-            )
-
-            return dedup_by_priority(
-                df,
-                {str(k): int(v) for k, v in dict(o["priorities"]).items()},
-                source_col=o.get("source_col", "source"),
-                text_col=o.get("text_col", "text"),
-                id_col=o.get("id_col", "doc_id"),
-                hash_fn=o.get("hash_fn", "xxhash64"),
-                default_priority=int(o.get("default_priority", 0)),
-                provenance=bool(o.get("provenance", True)),
-            )
-        if "order_by" in o:
-            return dedup_latest_by_key(
-                df, list(o["keys"]), [F.col(c).desc() for c in o["order_by"]]
-            )
-        return dedup_exact(df, o.get("keys"))
-    if op == "cdc_apply":
-        return cdc_apply(
-            df, list(o["keys"]), [F.col(c).desc() for c in o["order_by"]],
-            op_column=o.get("op_column", "op"),
-        )
-    if op == "scd2":
-        return scd2_from_history(
-            df, list(o["keys"]), o["ts_column"], o.get("attr_columns"),
-            tiebreakers=o.get("tiebreakers"),
-        )
-    if op == "aggregate":
-        aggs = [AggSpec(a["func"], a["column"], a.get("alias")) for a in o["aggs"]]
-        return aggregate(df, list(o["group_by"]), aggs)
-    if op == "enrich":
-        from lakehouse_ingestion_spark.operators.enrich import Enrichment, enrich
-
-        spark = df.sparkSession
-        if "dim_path" in o:
-            dim = spark.read.parquet(o["dim_path"])
-        elif "dim_table" in o:
-            dim = spark.table(o["dim_table"])
-        else:
-            raise ConfigError("enrich transform requires 'dim_path' or 'dim_table'")
-        on = [tuple(p) if isinstance(p, (list, tuple)) else p for p in o["on"]]
-        return enrich(
-            df,
-            Enrichment(
-                dim,
-                on=on,
-                how=o.get("how", "left"),
-                select=o.get("select"),
-                broadcast=bool(o.get("broadcast", True)),
-                prefix=o.get("prefix", ""),
-            ),
-        )
-    if op == "quality_filter":
-        # C4/Gopher curation chain (operators/quality.py); keep_only=True
-        # drops failing docs, else rows carry failed_rules/keep columns
-        from lakehouse_ingestion_spark.operators.quality import (
-            apply_quality_rules,
-            default_quality_rules,
-        )
-
-        kwargs = {
-            k: o[k]
-            for k in (
-                "min_tokens", "max_tokens", "min_mean_token_len",
-                "max_mean_token_len", "min_distinct_ratio", "min_alpha_ratio",
-                "stopwords",
-            )
-            if k in o
-        }
-        out = apply_quality_rules(
-            df, default_quality_rules(**kwargs), text_col=o.get("text_col", "text")
-        )
-        if o.get("keep_only", False):
-            return out.filter(F.col("keep")).drop("failed_rules", "keep")
-        return out
-    if op == "repetition_signals":
-        from lakehouse_ingestion_spark.operators.repetition import (
-            repetition_signals,
-        )
-
-        return repetition_signals(df, o.get("text_col", "text"))
-    if op == "hash_sample":
-        from lakehouse_ingestion_spark.operators.sampling import hash_sample
-
-        return hash_sample(
-            df, o["key"], float(o["fraction"]), seed=o.get("seed", "sample")
-        )
-    if op == "hash_split":
-        from lakehouse_ingestion_spark.operators.sampling import hash_split
-
-        return hash_split(
-            df, o["key"], dict(o["fractions"]),
-            seed=o.get("seed", "split"), split_col=o.get("split_col", "split"),
-        )
-    if op == "numeric_profile":
-        # replace the frame with its reference drift profile — write it
-        # through the job's target, then point later jobs' drift checks
-        # at it via profile_path (operators/profile.numeric_profile)
-        from lakehouse_ingestion_spark.operators.profile import numeric_profile
-
-        return numeric_profile(df, o.get("columns"))
-    if op == "cluster_reps":
-        # attach each row's near-dup cluster representative (own id for
-        # singletons) — the curation building block under
-        # leakage_safe_split, exposed on its own for rep-keyed ops.
-        # With `labels_path`, the label table is MAINTAINED
-        # incrementally (operators/graph.incremental_components): this
-        # run's pairs fold into the persisted state by rep contraction,
-        # so the iterative CC never re-scans history.
-        from lakehouse_ingestion_spark.operators.split_guard import cluster_reps
-
-        id_col = o.get("id_col", "doc_id")
-        rep_col = o.get("rep_col", "rep")
-        a_col = o.get("a_col", "doc_a")
-        b_col = o.get("b_col", "doc_b")
-        pairs = _pairs_frame(df, o)
-        reps = _maintained_reps(df, pairs, o)
-        if reps is None:
-            reps = cluster_reps(pairs, a_col, b_col)
-        reps = reps.withColumnRenamed("rep", "__rep")
-        return (
-            df.join(reps, df[id_col] == reps["node"], "left")
-            .drop("node")
-            .withColumn(rep_col, F.coalesce(F.col("__rep"), F.col(id_col)))
-            .drop("__rep")
-        )
-    if op == "near_dup_drop":
-        # fuzzy dedup from config: keep exactly ONE document per
-        # near-dup cluster (the representative = min id; singletons
-        # keep themselves). Pairs via pairs_path or inline exact
-        # Jaccard; with labels_path the cluster state is maintained
-        # incrementally like the other cluster-aware stages — note the
-        # rep can MOVE to a later-arriving smaller id across epochs,
-        # so multi-epoch keep-FIRST semantics belong to
-        # streaming/near_dup (index-maintaining), not this stage.
-        from lakehouse_ingestion_spark.operators.split_guard import cluster_reps
-
-        id_col = o.get("id_col", "doc_id")
-        pairs = _pairs_frame(df, o)
-        reps = _maintained_reps(df, pairs, o)
-        if reps is None:
-            reps = cluster_reps(
-                pairs, o.get("a_col", "doc_a"), o.get("b_col", "doc_b")
-            )
-        dropped = reps.filter(F.col("node") != F.col("rep")).select("node")
-        return df.join(dropped, df[id_col] == dropped["node"], "left_anti")
-    if op == "leakage_safe_split":
-        # near-dup clusters never straddle splits; with
-        # `assignments_path` the assignment is STICKY across runs
-        # (first assignment wins, merges audited — split_guard module
-        # docstring) and the state/audit tables are maintained here
-        from lakehouse_ingestion_spark.operators.split_guard import (
-            leakage_safe_split,
-            sticky_split,
-        )
-
-        id_col = o.get("id_col", "doc_id")
-        split_col = o.get("split_col", "split")
-        kwargs = dict(
-            id_col=id_col,
-            seed=o.get("seed", "split"),
-            split_col=split_col,
-            rep_col=o.get("rep_col", "rep"),
-        )
-        pairs = _pairs_frame(df, o)
-        fractions = dict(o["fractions"])
-        # optional incremental label maintenance (labels_path): reps
-        # come from the persisted CC state folded with this run's
-        # pairs, so the per-epoch cost is batch-sized
-        reps = _maintained_reps(df, pairs, o)
-        state_path = o.get("assignments_path")
-        if state_path is None:
-            if "audit_path" in o:
-                raise ConfigError(
-                    "audit_path requires assignments_path (sticky mode)"
-                )
-            return leakage_safe_split(df, pairs, fractions, reps=reps, **kwargs)
-        from lakehouse_ingestion_spark.operators.split_guard import (
-            apply_conflict_policy,
-        )
-        from lakehouse_ingestion_spark.streaming.curation import (
-            current_assignments,
-        )
-
-        prev = _read_parquet_if_exists(df.sparkSession, state_path)
-        if prev is not None:
-            # streaming-maintained state is an epoch delta log with
-            # re-keyed rows — resolve to one current row per doc
-            prev = current_assignments(prev, id_col, split_col)
-        out, audit = sticky_split(
-            df, pairs, fractions, assignments=prev, reps=reps, **kwargs
-        )
-        action = o.get("conflict_action", "report")
-        if action != "report":
-            # quarantine_eval persists its forced splits (below), so
-            # conflicted clusters converge out of eval; drop_cluster
-            # withholds members from the OUTPUT but the pre-drop frame
-            # still drives the state write, keeping them deterministic
-            audit = audit.localCheckpoint(eager=True)
-        if action == "quarantine_eval":
-            out = apply_conflict_policy(
-                out, audit, action, fractions,
-                split_col=split_col, rep_col=kwargs["rep_col"],
-            )
-        # pin before the state overwrite below: `out`'s plan READS
-        # state_path when prev is set — overwriting what a lazy plan
-        # still reads would corrupt the result (see PLANS.md lazy
-        # read-after-write note)
-        out = out.localCheckpoint(eager=True)
-        if "audit_path" in o:
-            # the audit is a LOG of leakage events — append, never
-            # clobber prior runs' rows (r8 ADVICE)
-            audit.write.mode("append").parquet(o["audit_path"])
-        # stickiness must survive partial-corpus runs: assigned docs
-        # absent from df keep their rows (r8 ADVICE — the plain
-        # overwrite silently discarded them, so reappearing docs were
-        # re-split by majority/hash with no audit)
-        new_state = out.select(id_col, split_col)
-        if prev is not None:
-            kept = prev.select(id_col, split_col).join(
-                out.select(id_col), id_col, "left_anti"
-            ).localCheckpoint(eager=True)  # reads state_path: pin pre-overwrite
-            new_state = new_state.unionByName(kept)
-        new_state.write.mode("overwrite").parquet(state_path)
-        if action == "drop_cluster":
-            out = apply_conflict_policy(
-                out, audit, action, fractions,
-                split_col=split_col, rep_col=kwargs["rep_col"],
-            )
-        return out
-    if op == "stratified_sample":
-        from lakehouse_ingestion_spark.operators.sampling import stratified_sample
-
-        return stratified_sample(
-            df, o["strata"], dict(o["fractions"]), o["key"],
-            seed=o.get("seed", "sample"),
-            default_fraction=float(o.get("default_fraction", 0.0)),
-        )
-    if op == "group_cap":
-        from lakehouse_ingestion_spark.operators.sampling import group_cap
-
-        return group_cap(
-            df, o["group"], o["key"], int(o["cap"]), order_by=o.get("order_by")
-        )
-    if op == "chunk":
-        from lakehouse_ingestion_spark.operators.chunking import chunk_documents
-
-        return chunk_documents(
-            df,
-            chunk_size=int(o.get("chunk_size", 512)),
-            stride=int(o.get("stride", o.get("chunk_size", 512))),
-            id_col=o.get("id_col", "doc_id"),
-            text_col=o.get("text_col", "text"),
-            keep_cols=o.get("keep"),
-        )
-    if op == "redact_pii":
-        from lakehouse_ingestion_spark.functions.text import redact_pii
-
-        c = o.get("text_col", "text")
-        return df.withColumn(c, redact_pii(F.col(c), rules=o.get("rules")))
-    if op == "zscore_outliers":
-        from lakehouse_ingestion_spark.operators.anomaly import zscore_outliers
-
-        return zscore_outliers(
-            df, list(o["group_by"]), o["value"],
-            z=float(o.get("z", 3.0)),
-            min_group_count=int(o.get("min_group_count", 2)),
-        )
-    if op == "funnel":
-        from lakehouse_ingestion_spark.operators.funnel import funnel_counts
-
-        return funnel_counts(
-            df, o["user"], o["ts"], o["step"], list(o["steps"])
-        )
-    if op == "retention":
-        from lakehouse_ingestion_spark.operators.funnel import retention
-
-        return retention(
-            df, o["user"], o["ts"], period_days=int(o.get("period_days", 7))
-        )
-    if op == "weighted_sample":
-        from lakehouse_ingestion_spark.operators.sampling import weighted_sample
-
-        return weighted_sample(
-            df, o["key"], o["weight"], float(o["expected_n"]),
-            seed=o.get("seed", "wsample"),
-        )
-    if op == "frequent_items":
-        from lakehouse_ingestion_spark.operators.frequent import frequent_items
-
-        return frequent_items(
-            df, o["item"], min_share=float(o.get("min_share", 0.001))
-        )
-    if op == "quantile_sketch":
-        from lakehouse_ingestion_spark.operators.sketches import (
-            digest_quantile,
-            quantile_sketches,
-        )
-
-        dig = quantile_sketches(
-            df, list(o["group_by"]), o["value"],
-            compression=int(o.get("compression", 400)),
-        )
-        qs_list = [float(q) for q in o.get("quantiles", [0.5, 0.95])]
-        cols = [
-            digest_quantile(q).alias(f"p{str(q).replace('0.', '')}")
-            for q in qs_list
-        ]
-        return dig.select(*o["group_by"], F.col("td_n").alias("n"), *cols)
-    if op == "scrub_text":
-        # richer typed PII scrub (email/card/ssn/phone/ip) with optional
-        # per-pattern audit counts; `redact_pii` above is the light form
-        from lakehouse_ingestion_spark.operators.pii import scrub_text
-
-        return scrub_text(
-            df,
-            text_col=o.get("text_col", "text"),
-            out_col=o.get("out_col"),
-            count_cols=bool(o.get("count_cols", True)),
-        )
-    if op == "line_dedup":
-        from lakehouse_ingestion_spark.operators.linededup import dedup_lines
-
-        return dedup_lines(
-            df,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            max_occurrences=int(o.get("max_occurrences", 1)),
-            drop_blank=bool(o.get("drop_blank", True)),
-        )
-    if op == "lm_perplexity":
-        # self-scoring: train the bigram LM on this frame and attach
-        # bits_per_token (CCNet-style LM filtering signal)
-        from lakehouse_ingestion_spark.operators.lm_score import (
-            self_score_perplexity,
-        )
-
-        return self_score_perplexity(
-            df,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            k=float(o.get("k", 1.0)),
-        )
-    if op == "semantic_dedup":
-        from lakehouse_ingestion_spark.operators.semdedup import semantic_dedup
-
-        out = semantic_dedup(
-            df,
-            id_col=o.get("id_col", "doc_id"),
-            vec_col=o.get("vec_col", "embedding"),
-            threshold=float(o.get("threshold", 0.95)),
-            n_bits=int(o.get("n_bits", 8)),
-        )
-        if o.get("keep_only", False):
-            return out.filter(F.col("keep")).drop("keep")
-        return out
-    if op == "dup_stats":
-        from lakehouse_ingestion_spark.operators.substr_dedup import dup_stats
-
-        return dup_stats(
-            df,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            k=int(o.get("k", 8)),
-            min_occurrences=int(o.get("min_occurrences", 2)),
-        )
-    if op == "compress_filter":
-        from lakehouse_ingestion_spark.operators.compressibility import (
-            compressibility_filter,
-        )
-
-        out = compressibility_filter(
-            df,
-            min_ratio=float(o.get("min_ratio", 0.15)),
-            text_col=o.get("text_col", "text"),
-            min_chars=int(o.get("min_chars", 64)),
-        )
-        if o.get("keep_only", False):
-            return out.filter(F.col("keep_compress")).drop("keep_compress")
-        return out
-    if op == "ngram_novelty":
-        from lakehouse_ingestion_spark.operators.substr_dedup import (
-            ngram_novelty,
-        )
-
-        return ngram_novelty(
-            df,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            k=int(o.get("k", 8)),
-        )
-    if op == "html_extract":
-        # raw-crawl markup -> text, pure codegen (functions/extraction.py);
-        # the optional C4-style line filter drops nav/footer boilerplate
-        from lakehouse_ingestion_spark.functions.extraction import (
-            boilerplate_line_filter,
-            html_to_text,
-        )
-
-        out_col = o.get("output_col", "text")
-        extracted = html_to_text(o.get("html_col", "html"))
-        if o.get("line_filter", False):
-            tmp = "__extracted"
-            df = df.withColumn(tmp, extracted)
-            return df.withColumn(
-                out_col,
-                boilerplate_line_filter(
-                    tmp,
-                    min_chars=int(o.get("min_line_chars", 30)),
-                    require_punct=bool(o.get("require_punct", True)),
-                ),
-            ).drop(tmp)
-        return df.withColumn(out_col, extracted)
-    if op == "token_budget_select":
-        # budget-bounded corpus selection (operators/selection.py) — the
-        # distributed prefix sum; keeps the prefix of (score DESC, key)
-        # whose running cost stays within `budget`
-        from lakehouse_ingestion_spark.operators.selection import (
-            token_budget_select,
-        )
-
-        return token_budget_select(
-            df,
-            score_col=o["score_col"],
-            cost_col=o["cost_col"],
-            budget=int(o["budget"]),
-            key_col=o.get("key_col", "doc_id"),
-            cum_col=o.get("cum_col", "cum_cost"),
-        )
-    if op == "semantic_decontaminate":
-        # embedding-side train/eval screen: eval set read from parquet
-        # (small by contract — the operator gates with max_eval)
-        from lakehouse_ingestion_spark.operators.semantic_decon import (
-            semantic_decontaminate,
-        )
-
-        ev = df.sparkSession.read.parquet(o["eval_path"])
-        out = semantic_decontaminate(
-            df,
-            ev,
-            id_col=o.get("id_col", "vec_id"),
-            vec_col=o.get("vec_col", "embedding"),
-            threshold=float(o.get("threshold", 0.9)),
-            max_eval=int(o.get("max_eval", 200_000)),
-        )
-        if o.get("drop_contaminated", False):
-            return out.filter(~F.col("contaminated"))
-        return out
-    if op == "bm25_search":
-        # multi-query BM25 top-k retrieval; `queries` is a config-sized
-        # mapping query_id -> query text (one corpus pass for the set)
-        from lakehouse_ingestion_spark.operators.retrieval import bm25_search
-
-        qmap = o["queries"]
-        q_df = df.sparkSession.createDataFrame(
-            [(int(k), str(v)) for k, v in dict(qmap).items()],
-            "query_id long, query string",
-        )
-        return bm25_search(
-            df,
-            q_df,
-            k=int(o.get("k", 10)),
-            id_col=o.get("id_col", "doc_id"),
-            text_col=o.get("text_col", "text"),
-            k1=float(o.get("k1", 1.2)),
-            b=float(o.get("b", 0.75)),
-            max_query_terms=int(o.get("max_query_terms", 100_000)),
-        )
-    if op == "contamination_report":
-        # per-eval-example contamination audit; eval set read from
-        # parquet (small by contract — the n-gram frame broadcasts)
-        from lakehouse_ingestion_spark.operators.decontaminate import (
-            contamination_report,
-        )
-
-        ev = df.sparkSession.read.parquet(o["eval_path"])
-        return contamination_report(
-            df,
-            ev,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            eval_id_col=o.get("eval_id_col", "eval_id"),
-            n=int(o.get("n", 3)),
-            threshold=int(o.get("threshold", 2)),
-        )
-    if op == "event_window_dedup":
-        # time-window event dedup: drop same-key repeats within the gap
-        from lakehouse_ingestion_spark.operators.dedup import (
-            event_window_dedup,
-        )
-
-        return event_window_dedup(
-            df,
-            list(o["keys"]),
-            o.get("ts_col", "ts"),
-            int(o["min_gap_seconds"]),
-            tiebreak=list(o.get("tiebreak", []) or []) or None,
-        )
-    if op == "bpe_tokenize":
-        # train-then-encode in one declarative stage: merges come from
-        # the corpus word histogram (one agg), encoding is map-only
-        from lakehouse_ingestion_spark.operators.bpe import (
-            bpe_encode,
-            bpe_train,
-        )
-
-        merges = bpe_train(
-            df,
-            num_merges=int(o["num_merges"]),
-            text_col=o.get("text_col", "text"),
-            lowercase=bool(o.get("lowercase", True)),
-            min_freq=int(o.get("min_freq", 1)),
-            max_words=int(o.get("max_words", 1_000_000)),
-        )
-        return bpe_encode(
-            df,
-            merges,
-            text_col=o.get("text_col", "text"),
-            id_col=o.get("id_col", "doc_id"),
-            lowercase=bool(o.get("lowercase", True)),
-        )
-    if op == "top_p_select":
-        # nucleus selection: keep each stratum's best rows covering
-        # fraction p of its score mass (share-based budget sibling)
-        from lakehouse_ingestion_spark.operators.selection import (
-            top_p_select,
-        )
-
-        return top_p_select(
-            df,
-            strata_col=o["strata_col"],
-            score_col=o["score_col"],
-            p=float(o["p"]),
-            key_col=o.get("key_col", "doc_id"),
-            cum_col=o.get("cum_col", "cum_score"),
-        )
-    if op == "stratified_budget_select":
-        # per-stratum budgets ("fill each domain's token quota") —
-        # `budgets` is a config mapping stratum -> budget, or one int
-        from lakehouse_ingestion_spark.operators.selection import (
-            stratified_budget_select,
-        )
-
-        b = o["budgets"]
-        return stratified_budget_select(
-            df,
-            strata_col=o["strata_col"],
-            score_col=o["score_col"],
-            cost_col=o["cost_col"],
-            budgets=dict(b) if isinstance(b, dict) else int(b),
-            key_col=o.get("key_col", "doc_id"),
-            default_budget=int(o.get("default_budget", 0)),
-            cum_col=o.get("cum_col", "cum_cost"),
-        )
-    if op == "robust_scale":
-        # winsorized min-max feature normalization (operators/stats.py)
-        from lakehouse_ingestion_spark.operators.stats import robust_scale
-
-        nd = o.get("ndigits", 6)
-        return robust_scale(
-            df,
-            o["value"],
-            list(o.get("group_by", [])) or None,
-            p_lo=float(o.get("p_lo", 0.05)),
-            p_hi=float(o.get("p_hi", 0.95)),
-            scaled_col=o.get("scaled_col", "scaled"),
-            ndigits=None if nd is None else int(nd),
-        )
-    if op == "cms_build":
-        # replace the frame with its count-min counter state table —
-        # the numeric_profile pattern: write it through the job's
-        # target, merge later deltas with cms_merge (groupBy-sum)
-        from lakehouse_ingestion_spark.operators.cms import cms_build
-
-        return cms_build(
-            df,
-            o["item"],
-            group_cols=list(o.get("group_by", [])),
-            depth=int(o.get("depth", 4)),
-            width=int(o.get("width", 4096)),
-            weight_col=o.get("weight"),
-        )
-    if op == "entity_resolve":
-        # attach the ER cluster id (operators/er.py) to every row
-        from lakehouse_ingestion_spark.operators.er import resolve_entities
-
-        id_col = o["id_col"]
-        clusters = resolve_entities(
-            df.select(id_col, o["name_col"]),
-            id_col,
-            o["name_col"],
-            max_edit_distance=int(o.get("max_edit_distance", 1)),
-            max_block=int(o.get("max_block", 100)),
-        ).select(id_col, F.col("cluster").alias("__cluster"))
-        return (
-            df.join(clusters, id_col, "left")
-            .withColumn(
-                o.get("cluster_col", "cluster"),
-                F.coalesce(F.col("__cluster"), F.col(id_col)),
-            )
-            .drop("__cluster")
-        )
-    if op == "derive_column":
-        return df.withColumn(o["name"], F.expr(o["expr"]))
-    if op == "filter":
-        return df.filter(o["predicate"])
-    if op == "select":
-        return df.selectExpr(*o["exprs"])
-    if op == "sql":
-        view = o.get("view", "src")
-        df.createOrReplaceTempView(view)
-        return df.sparkSession.sql(o["query"])
-    raise ConfigError(f"unknown transform op: {op}")
 
 
 @dataclass

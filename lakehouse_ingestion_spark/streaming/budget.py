@@ -85,6 +85,11 @@ def spent(spark: SparkSession, ledger_path: str) -> int:
     return int(row["s"] or 0)
 
 
+def _check_budget(budget: int, name: str = "budget") -> None:
+    if int(budget) < 0:
+        raise ConfigError(f"{name} must be >= 0, got {budget}")
+
+
 def admit_epoch(
     batch_df: DataFrame,
     epoch_id: int,
@@ -101,6 +106,7 @@ def admit_epoch(
         token_budget_select,
     )
 
+    _check_budget(budget)
     spark = batch_df.sparkSession
     led = _read_ledger(spark, ledger_path, LEDGER_SCHEMA)
     already = 0
@@ -175,8 +181,7 @@ def budget_admit_foreach_batch(
     cum_col: str = "cum_cost",
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function for a budget-admission sink."""
-    if budget < 0:
-        raise ConfigError(f"budget must be >= 0, got {budget}")
+    _check_budget(budget)
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
         admit_epoch(
@@ -260,6 +265,12 @@ def admit_epoch_stratified(
         stratified_budget_select,
     )
 
+    if isinstance(budgets, dict):
+        if any(int(b) < 0 for b in budgets.values()):
+            raise ConfigError("all stratum budgets must be >= 0")
+    else:
+        _check_budget(budgets)
+    _check_budget(default_budget, "default_budget")
     spark = batch_df.sparkSession
     led = _read_ledger(spark, ledger_path, STRATIFIED_LEDGER_SCHEMA)
     spent_map: dict[str | None, int] = {}
@@ -361,44 +372,6 @@ def admit_epoch_stratified(
     spark.createDataFrame(ledger_rows, STRATIFIED_LEDGER_SCHEMA).write.mode(
         "append"
     ).parquet(ledger_path)
-
-
-def stratified_budget_admit_foreach_batch(
-    out_path: str,
-    ledger_path: str,
-    strata_col: str,
-    score_col: str,
-    cost_col: str,
-    budgets: dict | int,
-    key_col: str,
-    default_budget: int = 0,
-    cum_col: str = "cum_cost",
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for a stratified admission sink."""
-    if isinstance(budgets, dict):
-        if any(int(b) < 0 for b in budgets.values()):
-            raise ConfigError("all stratum budgets must be >= 0")
-    elif int(budgets) < 0:
-        raise ConfigError(f"budget must be >= 0, got {budgets}")
-    if default_budget < 0:
-        raise ConfigError(f"default_budget must be >= 0, got {default_budget}")
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        admit_epoch_stratified(
-            batch_df,
-            int(epoch_id),
-            out_path,
-            ledger_path,
-            strata_col,
-            score_col,
-            cost_col,
-            budgets,
-            key_col,
-            default_budget=default_budget,
-            cum_col=cum_col,
-        )
-
-    return _fn
 
 
 # --------------------------------------------------------------------------
@@ -760,37 +733,3 @@ def admit_epoch_share_stratified(
     spark.createDataFrame(ledger_rows, SHARE_STRAT_LEDGER_SCHEMA).write.mode(
         "append"
     ).parquet(ledger_path)
-
-
-def share_admit_stratified_foreach_batch(
-    out_path: str,
-    ledger_path: str,
-    strata_col: str,
-    score_col: str,
-    p: float | dict,
-    key_col: str,
-    default_p: float = 0.0,
-    cum_col: str = "cum_score",
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for per-stratum share admission."""
-    if isinstance(p, dict):
-        if any(not 0 < float(v) <= 1 for v in p.values()):
-            raise ConfigError("all stratum p values must be in (0, 1]")
-    elif not 0 < float(p) <= 1:
-        raise ConfigError(f"p must be in (0, 1], got {p}")
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        admit_epoch_share_stratified(
-            batch_df,
-            int(epoch_id),
-            out_path,
-            ledger_path,
-            strata_col,
-            score_col,
-            p,
-            key_col,
-            default_p=default_p,
-            cum_col=cum_col,
-        )
-
-    return _fn

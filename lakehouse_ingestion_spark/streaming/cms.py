@@ -138,30 +138,3 @@ def cms_epoch(
         [(int(epoch_id), int(dict(obs.get)["cnt_sum"]))],
         "epoch long, cnt_sum long",
     ).write.mode("append").parquet(ledger_path)
-
-
-def cms_foreach_batch(
-    counters_path: str,
-    ledger_path: str,
-    item_col: str,
-    group_cols: list[str] | None = None,
-    depth: int = 4,
-    width: int = 4096,
-    weight_col: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for a count-min maintainer sink."""
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        cms_epoch(
-            batch_df,
-            int(epoch_id),
-            counters_path,
-            ledger_path,
-            item_col,
-            group_cols=group_cols,
-            depth=depth,
-            width=width,
-            weight_col=weight_col,
-        )
-
-    return _fn

@@ -26,8 +26,6 @@ rewrites).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -173,35 +171,3 @@ def contamination_epoch(
         [(int(epoch_id), int(metrics["dirty"]), int(metrics["hits"]))],
         "epoch long, batch_dirty long, batch_hits long",
     ).write.mode("append").parquet(ledger_path)
-
-
-def contamination_foreach_batch(
-    eval_path: str,
-    report_path: str,
-    ledger_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_id_col: str = "eval_id",
-    n: int = 3,
-    threshold: int = 2,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for a contamination-audit sink.
-    The eval set re-reads per trigger (small by contract) so eval
-    updates land without a stream restart."""
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        ev = batch_df.sparkSession.read.parquet(eval_path)
-        contamination_epoch(
-            batch_df,
-            int(epoch_id),
-            ev,
-            report_path,
-            ledger_path,
-            text_col=text_col,
-            id_col=id_col,
-            eval_id_col=eval_id_col,
-            n=n,
-            threshold=threshold,
-        )
-
-    return _fn

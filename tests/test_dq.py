@@ -214,10 +214,10 @@ def test_drift_check(spark):
 
 
 def test_drift_check_config_factory():
-    from lakehouse_ingestion_spark.pipeline import _CHECK_TYPES
+    from lakehouse_ingestion_spark.pipeline import build_check
 
-    chk = _CHECK_TYPES["drift"](
-        {"column": "amount", "ref_mean": 120.5, "ref_std": 10,
+    chk = build_check(
+        {"type": "drift", "column": "amount", "ref_mean": 120.5, "ref_std": 10,
          "max_sigmas": 2, "ref_null_fraction": 0.1,
          "max_null_fraction_delta": 0.05}
     )

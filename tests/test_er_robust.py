@@ -182,8 +182,8 @@ def test_new_transform_option_schemas():
 def test_dotted_mapping_options_reconstituted(spark):
     """YAML/HOCON-flattened mapping options (winnow.k: 5) must select
     the SAME behavior as the nested form — the transform-side twin of
-    the r11 sink mapping bug, fixed at dispatch by
-    pipeline._reconstitute_mappings."""
+    the r11 sink mapping bug, fixed by the normalize step that
+    validation and dispatch share (registry.Registry.bind)."""
     from lakehouse_ingestion_spark.pipeline import apply_transform
 
     base = "the winnowing algorithm selects minimum hashes from windows"

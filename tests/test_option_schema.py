@@ -10,6 +10,8 @@ run correctly.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import lakehouse_ingestion_spark.sinks  # noqa: F401  (registers writers)
@@ -228,3 +230,77 @@ def test_parse_config_rejects_bad_check_spec_at_load():
     }
     with pytest.raises(ConfigError, match="job 'j'.*mins"):
         parse_config(raw)
+
+
+def test_transform_required_key_rejected_at_load():
+    # hash_sample has no default fraction: a spec without one must fail
+    # at load naming the key, not with a KeyError mid-run
+    with pytest.raises(ConfigError, match="fraction") as ei:
+        validate_transform_options("hash_sample", {"key": "doc_id"})
+    assert "missing" in str(ei.value)
+
+
+def test_near_dup_drop_rejects_rep_col():
+    # near_dup_drop drops rows; it never writes a representative column,
+    # so rep_col would be silently ignored
+    with pytest.raises(ConfigError, match="rep_col"):
+        validate_transform_options("near_dup_drop", {"rep_col": "r"})
+    validate_transform_options("cluster_reps", {"rep_col": "r"})
+
+
+# --- shipped configs --------------------------------------------------------
+
+_CONFIGS = Path(__file__).resolve().parent.parent / "configs"
+
+# config file -> {job name: op chain}
+_SHIPPED_OPS = {
+    "cdc-stream.conf": {"music_school_cdc": []},
+    "cdc-stream.yaml": {"cdc-bronze": []},
+    "corpus-audit.yaml": {
+        "eval-contamination-report": ["contamination_report"],
+        "retrieval-probe": ["bm25_search"],
+    },
+    "curate-split-export.yaml": {
+        "curate-split-export": [
+            "quality_filter", "leakage_safe_split", "derive_column",
+            "stratified_budget_select",
+        ],
+    },
+    "curation-docs.yaml": {
+        "curate-documents": [
+            "quality_filter", "compress_filter", "line_dedup", "scrub_text",
+            "lm_perplexity", "repetition_signals", "group_cap", "hash_split",
+            "chunk",
+        ],
+    },
+    "export-train.yaml": {
+        "export-train-shards": [
+            "html_extract", "dedup", "derive_column", "derive_column",
+            "token_budget_select",
+        ],
+    },
+    "fanout-stream.yaml": {"clickstream-fanout": []},
+    "payments-batch.yaml": {"payments-bronze": ["derive_column"]},
+    "share-admit-stream.yaml": {"share-admit-docs": []},
+}
+
+
+def test_shipped_configs_all_listed():
+    shipped = {
+        p.name for p in _CONFIGS.iterdir() if p.suffix in (".yaml", ".yml", ".conf")
+    }
+    assert shipped == set(_SHIPPED_OPS)
+
+
+@pytest.mark.parametrize("name", sorted(_SHIPPED_OPS))
+def test_shipped_config_loads(name):
+    """Every shipped config passes load-time validation (writer, transform
+    and DQ option schemas, schema refs) with its declared op chain."""
+    from lakehouse_ingestion_spark.config import load_config
+    from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
+
+    registry = SchemaRegistry(_CONFIGS.parent / "schemas_registry")
+    cfg = load_config(_CONFIGS / name, registry)
+    assert {j.name: [t.op for t in j.transforms] for j in cfg.jobs} == (
+        _SHIPPED_OPS[name]
+    )

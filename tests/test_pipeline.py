@@ -675,6 +675,118 @@ def test_apply_transform_round5_ops(spark):
         assert 15.0 <= p50 <= 35.0  # median of 0..49-ish values
 
 
+def _op_frame(spark):
+    """12 change events over 4 keys: insert/update/delete ops, daily
+    timestamps, two strata and three users."""
+    import datetime as _dt
+
+    t0 = _dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            i,
+            i % 4,
+            "ab"[i % 2],
+            f"u{i % 3}",
+            t0 + _dt.timedelta(days=i),
+            "d" if i == 11 else ("u" if i > 3 else "c"),
+            float(i * i % 7),
+        )
+        for i in range(12)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "id long, k long, g string, user string, ts timestamp, op string, v double",
+    )
+
+
+def _direct_cdc_apply(df):
+    from pyspark.sql import functions as F
+
+    from lakehouse_ingestion_spark.operators.cdc import cdc_apply
+
+    return cdc_apply(df, ["k"], [F.col("ts").desc()], op_column="op")
+
+
+def _direct_scd2(df):
+    from lakehouse_ingestion_spark.operators.scd import scd2_from_history
+
+    return scd2_from_history(df, ["k"], "ts", ["v"])
+
+
+def _direct_retention(df):
+    from lakehouse_ingestion_spark.operators.funnel import retention
+
+    return retention(df, "user", "ts", period_days=3)
+
+
+def _direct_stratified_sample(df):
+    from lakehouse_ingestion_spark.operators.sampling import stratified_sample
+
+    return stratified_sample(df, "g", {"a": 0.5}, "id", default_fraction=1.0)
+
+
+def _direct_zscore_outliers(df):
+    from lakehouse_ingestion_spark.operators.anomaly import zscore_outliers
+
+    return zscore_outliers(df, ["g"], "v", z=1.0, min_group_count=3)
+
+
+def _direct_sql(df):
+    df.createOrReplaceTempView("direct_src")
+    return df.sparkSession.sql(
+        "SELECT g, count(*) AS n, sum(v) AS s FROM direct_src GROUP BY g"
+    )
+
+
+# op -> (config options, the same call made on the operator directly)
+_OP_CASES = {
+    "cdc_apply": (
+        {"keys": ["k"], "order_by": ["ts"], "op_column": "op"},
+        _direct_cdc_apply,
+    ),
+    "scd2": (
+        {"keys": ["k"], "ts_column": "ts", "attr_columns": ["v"]},
+        _direct_scd2,
+    ),
+    "retention": (
+        {"user": "user", "ts": "ts", "period_days": 3}, _direct_retention,
+    ),
+    "stratified_sample": (
+        {"strata": "g", "fractions": {"a": 0.5}, "key": "id",
+         "default_fraction": 1.0},
+        _direct_stratified_sample,
+    ),
+    "zscore_outliers": (
+        {"group_by": ["g"], "value": "v", "z": 1.0, "min_group_count": 3},
+        _direct_zscore_outliers,
+    ),
+    "select": (
+        {"exprs": ["id", "v * 2 AS v2", "upper(g) AS g"]},
+        lambda df: df.selectExpr("id", "v * 2 AS v2", "upper(g) AS g"),
+    ),
+    "sql": (
+        {"view": "op_src",
+         "query": "SELECT g, count(*) AS n, sum(v) AS s FROM op_src GROUP BY g"},
+        _direct_sql,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_OP_CASES))
+def test_apply_transform_matches_operator(spark, op):
+    """Config dispatch of each op returns exactly what the underlying
+    operator returns when called directly with the same arguments."""
+    from lakehouse_ingestion_spark.pipeline import apply_transform
+
+    options, direct = _OP_CASES[op]
+    df = _op_frame(spark)
+    got = apply_transform(df, op, options)
+    want = direct(df)
+    assert got.columns == want.columns
+    assert got.count() > 0
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
 def test_apply_transform_curation_ops(spark):
     """Config-driven dispatch of the round-5 curation operators:
     scrub_text, line_dedup, lm_perplexity, semantic_dedup, dup_stats,

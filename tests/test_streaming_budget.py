@@ -366,6 +366,37 @@ def test_stratified_sink_batch_mode(spark, tmp_path):
         )
 
 
+@pytest.mark.parametrize(
+    "quota,match",
+    [
+        ({"budget": -1}, "budget must be >= 0"),
+        ({"strata_col": "dom", "budget": -1}, "budget must be >= 0"),
+        ({"strata_col": "dom", "budgets": {"wiki": 30, "web": -1}},
+         "stratum budgets must be >= 0"),
+        ({"strata_col": "dom", "budgets": {"wiki": 30}, "default_budget": -1},
+         "default_budget must be >= 0"),
+    ],
+)
+def test_budget_sink_rejects_negative_quota(spark, tmp_path, quota, match):
+    """A negative quota through the sink raises instead of silently
+    admitting nothing, and writes neither output nor ledger."""
+    from lakehouse_ingestion_spark.errors import ConfigError
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
+
+    out = tmp_path / "neg_out"
+    ledger = tmp_path / "neg_ledger"
+    opts = WriteOptions(
+        path=str(out),
+        options={"ledger_path": str(ledger), "score_col": "score",
+                 "cost_col": "n_tokens", "key_col": "doc_id", **quota},
+    )
+    with pytest.raises(ConfigError, match=match):
+        get_writer("budget_admit").write_batch(
+            _sbatch(spark, [(1, "wiki", 9, 30), (2, "web", 8, 30)]), opts
+        )
+    assert not out.exists() and not ledger.exists()
+
+
 # --------------------------------------------------------------------------
 # Mass-share (top-p) admission — streaming/budget.admit_epoch_share
 # --------------------------------------------------------------------------
