@@ -261,19 +261,10 @@ class Pipeline:
 
     # -- helpers ------------------------------------------------------------
     def _write_options(self, job: JobConfig) -> WriteOptions:
-        o = dict(job.target.options)
-        return WriteOptions(
-            path=o.pop("path", None),
-            table=o.pop("table", None),
-            mode=o.pop("mode", "append"),
-            partition_by=list(o.pop("partition_by", []) or []),
-            checkpoint_location=o.pop(
-                "checkpoint_location",
-                f"/tmp/checkpoints/{job.layer}/{job.name}",  # reference default shape
-            ),
-            trigger_interval=o.pop("trigger_interval", "30 seconds"),
-            output_mode=o.pop("output_mode", "append"),
-            options=o,
+        return WriteOptions.from_target(
+            job.target.options,
+            # reference default shape
+            checkpoint_location=f"/tmp/checkpoints/{job.layer}/{job.name}",
         )
 
     def _quarantine_writer(self, job: JobConfig):
@@ -287,17 +278,21 @@ class Pipeline:
         return _write
 
     def _run_streaming(self, job, df, schema, ruleset, policy, writer, opts) -> JobResult:
+        if opts.mode == "overwrite":
+            raise ConfigError(
+                f"job '{job.name}': a streaming job cannot write with "
+                "mode: overwrite (each micro-batch would replace the last);"
+                " use mode: append"
+            )
+
         def sink(batch: DataFrame, epoch: int) -> None:
             if schema is not None:
                 validate_or_throw(
                     batch, schema, context=f"job={job.name} epoch={epoch}"
                 )
-            if hasattr(writer, "write_epoch_batch"):
-                # epoch-aware writers (sinks/fanout.py) key idempotent
-                # per-epoch writes off the stream's batch id
-                writer.write_epoch_batch(batch, opts, epoch)
-            else:
-                writer.write_batch(batch, opts)
+            # epoch-keyed sinks (fanout, budget_admit, ...) key idempotent
+            # per-epoch writes off the stream's batch id
+            writer.write_epoch_batch(batch, opts, epoch)
 
         if ruleset.checks:
             q_writer = self._quarantine_writer(job)

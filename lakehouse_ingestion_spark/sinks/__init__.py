@@ -1,10 +1,14 @@
-from lakehouse_ingestion_spark.sinks.base import BaseWriter, get_writer  # noqa: F401
-from lakehouse_ingestion_spark.sinks.parquet import ParquetWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.delta import DeltaWriter, DELTA_AVAILABLE  # noqa: F401
-from lakehouse_ingestion_spark.sinks.iceberg import IcebergWriter, iceberg_available  # noqa: F401
-from lakehouse_ingestion_spark.sinks.fanout import FanoutWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.curation import StickySplitWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.ann_index import AnnIndexWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.export import ShardExportWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.budget import BudgetAdmitWriter  # noqa: F401
-from lakehouse_ingestion_spark.sinks.contamination import ContaminationAuditWriter  # noqa: F401
+from lakehouse_ingestion_spark.sinks.base import SINKS, WriteOptions, get_writer  # noqa: F401
+
+# importing a sink module registers its format builders in SINKS
+from lakehouse_ingestion_spark.sinks import (  # noqa: F401
+    ann_index,
+    budget,
+    contamination,
+    curation,
+    export,
+    fanout,
+    parquet,
+)
+from lakehouse_ingestion_spark.sinks.delta import DELTA_AVAILABLE, merge_upsert  # noqa: F401
+from lakehouse_ingestion_spark.sinks.iceberg import iceberg_available  # noqa: F401

@@ -9,8 +9,8 @@ partition-pruned serving (``streaming/ann_index.search_index``):
 ```yaml
 target:
   format: ann_index
-  path: /data/ann/index                 # index_dir (state root)
   options:
+    path: /data/ann/index               # index_dir (state root)
     centroids_path: /data/ann/seeds     # parquet (cid long, cv array<double>)
     id_col: vec_id                      # default
     vec_col: v                          # default
@@ -28,63 +28,26 @@ retrain-at-commit-point).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.sinks.base import (
-    BaseWriter,
-    WriteOptions,
-    register_writer,
-)
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-def _build_fn(df: DataFrame, opts: WriteOptions):
+@sink("ann_index")
+@sink("ivf_index")
+def _ann_index(
+    df, opts, epoch, *, centroids_path, id_col="vec_id", vec_col="v",
+    retrain_every=None, dim=None, retrain_iterations=1,
+):
     from lakehouse_ingestion_spark.streaming.ann_index import (
         ann_index_foreach_batch,
     )
 
-    o = opts.options
-    index_dir = opts.target
-    if not index_dir:
-        raise ConfigError("ann_index target needs a path (the index dir)")
-    cent_path = o.get("centroids_path")
-    if not cent_path:
-        raise ConfigError("ann_index target needs options.centroids_path")
-    seeds = df.sparkSession.read.parquet(cent_path).select("cid", "cv")
-    return ann_index_foreach_batch(
-        index_dir,
+    seeds = df.sparkSession.read.parquet(centroids_path).select("cid", "cv")
+    ann_index_foreach_batch(
+        opts.target,
         seeds,
-        id_col=o.get("id_col", "vec_id"),
-        vec_col=o.get("vec_col", "v"),
-        retrain_every=(
-            int(o["retrain_every"]) if "retrain_every" in o else None
-        ),
-        dim=int(o["dim"]) if "dim" in o else None,
-        retrain_iterations=int(o.get("retrain_iterations", 1)),
-    )
-
-
-@register_writer("ann_index")
-class AnnIndexWriter(BaseWriter):
-    aliases = ["ivf_index"]
-    option_keys = frozenset(
-        {
-            "centroids_path", "id_col", "vec_col", "retrain_every",
-            "dim", "retrain_iterations", "run_epoch",
-        }
-    )
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        _build_fn(df, opts)(df, int(opts.options.get("run_epoch", 0)))
-
-    def write_epoch_batch(
-        self, df: DataFrame, opts: WriteOptions, epoch_id: int
-    ) -> None:
-        """Per-micro-batch entry used by the streaming pipeline."""
-        _build_fn(df, opts)(df, epoch_id)
-
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        raise ConfigError(
-            "ann_index is driven per micro-batch via foreachBatch; use"
-            " a streaming job (source streaming), not writeStream"
-        )
+        id_col=id_col,
+        vec_col=vec_col,
+        retrain_every=None if retrain_every is None else int(retrain_every),
+        dim=None if dim is None else int(dim),
+        retrain_iterations=int(retrain_iterations),
+    )(df, epoch)

@@ -1,106 +1,65 @@
-"""Writer abstraction + registry.
+"""Sink registry: one builder per target format.
 
 Parity with reference writer dispatch (``core/IngestionRunner.scala:
 98-116``: parquet/s3-parquet | iceberg | delta/deltalake) and the write
 surface of ``io/S3ParquetWriter.scala`` / ``lakehouse/DeltaLakeWriter
 .scala`` / ``lakehouse/IcebergAppendWriter.scala``: batch append/
-overwrite, streaming append with checkpoint + processing-time trigger,
-optional partition columns.
+overwrite, optional partition columns.
+
+Each format is ONE ``@sink`` builder (``registry.py``): its keyword-only
+parameters are the format's own option keys, and its positional
+parameters name the context it needs — ``df``, ``opts`` (the
+:class:`WriteOptions`), ``epoch`` and ``force``. The open-surface sinks
+(parquet/delta/iceberg) take ``**options`` and forward them to Spark.
+An alias is one more stacked ``@sink`` line.
+
+Streaming jobs never reach a ``writeStream`` sink: the pipeline drives
+every format per micro-batch through ``foreachBatch``
+(``write_epoch_batch``), after schema validation and DQ.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from typing import Optional
 
 from pyspark.sql import DataFrame
 
 from lakehouse_ingestion_spark.errors import ConfigError, UnsupportedFeatureError
+from lakehouse_ingestion_spark.registry import Registry
 
-_WRITERS: dict[str, type] = {}
-
-# target.options keys the pipeline itself consumes when building
-# WriteOptions (pipeline.py _write_options pops them before the writer
-# ever sees the dict) — always legal for every sink
-CARRIER_KEYS = frozenset(
-    {
-        "path",
-        "table",
-        "mode",
-        "partition_by",
-        "checkpoint_location",
-        "trigger_interval",
-        "output_mode",
-    }
-)
-
-
-def register_writer(name: str):
-    def deco(cls):
-        _WRITERS[name.lower()] = cls
-        for alias in getattr(cls, "aliases", []):
-            _WRITERS[alias.lower()] = cls
-        return cls
-
-    return deco
-
-
-def get_writer(fmt: str) -> "BaseWriter":
-    cls = _WRITERS.get(fmt.lower())
-    if cls is None:
-        raise UnsupportedFeatureError(f"no writer for format '{fmt}'; known: {sorted(_WRITERS)}")
-    return cls()
-
-
-def validate_writer_options(fmt: str, options: dict) -> None:
-    """Eager option-schema check for CLOSED-surface sinks (r11 verdict
-    task #5: the budgets:/p: mapping-flattening bug showed that an
-    unrecognized option silently falling through can select the WRONG
-    behavior, not just be ignored).  A sink that declares
-    ``option_keys`` rejects unknown keys with the valid set in the
-    error; ``option_key_prefixes`` admits dotted-flattened mapping
-    options (``budgets.wiki``, ``fractions.train``, ``sinks.a.path``).
-    Open-surface sinks (parquet/delta/iceberg forward arbitrary keys to
-    the Spark writer) declare ``option_keys = None`` and are skipped, as
-    are formats not in the registry (they fail at dispatch time with
-    UnsupportedFeatureError, the established contract)."""
-    cls = _WRITERS.get(fmt.lower())
-    if cls is None:
-        return
-    allowed = cls.option_keys
-    if allowed is None:
-        return
-    prefixes = tuple(cls.option_key_prefixes)
-    unknown = sorted(
-        k
-        for k in options
-        if k not in allowed
-        and k not in CARRIER_KEYS
-        and not any(k.startswith(p + ".") for p in prefixes)
-    )
-    if unknown:
-        raise ConfigError(
-            f"unknown option(s) {unknown} for sink '{fmt}'; valid keys: "
-            f"{sorted(allowed)} (plus {sorted(CARRIER_KEYS)}"
-            + (
-                f"; mapping options {sorted(prefixes)} may be nested or "
-                "dotted-flattened)"
-                if prefixes
-                else ")"
-            )
-        )
+SINKS = Registry("sink", "format", context=("df", "opts", "epoch", "force"))
+sink = SINKS.register
 
 
 @dataclass
 class WriteOptions:
+    """What the pipeline hands a sink. Every field but ``options`` is a
+    carrier key: legal in any target's options, read here, never seen by
+    the sink's builder; ``options`` holds the rest."""
+
     path: Optional[str] = None
     table: Optional[str] = None
     mode: str = "append"  # append | overwrite (reference default: append)
     partition_by: list[str] = field(default_factory=list)
     checkpoint_location: Optional[str] = None
     trigger_interval: str = "30 seconds"  # reference default, DeltaLakeWriter.scala:62
-    output_mode: str = "append"
+    run_epoch: int = 0  # the epoch a batch write lands as (epoch-keyed sinks)
     options: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        self.partition_by = list(self.partition_by or [])
+
+    @classmethod
+    def from_target(cls, options: dict, **defaults) -> "WriteOptions":
+        """Split a target's options into the carrier fields and the rest."""
+        rest = dict(options)
+        carried = {
+            f.name: rest.pop(f.name)
+            for f in fields(cls)
+            if f.name != "options" and f.name in rest
+        }
+        return cls(**{**defaults, **carried}, options=rest)
 
     @property
     def target(self) -> str:
@@ -110,27 +69,44 @@ class WriteOptions:
         return t
 
 
-class BaseWriter:
-    aliases: list[str] = []
-    # exact option keys this sink consumes; None = open surface (keys
-    # are forwarded to the underlying Spark writer verbatim, so any key
-    # is potentially meaningful and none can be rejected)
-    option_keys: frozenset[str] | None = None
-    # mapping-valued options that config loading may have flattened to
-    # dotted keys ("budgets.wiki": 5); "<prefix>.<anything>" is legal
-    option_key_prefixes: tuple[str, ...] = ()
+class Writer:
+    """The two entry points the pipeline calls on one registered format.
+    A batch job is one epoch, ``opts.run_epoch``, written with
+    ``force=True`` (a deliberate re-run replaces its epoch); a streaming
+    micro-batch is the stream's epoch, with ``force=False`` (a redelivery
+    the ledger already records is skipped)."""
+
+    def __init__(self, fmt: str):
+        self.fmt = fmt
 
     def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        raise NotImplementedError
+        SINKS.call(self.fmt, opts.options, df=df, opts=opts,
+                   epoch=int(opts.run_epoch), force=True)
 
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        """Start a streaming query and RETURN it (the reference blocks on
-        awaitTermination inside the writer — ``DeltaLakeWriter.scala:89`` —
-        which serializes multi-job configs; the stream manager owns
-        termination here, SURVEY.md §3.2)."""
-        raise NotImplementedError
+    def write_epoch_batch(
+        self, df: DataFrame, opts: WriteOptions, epoch: int
+    ) -> None:
+        SINKS.call(self.fmt, opts.options, df=df, opts=opts,
+                   epoch=epoch, force=False)
 
-    def write(self, df: DataFrame, opts: WriteOptions):
-        if df.isStreaming:
-            return self.write_streaming(df, opts)
-        return self.write_batch(df, opts)
+
+def get_writer(fmt: str) -> Writer:
+    if fmt.lower() not in SINKS:
+        raise UnsupportedFeatureError(
+            f"no writer for format '{fmt}'; known: {SINKS.names()}"
+        )
+    return Writer(fmt.lower())
+
+
+def validate_writer_options(fmt: str, options: dict) -> None:
+    """Load-time check of a target's options against its format's
+    builder: unknown keys (closed-surface sinks) and missing required
+    keys raise ConfigError naming the valid set. Formats not in the
+    registry are left to fail at dispatch (UnsupportedFeatureError)."""
+    if fmt.lower() not in SINKS:
+        return
+    try:
+        SINKS.bind(fmt.lower(), WriteOptions.from_target(options).options)
+    except ConfigError as e:
+        carrier = [f.name for f in fields(WriteOptions) if f.name != "options"]
+        raise ConfigError(f"{e} (plus {carrier})") from None

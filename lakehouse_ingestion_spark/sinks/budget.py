@@ -74,147 +74,71 @@ target:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.sinks.base import (
-    BaseWriter,
-    WriteOptions,
-    register_writer,
-)
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-def _mapping_option(o: dict, key: str):
-    """Return o[key], reconstituting a mapping that config-file loading
-    flattened to dotted keys (``budgets: {wiki: 5}`` arrives as
-    ``budgets.wiki: 5`` — config.py runs hocon.flatten_keys over target
-    options so Kafka-style dotted scalars stay flat).  Returns None when
-    neither form is present."""
-    if key in o:
-        return o[key]
-    pref = key + "."
-    sub = {k[len(pref):]: v for k, v in o.items() if k.startswith(pref)}
-    return sub or None
+@sink("budget_admit", mappings=("budgets", "p"))
+@sink("token_budget", mappings=("budgets", "p"))
+def _budget_admit(
+    df, opts, epoch, *, ledger_path, score_col, cost_col=None,
+    key_col="doc_id", cum_col=None, budget=None, budgets=None, p=None,
+    strata_col=None, default_p=0.0, default_budget=0,
+):
+    from lakehouse_ingestion_spark.streaming import budget as sb
 
-
-def _params(opts: WriteOptions):
-    o = dict(opts.options)
-    for key in ("p", "budgets"):
-        val = _mapping_option(o, key)
-        if val is not None:
-            o = {k: v for k, v in o.items() if not k.startswith(key + ".")}
-            o[key] = val
-    if "p" in o:
+    common = dict(
+        out_path=opts.target, ledger_path=ledger_path, score_col=score_col,
+        key_col=key_col,
+    )
+    if p is not None:
         # mass-share admission ("keep the docs carrying p of the quality
         # mass seen so far") — no cost column, the score IS the mass;
         # add strata_col for per-stratum shares (p may then be a mapping)
-        for req in ("ledger_path", "score_col"):
-            if req not in o:
-                raise ConfigError(f"budget_admit target needs options.{req}")
-        for clash in ("budget", "budgets", "cost_col"):
-            if clash in o:
+        for clash, val in (("budget", budget), ("budgets", budgets),
+                           ("cost_col", cost_col)):
+            if val is not None:
                 raise ConfigError(
                     f"budget_admit options.p (mass-share mode) conflicts "
                     f"with options.{clash} — share admission has no quota "
                     "surface"
                 )
-        raw_p = o["p"]
-        common = dict(
-            out_path=opts.target,
-            ledger_path=o["ledger_path"],
-            score_col=o["score_col"],
-            key_col=o.get("key_col", "doc_id"),
-            cum_col=o.get("cum_col", "cum_score"),
-        )
-        if "strata_col" in o:
-            return dict(
-                common,
-                strata_col=o["strata_col"],
-                p={k: float(v) for k, v in raw_p.items()}
-                if isinstance(raw_p, dict)
-                else float(raw_p),
-                default_p=float(o.get("default_p", 0.0)),
+        common["cum_col"] = "cum_score" if cum_col is None else cum_col
+        if strata_col is not None:
+            sb.admit_epoch_share_stratified(
+                df, epoch, **common, strata_col=strata_col,
+                p={k: float(v) for k, v in p.items()}
+                if isinstance(p, dict) else float(p),
+                default_p=float(default_p),
             )
-        if isinstance(raw_p, dict):
+        elif isinstance(p, dict):
             raise ConfigError(
                 "budget_admit options.p as a per-stratum mapping requires "
                 "options.strata_col"
             )
-        return dict(common, p=float(raw_p))
-    budget_key = "budgets" if "budgets" in o else "budget"
-    for req in ("ledger_path", "score_col", "cost_col", budget_key):
-        if req not in o:
-            raise ConfigError(f"budget_admit target needs options.{req}")
-    common = dict(
-        out_path=opts.target,
-        ledger_path=o["ledger_path"],
-        score_col=o["score_col"],
-        cost_col=o["cost_col"],
-        key_col=o.get("key_col", "doc_id"),
-        cum_col=o.get("cum_col", "cum_cost"),
-    )
-    if "strata_col" in o:
+        else:
+            sb.admit_epoch_share(df, epoch, **common, p=float(p))
+        return
+    if cost_col is None:
+        raise ConfigError("budget_admit target needs options.cost_col")
+    quota = budget if budgets is None else budgets
+    if quota is None:
+        raise ConfigError("budget_admit target needs options.budget")
+    common.update(cost_col=cost_col,
+                  cum_col="cum_cost" if cum_col is None else cum_col)
+    if strata_col is not None:
         # per-stratum quotas: options.budgets mapping (or a uniform
         # options.budget int) routed through admit_epoch_stratified
-        raw = o.get("budgets", o.get("budget"))
-        budgets = (
-            {k: int(v) for k, v in raw.items()}
-            if isinstance(raw, dict)
-            else int(raw)
+        sb.admit_epoch_stratified(
+            df, epoch, **common, strata_col=strata_col,
+            budgets={k: int(v) for k, v in quota.items()}
+            if isinstance(quota, dict) else int(quota),
+            default_budget=int(default_budget),
         )
-        return dict(
-            common,
-            strata_col=o["strata_col"],
-            budgets=budgets,
-            default_budget=int(o.get("default_budget", 0)),
-        )
-    if "budgets" in o:
+    elif budgets is not None:
         raise ConfigError(
             "budget_admit options.budgets (per-stratum mapping) requires "
             "options.strata_col"
         )
-    return dict(common, budget=int(o["budget"]))
-
-
-def _admit(df: DataFrame, epoch_id: int, opts: WriteOptions) -> None:
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch,
-        admit_epoch_share,
-        admit_epoch_share_stratified,
-        admit_epoch_stratified,
-    )
-
-    params = _params(opts)
-    if "p" in params:
-        fn = (
-            admit_epoch_share_stratified
-            if "strata_col" in params
-            else admit_epoch_share
-        )
-    elif "strata_col" in params:
-        fn = admit_epoch_stratified
     else:
-        fn = admit_epoch
-    fn(df, epoch_id, **params)
-
-
-@register_writer("budget_admit")
-class BudgetAdmitWriter(BaseWriter):
-    aliases = ["token_budget"]
-    option_keys = frozenset(
-        {
-            "ledger_path", "score_col", "cost_col", "key_col", "cum_col",
-            "budget", "budgets", "p", "strata_col", "default_p",
-            "default_budget", "run_epoch",
-        }
-    )
-    option_key_prefixes = ("budgets", "p")
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        _admit(df, int(opts.options.get("run_epoch", 0)), opts)
-
-    def write_epoch_batch(
-        self, df: DataFrame, opts: WriteOptions, epoch_id: int
-    ) -> None:
-        """Per-micro-batch entry used by the streaming pipeline."""
-        _admit(df, epoch_id, opts)
+        sb.admit_epoch(df, epoch, **common, budget=int(budget))

@@ -22,55 +22,27 @@ and streams share one report.  Read the current report with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.sinks.base import (
-    BaseWriter,
-    WriteOptions,
-    register_writer,
-)
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-def _params(opts: WriteOptions) -> dict:
-    o = opts.options
-    for req in ("ledger_path", "eval_path"):
-        if req not in o:
-            raise ConfigError(f"contamination_audit target needs options.{req}")
-    return dict(
-        eval_path=o["eval_path"],
+@sink("contamination_audit")
+def _contamination_audit(
+    df, opts, epoch, *, ledger_path, eval_path, text_col="text",
+    id_col="doc_id", eval_id_col="eval_id", n=3, threshold=2,
+):
+    from lakehouse_ingestion_spark.streaming.contamination import (
+        contamination_epoch,
+    )
+
+    contamination_epoch(
+        df,
+        epoch,
+        df.sparkSession.read.parquet(eval_path),
         report_path=opts.target,
-        ledger_path=o["ledger_path"],
-        text_col=o.get("text_col", "text"),
-        id_col=o.get("id_col", "doc_id"),
-        eval_id_col=o.get("eval_id_col", "eval_id"),
-        n=int(o.get("n", 3)),
-        threshold=int(o.get("threshold", 2)),
+        ledger_path=ledger_path,
+        text_col=text_col,
+        id_col=id_col,
+        eval_id_col=eval_id_col,
+        n=int(n),
+        threshold=int(threshold),
     )
-
-
-@register_writer("contamination_audit")
-class ContaminationAuditWriter(BaseWriter):
-    option_keys = frozenset(
-        {
-            "ledger_path", "eval_path", "text_col", "id_col",
-            "eval_id_col", "n", "threshold", "run_epoch",
-        }
-    )
-    def _run(self, df: DataFrame, opts: WriteOptions, epoch_id: int) -> None:
-        from lakehouse_ingestion_spark.streaming.contamination import (
-            contamination_epoch,
-        )
-
-        p = _params(opts)
-        ev = df.sparkSession.read.parquet(p.pop("eval_path"))
-        contamination_epoch(df, epoch_id, ev, **p)
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        self._run(df, opts, int(opts.options.get("run_epoch", 0)))
-
-    def write_epoch_batch(
-        self, df: DataFrame, opts: WriteOptions, epoch_id: int
-    ) -> None:
-        """Per-micro-batch entry used by the streaming pipeline."""
-        self._run(df, opts, epoch_id)

@@ -46,109 +46,61 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.sinks.base import (
-    BaseWriter,
-    WriteOptions,
-    register_writer,
-)
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-def _fractions(opts: WriteOptions) -> dict[str, float]:
-    raw = opts.options.get("fractions")
-    if not isinstance(raw, dict) or not raw:
-        # dotted-key flattening (HOCON convention): fractions.train: 0.8
-        raw = {
-            k.split(".", 1)[1]: v
-            for k, v in opts.options.items()
-            if k.startswith("fractions.")
-        }
-    if not raw:
-        raise ConfigError(
-            "sticky_split target needs options.fractions (name -> share)"
-        )
-    return {str(k): float(v) for k, v in raw.items()}
-
-
-def _build_fn(opts: WriteOptions):
+@sink("sticky_split", mappings=("fractions",))
+@sink("curation_split", mappings=("fractions",))
+def _sticky_split(
+    df, opts, epoch, *, state_dir, threshold, fractions, ledger_path=None,
+    audit_path=None, id_col="doc_id", text_col="text", seed="split",
+    split_col="split", rep_col="rep", shingle_n=3, num_hashes=64,
+    num_bands=8, lsh_seed=42, posting_cap=None, conflict_action="report",
+    compact_every=None,
+):
     from lakehouse_ingestion_spark.streaming.curation import (
         sticky_split_foreach_batch,
     )
 
-    o = opts.options
-    state_dir = o.get("state_dir")
-    if not state_dir:
-        raise ConfigError("sticky_split target needs options.state_dir")
-    if "threshold" not in o:
-        raise ConfigError("sticky_split target needs options.threshold")
+    if not isinstance(fractions, dict) or not fractions:
+        raise ConfigError(
+            "sticky_split options.fractions must be a non-empty mapping"
+            " (name -> share)"
+        )
     out_path = opts.target
-    ledger = o.get("ledger_path")
-    if ledger is None:
-        def sink(df: DataFrame, _e: int) -> None:
-            df.write.mode("append").parquet(out_path)
+    if ledger_path is None:
+        def out_sink(batch: DataFrame, _e: int) -> None:
+            batch.write.mode("append").parquet(out_path)
     else:
-        def sink(df: DataFrame, e: int) -> None:
+        def out_sink(batch: DataFrame, e: int) -> None:
             from lakehouse_ingestion_spark.streaming.multi_sink import (
                 SinkSpec,
                 write_epoch,
             )
 
-            write_epoch(df, {"split": SinkSpec(out_path)}, ledger, e)
+            write_epoch(batch, {"split": SinkSpec(out_path)}, ledger_path, e)
 
-    audit_path = o.get("audit_path")
     audit_sink = None
     if audit_path is not None:
-        def audit_sink(df: DataFrame, _e: int) -> None:
-            df.write.mode("append").parquet(audit_path)
+        def audit_sink(batch: DataFrame, _e: int) -> None:
+            batch.write.mode("append").parquet(audit_path)
 
-    return sticky_split_foreach_batch(
+    sticky_split_foreach_batch(
         state_dir,
-        _fractions(opts),
-        float(o["threshold"]),
-        sink=sink,
-        id_col=o.get("id_col", "doc_id"),
-        text_col=o.get("text_col", "text"),
-        seed=o.get("seed", "split"),
-        split_col=o.get("split_col", "split"),
-        rep_col=o.get("rep_col", "rep"),
+        {str(k): float(v) for k, v in fractions.items()},
+        float(threshold),
+        sink=out_sink,
+        id_col=id_col,
+        text_col=text_col,
+        seed=seed,
+        split_col=split_col,
+        rep_col=rep_col,
         audit_sink=audit_sink,
-        shingle_n=int(o.get("shingle_n", 3)),
-        num_hashes=int(o.get("num_hashes", 64)),
-        num_bands=int(o.get("num_bands", 8)),
-        lsh_seed=int(o.get("lsh_seed", 42)),
-        posting_cap=(
-            int(o["posting_cap"]) if "posting_cap" in o else None
-        ),
-        conflict_action=o.get("conflict_action", "report"),
-        compact_every=(
-            int(o["compact_every"]) if "compact_every" in o else None
-        ),
-    )
-
-
-@register_writer("sticky_split")
-class StickySplitWriter(BaseWriter):
-    aliases = ["curation_split"]
-    option_keys = frozenset(
-        {
-            "fractions", "state_dir", "threshold", "ledger_path",
-            "audit_path", "id_col", "text_col", "seed", "split_col",
-            "rep_col", "shingle_n", "num_hashes", "num_bands", "lsh_seed",
-            "posting_cap", "conflict_action", "compact_every", "run_epoch",
-        }
-    )
-    option_key_prefixes = ("fractions",)
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        _build_fn(opts)(df, int(opts.options.get("run_epoch", 0)))
-
-    def write_epoch_batch(
-        self, df: DataFrame, opts: WriteOptions, epoch_id: int
-    ) -> None:
-        """Per-micro-batch entry used by the streaming pipeline."""
-        _build_fn(opts)(df, epoch_id)
-
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        raise ConfigError(
-            "sticky_split is driven per micro-batch via foreachBatch; use"
-            " a streaming job (source streaming), not writeStream"
-        )
+        shingle_n=int(shingle_n),
+        num_hashes=int(num_hashes),
+        num_bands=int(num_bands),
+        lsh_seed=int(lsh_seed),
+        posting_cap=None if posting_cap is None else int(posting_cap),
+        conflict_action=conflict_action,
+        compact_every=None if compact_every is None else int(compact_every),
+    )(df, epoch)

@@ -36,40 +36,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.sinks.base import (
-    BaseWriter,
-    WriteOptions,
-    register_writer,
-)
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-def _specs(opts: WriteOptions):
-    from lakehouse_ingestion_spark.streaming.multi_sink import SinkSpec
+@sink("fanout", mappings=("sinks.*",))
+@sink("multi", mappings=("sinks.*",))
+@sink("multi_sink", mappings=("sinks.*",))
+def _fanout(df, opts, epoch, force, *, ledger_path, sinks):
+    from lakehouse_ingestion_spark.streaming.multi_sink import (
+        SinkSpec,
+        write_epoch,
+    )
 
-    ledger = opts.options.get("ledger_path")
-    raw = opts.options.get("sinks")
-    if not isinstance(raw, dict) or not raw:
-        # config normalization flattens nested option maps to dotted
-        # keys (the HOCON convention): rebuild sinks.<name>.<field>
-        raw = {}
-        for k, v in opts.options.items():
-            if k.startswith("sinks."):
-                _, name, field = k.split(".", 2)
-                raw.setdefault(name, {})[field] = v
-    if not ledger or not isinstance(raw, dict) or not raw:
-        raise ConfigError(
-            "fanout target needs options.ledger_path and a non-empty"
-            " options.sinks mapping"
-        )
+    if not isinstance(sinks, dict) or not sinks:
+        raise ConfigError("fanout target needs a non-empty options.sinks mapping")
     specs: dict[str, SinkSpec] = {}
-    for name, s in raw.items():
+    for name, s in sinks.items():
         if not isinstance(s, dict) or "path" not in s:
             raise ConfigError(f"fanout sink {name!r} needs a 'path'")
         select = s.get("select")
         where = s.get("where")
 
-        def _tf(df: DataFrame, _sel=select, _whr=where) -> DataFrame:
-            out = df
+        def _tf(batch: DataFrame, _sel=select, _whr=where) -> DataFrame:
+            out = batch
             if _whr:
                 out = out.where(_whr)
             if _sel:
@@ -80,44 +69,6 @@ def _specs(opts: WriteOptions):
             path=s["path"],
             transform=_tf if (select or where) else None,
         )
-    return specs, ledger
-
-
-@register_writer("fanout")
-class FanoutWriter(BaseWriter):
-    aliases = ["multi", "multi_sink"]
-    option_keys = frozenset({"ledger_path", "sinks", "run_epoch"})
-    option_key_prefixes = ("sinks",)
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        from lakehouse_ingestion_spark.streaming.multi_sink import write_epoch
-
-        specs, ledger = _specs(opts)
-        # force: a batch RE-run is a deliberate replay, not a crash
-        # redelivery — rewrite the epoch partition even if ledgered
-        write_epoch(
-            df,
-            specs,
-            ledger,
-            int(opts.options.get("run_epoch", 0)),
-            force=True,
-        )
-
-    def write_epoch_batch(
-        self, df: DataFrame, opts: WriteOptions, epoch_id: int
-    ) -> None:
-        """Per-micro-batch entry used by the streaming pipeline: the
-        stream's epoch id keys the idempotence partitions."""
-        from lakehouse_ingestion_spark.streaming.multi_sink import write_epoch
-
-        specs, ledger = _specs(opts)
-        write_epoch(df, specs, ledger, epoch_id)
-
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        # direct writeStream is not the fan-out path — the pipeline's
-        # foreachBatch loop calls write_epoch_batch per micro-batch
-        # (schema validation + DQ run inside the same batch closure)
-        raise ConfigError(
-            "fanout is driven per micro-batch via foreachBatch; use a"
-            " streaming job (source.streaming=true), not writeStream"
-        )
+    # force (batch jobs): a RE-run is a deliberate replay, not a crash
+    # redelivery — rewrite the epoch partition even if ledgered
+    write_epoch(df, specs, ledger_path, epoch, force=force)

@@ -1,16 +1,16 @@
 """Iceberg sink (reference ``lakehouse/IcebergAppendWriter.scala:29-82``).
 
-Gated on the Iceberg runtime being on the Spark classpath (not bundled in
-this container). Batch: ``CREATE NAMESPACE IF NOT EXISTS`` + writeTo
-append; streaming: ``writeStream.toTable`` with checkpoint.
+Gated on the Iceberg runtime being on the Spark classpath (not bundled
+with the engine): ``CREATE NAMESPACE IF NOT EXISTS`` + writeTo append,
+for batch jobs and for each streaming micro-batch alike.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from lakehouse_ingestion_spark.errors import UnsupportedFeatureError
-from lakehouse_ingestion_spark.sinks.base import BaseWriter, WriteOptions, register_writer
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -23,39 +23,23 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-@register_writer("iceberg")
-class IcebergWriter(BaseWriter):
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        spark = df.sparkSession
-        if not iceberg_available(spark):
-            raise UnsupportedFeatureError("iceberg runtime not on the Spark classpath")
-        table = opts.table
-        if not table:
-            raise ValueError("iceberg sink requires 'table'")
-        ns = table.rsplit(".", 1)[0] if "." in table else None
-        if ns:
-            spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {ns}")
-        if opts.mode == "overwrite":
-            df.writeTo(table).createOrReplace()
-        elif spark.catalog.tableExists(table):
-            # no try/except fallback: swallowing a real append failure
-            # (schema mismatch, commit conflict) and re-raising create()'s
-            # "table already exists" would mask the root cause
-            df.writeTo(table).append()
-        else:
-            df.writeTo(table).create()
-
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        spark = df.sparkSession
-        if not iceberg_available(spark):
-            raise UnsupportedFeatureError("iceberg runtime not on the Spark classpath")
-        w = (
-            df.writeStream.format("iceberg")
-            .outputMode(opts.output_mode)
-            .option("checkpointLocation", opts.checkpoint_location)
-        )
-        if opts.trigger_interval == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif opts.trigger_interval:
-            w = w.trigger(processingTime=opts.trigger_interval)
-        return w.toTable(opts.table)
+@sink("iceberg")
+def _iceberg(df, opts, **options):
+    spark = df.sparkSession
+    if not iceberg_available(spark):
+        raise UnsupportedFeatureError("iceberg runtime not on the Spark classpath")
+    table = opts.table
+    if not table:
+        raise ValueError("iceberg sink requires 'table'")
+    ns = table.rsplit(".", 1)[0] if "." in table else None
+    if ns:
+        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {ns}")
+    if opts.mode == "overwrite":
+        df.writeTo(table).createOrReplace()
+    elif spark.catalog.tableExists(table):
+        # no try/except fallback: swallowing a real append failure
+        # (schema mismatch, commit conflict) and re-raising create()'s
+        # "table already exists" would mask the root cause
+        df.writeTo(table).append()
+    else:
+        df.writeTo(table).create()

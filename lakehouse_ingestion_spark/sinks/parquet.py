@@ -1,5 +1,5 @@
-"""Parquet sink — batch (reference ``io/S3ParquetWriter.scala:19-41``) and
-streaming file sink.
+"""Parquet sink — batch (reference ``io/S3ParquetWriter.scala:19-41``);
+streaming jobs reach it once per micro-batch through ``foreachBatch``.
 
 Works against any Hadoop-FS path (local, s3a://, ...). Partitioned writes
 (reference D18) via ``partitionBy``; at scale pair with
@@ -9,55 +9,34 @@ matters (exposed as option ``repartitionByPartitionCols``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from lakehouse_ingestion_spark.sinks.base import BaseWriter, WriteOptions, register_writer
+from lakehouse_ingestion_spark.sinks.base import sink
 
 
-@register_writer("parquet")
-class ParquetWriter(BaseWriter):
-    aliases = ["s3-parquet", "file", "files"]
-
-    _CONSUMED = ("format", "repartitionByPartitionCols", "bucket_by", "num_buckets", "sort_by")
-
-    def write_batch(self, df: DataFrame, opts: WriteOptions) -> None:
-        if str(opts.options.get("repartitionByPartitionCols", "false")).lower() == "true" and opts.partition_by:
-            df = df.repartition(*opts.partition_by)
-        w = df.write.format(opts.options.get("format", "parquet")).mode(opts.mode)
-        if opts.partition_by:
-            w = w.partitionBy(*opts.partition_by)
-        bucket_by = opts.options.get("bucket_by")
-        if bucket_by:
-            # bucketed writes are catalog tables (co-located join support,
-            # sinks/bucketed.py); bucket count shared across join partners
-            cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-            w = w.bucketBy(int(opts.options.get("num_buckets", 8)), *cols)
-            sort_by = opts.options.get("sort_by")
-            if sort_by:
-                w = w.sortBy(*([sort_by] if isinstance(sort_by, str) else list(sort_by)))
-            if not opts.table:
-                raise ValueError("bucketed writes require 'table' (catalog), not 'path'")
-        for k, v in opts.options.items():
-            if k not in self._CONSUMED:
-                w = w.option(k, v)
-        if opts.path and not bucket_by:
-            w.save(opts.path)
-        else:
-            w.saveAsTable(opts.table)
-
-    def write_streaming(self, df: DataFrame, opts: WriteOptions):
-        w = (
-            df.writeStream.format(opts.options.get("format", "parquet"))
-            .outputMode(opts.output_mode)
-            .option("checkpointLocation", opts.checkpoint_location)
-        )
-        if opts.trigger_interval == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif opts.trigger_interval:
-            w = w.trigger(processingTime=opts.trigger_interval)
-        if opts.partition_by:
-            w = w.partitionBy(*opts.partition_by)
-        for k, v in opts.options.items():
-            if k != "format":
-                w = w.option(k, v)
-        return w.start(opts.path) if opts.path else w.toTable(opts.table)
+@sink("parquet")
+@sink("s3-parquet")
+@sink("file")
+@sink("files")
+def _parquet(
+    df, opts, *, format="parquet", repartitionByPartitionCols="false",  # noqa: A002,N803
+    bucket_by=None, num_buckets=8, sort_by=None, **options,
+):
+    if str(repartitionByPartitionCols).lower() == "true" and opts.partition_by:
+        df = df.repartition(*opts.partition_by)
+    w = df.write.format(format).mode(opts.mode)
+    if opts.partition_by:
+        w = w.partitionBy(*opts.partition_by)
+    if bucket_by:
+        # bucketed writes are catalog tables (co-located join support,
+        # sinks/bucketed.py); bucket count shared across join partners
+        cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
+        w = w.bucketBy(int(num_buckets), *cols)
+        if sort_by:
+            w = w.sortBy(*([sort_by] if isinstance(sort_by, str) else list(sort_by)))
+        if not opts.table:
+            raise ValueError("bucketed writes require 'table' (catalog), not 'path'")
+    for k, v in options.items():
+        w = w.option(k, v)
+    if opts.path and not bucket_by:
+        w.save(opts.path)
+    else:
+        w.saveAsTable(opts.table)

@@ -50,12 +50,12 @@ from lakehouse_ingestion_spark.operators.incremental_ann import (
     retrain_postings,
     search_postings,
 )
-from lakehouse_ingestion_spark.streaming.curation import _read_if_exists
 from lakehouse_ingestion_spark.streaming.multi_sink import (
     EPOCH_COL,
     _ledgered_sinks,
     committed_epochs,
 )
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 LEDGER_SINK = "ann_index_state"
 
@@ -76,7 +76,7 @@ def current_centroids(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """Latest centroid set (K rows — tiny). Centroid partitions are only
     written at bootstrap/retrain, both of which complete before the next
     ledger row, so the max-epoch partition is always a full set."""
-    raw = _read_if_exists(spark, _centroids_path(index_dir))
+    raw = read_parquet_if_exists(spark, _centroids_path(index_dir))
     if raw is None:
         return None
     mx = raw.agg(F.max(EPOCH_COL)).collect()[0][0]

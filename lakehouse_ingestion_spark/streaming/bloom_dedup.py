@@ -51,6 +51,7 @@ from lakehouse_ingestion_spark.operators.bloom import (
     bloom_merge,
     bloom_screen,
 )
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 
 def bloom_dedup_foreach_batch(
@@ -88,17 +89,10 @@ def bloom_dedup_foreach_batch(
     bloom_path, keys_path = state_paths
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
-        try:
-            stored: DataFrame | None = spark.read.parquet(bloom_path)
-        except AnalysisException as e:
-            # only a missing path (first batch) bootstraps; any other
-            # read failure must surface, not silently disable dedup
-            if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-                raise
-            stored = None
+        # only a missing path (first batch) bootstraps; any other read
+        # failure must surface, not silently disable dedup
+        stored = read_parquet_if_exists(spark, bloom_path)
 
         # NULL keys are unidentifiable: they bypass dedup entirely and
         # every NULL-key row survives verbatim.  They must be split out

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.errors import ConfigError
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 EPOCH_COL = "_epoch"
 
@@ -59,21 +60,12 @@ def _read_ledger(
     one fewer Spark job per trigger (r12; the footer-merge job ran on
     every micro-batch).
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        reader = spark.read
-        if schema is not None:
-            # file listing still happens at load, so a missing ledger
-            # raises PATH_NOT_FOUND here exactly like the inferred path
-            # (probed; only the footer schema-merge job is skipped)
-            reader = reader.schema(schema)
-        return reader.parquet(ledger_path)
-    except AnalysisException as exc:
-        cls = getattr(exc, "getErrorClass", lambda: None)() or ""
-        if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
+    # with a schema, file listing still happens at load, so a missing
+    # ledger raises PATH_NOT_FOUND exactly like the inferred path
+    # (probed; only the footer schema-merge job is skipped)
+    return read_parquet_if_exists(
+        spark, ledger_path, schema=schema, match_message=True
+    )
 
 
 def spent(spark: SparkSession, ledger_path: str) -> int:

@@ -85,20 +85,10 @@ from lakehouse_ingestion_spark.operators.split_guard import (
     apply_conflict_policy,
     sticky_split,
 )
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 EPOCH_COL = "_epoch"
 LEDGER_SINK = "curation_state"
-
-
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
-        return None
 
 
 def _read_state(
@@ -108,7 +98,7 @@ def _read_state(
     attempt's partial writes must not feed the re-run (they are about
     to be overwritten). The filter is on the partition column, so it is
     pruning, not a scan."""
-    df = _read_if_exists(spark, path)
+    df = read_parquet_if_exists(spark, path)
     if df is not None and EPOCH_COL in df.columns:
         df = df.filter(F.col(EPOCH_COL) != exclude_epoch)
     return df
@@ -181,7 +171,7 @@ def compact_split_state(
     max ledgered epoch, so latest-wins ordering against any future
     epoch is preserved.
     """
-    ledger = _read_if_exists(spark, f"{state_dir}/ledger")
+    ledger = read_parquet_if_exists(spark, f"{state_dir}/ledger")
     if ledger is None:
         return  # nothing ever committed; nothing safe to fold
     committed = ledger.select("epoch").distinct()
@@ -193,7 +183,7 @@ def compact_split_state(
     )
 
     def _fold(name: str, resolve) -> None:
-        raw = _read_if_exists(spark, f"{state_dir}/{name}")
+        raw = read_parquet_if_exists(spark, f"{state_dir}/{name}")
         if raw is None or EPOCH_COL not in raw.columns:
             return
         kept = raw.join(keep, EPOCH_COL, "semi")
@@ -339,7 +329,7 @@ def sticky_split_foreach_batch(
     hot_path = f"{state_dir}/hot_keys"
 
     def _replay(spark: SparkSession, batch_df: DataFrame, epoch_id: int) -> None:
-        assign = _read_if_exists(spark, assign_path)
+        assign = read_parquet_if_exists(spark, assign_path)
         if assign is None:  # ledgered epoch must have written assignments
             raise RuntimeError(
                 f"epoch {epoch_id} is ledgered but {assign_path} is missing"

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.errors import ConfigError
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 EPOCH_COL = "_epoch"
 
@@ -186,20 +187,12 @@ def _delete_epoch_partition(
 def _ledgered_sinks(
     spark: SparkSession, ledger_path: str, epoch_id: int
 ) -> set[str]:
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.parquet(ledger_path)
-            .where(F.col("epoch") == epoch_id)
-            .select("sink")
-            .distinct()
-            .collect()
-        )
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
+    led = read_parquet_if_exists(spark, ledger_path)
+    if led is None:
         return set()
+    rows = (
+        led.where(F.col("epoch") == epoch_id).select("sink").distinct().collect()
+    )
     return {r.sink for r in rows}
 
 
@@ -207,13 +200,8 @@ def committed_epochs(
     spark: SparkSession, ledger_path: str, sink: str
 ) -> DataFrame:
     """Epochs the ledger records as fully written for ``sink``."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        led = spark.read.parquet(ledger_path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
+    led = read_parquet_if_exists(spark, ledger_path)
+    if led is None:
         return spark.createDataFrame([], "epoch long")
     return led.where(F.col("sink") == sink).select("epoch").distinct()
 
@@ -230,16 +218,10 @@ def read_committed(
     ledgered epoch wrote zero rows (dynamic overwrite of an empty batch
     leaves no parquet footer to infer from) — reads as an empty frame
     rather than raising."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        data = spark.read.parquet(spec_path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
+    data = read_parquet_if_exists(
+        spark, spec_path, absent=("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+    )
+    if data is None:
         return spark.createDataFrame([], f"{EPOCH_COL} long")
     eps = committed_epochs(spark, ledger_path, sink).withColumnRenamed(
         "epoch", EPOCH_COL

@@ -34,6 +34,7 @@ from lakehouse_ingestion_spark.operators.incremental_dedup import (
     MinHashIndexFrames,
     incremental_near_dup,
 )
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 
 def near_dup_foreach_batch(
@@ -77,23 +78,20 @@ def near_dup_foreach_batch(
     bands_path, hashes_path = index_paths
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
-        try:
-            index: MinHashIndexFrames | None = MinHashIndexFrames(
-                bands=spark.read.parquet(bands_path),
-                hashes=spark.read.parquet(hashes_path),
-            )
-        except AnalysisException as e:
-            # ONLY a missing path (first batch) bootstraps. Any other
-            # analysis failure — unreadable dir, schema-inference
-            # failure on a half-written store — must surface: a
-            # swallowed index-read error silently disables dedup AND
-            # appends on top of the broken store.
-            if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-                raise
-            index = None
+        # ONLY a missing path (first batch) bootstraps. Any other
+        # analysis failure — unreadable dir, schema-inference failure on
+        # a half-written store — must surface: a swallowed index-read
+        # error silently disables dedup AND appends on top of the broken
+        # store.
+        bands = read_parquet_if_exists(spark, bands_path)
+        hashes = None if bands is None else read_parquet_if_exists(
+            spark, hashes_path
+        )
+        index: MinHashIndexFrames | None = (
+            None if hashes is None
+            else MinHashIndexFrames(bands=bands, hashes=hashes)
+        )
         batch_df.persist()
         try:
             pairs, delta = incremental_near_dup(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.errors import ConfigError
 from lakehouse_ingestion_spark.registry import Registry
+from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 TRANSFORMS = Registry("transform", "op", context=("df", "schema"))
 transform = TRANSFORMS.register
@@ -327,19 +328,6 @@ def _event_window_dedup(
 # -- cluster-aware stages --------------------------------------------------
 
 
-def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """Parquet frame, or None when the path does not exist yet (the
-    bootstrap run of a stateful stage)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
-        return None
-
-
 def _pairs_frame(df, id_col, a_col, b_col, pairs_path, near_dup, winnow):
     """Near-dup pair frame (a_col, b_col) for a cluster-aware stage: a
     precomputed table at ``pairs_path`` (the output of any dedup query),
@@ -403,7 +391,7 @@ def _maintained_reps(df, pairs, a_col, b_col, labels_path) -> DataFrame | None:
     from lakehouse_ingestion_spark.operators.graph import incremental_components
     from lakehouse_ingestion_spark.streaming.curation import current_labels
 
-    prev = _read_parquet_if_exists(df.sparkSession, labels_path)
+    prev = read_parquet_if_exists(df.sparkSession, labels_path)
     if prev is not None:
         # a streaming curation sink maintains the same state as an
         # epoch-partitioned delta log — resolve to current rows first
@@ -497,7 +485,7 @@ def _leakage_safe_split(
         return leakage_safe_split(df, pairs, fractions, reps=reps, **kwargs)
     from lakehouse_ingestion_spark.streaming.curation import current_assignments
 
-    prev = _read_parquet_if_exists(df.sparkSession, assignments_path)
+    prev = read_parquet_if_exists(df.sparkSession, assignments_path)
     if prev is not None:
         # streaming-maintained state is an epoch delta log with re-keyed
         # rows — resolve to one current row per doc

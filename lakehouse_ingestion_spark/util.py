@@ -96,3 +96,30 @@ def maybe_round(col, digits: "int | None"):
     from pyspark.sql import functions as F
 
     return F.round(col, digits) if digits is not None else col
+
+
+def read_parquet_if_exists(
+    spark,
+    path: str,
+    *,
+    schema=None,
+    absent: tuple[str, ...] = ("PATH_NOT_FOUND",),
+    match_message: bool = False,
+) -> DataFrame | None:
+    """``spark.read.parquet(path)`` (with ``schema`` when given), or None
+    when the path holds nothing yet: the bootstrap read of a state store
+    or ledger. Only an AnalysisException whose condition is in ``absent``
+    (or, with ``match_message``, whose message names it) means "nothing
+    yet"; any other failure surfaces, so an unreadable store is never
+    mistaken for an empty one."""
+    from pyspark.errors import AnalysisException
+
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if (e.getCondition() or "") in absent or (
+            match_message and any(a in str(e) for a in absent)
+        ):
+            return None
+        raise

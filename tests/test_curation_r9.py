@@ -180,8 +180,7 @@ def test_sticky_split_sink_legacy_bootstrap_conflict_quarantine(
     audit_path, and under conflict_action=quarantine_eval the cluster
     is forced into the first (train) split — which persists, so the
     next batch's member inherits train and the conflict melts."""
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
-    from lakehouse_ingestion_spark.sinks.curation import StickySplitWriter
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     state = str(tmp_path / "st")
     out = str(tmp_path / "out")
@@ -202,7 +201,7 @@ def test_sticky_split_sink_legacy_bootstrap_conflict_quarantine(
             "num_bands": 4,
         },
     )
-    w = StickySplitWriter()
+    w = get_writer("sticky_split")
     w.write_epoch_batch(
         spark.createDataFrame(
             [(1, T1), (2, T1 + " tail"), (3, T2)],
@@ -606,8 +605,7 @@ def test_streaming_drop_cluster_replay_stays_dropped(spark, tmp_path):
     withheld from the output but keep deterministic assignments; a
     ledgered replay re-derives the drop from state, so dropped docs are
     never re-emitted."""
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
-    from lakehouse_ingestion_spark.sinks.curation import StickySplitWriter
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     state = str(tmp_path / "st")
     out = str(tmp_path / "out")
@@ -625,7 +623,7 @@ def test_streaming_drop_cluster_replay_stays_dropped(spark, tmp_path):
             "num_bands": 4,
         },
     )
-    w = StickySplitWriter()
+    w = get_writer("sticky_split")
     batch = spark.createDataFrame(
         [(1, T1), (2, T1 + " tail"), (3, T2)], "doc_id long, text string"
     )

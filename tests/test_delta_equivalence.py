@@ -1,7 +1,7 @@
 """Replay-equivalence scrutiny for the gated Delta merge paths.
 
 delta-spark cannot be installed in this container, so the Delta twins
-(`DeltaWriter.merge_upsert`, incremental `scd2_merge`) are exercised
+(`sinks.delta.merge_upsert`, incremental `scd2_merge`) are exercised
 against independent formulations of the same semantics:
 
 1. ``FakeDeltaTable`` implements Delta's MERGE contract from scratch in
@@ -37,7 +37,7 @@ from lakehouse_ingestion_spark.operators.scd import scd2_from_history, scd2_merg
 
 class FakeDeltaTable:
     """Pandas reimplementation of the DeltaTable.merge API surface used by
-    ``DeltaWriter.merge_upsert``. Semantics written from the public Delta
+    ``sinks.delta.merge_upsert``. Semantics written from the public Delta
     MERGE contract, NOT by delegating to operators/merge.py (that would be
     circular)."""
 
@@ -154,7 +154,7 @@ def fake_delta(monkeypatch):
 
 
 def test_merge_upsert_equals_algebra_upsert(spark, fake_delta):
-    from lakehouse_ingestion_spark.sinks.delta import DeltaWriter
+    from lakehouse_ingestion_spark.sinks.delta import merge_upsert
 
     target = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
@@ -165,7 +165,7 @@ def test_merge_upsert_equals_algebra_upsert(spark, fake_delta):
         "id long, name string, amount double",
     )
     fake_delta["/fake/t1"] = target.toPandas()
-    DeltaWriter.merge_upsert(spark, "/fake/t1", source, ["id"])
+    merge_upsert(spark, "/fake/t1", source, ["id"])
 
     expected = upsert(target, source, ["id"]).toPandas()
     assert _canon(fake_delta["/fake/t1"]) == _canon(expected)
@@ -174,7 +174,7 @@ def test_merge_upsert_equals_algebra_upsert(spark, fake_delta):
 def test_merge_upsert_delete_condition_equivalence(spark, fake_delta):
     from pyspark.sql import functions as F
 
-    from lakehouse_ingestion_spark.sinks.delta import DeltaWriter
+    from lakehouse_ingestion_spark.sinks.delta import merge_upsert
 
     target = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
@@ -187,7 +187,7 @@ def test_merge_upsert_delete_condition_equivalence(spark, fake_delta):
         "id long, name string, amount double, op string",
     )
     fake_delta["/fake/t2"] = target.toPandas()
-    DeltaWriter.merge_upsert(
+    merge_upsert(
         spark, "/fake/t2", source, ["id"], delete_condition="s.op = 'd'"
     )
 
@@ -207,7 +207,7 @@ def test_merge_upsert_unmatched_delete_not_resurrected(spark, fake_delta):
     that)."""
     from pyspark.sql import functions as F
 
-    from lakehouse_ingestion_spark.sinks.delta import DeltaWriter
+    from lakehouse_ingestion_spark.sinks.delta import merge_upsert
 
     target = spark.createDataFrame([(1, "a", 10.0)], "id long, name string, amount double")
     source = spark.createDataFrame(
@@ -215,7 +215,7 @@ def test_merge_upsert_unmatched_delete_not_resurrected(spark, fake_delta):
         "id long, name string, amount double, op string",
     )
     fake_delta["/fake/t4"] = target.toPandas()
-    DeltaWriter.merge_upsert(
+    merge_upsert(
         spark, "/fake/t4", source, ["id"], delete_condition="s.op = 'd'"
     )
     algebra = upsert(
@@ -226,7 +226,7 @@ def test_merge_upsert_unmatched_delete_not_resurrected(spark, fake_delta):
 
 
 def test_merge_upsert_rejects_duplicate_source_keys(spark, fake_delta):
-    from lakehouse_ingestion_spark.sinks.delta import DeltaWriter
+    from lakehouse_ingestion_spark.sinks.delta import merge_upsert
 
     target = spark.createDataFrame([(1, "a")], "id long, name string")
     dup_source = spark.createDataFrame(
@@ -234,7 +234,7 @@ def test_merge_upsert_rejects_duplicate_source_keys(spark, fake_delta):
     )
     fake_delta["/fake/t3"] = target.toPandas()
     with pytest.raises(ValueError, match="multiple source rows"):
-        DeltaWriter.merge_upsert(spark, "/fake/t3", dup_source, ["id"])
+        merge_upsert(spark, "/fake/t3", dup_source, ["id"])
 
 
 # ---------------------------------------------------------------------------
@@ -390,7 +390,7 @@ def test_threeway_merge_real_delta_vs_fake_vs_algebra(delta_session, tmp_path):
     """REAL DeltaTable MERGE == FakeDeltaTable replay == oracle-green
     DataFrame-algebra upsert, on the same target/source (updates,
     inserts, and a delete-marked row that must not resurrect)."""
-    from lakehouse_ingestion_spark.sinks.delta import DeltaWriter
+    from lakehouse_ingestion_spark.sinks.delta import merge_upsert
 
     spark = delta_session
     target = [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)]
@@ -401,7 +401,7 @@ def test_threeway_merge_real_delta_vs_fake_vs_algebra(delta_session, tmp_path):
     # real Delta
     path = str(tmp_path / "real_delta")
     spark.createDataFrame(target, schema).write.format("delta").save(path)
-    DeltaWriter.merge_upsert(
+    merge_upsert(
         spark,
         path,
         spark.createDataFrame(source, schema),
@@ -433,7 +433,7 @@ def test_threeway_merge_real_delta_vs_fake_vs_algebra(delta_session, tmp_path):
         FakeDeltaTable._store = {
             "fake": spark.createDataFrame(target, schema).toPandas()
         }
-        DeltaWriter.merge_upsert(
+        merge_upsert(
             spark,
             "fake",
             spark.createDataFrame(source, schema),

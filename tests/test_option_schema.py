@@ -1,11 +1,11 @@
 """Load-time option-schema validation (r11 verdict task #5).
 
-The r11 mapping-flattening bug (sinks/budget.py `_mapping_option`
-docstring) showed an unrecognized option can silently select the WRONG
-sink behavior.  Closed-surface sinks and every transform op now declare
-their exact option keys; unknown keys raise ConfigError at config load,
-naming the valid set — no Spark work happens for a spec that can never
-run correctly.
+The r11 mapping-flattening bug (a flattened ``budgets:`` mapping fell
+through to the wrong admission mode) showed an unrecognized option can
+silently select the WRONG sink behavior.  Closed-surface sinks and every
+transform op now declare their exact option keys; unknown or missing
+required keys raise ConfigError at config load, naming the valid set —
+no Spark work happens for a spec that can never run correctly.
 """
 
 from __future__ import annotations
@@ -128,6 +128,55 @@ def test_unknown_format_left_to_dispatch():
     validate_writer_options("not_a_sink", {"whatever": 1})
 
 
+_CLOSED_SINK_MODULES = (
+    "ann_index", "budget", "contamination", "curation", "export", "fanout",
+)
+
+
+def _docstring_targets(module: str) -> list[dict]:
+    import importlib
+    import re
+
+    import yaml
+
+    doc = importlib.import_module(
+        f"lakehouse_ingestion_spark.sinks.{module}"
+    ).__doc__
+    return [
+        yaml.safe_load(block)["target"]
+        for block in re.findall(r"```yaml\n(.*?)```", doc, re.S)
+    ]
+
+
+@pytest.mark.parametrize("module", _CLOSED_SINK_MODULES)
+def test_sink_docstring_examples_parse(module):
+    """Each closed-surface sink's module-docstring YAML examples (the
+    sink's user docs) load through parse_config as written."""
+    targets = _docstring_targets(module)
+    assert targets
+    for target in targets:
+        # a job reads only target.format and target.options
+        assert set(target) == {"format", "options"}, target
+        raw = {"jobs": [{
+            "name": "doc",
+            "source": {"type": "parquet", "options": {"path": "/tmp/in"}},
+            "target": target,
+        }]}
+        cfg = parse_config(raw)
+        assert cfg.jobs[0].target.format == target["format"]
+
+
+def test_closed_sink_modules_listed():
+    from lakehouse_ingestion_spark.sinks.base import SINKS
+
+    closed = {
+        SINKS._entries[n].fn.__module__.rsplit(".", 1)[1]
+        for n in SINKS.names()
+        if not SINKS._entries[n].open
+    }
+    assert closed == set(_CLOSED_SINK_MODULES)
+
+
 # --- transforms -----------------------------------------------------------
 
 
@@ -181,6 +230,29 @@ def test_parse_config_rejects_bad_sink_option_at_load():
         ]
     }
     with pytest.raises(ConfigError, match="job 'j'.*strata_cols"):
+        parse_config(raw)
+
+
+@pytest.mark.parametrize(
+    "fmt,options,missing",
+    [
+        ("sticky_split", {"threshold": 0.3, "fractions": {"train": 1.0}},
+         "state_dir"),
+        ("ann_index", {"id_col": "vec_id"}, "centroids_path"),
+    ],
+)
+def test_parse_config_rejects_missing_sink_option_at_load(fmt, options, missing):
+    raw = {
+        "jobs": [
+            {
+                "name": "j",
+                "source": {"type": "parquet", "options": {"path": "/tmp/in"}},
+                "target": {"format": fmt,
+                           "options": {"path": "/tmp/out", **options}},
+            }
+        ]
+    }
+    with pytest.raises(ConfigError, match=f"job 'j'.*missing.*{missing}"):
         parse_config(raw)
 
 

@@ -987,17 +987,16 @@ def test_streaming_sticky_split_pipeline(spark, registry, tmp_path):
     } == {1, 2, 11}
     assert spark.read.parquet(f"{state}/assignments").count() == 4
 
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
-    from lakehouse_ingestion_spark.sinks.curation import StickySplitWriter
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     with pytest.raises(ConfigError, match="state_dir"):
-        StickySplitWriter().write_batch(
+        get_writer("sticky_split").write_batch(
             spark.range(1),
             WriteOptions(path="/tmp/x", options={"threshold": 0.3,
                                                  "fractions": {"a": 1.0}}),
         )
     with pytest.raises(ConfigError, match="fractions"):
-        StickySplitWriter().write_batch(
+        get_writer("sticky_split").write_batch(
             spark.range(1),
             WriteOptions(path="/tmp/x", options={"threshold": 0.3,
                                                  "state_dir": "/tmp/s"}),
@@ -1005,14 +1004,13 @@ def test_streaming_sticky_split_pipeline(spark, registry, tmp_path):
 
 
 def test_fanout_config_validation(spark, registry, tmp_path):
-    from lakehouse_ingestion_spark.sinks.fanout import FanoutWriter
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     df = spark.range(1)
     with pytest.raises(ConfigError, match="ledger_path"):
-        FanoutWriter().write_batch(df, WriteOptions(options={"sinks": {"a": {"path": "/tmp/x"}}}))
+        get_writer("fanout").write_batch(df, WriteOptions(options={"sinks": {"a": {"path": "/tmp/x"}}}))
     with pytest.raises(ConfigError, match="needs a 'path'"):
-        FanoutWriter().write_batch(
+        get_writer("fanout").write_batch(
             df,
             WriteOptions(options={"ledger_path": "/tmp/l", "sinks": {"a": {}}}),
         )
@@ -1023,8 +1021,7 @@ def test_fanout_batch_rerun_replaces_stale_output(spark, tmp_path):
     previous epoch's output, not silently no-op on the ledger skip
     (force=True on the batch path; the skip is only for streaming
     crash redelivery)."""
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
-    from lakehouse_ingestion_spark.sinks.fanout import FanoutWriter
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     sink = str(tmp_path / "rr_sink")
     ledger = str(tmp_path / "rr_ledger")
@@ -1034,7 +1031,7 @@ def test_fanout_batch_rerun_replaces_stale_output(spark, tmp_path):
             "sinks": {"main": {"path": sink}},
         }
     )
-    w = FanoutWriter()
+    w = get_writer("fanout")
     w.write_batch(
         spark.createDataFrame([(1, "old")], "id long, v string"), opts
     )
@@ -1147,11 +1144,10 @@ def test_streaming_ann_index_pipeline(spark, registry, tmp_path):
     )
     assert rows(got) == rows(want)
 
-    from lakehouse_ingestion_spark.sinks.ann_index import AnnIndexWriter
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 
     with pytest.raises(ConfigError, match="centroids_path"):
-        AnnIndexWriter().write_batch(
+        get_writer("ann_index").write_batch(
             spark.range(1), WriteOptions(path="/tmp/x", options={})
         )
 
@@ -1238,6 +1234,38 @@ def test_shards_sink_config_driven(spark, registry, tmp_path):
     }
     with pytest.raises(ConfigError, match="overwrite-only"):
         Pipeline(spark, parse_config(bad, registry), registry=registry).run()
+
+
+@pytest.mark.parametrize("fmt,extra", [("shards", {"key_col": "event_id"}),
+                                       ("parquet", {})])
+def test_streaming_overwrite_target_rejected(spark, registry, tmp_path, fmt, extra):
+    """A streaming job whose target mode is overwrite raises before the
+    stream starts: each micro-batch would replace the one before it, so
+    a multi-batch stream would keep only its last batch."""
+    indir = tmp_path / "ow_in"
+    indir.mkdir()
+    for f in range(2):
+        (indir / f"b{f}.jsonl").write_text("\n".join(
+            json.dumps({"event_id": f * 5 + i, "user": "u", "amount": 1.0})
+            for i in range(5)
+        ))
+    out = tmp_path / "ow_out"
+    cfg = _doc_config(str(indir), str(out), [])
+    cfg["jobs"][0]["schema"] = {
+        "domain": "demo", "dataset": "events", "version": "v1",
+    }
+    cfg["jobs"][0]["source"]["options"].update(
+        streaming="true", maxFilesPerTrigger=1
+    )
+    cfg["jobs"][0]["target"] = {
+        "format": fmt,
+        "options": {"path": str(out), "mode": "overwrite",
+                    "checkpoint_location": str(tmp_path / "ow_cp"),
+                    "trigger_interval": "availableNow", **extra},
+    }
+    with pytest.raises(ConfigError, match="overwrite"):
+        Pipeline(spark, parse_config(cfg, registry), registry=registry).run()
+    assert not out.exists()
 
 
 def test_stratified_budget_select_config_driven(spark, registry, tmp_path):

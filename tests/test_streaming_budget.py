@@ -725,13 +725,14 @@ def test_share_admit_example_config_parses(tmp_path):
     """The shipped share-admission example config parses and routes to
     the stratified share mode with the mapping intact."""
     from lakehouse_ingestion_spark.config import load_config
-    from lakehouse_ingestion_spark.sinks.base import WriteOptions
-    from lakehouse_ingestion_spark.sinks.budget import _params
+    from lakehouse_ingestion_spark.sinks.base import SINKS, WriteOptions
 
     cfg = load_config("configs/share-admit-stream.yaml")
     tgt = cfg.jobs[0].target
     assert tgt.format == "budget_admit"
-    params = _params(WriteOptions(path=tgt.options["path"], options=tgt.options))
+    _, params = SINKS.bind(
+        tgt.format, WriteOptions.from_target(tgt.options).options
+    )
     assert params["p"] == {"en": 0.9, "de": 0.9}
     assert params["default_p"] == 0.5
     assert params["strata_col"] == "lang"
