@@ -14,7 +14,10 @@ Column-name and value conventions (driver hashes sorted-by-name columns):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +58,8 @@ from lakehouse_ingestion_spark.operators.gold import AggSpec, aggregate, cube, r
 from lakehouse_ingestion_spark.operators.merge import upsert
 from lakehouse_ingestion_spark.operators.scd import scd2_from_history
 from lakehouse_ingestion_spark.util import ensure_parallelism
+
+REPO = Path(__file__).resolve().parent
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -1757,18 +1762,67 @@ def bench_extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]
     return {"bpe_tokenize": q_bpe_tokenize}
 
 
+def load_hash_history(repo: Path = REPO) -> dict[str, tuple[int, bool]]:
+    """name -> (last round whose correctness sweep included it, was it
+    green there), from every ``CORRECTNESS_r*.json`` under ``repo``.
+
+    Green = rows/schema/hash all true and no err. A query appearing in
+    multiple rounds keeps the LATEST round's verdict.
+    """
+    history: dict[str, tuple[int, bool]] = {}
+    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
+        m = re.search(r"r(\d+)", path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        try:
+            data = json.loads(path.read_text())
+        except (OSError, json.JSONDecodeError):
+            continue
+        if not isinstance(data, dict):
+            continue
+        for name, row in data.items():
+            if not isinstance(row, dict):
+                continue
+            green = (
+                row.get("rows_match") is True
+                and row.get("schema_match") is True
+                # hash_match None = weaker rows-only check (no oracle SQL);
+                # treat as green — re-running it cannot upgrade the evidence.
+                and row.get("hash_match") in (True, None)
+                and not row.get("err")
+            )
+            prev = history.get(name)
+            if prev is None or rnd >= prev[0]:
+                history[name] = (rnd, green)
+    return history
+
+
+def priority_order(
+    registry_order: list[str], history: dict[str, tuple[int, bool]]
+) -> list[str]:
+    """Stable sort: never-hashed & latest-red first (tier 0), then by
+    last-hashed round ascending; ties keep registry order."""
+    pos = {name: i for i, name in enumerate(registry_order)}
+
+    def key(name: str) -> tuple[int, int]:
+        entry = history.get(name)
+        if entry is None or not entry[1]:
+            return (0, pos[name])
+        return (entry[0], pos[name])
+
+    return sorted(registry_order, key=key)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry order is mechanized: tools/rotate_registry.py orders entries
-    # by last-driver-hashed round (CORRECTNESS_r*.json) so the driver's
-    # 50-query window always re-hashes RED / never-hashed / least-recently-
-    # hashed queries first.  tests/test_rotation.py pins the invariant;
-    # run `python tools/rotate_registry.py` to regenerate after adding a
-    # query.  r13 window: the r12 sweep hashed the r12 window (the five
-    # r12 additions + the stale-r09 cohort), so the window advances to the
-    # r10-hashed cohort (quantile_agg .. q16_supplier_counts and the rest
-    # of the r10 set); r11/r12-hashed entries ride at the tail.
-    return {
-        # --- last hashed: green r10 ---
+    """Every registry query, in driver-window priority order.
+
+    A correctness sweep hashes only the first 50 entries, so the order
+    is computed at call time from the committed ``CORRECTNESS_r*.json``
+    history: RED and never-hashed queries first, then the
+    least-recently-hashed. With no history the order is the dict order
+    below. ``tools/rotate_registry.py`` prints the window."""
+    registry = {
         "quantile_agg": q_quantile_agg,
         "top_p": q_top_p,
         "text_tokenize": q_text_tokenize,
@@ -1815,7 +1869,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel": q_funnel,
         "retention": q_retention,
         "domain_cap": q_domain_cap,
-        # --- last hashed: green r11 ---
         "bpe_histogram": q_bpe_histogram,
         "top_p_frac": q_top_p_frac,
         "cluster_rep": q_cluster_rep,
@@ -1866,7 +1919,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "html_extract": q_html_extract,
         "semantic_decon": q_semantic_decon,
         "source_canonical": q_source_canonical,
-        # --- last hashed: green r12 ---
         "share_admission": q_share_admission,
         "cms_topk": q_cms_topk,
         "winnow_overlap": q_winnow_overlap,
@@ -1918,6 +1970,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contamination": q_contamination,
         "event_dedup": q_event_dedup,
     }
+    order = priority_order(list(registry), load_hash_history())
+    return {name: registry[name] for name in order}
 
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3304,8 +3358,8 @@ def q_share_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         admit_epoch_share(
             d.filter(F.col("doc_id") % 3 == e),
             e,
-            out_path,
-            ledger_path,
+            out_path=out_path,
+            ledger_path=ledger_path,
             score_col="score",
             p=0.5,
             key_col="doc_id",

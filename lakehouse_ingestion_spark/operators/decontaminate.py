@@ -79,10 +79,17 @@ def decontaminate(
     ("shingle").distinct()``) so a run that also builds
     ``contamination_report`` explodes the eval set ONCE (r13, guide
     §2.3). Must match ``eval_ngram_set(eval_df, text_col, n)`` exactly
-    or the overlap counts change.
+    or the overlap counts change; any column besides ``shingle`` (the
+    ``(eval_id, shingle)`` pairs frame, say) raises, since every extra
+    row per shingle would count as one more overlap.
     """
     if threshold < 1:
         raise ValueError(f"threshold must be >= 1, got {threshold}")
+    if eval_ngrams is not None and eval_ngrams.columns != ["shingle"]:
+        raise ValueError(
+            "eval_ngrams must be the distinct-shingle frame (columns "
+            f"['shingle']), got {eval_ngrams.columns}"
+        )
     ev = F.broadcast(
         eval_ngrams
         if eval_ngrams is not None

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field as dc_field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +40,7 @@ from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
 from lakehouse_ingestion_spark.schema_validator import validate_or_throw
 from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
 from lakehouse_ingestion_spark.sources.base import get_reader
-from lakehouse_ingestion_spark.streaming.foreach_batch import dq_foreach_batch
+from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
 from lakehouse_ingestion_spark.streaming.manager import StreamManager
 from lakehouse_ingestion_spark.transforms import (  # noqa: F401  (public API)
     apply_transform,
@@ -298,9 +299,10 @@ class Pipeline:
             q_writer = self._quarantine_writer(job)
             # the DQ path must still go through `sink` (schema validation
             # per micro-batch), not straight to the writer
-            fn = dq_foreach_batch(
-                ruleset,
-                policy,
+            fn = partial(
+                dq_epoch,
+                ruleset=ruleset,
+                policy=policy,
                 sink=sink,
                 quarantine_sink=(lambda b, e: q_writer(b)) if q_writer else None,
             )

@@ -1,6 +1,6 @@
 """Config-driven maintained-ANN-index sink.
 
-Declarative face of ``streaming/ann_index.ann_index_foreach_batch``: a
+Declarative face of ``streaming/ann_index.ann_index_epoch``: a
 streaming (or batch) job whose TARGET is the IVF index itself — each
 micro-batch of ``(id, vector)`` rows is admitted with one map-only
 assignment pass, and the postings land cell-partitioned for
@@ -37,17 +37,17 @@ def _ann_index(
     df, opts, epoch, *, centroids_path, id_col="vec_id", vec_col="v",
     retrain_every=None, dim=None, retrain_iterations=1,
 ):
-    from lakehouse_ingestion_spark.streaming.ann_index import (
-        ann_index_foreach_batch,
-    )
+    from lakehouse_ingestion_spark.streaming.ann_index import ann_index_epoch
 
     seeds = df.sparkSession.read.parquet(centroids_path).select("cid", "cv")
-    ann_index_foreach_batch(
-        opts.target,
-        seeds,
+    ann_index_epoch(
+        df,
+        epoch,
+        index_dir=opts.target,
+        init_centroids=seeds,
         id_col=id_col,
         vec_col=vec_col,
         retrain_every=None if retrain_every is None else int(retrain_every),
         dim=None if dim is None else int(dim),
         retrain_iterations=int(retrain_iterations),
-    )(df, epoch)
+    )

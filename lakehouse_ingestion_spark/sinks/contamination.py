@@ -37,7 +37,7 @@ def _contamination_audit(
     contamination_epoch(
         df,
         epoch,
-        df.sparkSession.read.parquet(eval_path),
+        eval_df=df.sparkSession.read.parquet(eval_path),
         report_path=opts.target,
         ledger_path=ledger_path,
         text_col=text_col,

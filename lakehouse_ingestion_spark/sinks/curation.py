@@ -1,6 +1,6 @@
 """Config-driven streaming sticky-split sink.
 
-Declarative face of ``streaming/curation.sticky_split_foreach_batch``:
+Declarative face of ``streaming/curation.sticky_split_epoch``:
 a streaming (or batch) job whose TARGET is the curation split — each
 micro-batch gets near-dup-cluster-safe, sticky train/val/test labels
 against the persisted index/label/assignment state, and the labeled
@@ -43,6 +43,8 @@ stream and backfill maintain ONE split state.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 
 from lakehouse_ingestion_spark.errors import ConfigError
@@ -58,8 +60,10 @@ def _sticky_split(
     num_bands=8, lsh_seed=42, posting_cap=None, conflict_action="report",
     compact_every=None,
 ):
-    from lakehouse_ingestion_spark.streaming.curation import (
-        sticky_split_foreach_batch,
+    from lakehouse_ingestion_spark.streaming.curation import sticky_split_epoch
+    from lakehouse_ingestion_spark.streaming.multi_sink import (
+        SinkSpec,
+        write_epoch,
     )
 
     if not isinstance(fractions, dict) or not fractions:
@@ -72,23 +76,22 @@ def _sticky_split(
         def out_sink(batch: DataFrame, _e: int) -> None:
             batch.write.mode("append").parquet(out_path)
     else:
-        def out_sink(batch: DataFrame, e: int) -> None:
-            from lakehouse_ingestion_spark.streaming.multi_sink import (
-                SinkSpec,
-                write_epoch,
-            )
-
-            write_epoch(batch, {"split": SinkSpec(out_path)}, ledger_path, e)
+        out_sink = partial(
+            write_epoch, sinks={"split": SinkSpec(out_path)},
+            ledger_path=ledger_path,
+        )
 
     audit_sink = None
     if audit_path is not None:
         def audit_sink(batch: DataFrame, _e: int) -> None:
             batch.write.mode("append").parquet(audit_path)
 
-    sticky_split_foreach_batch(
-        state_dir,
-        {str(k): float(v) for k, v in fractions.items()},
-        float(threshold),
+    sticky_split_epoch(
+        df,
+        epoch,
+        state_dir=state_dir,
+        fractions={str(k): float(v) for k, v in fractions.items()},
+        threshold=float(threshold),
         sink=out_sink,
         id_col=id_col,
         text_col=text_col,
@@ -103,4 +106,4 @@ def _sticky_split(
         posting_cap=None if posting_cap is None else int(posting_cap),
         conflict_action=conflict_action,
         compact_every=None if compact_every is None else int(compact_every),
-    )(df, epoch)
+    )

@@ -71,4 +71,4 @@ def _fanout(df, opts, epoch, force, *, ledger_path, sinks):
         )
     # force (batch jobs): a RE-run is a deliberate replay, not a crash
     # redelivery — rewrite the epoch partition even if ledgered
-    write_epoch(df, specs, ledger_path, epoch, force=force)
+    write_epoch(df, epoch, sinks=specs, ledger_path=ledger_path, force=force)

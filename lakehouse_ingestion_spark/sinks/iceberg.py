@@ -2,7 +2,9 @@
 
 Gated on the Iceberg runtime being on the Spark classpath (not bundled
 with the engine): ``CREATE NAMESPACE IF NOT EXISTS`` + writeTo append,
-for batch jobs and for each streaming micro-batch alike.
+for batch jobs and for each streaming micro-batch alike. The target's
+options go to the ``writeTo`` builder; ``partition_by`` partitions the
+table when the write creates (or replaces) it.
 """
 
 from __future__ import annotations
@@ -34,12 +36,17 @@ def _iceberg(df, opts, **options):
     ns = table.rsplit(".", 1)[0] if "." in table else None
     if ns:
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {ns}")
-    if opts.mode == "overwrite":
-        df.writeTo(table).createOrReplace()
-    elif spark.catalog.tableExists(table):
+    writer = df.writeTo(table).options(**options)
+    if opts.mode != "overwrite" and spark.catalog.tableExists(table):
         # no try/except fallback: swallowing a real append failure
         # (schema mismatch, commit conflict) and re-raising create()'s
         # "table already exists" would mask the root cause
-        df.writeTo(table).append()
+        writer.append()
+        return
+    # partitioning is part of the table definition: set where it is made
+    if opts.partition_by:
+        writer = writer.partitionedBy(*opts.partition_by)
+    if opts.mode == "overwrite":
+        writer.createOrReplace()
     else:
-        df.writeTo(table).create()
+        writer.create()

@@ -38,8 +38,6 @@ has the same one-off restore-from-snapshot window as
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,11 +48,9 @@ from lakehouse_ingestion_spark.operators.incremental_ann import (
     retrain_postings,
     search_postings,
 )
-from lakehouse_ingestion_spark.streaming.multi_sink import (
-    EPOCH_COL,
-    _ledgered_sinks,
-    committed_epochs,
-)
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import EPOCH_COL, LEDGERED
+from lakehouse_ingestion_spark.streaming.multi_sink import LEDGER_SCHEMA
 from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 LEDGER_SINK = "ann_index_state"
@@ -81,16 +77,6 @@ def current_centroids(spark: SparkSession, index_dir: str) -> DataFrame | None:
         return None
     mx = raw.agg(F.max(EPOCH_COL)).collect()[0][0]
     return raw.where(F.col(EPOCH_COL) == mx).select("cid", "cv")
-
-
-def _write_centroids(cent: DataFrame, index_dir: str, epoch_id: int) -> None:
-    (
-        cent.withColumn(EPOCH_COL, F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL)
-        .parquet(_centroids_path(index_dir))
-    )
 
 
 def committed_postings(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -161,10 +147,10 @@ def retrain_index(
     cent = current_centroids(spark, index_dir)
     if cent is None:
         raise ConfigError(f"no centroids at {index_dir} — index never bootstrapped")
-    led = committed_epochs(spark, _ledger_path(index_dir), LEDGER_SINK)
-    mx = led.agg(F.max("epoch")).collect()[0][0]
-    if mx is None:
+    committed = epochlog.ledgered_epochs(spark, _ledger_path(index_dir))
+    if not committed:
         return  # nothing committed; nothing safe to fold
+    mx = max(committed)
     refined, reassigned = retrain_postings(
         posts, cent, dim=dim, iterations=iterations,
         id_col=id_col, vec_col=vec_col,
@@ -172,16 +158,17 @@ def retrain_index(
     # pin the refined set: it drives the reassignment AND gets persisted
     refined = refined.localCheckpoint(eager=True)
     snap = reassigned.localCheckpoint(eager=True)  # reads the old layout
-    (
-        snap.withColumn(EPOCH_COL, F.lit(mx))
-        .write.mode("overwrite")  # static: every old epoch partition goes
-        .partitionBy(EPOCH_COL, "cell")
-        .parquet(_postings_path(index_dir))
+    # every old epoch partition goes, whatever the session's overwrite mode
+    epochlog.overwrite_snapshot(
+        snap.withColumn(EPOCH_COL, F.lit(mx)), _postings_path(index_dir), "cell"
     )
-    _write_centroids(refined, index_dir, mx)
+    epochlog.overwrite_epoch(refined, _centroids_path(index_dir), mx)
 
 
-def ann_index_foreach_batch(
+def ann_index_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    *,
     index_dir: str,
     init_centroids: "DataFrame | pd.DataFrame",
     id_col: str = "vec_id",
@@ -189,54 +176,45 @@ def ann_index_foreach_batch(
     retrain_every: int | None = None,
     dim: int | None = None,
     retrain_iterations: int = 1,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch maintainer (state layout and crash story
-    in the module docstring). ``init_centroids`` seeds the index on the
-    first-ever epoch; after that the persisted set is authoritative
-    (seeds are ignored), so retrained centroids survive restarts.
-    ``retrain_every=N`` refines + folds after every Nth epoch's commit
-    point; it requires ``dim``."""
+) -> None:
+    """One micro-batch through the maintainer (state layout and crash
+    story in the module docstring). ``init_centroids`` seeds the index
+    on the first-ever epoch; after that the persisted set is
+    authoritative (seeds are ignored), so retrained centroids survive
+    restarts. ``retrain_every=N`` refines + folds after every Nth
+    epoch's commit point; it requires ``dim``."""
     if retrain_every is not None:
         if retrain_every < 1:
             raise ConfigError(f"retrain_every must be >= 1, got {retrain_every}")
         if dim is None:
             raise ConfigError("retrain_every requires dim")
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger_path = _ledger_path(index_dir)
-        if LEDGER_SINK in _ledgered_sinks(spark, ledger_path, epoch_id):
-            return  # state-only sink: a committed epoch's redelivery is a no-op
+    spark = batch_df.sparkSession
+    ledger_path = _ledger_path(index_dir)
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, LEDGER_SCHEMA, epoch_id, by="sink"
+    )
+    if any(r["sink"] == LEDGER_SINK and r[LEDGERED] for r in rows):
+        return  # state-only sink: a committed epoch's redelivery is a no-op
+    cent = current_centroids(spark, index_dir)
+    if cent is None:
+        if not isinstance(init_centroids, DataFrame):
+            init_centroids = spark.createDataFrame(
+                init_centroids, "cid long, cv array<double>"
+            )
+        epochlog.overwrite_epoch(
+            init_centroids, _centroids_path(index_dir), epoch_id
+        )
         cent = current_centroids(spark, index_dir)
-        if cent is None:
-            _write_centroids(
-                init_centroids
-                if isinstance(init_centroids, DataFrame)
-                else spark.createDataFrame(
-                    init_centroids, "cid long, cv array<double>"
-                ),
-                index_dir,
-                epoch_id,
-            )
-            cent = current_centroids(spark, index_dir)
-        delta = assign_postings(
-            batch_df.select(id_col, vec_col), cent, id_col, vec_col
+    delta = assign_postings(
+        batch_df.select(id_col, vec_col), cent, id_col, vec_col
+    )
+    epochlog.overwrite_epoch(delta, _postings_path(index_dir), epoch_id, "cell")
+    # ledger LAST: an un-ledgered epoch re-runs end to end
+    epochlog.append_ledger(
+        spark, ledger_path, LEDGER_SCHEMA, [(epoch_id, LEDGER_SINK, 0)]
+    )
+    if retrain_every is not None and (epoch_id + 1) % retrain_every == 0:
+        retrain_index(
+            spark, index_dir, dim=dim, iterations=retrain_iterations,
+            id_col=id_col, vec_col=vec_col,
         )
-        (
-            delta.withColumn(EPOCH_COL, F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(EPOCH_COL, "cell")
-            .parquet(_postings_path(index_dir))
-        )
-        # ledger LAST: an un-ledgered epoch re-runs end to end
-        spark.createDataFrame(
-            [(epoch_id, LEDGER_SINK, 0)], "epoch long, sink string, rows long"
-        ).write.mode("append").parquet(ledger_path)
-        if retrain_every is not None and (epoch_id + 1) % retrain_every == 0:
-            retrain_index(
-                spark, index_dir, dim=dim, iterations=retrain_iterations,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    return _fn

@@ -54,7 +54,10 @@ from lakehouse_ingestion_spark.operators.bloom import (
 from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
 
-def bloom_dedup_foreach_batch(
+def bloom_dedup_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    *,
     state_paths: tuple[str, str],
     sink: Callable[[DataFrame, int], None],
     key_col: str,
@@ -62,8 +65,8 @@ def bloom_dedup_foreach_batch(
     fpp: float = 0.01,
     seed: int = 42,
     dup_sink: Callable[[DataFrame, int], None] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function.
+) -> None:
+    """One micro-batch through the exact dedup.
 
     ``state_paths`` = (bloom_path, keys_path): parquet dirs, created on
     the first batch. ``expected_items`` sizes the filter for the
@@ -87,72 +90,68 @@ def bloom_dedup_foreach_batch(
     if expected_items <= 0:
         raise ConfigError(f"expected_items must be > 0, got {expected_items}")
     bloom_path, keys_path = state_paths
+    spark = batch_df.sparkSession
+    # only a missing path (first batch) bootstraps; any other read
+    # failure must surface, not silently disable dedup
+    stored = read_parquet_if_exists(spark, bloom_path)
 
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # only a missing path (first batch) bootstraps; any other read
-        # failure must surface, not silently disable dedup
-        stored = read_parquet_if_exists(spark, bloom_path)
-
-        # NULL keys are unidentifiable: they bypass dedup entirely and
-        # every NULL-key row survives verbatim.  They must be split out
-        # BEFORE dropDuplicates, which uses null-safe equality and would
-        # collapse all NULL-key rows in the batch to one.
-        null_rows = batch_df.where(F.col(key_col).isNull())
-        batch = batch_df.where(F.col(key_col).isNotNull()).dropDuplicates(
-            [key_col]
-        )
-        if stored is not None:
-            screened = bloom_screen(batch, stored, key_col, out_col="__maybe")
-            maybe = screened.where(F.col("__maybe")).drop("__maybe")
-            if maybe.isEmpty():
-                dup_keys = None
-            else:
-                dup_keys = (
-                    maybe.select(key_col)
-                    .join(spark.read.parquet(keys_path), key_col, "semi")
-                    # batch-bounded; pinned so post-append state can
-                    # never leak into a lazy re-evaluation
-                    .localCheckpoint(eager=True)
-                )
-        else:
+    # NULL keys are unidentifiable: they bypass dedup entirely and
+    # every NULL-key row survives verbatim.  They must be split out
+    # BEFORE dropDuplicates, which uses null-safe equality and would
+    # collapse all NULL-key rows in the batch to one.
+    null_rows = batch_df.where(F.col(key_col).isNull())
+    batch = batch_df.where(F.col(key_col).isNotNull()).dropDuplicates(
+        [key_col]
+    )
+    if stored is not None:
+        screened = bloom_screen(batch, stored, key_col, out_col="__maybe")
+        maybe = screened.where(F.col("__maybe")).drop("__maybe")
+        if maybe.isEmpty():
             dup_keys = None
-
-        if dup_keys is not None:
-            survivors = batch.join(dup_keys, key_col, "anti")
-            dup_rows = batch.join(dup_keys, key_col, "semi")
         else:
-            survivors = batch
-            dup_rows = None
-        survivors = survivors.unionByName(null_rows)
-        survivors.persist()
-        try:
-            if dup_sink is not None and dup_rows is not None:
-                dup_sink(dup_rows, epoch_id)
-            sink(survivors, epoch_id)
-
-            new_keys = survivors.select(key_col).where(
-                F.col(key_col).isNotNull()
+            dup_keys = (
+                maybe.select(key_col)
+                .join(spark.read.parquet(keys_path), key_col, "semi")
+                # batch-bounded; pinned so post-append state can
+                # never leak into a lazy re-evaluation
+                .localCheckpoint(eager=True)
             )
-            delta = bloom_build(
-                new_keys, key_col, expected_items, fpp=fpp, seed=seed
-            )
-            merged = delta if stored is None else bloom_merge(stored, delta)
-            # pin BEFORE overwriting the path the merge plan reads from
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(bloom_path)
-            new_keys.write.mode("append").parquet(keys_path)
-        finally:
-            survivors.unpersist()
-        # state is durably on disk: free this batch's pinned frames now
-        # rather than at ContextCleaner GC leisure (checkpoint.py) —
-        # merged, the verified-dup key set, and (via the screened
-        # plan's LogicalRDD leaf) bloom_screen's pinned filter row
-        rel = [merged]
-        if dup_keys is not None:
-            rel.append(dup_keys)
-        if stored is not None:
-            rel.append(screened)
-        release_local_checkpoint(*rel)
+    else:
+        dup_keys = None
 
-    return _fn
+    if dup_keys is not None:
+        survivors = batch.join(dup_keys, key_col, "anti")
+        dup_rows = batch.join(dup_keys, key_col, "semi")
+    else:
+        survivors = batch
+        dup_rows = None
+    survivors = survivors.unionByName(null_rows)
+    survivors.persist()
+    try:
+        if dup_sink is not None and dup_rows is not None:
+            dup_sink(dup_rows, epoch_id)
+        sink(survivors, epoch_id)
+
+        new_keys = survivors.select(key_col).where(
+            F.col(key_col).isNotNull()
+        )
+        delta = bloom_build(
+            new_keys, key_col, expected_items, fpp=fpp, seed=seed
+        )
+        merged = delta if stored is None else bloom_merge(stored, delta)
+        # pin BEFORE overwriting the path the merge plan reads from
+        merged = merged.localCheckpoint(eager=True)
+        merged.write.mode("overwrite").parquet(bloom_path)
+        new_keys.write.mode("append").parquet(keys_path)
+    finally:
+        survivors.unpersist()
+    # state is durably on disk: free this batch's pinned frames now
+    # rather than at ContextCleaner GC leisure (checkpoint.py) —
+    # merged, the verified-dup key set, and (via the screened
+    # plan's LogicalRDD leaf) bloom_screen's pinned filter row
+    rel = [merged]
+    if dup_keys is not None:
+        rel.append(dup_keys)
+    if stored is not None:
+        rel.append(screened)
+    release_local_checkpoint(*rel)

@@ -14,15 +14,12 @@ ever read or written per trigger (the lesson of the r8 curation sink):
 per-batch I/O is the batch itself plus the O(#epochs) ledger, and the
 number of admitting epochs is bounded by budget/batch_cost anyway.
 
-Replay safety (same contract as ``multi_sink.write_epoch``):
-
-- output lands epoch-partitioned with dynamic partition overwrite —
-  data FIRST, ledger append AFTER;
-- a redelivered ledgered epoch is skipped outright;
-- a redelivered epoch that crashed between write and ledger recomputes
-  the identical admission (the ledger excludes the crashed epoch, so
-  ``remaining`` is unchanged, and the selection is a pure function of
-  batch content) and dynamic-overwrites its own partition — convergent.
+Replay safety is the ``streaming/epochlog`` protocol: a ledgered epoch
+is skipped, output lands in its own epoch partition FIRST, the ledger
+row appends AFTER. A redelivered epoch that crashed between the two
+recomputes the identical admission (the ledger excludes the crashed
+epoch, so ``remaining`` is unchanged, and the selection is a pure
+function of batch content) and overwrites its own partition.
 
 Once the ledger shows the budget exhausted, every later epoch ledgers
 ``rows=0`` without touching the data path, so the stream can keep
@@ -31,50 +28,30 @@ running as a no-op or be stopped by the caller polling ``spent()``.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.util import read_parquet_if_exists
-
-EPOCH_COL = "_epoch"
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import EPOCH_COL, LEDGERED
 
 LEDGER_SCHEMA = "epoch long, rows long, batch_cost long, spent_after long"
 
 
-def _read_ledger(
-    spark: SparkSession, ledger_path: str, schema: str | None = None
-) -> DataFrame | None:
-    """None ONLY when the ledger does not exist yet (first run).
-
-    Any other read failure (object-store hiccup, permissions) must
-    propagate so the micro-batch retries: swallowing it would make the
-    epoch recompute with ``already=0`` — re-admitting up to the full
-    budget and appending a duplicate ledger row for an already-ledgered
-    epoch, silently overrunning the quota.
-
-    ``schema``: every ledger's schema is a module constant the writer
-    controls, so callers pass it and skip parquet schema inference —
-    one fewer Spark job per trigger (r12; the footer-merge job ran on
-    every micro-batch).
-    """
-    # with a schema, file listing still happens at load, so a missing
-    # ledger raises PATH_NOT_FOUND exactly like the inferred path
-    # (probed; only the footer schema-merge job is skipped)
-    return read_parquet_if_exists(
-        spark, ledger_path, schema=schema, match_message=True
-    )
-
-
 def spent(spark: SparkSession, ledger_path: str) -> int:
     """Total cost admitted so far (0 when no epoch has committed)."""
-    led = _read_ledger(spark, ledger_path, LEDGER_SCHEMA)
+    led = epochlog.read_ledger(spark, ledger_path, LEDGER_SCHEMA)
     if led is None:
         return 0
     row = led.agg(F.sum("batch_cost").alias("s")).collect()[0]
     return int(row["s"] or 0)
+
+
+def _with_epoch(schema: StructType) -> StructType:
+    """The schema of an epoch partition read back (a copy: DataFrame
+    schemas are cached objects)."""
+    return StructType([*schema, StructField(EPOCH_COL, LongType())])
 
 
 def _check_budget(budget: int, name: str = "budget") -> None:
@@ -85,6 +62,7 @@ def _check_budget(budget: int, name: str = "budget") -> None:
 def admit_epoch(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     out_path: str,
     ledger_path: str,
     score_col: str,
@@ -100,19 +78,13 @@ def admit_epoch(
 
     _check_budget(budget)
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path, LEDGER_SCHEMA)
-    already = 0
-    if led is not None:
-        # ONE fused ledger pass: the ledgered-epoch flag and the spent
-        # total come from the same aggregate (was a count() job plus a
-        # separate agg job per trigger — guide §1.2: fewer actions)
-        row = led.agg(
-            F.sum("batch_cost").alias("s"),
-            F.max((F.col("epoch") == epoch_id).cast("int")).alias("dup"),
-        ).collect()[0]
-        if row["dup"]:
-            return  # ledgered epoch: output is committed, skip outright
-        already = int(row["s"] or 0)
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, LEDGER_SCHEMA, epoch_id,
+        F.sum("batch_cost").alias("s"),
+    )
+    if any(r[LEDGERED] for r in rows):
+        return  # ledgered epoch: output is committed, skip outright
+    already = int(rows[0]["s"] or 0) if rows else 0
     remaining = budget - already
 
     n_rows = 0
@@ -135,60 +107,21 @@ def admit_epoch(
             # make the audit column the GLOBAL running total, not batch-local
             admitted = admitted.withColumn(
                 cum_col, F.col(cum_col) + F.lit(already)
-            ).withColumn(EPOCH_COL, F.lit(epoch_id))
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            counted = admitted.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(F.sum(F.col(cost_col).cast("long")), F.lit(0)).alias(
-                    "cost"
-                ),
             )
-            (
-                counted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(EPOCH_COL)
-                .parquet(out_path)
+            m = epochlog.overwrite_epoch(
+                admitted, out_path, epoch_id,
+                rows=F.count(F.lit(1)),
+                cost=F.coalesce(F.sum(F.col(cost_col).cast("long")), F.lit(0)),
             )
-            n_rows = int(obs.get["rows"])
-            batch_cost = int(obs.get["cost"])
+            n_rows = int(m["rows"])
+            batch_cost = int(m["cost"])
         finally:
             for c in caches:
                 c.unpersist()
-    spark.createDataFrame(
+    epochlog.append_ledger(
+        spark, ledger_path, LEDGER_SCHEMA,
         [(epoch_id, n_rows, batch_cost, already + batch_cost)],
-        LEDGER_SCHEMA,
-    ).write.mode("append").parquet(ledger_path)
-
-
-def budget_admit_foreach_batch(
-    out_path: str,
-    ledger_path: str,
-    score_col: str,
-    cost_col: str,
-    budget: int,
-    key_col: str,
-    cum_col: str = "cum_cost",
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for a budget-admission sink."""
-    _check_budget(budget)
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        admit_epoch(
-            batch_df,
-            int(epoch_id),
-            out_path,
-            ledger_path,
-            score_col,
-            cost_col,
-            budget,
-            key_col,
-            cum_col=cum_col,
-        )
-
-    return _fn
+    )
 
 
 # --------------------------------------------------------------------------
@@ -212,7 +145,7 @@ def spent_by_stratum(
     O(#epochs x #strata-per-batch) shape keeps per-trigger state I/O
     batch-sized, never corpus-sized, exactly like the global ledger.
     """
-    led = _read_ledger(spark, ledger_path, STRATIFIED_LEDGER_SCHEMA)
+    led = epochlog.read_ledger(spark, ledger_path, STRATIFIED_LEDGER_SCHEMA)
     if led is None:
         return {}
     rows = (
@@ -224,6 +157,7 @@ def spent_by_stratum(
 def admit_epoch_stratified(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     out_path: str,
     ledger_path: str,
     strata_col: str,
@@ -264,22 +198,13 @@ def admit_epoch_stratified(
         _check_budget(budgets)
     _check_budget(default_budget, "default_budget")
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path, STRATIFIED_LEDGER_SCHEMA)
-    spent_map: dict[str | None, int] = {}
-    if led is not None:
-        # ONE fused ledger pass: per-stratum spent totals and the
-        # ledgered-epoch flag from the same aggregate (was two jobs)
-        rows = (
-            led.groupBy("stratum")
-            .agg(
-                F.sum("batch_cost").alias("s"),
-                F.max((F.col("epoch") == epoch_id).cast("int")).alias("dup"),
-            )
-            .collect()
-        )
-        if any(r["dup"] for r in rows):
-            return  # ledgered epoch: output is committed, skip outright
-        spent_map = {r["stratum"]: int(r["s"] or 0) for r in rows}
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, STRATIFIED_LEDGER_SCHEMA, epoch_id,
+        F.sum("batch_cost").alias("s"), by="stratum",
+    )
+    if any(r[LEDGERED] for r in rows):
+        return  # ledgered epoch: output is committed, skip outright
+    spent_map = {r["stratum"]: int(r["s"] or 0) for r in rows}
 
     flat = dict(budgets) if isinstance(budgets, dict) else None
 
@@ -318,16 +243,9 @@ def admit_epoch_stratified(
                 else F.col(strata_col).cast("string") == s
             )
             adj = F.when(cond, F.lit(int(v)).cast("long")).otherwise(adj)
-        admitted = admitted.withColumn(
-            cum_col, F.col(cum_col) + adj
-        ).withColumn(EPOCH_COL, F.lit(int(epoch_id)).cast("long"))
-        out_schema = admitted.schema
-        (
-            admitted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(EPOCH_COL)
-            .parquet(out_path)
-        )
+        admitted = admitted.withColumn(cum_col, F.col(cum_col) + adj)
+        out_schema = _with_epoch(admitted.schema)
+        epochlog.overwrite_epoch(admitted, out_path, epoch_id)
     finally:
         for c in caches:
             c.unpersist()
@@ -361,9 +279,9 @@ def admit_epoch_stratified(
         ]
     else:
         ledger_rows = [(int(epoch_id), None, 0, 0, 0)]
-    spark.createDataFrame(ledger_rows, STRATIFIED_LEDGER_SCHEMA).write.mode(
-        "append"
-    ).parquet(ledger_path)
+    epochlog.append_ledger(
+        spark, ledger_path, STRATIFIED_LEDGER_SCHEMA, ledger_rows
+    )
 
 
 # --------------------------------------------------------------------------
@@ -383,6 +301,7 @@ SHARE_LEDGER_SCHEMA = (
 def admit_epoch_share(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     out_path: str,
     ledger_path: str,
     score_col: str,
@@ -422,28 +341,21 @@ def admit_epoch_share(
     ledgered epoch is skipped outright; a crash between the two
     recomputes the identical admission and overwrites its own partition.
     """
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Window
 
     from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
 
     if not 0 < p <= 1:
         raise ConfigError(f"p must be in (0, 1], got {p}")
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path, SHARE_LEDGER_SCHEMA)
-    seen, admitted = 0.0, 0.0
-    if led is not None:
-        # ONE fused ledger pass: the ledgered-epoch flag and both mass
-        # totals from the same aggregate (was a count() job plus a
-        # separate agg job per trigger)
-        row = led.agg(
-            F.sum("batch_mass").alias("s"),
-            F.sum("admitted_mass").alias("a"),
-            F.max((F.col("epoch") == epoch_id).cast("int")).alias("dup"),
-        ).collect()[0]
-        if row["dup"]:
-            return  # ledgered epoch: output is committed, skip outright
-        seen = round(float(row["s"] or 0.0), 6)
-        admitted = round(float(row["a"] or 0.0), 6)
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, SHARE_LEDGER_SCHEMA, epoch_id,
+        F.sum("batch_mass").alias("s"), F.sum("admitted_mass").alias("a"),
+    )
+    if any(r[LEDGERED] for r in rows):
+        return  # ledgered epoch: output is committed, skip outright
+    seen = round(float(rows[0]["s"] or 0.0), 6) if rows else 0.0
+    admitted = round(float(rows[0]["a"] or 0.0), 6) if rows else 0.0
 
     # ONE materialization of the batch (r12, guide §1.2): the windowed
     # prefix-sum frame is locally checkpointed by the guard aggregate's
@@ -491,67 +403,29 @@ def admit_epoch_share(
                     + F.lit(admitted),
                 )
                 .drop("__prev")
-                .withColumn(EPOCH_COL, F.lit(int(epoch_id)).cast("long"))
             )
-            obs = Observation()
-            counted = sel.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
+            metrics = epochlog.overwrite_epoch(
+                sel, out_path, epoch_id,
+                rows=F.count(F.lit(1)),
+                mass=F.coalesce(
                     F.sum(F.col(score_col).cast("double")), F.lit(0.0)
-                ).alias("mass"),
+                ),
             )
-            (
-                counted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(EPOCH_COL)
-                .parquet(out_path)
-            )
-            metrics = dict(obs.get)
             n_rows = int(metrics["rows"])
             adm_mass = round(float(metrics["mass"]), 6)
     finally:
         release_local_checkpoint(base)
-    spark.createDataFrame(
-        [
-            (
-                int(epoch_id),
-                n_rows,
-                batch_mass,
-                adm_mass,
-                round(seen + batch_mass, 6),
-                round(admitted + adm_mass, 6),
-            )
-        ],
-        SHARE_LEDGER_SCHEMA,
-    ).write.mode("append").parquet(ledger_path)
-
-
-def share_admit_foreach_batch(
-    out_path: str,
-    ledger_path: str,
-    score_col: str,
-    p: float,
-    key_col: str,
-    cum_col: str = "cum_score",
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function for a mass-share admission sink."""
-    if not 0 < p <= 1:
-        raise ConfigError(f"p must be in (0, 1], got {p}")
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        admit_epoch_share(
-            batch_df,
+    epochlog.append_ledger(
+        spark, ledger_path, SHARE_LEDGER_SCHEMA,
+        [(
             int(epoch_id),
-            out_path,
-            ledger_path,
-            score_col,
-            p,
-            key_col,
-            cum_col=cum_col,
-        )
-
-    return _fn
+            n_rows,
+            batch_mass,
+            adm_mass,
+            round(seen + batch_mass, 6),
+            round(admitted + adm_mass, 6),
+        )],
+    )
 
 
 SHARE_STRAT_LEDGER_SCHEMA = (
@@ -563,6 +437,7 @@ SHARE_STRAT_LEDGER_SCHEMA = (
 def admit_epoch_share_stratified(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     out_path: str,
     ledger_path: str,
     strata_col: str,
@@ -611,26 +486,15 @@ def admit_epoch_share_stratified(
         return float(flat.get(stratum, default_p))
 
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path, SHARE_STRAT_LEDGER_SCHEMA)
-    seen_map: dict[str | None, float] = {}
-    adm_map: dict[str | None, float] = {}
-    if led is not None:
-        # ONE fused ledger pass: per-stratum totals and the
-        # ledgered-epoch flag from the same aggregate (was two jobs)
-        rows = (
-            led.groupBy("stratum")
-            .agg(
-                F.sum("batch_mass").alias("s"),
-                F.sum("admitted_mass").alias("a"),
-                F.max((F.col("epoch") == epoch_id).cast("int")).alias("dup"),
-            )
-            .collect()
-        )
-        if any(r["dup"] for r in rows):
-            return  # ledgered epoch: output is committed, skip outright
-        for r in rows:
-            seen_map[r["stratum"]] = round(float(r["s"] or 0.0), 6)
-            adm_map[r["stratum"]] = round(float(r["a"] or 0.0), 6)
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, SHARE_STRAT_LEDGER_SCHEMA, epoch_id,
+        F.sum("batch_mass").alias("s"), F.sum("admitted_mass").alias("a"),
+        by="stratum",
+    )
+    if any(r[LEDGERED] for r in rows):
+        return  # ledgered epoch: output is committed, skip outright
+    seen_map = {r["stratum"]: round(float(r["s"] or 0.0), 6) for r in rows}
+    adm_map = {r["stratum"]: round(float(r["a"] or 0.0), 6) for r in rows}
 
     skey = F.col(strata_col).cast("string")
     stats = batch_df.groupBy(skey.alias("stratum")).agg(
@@ -678,15 +542,9 @@ def admit_epoch_share_stratified(
             cum_col, F.col("__prev") + F.col(score_col).cast("double") + adj_expr
         )
         .drop("__prev")
-        .withColumn(EPOCH_COL, F.lit(int(epoch_id)).cast("long"))
     )
-    out_schema = sel.schema
-    (
-        sel.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL)
-        .parquet(out_path)
-    )
+    out_schema = _with_epoch(sel.schema)
+    epochlog.overwrite_epoch(sel, out_path, epoch_id)
 
     # per-stratum admitted stats from the just-written epoch partition
     # (partition-pruned, batch-sized read — the stratified-quota idiom)
@@ -722,6 +580,6 @@ def admit_epoch_share_stratified(
         )
     if not ledger_rows:
         ledger_rows = [(int(epoch_id), None, 0, 0.0, 0.0, 0.0, 0.0)]
-    spark.createDataFrame(ledger_rows, SHARE_STRAT_LEDGER_SCHEMA).write.mode(
-        "append"
-    ).parquet(ledger_path)
+    epochlog.append_ledger(
+        spark, ledger_path, SHARE_STRAT_LEDGER_SCHEMA, ledger_rows
+    )

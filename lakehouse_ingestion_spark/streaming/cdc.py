@@ -23,9 +23,7 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from lakehouse_ingestion_spark.operators.cdc import DELETE_OPS, cdc_apply, cdc_apply_incremental
 
@@ -69,59 +67,57 @@ def _recover_backup(state_path: str) -> None:
         shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
 
 
-def cdc_foreach_batch(
-    spark: SparkSession,
+def cdc_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    *,
     state_path: str,
     key_columns: list[str],
     order_by: list[str],
     op_column: str = "op",
     delete_ops: tuple[str, ...] = DELETE_OPS,
-) -> Callable[[DataFrame, int], None]:
-    """Build a ``foreachBatch`` function that folds each CDC micro-batch
-    into the parquet state at ``state_path`` (bootstrapped on first
-    batch)."""
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _recover_backup(state_path)
-        if os.path.exists(state_path):
-            snapshot = spark.read.parquet(state_path)
-            new_state = cdc_apply_incremental(
-                snapshot,
-                batch_df,
-                key_columns,
-                list(order_by),
-                op_column=op_column,
-                delete_ops=delete_ops,
-            )
-        else:
-            new_state = cdc_apply(
-                batch_df,
-                key_columns,
-                list(order_by),
-                op_column=op_column,
-                delete_ops=delete_ops,
-            ).drop(op_column)
-        tmp = state_path.rstrip("/") + f"__cdc_tmp_{epoch_id}"
-        new_state.write.mode("overwrite").parquet(tmp)
-        expected = spark.read.parquet(tmp).count()  # footer-only
-        old = state_path.rstrip("/") + f"__cdc_old_{epoch_id}"
-        # a crash between the two moves of a previous attempt at this
-        # epoch can leave the backup dir behind; clear it or the move
-        # below nests the state inside it
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(state_path):
-            shutil.move(state_path, old)
-        shutil.move(tmp, state_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        log.info(
-            "cdc state %s updated at epoch %s (%d keys)",
-            state_path,
-            epoch_id,
-            expected,
+) -> None:
+    """Fold one CDC micro-batch into the parquet state at
+    ``state_path`` (bootstrapped on the first batch)."""
+    if batch_df.isEmpty():
+        return
+    spark = batch_df.sparkSession
+    _recover_backup(state_path)
+    if os.path.exists(state_path):
+        snapshot = spark.read.parquet(state_path)
+        new_state = cdc_apply_incremental(
+            snapshot,
+            batch_df,
+            key_columns,
+            list(order_by),
+            op_column=op_column,
+            delete_ops=delete_ops,
         )
-
-    return _fn
+    else:
+        new_state = cdc_apply(
+            batch_df,
+            key_columns,
+            list(order_by),
+            op_column=op_column,
+            delete_ops=delete_ops,
+        ).drop(op_column)
+    tmp = state_path.rstrip("/") + f"__cdc_tmp_{epoch_id}"
+    new_state.write.mode("overwrite").parquet(tmp)
+    expected = spark.read.parquet(tmp).count()  # footer-only
+    old = state_path.rstrip("/") + f"__cdc_old_{epoch_id}"
+    # a crash between the two moves of a previous attempt at this
+    # epoch can leave the backup dir behind; clear it or the move
+    # below nests the state inside it
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(state_path):
+        shutil.move(state_path, old)
+    shutil.move(tmp, state_path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    log.info(
+        "cdc state %s updated at epoch %s (%d keys)",
+        state_path,
+        epoch_id,
+        expected,
+    )

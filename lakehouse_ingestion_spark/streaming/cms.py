@@ -3,7 +3,7 @@ batches arrive, without ever rescanning the corpus.
 
 The streaming face of ``operators/cms.py`` — the frequency companion of
 the streaming contamination audit, on the SAME epoch-delta fold-log
-layout (``streaming/foldlog.py``): per micro-batch the batch's own
+layout (``streaming/epochlog.py``): per micro-batch the batch's own
 counters are built (ONE bounded aggregate — the delta is <=
 depth*width*groups rows regardless of batch size) and landed as an
 epoch-partitioned delta; the current sketch is the fold (counter rows
@@ -34,12 +34,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ingestion_spark.streaming.budget import _read_ledger
-from lakehouse_ingestion_spark.streaming.foldlog import (
-    EPOCH_COL,
-    compact_fold_log,
-    current_fold,
-)
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import LEDGERED
+
+LEDGER_SCHEMA = "epoch long, cnt_sum long"
 
 
 def _fold_factory(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
@@ -58,16 +56,9 @@ def current_counters(
 ) -> DataFrame | None:
     """Fold the delta log into the current sketch (None before the
     first committed epoch)."""
-    return current_fold(
+    return epochlog.current_fold(
         spark, counters_path, _fold_factory(list(group_cols or []))
     )
-
-
-def _ledger_epochs(spark: SparkSession, ledger_path: str) -> set[int]:
-    led = _read_ledger(spark, ledger_path)
-    if led is None:
-        return set()
-    return {int(r["epoch"]) for r in led.select("epoch").distinct().collect()}
 
 
 def compact_counters(
@@ -80,16 +71,11 @@ def compact_counters(
     """Fold delta partitions into ONE snapshot partition — the shared
     ``compact_fold_log`` protocol; without ``ledger_path`` the caller
     must quiesce the stream first."""
-    committed = (
-        None
-        if ledger_path is None
-        else (lambda: _ledger_epochs(spark, ledger_path))
-    )
-    compact_fold_log(
+    epochlog.compact_fold_log(
         spark,
         counters_path,
         _fold_factory(list(group_cols or [])),
-        committed,
+        ledger_path,
         max_retries=max_retries,
     )
 
@@ -97,6 +83,7 @@ def compact_counters(
 def cms_epoch(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     counters_path: str,
     ledger_path: str,
     item_col: str,
@@ -109,8 +96,8 @@ def cms_epoch(
     from lakehouse_ingestion_spark.operators.cms import cms_build
 
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path)
-    if led is not None and led.filter(F.col("epoch") == epoch_id).count():
+    rows = epochlog.ledger_totals(spark, ledger_path, LEDGER_SCHEMA, epoch_id)
+    if any(r[LEDGERED] for r in rows):
         return  # ledgered epoch: delta is committed, skip outright
 
     delta = cms_build(
@@ -120,21 +107,12 @@ def cms_epoch(
         depth=depth,
         width=width,
         weight_col=weight_col,
-    ).withColumn(EPOCH_COL, F.lit(int(epoch_id)).cast("long"))
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    counted = delta.observe(
-        obs, F.coalesce(F.sum("cnt"), F.lit(0)).alias("cnt_sum")
     )
-    (
-        counted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL)
-        .parquet(counters_path)
+    m = epochlog.overwrite_epoch(
+        delta, counters_path, epoch_id,
+        cnt_sum=F.coalesce(F.sum("cnt"), F.lit(0)),
     )
     # cnt_sum = depth x batch mass — the ledger's consistency probe
-    spark.createDataFrame(
-        [(int(epoch_id), int(dict(obs.get)["cnt_sum"]))],
-        "epoch long, cnt_sum long",
-    ).write.mode("append").parquet(ledger_path)
+    epochlog.append_ledger(
+        spark, ledger_path, LEDGER_SCHEMA, [(int(epoch_id), int(m["cnt_sum"]))]
+    )

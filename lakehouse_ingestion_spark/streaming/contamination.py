@@ -29,10 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ingestion_spark.streaming.budget import _read_ledger
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import LEDGERED
 
-EPOCH_COL = "_epoch"
-COMPACT_EPOCH = -1
+LEDGER_SCHEMA = "epoch long, batch_dirty long, batch_hits long"
 
 
 def _fold(raw: DataFrame) -> DataFrame:
@@ -49,16 +49,7 @@ def current_report(spark: SparkSession, report_path: str) -> DataFrame | None:
     """Fold the delta log into the current per-eval-example report
     (None before the first committed epoch). Eval-sized aggregation —
     the frame under it is #epochs x |eval| rows, never corpus-sized."""
-    from lakehouse_ingestion_spark.streaming.foldlog import current_fold
-
-    return current_fold(spark, report_path, _fold)
-
-
-def _ledger_epochs(spark: SparkSession, ledger_path: str) -> set[int]:
-    led = _read_ledger(spark, ledger_path)
-    if led is None:
-        return set()
-    return {int(r["epoch"]) for r in led.select("epoch").distinct().collect()}
+    return epochlog.current_fold(spark, report_path, _fold)
 
 
 def compact_report(
@@ -69,61 +60,21 @@ def compact_report(
 ) -> None:
     """Fold delta partitions into ONE snapshot partition
     (``_epoch = -1``); superseded partitions go. Cadence maintenance,
-    not a per-trigger step.
-
-    Replay-safety rules (r10 + r11 ADVICE fixes):
-
-    - The write forces ``partitionOverwriteMode=static`` so the WHOLE
-      report path is replaced regardless of the session default — under
-      a session-wide ``dynamic`` default only the snapshot's own
-      partition would be replaced and every superseded delta would
-      survive, double-counting in ``current_report`` from then on.
-    - With ``ledger_path``, only LEDGERED epochs (plus a prior snapshot)
-      are folded into the snapshot.  Unledgered PENDING deltas are
-      carried forward VERBATIM in their own epoch partitions (r11
-      ADVICE fix): dropping them would permanently lose an epoch whose
-      ledger append lands between our ledger read and the overwrite
-      (``contamination_epoch`` skips ledgered epochs, so the delta
-      would never be recomputed).  Carrying them is replay-safe —
-      ``current_report`` folds raw partitions regardless of ledger
-      state, and a crash-pending epoch's retry dynamically overwrites
-      its own partition, replacing the carried copy (no double count).
-    - After the fold is pinned (``localCheckpoint``), the ledger is
-      RE-READ: if epochs were ledgered mid-fold, their deltas may
-      postdate our pinned read — refold from scratch (up to
-      ``max_retries``; a stream committing faster than the fold raises
-      and the caller should quiesce or retry later).
-    - After the overwrite, one final ledger read detects the residual
-      window (a delta landing between our pinned read and the
-      overwrite, ledgered during the overwrite): if such an epoch's
-      partition is gone, RAISE — the counts were destroyed and cannot
-      be recomputed; loud beats silent corruption.
-
-    Without ``ledger_path`` none of this applies and the caller must
-    quiesce the stream first.
-
-    The protocol body lives in ``streaming/foldlog.compact_fold_log``
-    (ONE copy of the race rules, shared with the streaming count-min
-    maintainer); this wrapper supplies the report fold and routes the
-    ledger read through this module's ``_ledger_epochs`` so the
-    race-interleaving tests keep their monkeypatch point."""
-    from lakehouse_ingestion_spark.streaming.foldlog import compact_fold_log
-
-    committed = (
-        None
-        if ledger_path is None
-        # late-bound module-global lookup: tests script the race by
-        # patching contamination._ledger_epochs
-        else (lambda: _ledger_epochs(spark, ledger_path))
-    )
-    compact_fold_log(
-        spark, report_path, _fold, committed, max_retries=max_retries
+    not a per-trigger step: the shared ``epochlog.compact_fold_log``
+    protocol (its race rules are in ``streaming/epochlog``). A carried
+    unledgered delta is replay-safe: ``current_report`` folds raw
+    partitions regardless of ledger state, and the pending epoch's
+    retry overwrites its own partition. Without ``ledger_path`` the
+    caller must quiesce the stream first."""
+    epochlog.compact_fold_log(
+        spark, report_path, _fold, ledger_path, max_retries=max_retries
     )
 
 
 def contamination_epoch(
     batch_df: DataFrame,
     epoch_id: int,
+    *,
     eval_df: DataFrame,
     report_path: str,
     ledger_path: str,
@@ -139,8 +90,8 @@ def contamination_epoch(
     )
 
     spark = batch_df.sparkSession
-    led = _read_ledger(spark, ledger_path)
-    if led is not None and led.filter(F.col("epoch") == epoch_id).count():
+    rows = epochlog.ledger_totals(spark, ledger_path, LEDGER_SCHEMA, epoch_id)
+    if any(r[LEDGERED] for r in rows):
         return  # ledgered epoch: delta is committed, skip outright
 
     delta = contamination_report(
@@ -151,23 +102,13 @@ def contamination_epoch(
         eval_id_col=eval_id_col,
         n=n,
         threshold=threshold,
-    ).withColumn(EPOCH_COL, F.lit(int(epoch_id)).cast("long"))
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    counted = delta.observe(
-        obs,
-        F.coalesce(F.sum("n_dirty_docs"), F.lit(0)).alias("dirty"),
-        F.coalesce(F.sum("n_hit_docs"), F.lit(0)).alias("hits"),
     )
-    (
-        counted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL)
-        .parquet(report_path)
+    m = epochlog.overwrite_epoch(
+        delta, report_path, epoch_id,
+        dirty=F.coalesce(F.sum("n_dirty_docs"), F.lit(0)),
+        hits=F.coalesce(F.sum("n_hit_docs"), F.lit(0)),
     )
-    metrics = dict(obs.get)
-    spark.createDataFrame(
-        [(int(epoch_id), int(metrics["dirty"]), int(metrics["hits"]))],
-        "epoch long, batch_dirty long, batch_hits long",
-    ).write.mode("append").parquet(ledger_path)
+    epochlog.append_ledger(
+        spark, ledger_path, LEDGER_SCHEMA,
+        [(int(epoch_id), int(m["dirty"]), int(m["hits"]))],
+    )

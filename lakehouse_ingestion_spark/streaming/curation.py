@@ -85,10 +85,26 @@ from lakehouse_ingestion_spark.operators.split_guard import (
     apply_conflict_policy,
     sticky_split,
 )
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import (
+    EPOCH_COL,
+    LEDGERED,
+    SNAPSHOT_EPOCH,
+)
+from lakehouse_ingestion_spark.streaming.multi_sink import LEDGER_SCHEMA
 from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
-EPOCH_COL = "_epoch"
 LEDGER_SINK = "curation_state"
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """A state table, or None while it holds no rows: absent, or only
+    ever written empty deltas (an epoch with no near-dup pairs writes no
+    label partition, and one with no over-cap key no hot-key partition,
+    so the directory has no parquet footer to infer from)."""
+    return read_parquet_if_exists(
+        spark, path, absent=("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+    )
 
 
 def _read_state(
@@ -98,22 +114,10 @@ def _read_state(
     attempt's partial writes must not feed the re-run (they are about
     to be overwritten). The filter is on the partition column, so it is
     pruning, not a scan."""
-    df = read_parquet_if_exists(spark, path)
+    df = _read_table(spark, path)
     if df is not None and EPOCH_COL in df.columns:
         df = df.filter(F.col(EPOCH_COL) != exclude_epoch)
     return df
-
-
-def _write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
-    """Idempotent delta write: this epoch's rows land in (and on
-    redelivery REPLACE) the ``_epoch=<id>`` partition."""
-    (
-        df.withColumn(EPOCH_COL, F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL)
-        .parquet(path)
-    )
 
 
 def current_assignments(raw: DataFrame, id_col: str, split_col: str) -> DataFrame:
@@ -138,9 +142,6 @@ def current_labels(raw: DataFrame) -> DataFrame:
     )
 
 
-MIGRATION_EPOCH = -1
-
-
 def compact_split_state(
     spark: SparkSession,
     state_dir: str,
@@ -162,6 +163,8 @@ def compact_split_state(
       attempt that was never redelivered) are DROPPED, matching the
       read path's exclusion semantics; the reserved migration
       partition (``_epoch=-1``) always folds in.
+    * The rewrite replaces every table path whole, whatever the
+      session's partition overwrite mode.
     * The ledger itself is kept verbatim: replay detection for
       redelivered pre-compaction epochs must keep answering
       "committed" (the replay path reads the snapshot state).
@@ -171,28 +174,19 @@ def compact_split_state(
     max ledgered epoch, so latest-wins ordering against any future
     epoch is preserved.
     """
-    ledger = read_parquet_if_exists(spark, f"{state_dir}/ledger")
-    if ledger is None:
+    committed = epochlog.ledgered_epochs(spark, f"{state_dir}/ledger")
+    if not committed:
         return  # nothing ever committed; nothing safe to fold
-    committed = ledger.select("epoch").distinct()
-    max_epoch = committed.agg(F.max("epoch")).collect()[0][0]
-    keep = F.broadcast(
-        committed.union(
-            spark.createDataFrame([(MIGRATION_EPOCH,)], "epoch long")
-        ).withColumnRenamed("epoch", EPOCH_COL)
-    )
+    keep = F.col(EPOCH_COL).isin([SNAPSHOT_EPOCH, *sorted(committed)])
 
     def _fold(name: str, resolve) -> None:
-        raw = read_parquet_if_exists(spark, f"{state_dir}/{name}")
+        raw = _read_table(spark, f"{state_dir}/{name}")
         if raw is None or EPOCH_COL not in raw.columns:
             return
-        kept = raw.join(keep, EPOCH_COL, "semi")
-        snap = resolve(kept).localCheckpoint(eager=True)  # reads the path
-        (
-            snap.withColumn(EPOCH_COL, F.lit(max_epoch))
-            .write.mode("overwrite")  # static: every old partition goes
-            .partitionBy(EPOCH_COL)
-            .parquet(f"{state_dir}/{name}")
+        snap = resolve(raw.filter(keep)).localCheckpoint(eager=True)
+        epochlog.overwrite_snapshot(
+            snap.withColumn(EPOCH_COL, F.lit(max(committed))),
+            f"{state_dir}/{name}",
         )
 
     _fold("labels", lambda df: df.groupBy("node").agg(
@@ -229,7 +223,8 @@ def _migrate_legacy_assignments(
     adoption — never per trigger. The static overwrite is the single
     non-idempotent write in this module (a crash mid-migration needs the
     legacy table restored from its source); every subsequent write is an
-    epoch partition."""
+    epoch partition. The rewrite replaces the whole table path, whatever
+    the session's partition overwrite mode."""
     # the r8 flat layout appended exact-duplicate rows on redelivery —
     # dedup ONCE here (corpus-sized, at adoption) so the epoch-layout
     # invariants start clean
@@ -250,16 +245,72 @@ def _migrate_legacy_assignments(
         )
     # pin BEFORE the overwrite — the plan reads the path it replaces
     cur = cur.localCheckpoint(eager=True)
-    (
-        cur.withColumn(EPOCH_COL, F.lit(MIGRATION_EPOCH))
-        .write.mode("overwrite")
-        .partitionBy(EPOCH_COL)
-        .parquet(assign_path)
+    epochlog.overwrite_snapshot(
+        cur.withColumn(EPOCH_COL, F.lit(SNAPSHOT_EPOCH)), assign_path
     )
     return cur
 
 
-def sticky_split_foreach_batch(
+def _replay(
+    batch_df: DataFrame,
+    epoch_id: int,
+    assign_path: str,
+    sink: Callable[[DataFrame, int], None],
+    id_col: str,
+    split_col: str,
+    rep_col: str,
+    conflict_action: str,
+) -> None:
+    """Re-emit a ledgered epoch's labeled output from the committed
+    assignment state; no state is touched."""
+    spark = batch_df.sparkSession
+    assign = read_parquet_if_exists(spark, assign_path)
+    if assign is None:  # ledgered epoch must have written assignments
+        raise RuntimeError(
+            f"epoch {epoch_id} is ledgered but {assign_path} is missing"
+        )
+    matched = assign.join(
+        batch_df.select(id_col).distinct(), id_col, "semi"
+    )
+    if EPOCH_COL in matched.columns:
+        latest = matched.groupBy(id_col).agg(
+            F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
+            F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
+        )
+    else:
+        latest = matched.select(id_col, split_col, rep_col)
+    out = batch_df.join(latest, id_col, "inner")
+    if conflict_action == "drop_cluster":
+        # dropped docs ARE assigned (deterministic state), so the
+        # drop must be re-derived: a cluster whose latest member
+        # rows hold >= 2 distinct splits is conflicted. Judged
+        # against CURRENT state — a cluster that became conflicted
+        # after this epoch drops on replay too (never re-emit
+        # leaked rows; epoch-keyed output sinks converge anyway).
+        reps_b = F.broadcast(
+            latest.select(F.col(rep_col).alias("__r")).distinct()
+        )
+        members = assign.join(
+            reps_b, assign[rep_col] == reps_b["__r"], "semi"
+        )
+        conflicted = (
+            members.groupBy(rep_col)
+            .agg(F.count_distinct(split_col).alias("__ns"))
+            .filter(F.col("__ns") >= 2)
+            .select(F.col(rep_col).alias("__conf"))
+        )
+        out = out.join(
+            F.broadcast(conflicted),
+            out[rep_col] == F.col("__conf"),
+            "left_anti",
+        )
+    sink(out, epoch_id)
+
+
+def sticky_split_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    *,
     state_dir: str,
     fractions: dict[str, float],
     threshold: float,
@@ -277,9 +328,9 @@ def sticky_split_foreach_batch(
     posting_cap: int | None = None,
     conflict_action: str = "report",
     compact_every: int | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function (state layout, per-batch cost,
-    and crash story in the module docstring).
+) -> None:
+    """One micro-batch through the sticky split (state layout,
+    per-batch cost, and crash story in the module docstring).
 
     Per batch: find the new slice's near-dup pairs against all history;
     fold the pairs into the label delta log; read the touched clusters'
@@ -328,295 +379,250 @@ def sticky_split_foreach_batch(
     counts_path = f"{state_dir}/posting_counts"
     hot_path = f"{state_dir}/hot_keys"
 
-    def _replay(spark: SparkSession, batch_df: DataFrame, epoch_id: int) -> None:
-        assign = read_parquet_if_exists(spark, assign_path)
-        if assign is None:  # ledgered epoch must have written assignments
-            raise RuntimeError(
-                f"epoch {epoch_id} is ledgered but {assign_path} is missing"
-            )
-        matched = assign.join(
-            batch_df.select(id_col).distinct(), id_col, "semi"
+    spark = batch_df.sparkSession
+    rows = epochlog.ledger_totals(
+        spark, ledger_path, LEDGER_SCHEMA, epoch_id, by="sink"
+    )
+    if any(r["sink"] == LEDGER_SINK and r[LEDGERED] for r in rows):
+        _replay(
+            batch_df, epoch_id, assign_path, sink,
+            id_col, split_col, rep_col, conflict_action,
         )
-        if EPOCH_COL in matched.columns:
-            latest = matched.groupBy(id_col).agg(
-                F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
-                F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
+        return
+    batch_df.persist()
+    try:
+        bands_raw = _read_state(spark, bands_path, epoch_id)
+        hashes_raw = _read_state(spark, hashes_path, epoch_id)
+        index = None
+        if hashes_raw is not None and bands_raw is not None:
+            index = MinHashIndexFrames(
+                bands=bands_raw.drop(EPOCH_COL),
+                hashes=hashes_raw.drop(EPOCH_COL),
             )
-        else:
-            latest = matched.select(id_col, split_col, rep_col)
-        out = batch_df.join(latest, id_col, "inner")
+        # maintained hot-key state (round 9): with posting_cap set,
+        # the capped census no longer rescans the stored postings
+        # per trigger — running (band, key) totals update with
+        # batch-keyed joins and the pre-filtered hot set (broadcast-
+        # sized by construction: <= |postings|/cap entries) feeds
+        # candidate generation directly. Semantics equal the census
+        # (totals only grow; pinned by the equivalence test).
+        pre = None
+        hot_all = None
+        counts_delta = None
+        newly_hot = None
+        if posting_cap is not None:
+            from lakehouse_ingestion_spark.operators.incremental_dedup import (
+                minhash_index,
+            )
+
+            raw_pre = minhash_index(
+                batch_df, text_col, id_col, shingle_n,
+                num_hashes, num_bands, lsh_seed,
+            )
+            # bands feed the count update AND candidate joins; pin
+            # so the batch signs once (the expensive map stage)
+            pre = MinHashIndexFrames(
+                bands=raw_pre.bands.localCheckpoint(eager=True),
+                hashes=raw_pre.hashes.localCheckpoint(eager=True),
+            )
+            batch_counts = pre.bands.groupBy("band", "key").agg(
+                F.count(F.lit(1)).alias("__bn")
+            )
+            prev_counts = _read_state(spark, counts_path, epoch_id)
+            if prev_counts is not None:
+                touch = prev_counts.join(
+                    batch_counts.select("band", "key"),
+                    ["band", "key"],
+                    "semi",
+                )
+                if EPOCH_COL in touch.columns:
+                    touch = touch.groupBy("band", "key").agg(
+                        F.max_by("n", F.col(EPOCH_COL)).alias("__pn")
+                    )
+                else:
+                    touch = touch.select(
+                        "band", "key", F.col("n").alias("__pn")
+                    )
+                counts_delta = batch_counts.join(
+                    touch, ["band", "key"], "left"
+                ).select(
+                    "band",
+                    "key",
+                    (
+                        F.col("__bn") + F.coalesce("__pn", F.lit(0))
+                    ).alias("n"),
+                )
+            else:
+                counts_delta = batch_counts.select(
+                    "band", "key", F.col("__bn").alias("n")
+                )
+            # reads counts_path — pin before this epoch's write
+            counts_delta = counts_delta.localCheckpoint(eager=True)
+            newly_hot = counts_delta.filter(
+                F.col("n") > posting_cap
+            ).select("band", "key", F.col("n").alias("n_postings"))
+            hot_prev = _read_state(spark, hot_path, epoch_id)
+            if hot_prev is not None:
+                newly_hot = newly_hot.join(
+                    hot_prev.select("band", "key"),
+                    ["band", "key"],
+                    "left_anti",
+                )
+                hot_all = hot_prev.select(
+                    "band", "key", "n_postings"
+                ).unionByName(newly_hot)
+            else:
+                hot_all = newly_hot
+            # reads hot_path — pin before this epoch's write
+            newly_hot = newly_hot.localCheckpoint(eager=True)
+            hot_all = hot_all.localCheckpoint(eager=True)
+        pairs, delta = incremental_near_dup(
+            batch_df,
+            index,
+            threshold,
+            text_col=text_col,
+            id_col=id_col,
+            shingle_n=shingle_n,
+            num_hashes=num_hashes,
+            num_bands=num_bands,
+            seed=lsh_seed,
+            hot_keys=hot_all,
+            precomputed_delta=pre,
+        )
+        # pairs feed the label fold and the split; one materialization
+        pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+        labels_raw = _read_state(spark, labels_path, epoch_id)
+        cd = incremental_components_delta(
+            labels_raw, pairs, "doc_a", "doc_b", epoch_col=EPOCH_COL
+        )
+        # pin the delta frames: their plans read labels_path, which
+        # this epoch's partition write below will touch
+        label_delta = cd.label_delta.localCheckpoint(eager=True)
+        moves = cd.moves.localCheckpoint(eager=True)
+        batch_labels = cd.node_labels.join(
+            batch_df.select(F.col(id_col).alias("node")), "node", "semi"
+        ).select("node", F.col("cluster_id").alias("rep"))
+        # touched-cluster assignment history: current reps of this
+        # batch's docs plus the reps merged away this epoch — a
+        # broadcast-sized filter set, so the history read shuffles
+        # O(touched members), never O(corpus)
+        assign_raw = _read_state(spark, assign_path, epoch_id)
+        if assign_raw is not None and rep_col not in assign_raw.columns:
+            assign_raw = _migrate_legacy_assignments(
+                assign_raw, labels_raw, id_col, split_col, rep_col,
+                assign_path,
+            )
+        hist = None
+        if assign_raw is not None:
+            touched = F.broadcast(
+                batch_labels.select("rep")
+                .union(moves.select(F.col("__old_rep").alias("rep")))
+                .distinct()
+            )
+            matched = assign_raw.join(
+                touched, assign_raw[rep_col] == touched["rep"], "semi"
+            )
+            # resolve ONE row per doc on the (O(K)-sized) matched
+            # set: a legacy-bootstrap doc reprocessed in a batch has
+            # both its old and new rows keyed by the same current
+            # rep — without this, it votes twice in the majority and
+            # a policy-changed split reads as a permanent conflict
+            if EPOCH_COL in matched.columns:
+                matched = matched.groupBy(id_col).agg(
+                    F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
+                    F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
+                )
+            # both consumers below are O(K) — pin one evaluation
+            matched = matched.select(
+                id_col, split_col, rep_col
+            ).localCheckpoint(eager=True)
+            # re-key merged members to their post-merge rep before
+            # the majority census (their stored rep is pre-merge)
+            bmoves = F.broadcast(moves)
+            hist = (
+                matched.join(
+                    bmoves,
+                    matched[rep_col] == bmoves["__old_rep"],
+                    "left",
+                )
+                .select(
+                    F.col(id_col),
+                    F.col(split_col),
+                    F.coalesce("__new_rep", rep_col).alias(rep_col),
+                )
+            )
+        out, audit = sticky_split(
+            batch_df,
+            pairs,
+            fractions,
+            assignments=hist,
+            id_col=id_col,
+            seed=seed,
+            split_col=split_col,
+            rep_col=rep_col,
+            reps=batch_labels,
+            assignment_rep_col=rep_col,
+        )
+        if conflict_action == "quarantine_eval":
+            # quarantined splits PERSIST (future members inherit)
+            out = apply_conflict_policy(
+                out, audit, conflict_action, fractions,
+                split_col=split_col, rep_col=rep_col,
+            )
+        # out/audit read assign_path/labels_path — pin before writes;
+        # the audit feeds drop_cluster's filter, so pin it always
+        out = out.localCheckpoint(eager=True)
+        audit = audit.localCheckpoint(eager=True)
+        emitted = out
         if conflict_action == "drop_cluster":
-            # dropped docs ARE assigned (deterministic state), so the
-            # drop must be re-derived: a cluster whose latest member
-            # rows hold >= 2 distinct splits is conflicted. Judged
-            # against CURRENT state — a cluster that became conflicted
-            # after this epoch drops on replay too (never re-emit
-            # leaked rows; epoch-keyed output sinks converge anyway).
-            reps_b = F.broadcast(
-                latest.select(F.col(rep_col).alias("__r")).distinct()
+            # withheld from output, but assigned in state (pre-drop
+            # frame persists below) so reappearances stay sticky
+            emitted = apply_conflict_policy(
+                out, audit, conflict_action, fractions,
+                split_col=split_col, rep_col=rep_col,
             )
-            members = assign.join(
-                reps_b, assign[rep_col] == reps_b["__r"], "semi"
+        sink(emitted, epoch_id)
+        if audit_sink is not None:
+            audit_sink(audit, epoch_id)
+        # ---- state deltas (all idempotent epoch partitions) ----
+        new_assign = out.select(id_col, split_col, rep_col)
+        if hist is not None:
+            bmoves2 = F.broadcast(moves)
+            moved = (
+                matched.join(
+                    bmoves2,
+                    matched[rep_col] == bmoves2["__old_rep"],
+                    "inner",
+                )
+                .select(
+                    F.col(id_col),
+                    F.col(split_col),
+                    F.col("__new_rep").alias(rep_col),
+                )
+                # an assigned doc that is ALSO in this batch (the
+                # legacy-bootstrap overlap) already writes its row
+                # through `out` — a second same-epoch row would make
+                # latest-wins ambiguous and double its majority vote
+                .join(batch_df.select(id_col), id_col, "left_anti")
             )
-            conflicted = (
-                members.groupBy(rep_col)
-                .agg(F.count_distinct(split_col).alias("__ns"))
-                .filter(F.col("__ns") >= 2)
-                .select(F.col(rep_col).alias("__conf"))
-            )
-            out = out.join(
-                F.broadcast(conflicted),
-                out[rep_col] == F.col("__conf"),
-                "left_anti",
-            )
-        sink(out, epoch_id)
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from lakehouse_ingestion_spark.streaming.multi_sink import (
-            _ledgered_sinks,
+            new_assign = new_assign.unionByName(moved)
+        epochlog.overwrite_epoch(new_assign, assign_path, epoch_id)
+        epochlog.overwrite_epoch(
+            label_delta.select("node", "cluster_id"), labels_path, epoch_id
         )
-
-        spark = batch_df.sparkSession
-        if LEDGER_SINK in _ledgered_sinks(spark, ledger_path, epoch_id):
-            _replay(spark, batch_df, epoch_id)
-            return
-        batch_df.persist()
-        try:
-            bands_raw = _read_state(spark, bands_path, epoch_id)
-            hashes_raw = _read_state(spark, hashes_path, epoch_id)
-            index = None
-            if hashes_raw is not None and bands_raw is not None:
-                index = MinHashIndexFrames(
-                    bands=bands_raw.drop(EPOCH_COL),
-                    hashes=hashes_raw.drop(EPOCH_COL),
-                )
-            # maintained hot-key state (round 9): with posting_cap set,
-            # the capped census no longer rescans the stored postings
-            # per trigger — running (band, key) totals update with
-            # batch-keyed joins and the pre-filtered hot set (broadcast-
-            # sized by construction: <= |postings|/cap entries) feeds
-            # candidate generation directly. Semantics equal the census
-            # (totals only grow; pinned by the equivalence test).
-            pre = None
-            hot_all = None
-            counts_delta = None
-            newly_hot = None
-            if posting_cap is not None:
-                from lakehouse_ingestion_spark.operators.incremental_dedup import (
-                    minhash_index,
-                )
-
-                raw_pre = minhash_index(
-                    batch_df, text_col, id_col, shingle_n,
-                    num_hashes, num_bands, lsh_seed,
-                )
-                # bands feed the count update AND candidate joins; pin
-                # so the batch signs once (the expensive map stage)
-                pre = MinHashIndexFrames(
-                    bands=raw_pre.bands.localCheckpoint(eager=True),
-                    hashes=raw_pre.hashes.localCheckpoint(eager=True),
-                )
-                batch_counts = pre.bands.groupBy("band", "key").agg(
-                    F.count(F.lit(1)).alias("__bn")
-                )
-                prev_counts = _read_state(spark, counts_path, epoch_id)
-                if prev_counts is not None:
-                    touch = prev_counts.join(
-                        batch_counts.select("band", "key"),
-                        ["band", "key"],
-                        "semi",
-                    )
-                    if EPOCH_COL in touch.columns:
-                        touch = touch.groupBy("band", "key").agg(
-                            F.max_by("n", F.col(EPOCH_COL)).alias("__pn")
-                        )
-                    else:
-                        touch = touch.select(
-                            "band", "key", F.col("n").alias("__pn")
-                        )
-                    counts_delta = batch_counts.join(
-                        touch, ["band", "key"], "left"
-                    ).select(
-                        "band",
-                        "key",
-                        (
-                            F.col("__bn") + F.coalesce("__pn", F.lit(0))
-                        ).alias("n"),
-                    )
-                else:
-                    counts_delta = batch_counts.select(
-                        "band", "key", F.col("__bn").alias("n")
-                    )
-                # reads counts_path — pin before this epoch's write
-                counts_delta = counts_delta.localCheckpoint(eager=True)
-                newly_hot = counts_delta.filter(
-                    F.col("n") > posting_cap
-                ).select("band", "key", F.col("n").alias("n_postings"))
-                hot_prev = _read_state(spark, hot_path, epoch_id)
-                if hot_prev is not None:
-                    newly_hot = newly_hot.join(
-                        hot_prev.select("band", "key"),
-                        ["band", "key"],
-                        "left_anti",
-                    )
-                    hot_all = hot_prev.select(
-                        "band", "key", "n_postings"
-                    ).unionByName(newly_hot)
-                else:
-                    hot_all = newly_hot
-                # reads hot_path — pin before this epoch's write
-                newly_hot = newly_hot.localCheckpoint(eager=True)
-                hot_all = hot_all.localCheckpoint(eager=True)
-            pairs, delta = incremental_near_dup(
-                batch_df,
-                index,
-                threshold,
-                text_col=text_col,
-                id_col=id_col,
-                shingle_n=shingle_n,
-                num_hashes=num_hashes,
-                num_bands=num_bands,
-                seed=lsh_seed,
-                hot_keys=hot_all,
-                precomputed_delta=pre,
+        epochlog.overwrite_epoch(delta.hashes, hashes_path, epoch_id)
+        epochlog.overwrite_epoch(delta.bands, bands_path, epoch_id)
+        if counts_delta is not None:
+            epochlog.overwrite_epoch(counts_delta, counts_path, epoch_id)
+            epochlog.overwrite_epoch(newly_hot, hot_path, epoch_id)
+        # ledger LAST: an un-ledgered epoch re-runs end to end
+        epochlog.append_ledger(
+            spark, ledger_path, LEDGER_SCHEMA, [(epoch_id, LEDGER_SINK, 0)]
+        )
+        if compact_every is not None and (epoch_id + 1) % compact_every == 0:
+            compact_split_state(
+                spark, state_dir,
+                id_col=id_col, split_col=split_col, rep_col=rep_col,
             )
-            # pairs feed the label fold and the split; one materialization
-            pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-            labels_raw = _read_state(spark, labels_path, epoch_id)
-            cd = incremental_components_delta(
-                labels_raw, pairs, "doc_a", "doc_b", epoch_col=EPOCH_COL
-            )
-            # pin the delta frames: their plans read labels_path, which
-            # this epoch's partition write below will touch
-            label_delta = cd.label_delta.localCheckpoint(eager=True)
-            moves = cd.moves.localCheckpoint(eager=True)
-            batch_labels = cd.node_labels.join(
-                batch_df.select(F.col(id_col).alias("node")), "node", "semi"
-            ).select("node", F.col("cluster_id").alias("rep"))
-            # touched-cluster assignment history: current reps of this
-            # batch's docs plus the reps merged away this epoch — a
-            # broadcast-sized filter set, so the history read shuffles
-            # O(touched members), never O(corpus)
-            assign_raw = _read_state(spark, assign_path, epoch_id)
-            if assign_raw is not None and rep_col not in assign_raw.columns:
-                assign_raw = _migrate_legacy_assignments(
-                    assign_raw, labels_raw, id_col, split_col, rep_col,
-                    assign_path,
-                )
-            hist = None
-            if assign_raw is not None:
-                touched = F.broadcast(
-                    batch_labels.select("rep")
-                    .union(moves.select(F.col("__old_rep").alias("rep")))
-                    .distinct()
-                )
-                matched = assign_raw.join(
-                    touched, assign_raw[rep_col] == touched["rep"], "semi"
-                )
-                # resolve ONE row per doc on the (O(K)-sized) matched
-                # set: a legacy-bootstrap doc reprocessed in a batch has
-                # both its old and new rows keyed by the same current
-                # rep — without this, it votes twice in the majority and
-                # a policy-changed split reads as a permanent conflict
-                if EPOCH_COL in matched.columns:
-                    matched = matched.groupBy(id_col).agg(
-                        F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
-                        F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
-                    )
-                # both consumers below are O(K) — pin one evaluation
-                matched = matched.select(
-                    id_col, split_col, rep_col
-                ).localCheckpoint(eager=True)
-                # re-key merged members to their post-merge rep before
-                # the majority census (their stored rep is pre-merge)
-                bmoves = F.broadcast(moves)
-                hist = (
-                    matched.join(
-                        bmoves,
-                        matched[rep_col] == bmoves["__old_rep"],
-                        "left",
-                    )
-                    .select(
-                        F.col(id_col),
-                        F.col(split_col),
-                        F.coalesce("__new_rep", rep_col).alias(rep_col),
-                    )
-                )
-            out, audit = sticky_split(
-                batch_df,
-                pairs,
-                fractions,
-                assignments=hist,
-                id_col=id_col,
-                seed=seed,
-                split_col=split_col,
-                rep_col=rep_col,
-                reps=batch_labels,
-                assignment_rep_col=rep_col,
-            )
-            if conflict_action == "quarantine_eval":
-                # quarantined splits PERSIST (future members inherit)
-                out = apply_conflict_policy(
-                    out, audit, conflict_action, fractions,
-                    split_col=split_col, rep_col=rep_col,
-                )
-            # out/audit read assign_path/labels_path — pin before writes;
-            # the audit feeds drop_cluster's filter, so pin it always
-            out = out.localCheckpoint(eager=True)
-            audit = audit.localCheckpoint(eager=True)
-            emitted = out
-            if conflict_action == "drop_cluster":
-                # withheld from output, but assigned in state (pre-drop
-                # frame persists below) so reappearances stay sticky
-                emitted = apply_conflict_policy(
-                    out, audit, conflict_action, fractions,
-                    split_col=split_col, rep_col=rep_col,
-                )
-            sink(emitted, epoch_id)
-            if audit_sink is not None:
-                audit_sink(audit, epoch_id)
-            # ---- state deltas (all idempotent epoch partitions) ----
-            new_assign = out.select(id_col, split_col, rep_col)
-            if hist is not None:
-                bmoves2 = F.broadcast(moves)
-                moved = (
-                    matched.join(
-                        bmoves2,
-                        matched[rep_col] == bmoves2["__old_rep"],
-                        "inner",
-                    )
-                    .select(
-                        F.col(id_col),
-                        F.col(split_col),
-                        F.col("__new_rep").alias(rep_col),
-                    )
-                    # an assigned doc that is ALSO in this batch (the
-                    # legacy-bootstrap overlap) already writes its row
-                    # through `out` — a second same-epoch row would make
-                    # latest-wins ambiguous and double its majority vote
-                    .join(batch_df.select(id_col), id_col, "left_anti")
-                )
-                new_assign = new_assign.unionByName(moved)
-            _write_epoch(new_assign, assign_path, epoch_id)
-            _write_epoch(
-                label_delta.select("node", "cluster_id"), labels_path, epoch_id
-            )
-            _write_epoch(delta.hashes, hashes_path, epoch_id)
-            _write_epoch(delta.bands, bands_path, epoch_id)
-            if counts_delta is not None:
-                _write_epoch(counts_delta, counts_path, epoch_id)
-                _write_epoch(newly_hot, hot_path, epoch_id)
-            # ledger LAST: an un-ledgered epoch re-runs end to end
-            spark.createDataFrame(
-                [(epoch_id, LEDGER_SINK, 0)],
-                "epoch long, sink string, rows long",
-            ).write.mode("append").parquet(ledger_path)
-            if compact_every is not None and (epoch_id + 1) % compact_every == 0:
-                compact_split_state(
-                    spark, state_dir,
-                    id_col=id_col, split_col=split_col, rep_col=rep_col,
-                )
-        finally:
-            batch_df.unpersist()
-
-    return _fn
+    finally:
+        batch_df.unpersist()

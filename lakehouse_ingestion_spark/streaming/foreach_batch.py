@@ -22,35 +22,34 @@ from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
 log = logging.getLogger(__name__)
 
 
-def dq_foreach_batch(
+def dq_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    *,
     ruleset: DQRuleSet,
     policy: OnFailPolicy,
     sink: Callable[[DataFrame, int], None],
     quarantine_sink: Optional[Callable[[DataFrame, int], None]] = None,
-) -> Callable[[DataFrame, int], None]:
-    """Build a foreachBatch function: DQ gate -> sink.
+) -> None:
+    """One micro-batch through the DQ gate, then the sink.
 
     ``sink(df, epoch_id)`` persists good rows; ``quarantine_sink`` bad
     rows. Batch is persisted across the split so the scan runs once.
     """
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        if policy is OnFailPolicy.QUARANTINE:
-            batch_df.persist()
-            try:
-                good, summary = ruleset.enforce(
-                    batch_df,
-                    policy,
-                    quarantine_writer=(
-                        (lambda bad: quarantine_sink(bad, epoch_id)) if quarantine_sink else None
-                    ),
-                )
-                sink(good, epoch_id)
-            finally:
-                batch_df.unpersist()
-        else:
-            good, summary = ruleset.enforce(batch_df, policy)
+    if policy is OnFailPolicy.QUARANTINE:
+        batch_df.persist()
+        try:
+            good, summary = ruleset.enforce(
+                batch_df,
+                policy,
+                quarantine_writer=(
+                    (lambda bad: quarantine_sink(bad, epoch_id)) if quarantine_sink else None
+                ),
+            )
             sink(good, epoch_id)
-        log.info("epoch %s DQ status: %s", epoch_id, summary.status.value)
-
-    return _fn
+        finally:
+            batch_df.unpersist()
+    else:
+        good, summary = ruleset.enforce(batch_df, policy)
+        sink(good, epoch_id)
+    log.info("epoch %s DQ status: %s", epoch_id, summary.status.value)

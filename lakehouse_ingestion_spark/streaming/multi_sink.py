@@ -11,7 +11,8 @@ answer, built from two pieces:
 1. **Epoch-keyed idempotent writes.** Every sink writes the batch into
    an ``_epoch=<id>`` partition with DYNAMIC partition overwrite — a
    redelivered epoch REPLACES its own partition instead of appending a
-   second copy. Each sink is therefore individually exactly-once under
+   second copy (``streaming/epochlog``, the protocol every ledgered
+   maintainer shares). Each sink is therefore individually exactly-once under
    any number of retries, with no transaction protocol: idempotence,
    not atomicity, is what survives foreachBatch's contract. (With a
    transactional sink — Delta — the same role is played by
@@ -47,9 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.errors import ConfigError
+from lakehouse_ingestion_spark.streaming import epochlog
+from lakehouse_ingestion_spark.streaming.epochlog import EPOCH_COL, LEDGERED
 from lakehouse_ingestion_spark.util import read_parquet_if_exists
 
-EPOCH_COL = "_epoch"
+LEDGER_SCHEMA = "epoch long, sink string, rows long"
 
 
 @dataclass(frozen=True)
@@ -62,35 +65,20 @@ class SinkSpec:
     transform: Callable[[DataFrame], DataFrame] | None = None
 
 
-def multi_sink_foreach_batch(
-    sinks: dict[str, SinkSpec],
-    ledger_path: str,
-) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function. Sink names key the ledger; the
-    write order is the dict order (make the most-downstream sink last
-    so partial failures skew conservative)."""
-    if not sinks:
-        raise ConfigError("multi_sink needs at least one SinkSpec")
-    for name in sinks:
-        if not name or "/" in name:
-            raise ConfigError(f"sink name must be a plain label, got {name!r}")
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        write_epoch(batch_df, sinks, ledger_path, epoch_id)
-
-    return _fn
-
-
 def write_epoch(
     batch_df: DataFrame,
+    epoch_id: int,
+    *,
     sinks: dict[str, SinkSpec],
     ledger_path: str,
-    epoch_id: int,
     force: bool = False,
 ) -> None:
     """One epoch through the fan-out: idempotent per-sink writes, then
-    the ledger append. Shared by the foreachBatch builder and the
-    config-driven ``sinks/fanout.py`` writer.
+    the ledger append. Pass it to ``foreachBatch`` through
+    ``functools.partial``; the config-driven ``sinks/fanout.py`` writer
+    calls it too. Sink names key the ledger; the write order is the dict
+    order (make the most-downstream sink last so partial failures skew
+    conservative).
 
     ``force=False`` (streaming redelivery): sinks the ledger already
     records for this epoch are skipped — the crash-recovery fast path.
@@ -111,18 +99,25 @@ def write_epoch(
     data and ledger intact (stale-but-consistent, detectable by
     retrying) instead of a committed-but-empty epoch that
     ``read_committed`` would silently serve."""
+    if not sinks:
+        raise ConfigError("multi_sink needs at least one SinkSpec")
+    for name in sinks:
+        if not name or "/" in name:
+            raise ConfigError(f"sink name must be a plain label, got {name!r}")
     spark = batch_df.sparkSession
-    done = (
-        set() if force else _ledgered_sinks(spark, ledger_path, epoch_id)
-    )
+    done = set()
+    if not force:
+        rows = epochlog.ledger_totals(
+            spark, ledger_path, LEDGER_SCHEMA, epoch_id, by="sink"
+        )
+        done = {r["sink"] for r in rows if r[LEDGERED]}
     todo = {n: s for n, s in sinks.items() if n not in done}
     if not todo:
         return
-    from pyspark.sql import Observation
 
     batch_df.persist()
     try:
-        observations: dict[str, Observation] = {}
+        written: dict[str, int] = {}
         for name, spec in todo.items():
             out = spec.transform(batch_df) if spec.transform else batch_df
             if EPOCH_COL in out.columns:
@@ -130,23 +125,12 @@ def write_epoch(
                     f"sink {name!r} already has {EPOCH_COL}; it is "
                     "reserved for the idempotence partition"
                 )
-            # observe() rides the write job itself — the ledger's rows
-            # column costs zero extra Spark jobs (previously a separate
-            # out.count() re-ran each sink's transform per epoch)
-            obs = Observation()
-            counted = out.withColumn(EPOCH_COL, F.lit(epoch_id)).observe(
-                obs, F.count(F.lit(1)).alias("rows")
-            )
-            # dynamic overwrite replaces ONLY this epoch's partition:
-            # a redelivered epoch converges instead of double-appending
-            (
-                counted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(EPOCH_COL)
-                .parquet(spec.path)
-            )
-            observations[name] = obs
-            if force and int(obs.get["rows"]) == 0:
+            # the rows count rides the write job itself (observe): zero
+            # extra Spark jobs per sink
+            written[name] = int(epochlog.overwrite_epoch(
+                out, spec.path, epoch_id, rows=F.count(F.lit(1))
+            )["rows"])
+            if force and written[name] == 0:
                 # empty forced output wrote no partition — the previous
                 # run's leftover must go. Ledger the rows=0 row FIRST:
                 # a crash between the two steps then leaves either
@@ -154,16 +138,14 @@ def write_epoch(
                 # superseded-by-newer-row count, or (both) the empty
                 # epoch correctly recorded — never a deleted partition
                 # whose freshest ledger row still claims rows>0
-                spark.createDataFrame(
-                    [(epoch_id, name, 0)],
-                    "epoch long, sink string, rows long",
-                ).write.mode("append").parquet(ledger_path)
+                epochlog.append_ledger(
+                    spark, ledger_path, LEDGER_SCHEMA, [(epoch_id, name, 0)]
+                )
                 _delete_epoch_partition(spark, spec.path, epoch_id)
-        ledger = spark.createDataFrame(
-            [(epoch_id, n, int(observations[n].get["rows"])) for n in todo],
-            "epoch long, sink string, rows long",
+        epochlog.append_ledger(
+            spark, ledger_path, LEDGER_SCHEMA,
+            [(epoch_id, n, rows) for n, rows in written.items()],
         )
-        ledger.write.mode("append").parquet(ledger_path)
     finally:
         batch_df.unpersist()
 
@@ -184,23 +166,11 @@ def _delete_epoch_partition(
     fs.delete(part, True)
 
 
-def _ledgered_sinks(
-    spark: SparkSession, ledger_path: str, epoch_id: int
-) -> set[str]:
-    led = read_parquet_if_exists(spark, ledger_path)
-    if led is None:
-        return set()
-    rows = (
-        led.where(F.col("epoch") == epoch_id).select("sink").distinct().collect()
-    )
-    return {r.sink for r in rows}
-
-
 def committed_epochs(
     spark: SparkSession, ledger_path: str, sink: str
 ) -> DataFrame:
     """Epochs the ledger records as fully written for ``sink``."""
-    led = read_parquet_if_exists(spark, ledger_path)
+    led = epochlog.read_ledger(spark, ledger_path, LEDGER_SCHEMA)
     if led is None:
         return spark.createDataFrame([], "epoch long")
     return led.where(F.col("sink") == sink).select("epoch").distinct()

@@ -166,20 +166,24 @@ def test_streaming_cms_accumulates_and_replays(spark, tmp_path):
         _items(spark, ["y"] * 3),
     ]
     for e, b in enumerate(batches):
-        cms_epoch(b, e, cp, lp, "item", depth=2, width=64)
+        cms_epoch(b, e, counters_path=cp, ledger_path=lp, item_col="item",
+                  depth=2, width=64)
     whole = _items(spark, ["x"] * 5 + ["y"] * 4 + ["z"] * 2)
     direct = cms_build(whole, "item", depth=2, width=64)
     assert _counter_map(current_counters(spark, cp)) == _counter_map(direct)
 
     # redelivery of a ledgered epoch: no change
-    cms_epoch(batches[1], 1, cp, lp, "item", depth=2, width=64)
+    cms_epoch(batches[1], 1, counters_path=cp, ledger_path=lp,
+              item_col="item", depth=2, width=64)
     assert _counter_map(current_counters(spark, cp)) == _counter_map(direct)
 
     # crash replay: write epoch 3's delta but scrub its ledger row by
     # replaying with a fresh ledger-less path is not possible here, so
     # simulate by running epoch 3 twice — the first run IS the retry
-    cms_epoch(_items(spark, ["w"]), 3, cp, lp, "item", depth=2, width=64)
-    cms_epoch(_items(spark, ["w"]), 3, cp, lp, "item", depth=2, width=64)
+    cms_epoch(_items(spark, ["w"]), 3, counters_path=cp, ledger_path=lp,
+              item_col="item", depth=2, width=64)
+    cms_epoch(_items(spark, ["w"]), 3, counters_path=cp, ledger_path=lp,
+              item_col="item", depth=2, width=64)
     whole2 = _items(spark, ["x"] * 5 + ["y"] * 4 + ["z"] * 2 + ["w"])
     assert _counter_map(current_counters(spark, cp)) == _counter_map(
         cms_build(whole2, "item", depth=2, width=64)
@@ -195,7 +199,8 @@ def test_streaming_cms_compact_preserves_counters(spark, tmp_path):
 
     cp, lp = str(tmp_path / "cnt"), str(tmp_path / "led")
     for e, vals in enumerate((["a"] * 3, ["a", "b"], ["c"] * 5)):
-        cms_epoch(_items(spark, vals), e, cp, lp, "item", depth=2, width=64)
+        cms_epoch(_items(spark, vals), e, counters_path=cp, ledger_path=lp,
+                  item_col="item", depth=2, width=64)
     before = _counter_map(current_counters(spark, cp))
     compact_counters(spark, cp, ledger_path=lp)
     after_df = current_counters(spark, cp)
@@ -220,7 +225,8 @@ def test_streaming_cms_grouped(spark, tmp_path):
     )
     b2 = spark.createDataFrame([("en", "tok")], "lang string, item string")
     for e, b in enumerate((b1, b2)):
-        cms_epoch(b, e, cp, lp, "item", group_cols=["lang"], depth=2, width=64)
+        cms_epoch(b, e, counters_path=cp, ledger_path=lp, item_col="item",
+                  group_cols=["lang"], depth=2, width=64)
     whole = spark.createDataFrame(
         [("en", "tok"), ("de", "tok"), ("en", "tok")], "lang string, item string"
     )

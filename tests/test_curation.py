@@ -48,6 +48,25 @@ def test_decontaminate_threshold_validation(spark):
         decontaminate(df, df, threshold=0)
 
 
+def test_decontaminate_rejects_pairs_frame_as_eval_ngrams(spark):
+    """eval_ngrams must be the distinct-shingle frame: the (eval_id,
+    shingle) pairs frame repeats a shingle once per eval example that
+    holds it, which would inflate n_overlap silently."""
+    from lakehouse_ingestion_spark.operators.decontaminate import (
+        eval_ngram_pairs,
+    )
+
+    ev = spark.createDataFrame(
+        [(100, "a b c d"), (200, "a b c e")], "eval_id long, text string"
+    )
+    train = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="eval_ngrams"):
+        decontaminate(train, ev, eval_ngrams=eval_ngram_pairs(ev))
+    shared = eval_ngram_pairs(ev).select("shingle").distinct()
+    got = decontaminate(train, ev, eval_ngrams=shared).collect()
+    assert [(r["doc_id"], r["n_overlap"]) for r in got] == [(1, 2)]
+
+
 def test_eval_ngram_set_distinct(spark):
     ev = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a b c")], "doc_id long, text string"

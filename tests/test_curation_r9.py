@@ -8,6 +8,7 @@ quarantine (verdict #3)."""
 from __future__ import annotations
 
 import json
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,7 +76,7 @@ def test_streaming_sticky_inherits_history_when_rep_moves(spark, tmp_path):
     history-derived majority must inherit the assigned split, and the
     assigned docs' state rows must re-key to the new rep."""
     from lakehouse_ingestion_spark.streaming.curation import (
-        sticky_split_foreach_batch,
+        sticky_split_epoch,
     )
 
     fr = {"a": 0.5, "b": 0.5}
@@ -83,8 +84,9 @@ def test_streaming_sticky_inherits_history_when_rep_moves(spark, tmp_path):
     seed, m = _pick_seed(spark, fr, [0, 1], [(0, 1)])
     state = str(tmp_path / "st")
     out = str(tmp_path / "out")
-    fn = sticky_split_foreach_batch(
-        state, fr, threshold=0.3,
+    fn = partial(
+        sticky_split_epoch, state_dir=state, fractions=fr,
+        threshold=0.3,
         sink=lambda df, e: df.write.mode("append").parquet(out),
         seed=seed, num_hashes=8, num_bands=4,
     )
@@ -121,13 +123,14 @@ def test_streaming_sticky_state_io_is_batch_sized(spark, tmp_path):
     merge epoch writes exactly (touched members + batch) rows."""
     from lakehouse_ingestion_spark.streaming.curation import (
         current_labels,
-        sticky_split_foreach_batch,
+        sticky_split_epoch,
     )
 
     state = str(tmp_path / "st")
     sunk = []
-    fn = sticky_split_foreach_batch(
-        state, {"train": 0.5, "test": 0.5}, threshold=0.3,
+    fn = partial(
+        sticky_split_epoch, state_dir=state,
+        fractions={"train": 0.5, "test": 0.5}, threshold=0.3,
         sink=lambda df, e: sunk.append(df.collect()),
         num_hashes=8, num_bands=4,
     )
@@ -421,13 +424,14 @@ def test_compact_split_state_folds_and_preserves(spark, tmp_path):
     from lakehouse_ingestion_spark.streaming.curation import (
         compact_split_state,
         current_labels,
-        sticky_split_foreach_batch,
+        sticky_split_epoch,
     )
 
     state = str(tmp_path / "st")
     out = str(tmp_path / "out")
-    fn = sticky_split_foreach_batch(
-        state, {"train": 0.5, "test": 0.5}, threshold=0.3,
+    fn = partial(
+        sticky_split_epoch, state_dir=state,
+        fractions={"train": 0.5, "test": 0.5}, threshold=0.3,
         sink=lambda df, e: df.write.mode("append").parquet(out),
         num_hashes=8, num_bands=4,
     )
@@ -503,7 +507,7 @@ def test_streaming_hot_key_state_matches_census(spark, tmp_path):
     )
     from lakehouse_ingestion_spark.streaming.curation import (
         current_labels,
-        sticky_split_foreach_batch,
+        sticky_split_epoch,
     )
 
     dup = "same boilerplate text repeated in every copy of this form"
@@ -521,8 +525,9 @@ def test_streaming_hot_key_state_matches_census(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
 
     state = str(tmp_path / "st")
-    fn = sticky_split_foreach_batch(
-        state, {"train": 0.5, "test": 0.5}, threshold=0.3,
+    fn = partial(
+        sticky_split_epoch, state_dir=state,
+        fractions={"train": 0.5, "test": 0.5}, threshold=0.3,
         sink=lambda df, e: None,
         num_hashes=8, num_bands=4, posting_cap=cap, compact_every=2,
     )

@@ -138,12 +138,12 @@ def test_admit_epoch_leaves_no_cached_dataframes(spark, tmp_path):
         admit_epoch(
             df,
             epoch,
-            str(tmp_path / "out"),
-            str(tmp_path / "ledger"),
-            "score",
-            "cost",
-            60,
-            "id",
+            out_path=str(tmp_path / "out"),
+            ledger_path=str(tmp_path / "ledger"),
+            score_col="score",
+            cost_col="cost",
+            budget=60,
+            key_col="id",
         )
     assert n_persistent() == base
 
@@ -152,9 +152,9 @@ def test_admit_epoch_leaves_no_cached_dataframes(spark, tmp_path):
 
 
 def test_read_ledger_missing_path_is_first_run(spark, tmp_path):
-    from lakehouse_ingestion_spark.streaming.budget import _read_ledger
+    from lakehouse_ingestion_spark.streaming.epochlog import read_ledger
 
-    assert _read_ledger(spark, str(tmp_path / "nope")) is None
+    assert read_ledger(spark, str(tmp_path / "nope")) is None
 
 
 def test_read_ledger_other_errors_propagate(spark, tmp_path):
@@ -162,12 +162,12 @@ def test_read_ledger_other_errors_propagate(spark, tmp_path):
     returning None would silently reset the quota (ADVICE r9 medium #2)."""
     from pyspark.errors import AnalysisException
 
-    from lakehouse_ingestion_spark.streaming.budget import _read_ledger
+    from lakehouse_ingestion_spark.streaming.epochlog import read_ledger
 
     bad = tmp_path / "ledger"
     bad.mkdir()  # exists, but holds no parquet -> UNABLE_TO_INFER_SCHEMA
     with pytest.raises(AnalysisException):
-        _read_ledger(spark, str(bad))
+        read_ledger(spark, str(bad))
 
 
 # ------------------------------------------------------- priority dedup

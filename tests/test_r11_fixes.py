@@ -178,8 +178,8 @@ def test_compact_report_forces_static_overwrite(spark, tmp_path):
 
     ev, b1, b2 = _contam_fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
-    contamination_epoch(b2, 1, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     before = sorted(tuple(r) for r in current_report(spark, rp).collect())
     old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -215,7 +215,8 @@ def test_compact_report_skips_unledgered_pending_epoch(spark, tmp_path):
 
     ev, b1, b2 = _contam_fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)  # ledgered
+    # ledgered
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
     # crash window: epoch 1's delta landed, ledger row missing
     pend = contamination_report(b2, ev).withColumn(
         "_epoch", F.lit(1).cast("long")
@@ -238,7 +239,7 @@ def test_compact_report_skips_unledgered_pending_epoch(spark, tmp_path):
     assert snap[100]["n_dirty_docs"] == 2
     # retry of epoch 1 (still unledgered) rewrites its own partition in
     # place — the carried copy is replaced, never double-counted
-    contamination_epoch(b2, 1, ev, rp, lp)
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     final = {r["eval_id"]: r for r in current_report(spark, rp).collect()}
     assert final[100]["n_dirty_docs"] == 2
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import lakehouse_ingestion_spark.streaming.contamination as contam
+import lakehouse_ingestion_spark.streaming.epochlog as epochlog
 from lakehouse_ingestion_spark.streaming.contamination import (
     compact_report,
     contamination_epoch,
@@ -66,16 +66,17 @@ def test_compact_report_retries_when_epoch_ledgered_mid_fold(
     r12 re-read notices and refolds with epoch 1 committed."""
     ev, b1, b2 = _fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
-    contamination_epoch(b2, 1, ev, rp, lp)  # both deltas + ledger rows real
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
+    # both deltas + ledger rows real
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
 
     # scripted interleaving: attempt 1 sees committed={0}, the post-pin
     # re-read sees {0,1} (epoch 1 ledgered mid-fold) -> retry; attempt 2
     # sees {0,1} throughout -> folds both.
     script = _LedgerScript(
-        contam._ledger_epochs, lp, [{0}, {0, 1}, {0, 1}, {0, 1}, {0, 1}]
+        epochlog.ledgered_epochs, lp, [{0}, {0, 1}, {0, 1}, {0, 1}, {0, 1}]
     )
-    monkeypatch.setattr(contam, "_ledger_epochs", script)
+    monkeypatch.setattr(epochlog, "ledgered_epochs", script)
     compact_report(spark, rp, ledger_path=lp)
     assert script.calls >= 3  # first read, post-pin re-read, retry's read
 
@@ -98,13 +99,13 @@ def test_compact_report_raises_when_overwrite_destroys_ledgered_delta(
     epochs) — compact_report must raise, not lose it silently."""
     ev, b1, _ = _fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
 
     # attempt: committed={0}; post-pin re-read: {0} (no retry); the
     # post-overwrite read reports epoch 5 ledgered — its delta never
     # made the pinned read and its partition is gone.
-    script = _LedgerScript(contam._ledger_epochs, lp, [{0}, {0}, {0, 5}])
-    monkeypatch.setattr(contam, "_ledger_epochs", script)
+    script = _LedgerScript(epochlog.ledgered_epochs, lp, [{0}, {0}, {0, 5}])
+    monkeypatch.setattr(epochlog, "ledgered_epochs", script)
     with pytest.raises(RuntimeError, match=r"\[5\].*destroyed"):
         compact_report(spark, rp, ledger_path=lp)
 
@@ -116,10 +117,10 @@ def test_compact_report_gives_up_after_max_retries(
     surface as an error, not an unbounded loop."""
     ev, b1, _ = _fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
 
     calls = {"n": 0}
-    real = contam._ledger_epochs
+    real = epochlog.ledgered_epochs
 
     def always_growing(spark_, ledger_path):
         if ledger_path != lp:
@@ -128,7 +129,7 @@ def test_compact_report_gives_up_after_max_retries(
         # every post-pin re-read sees one more epoch than the fold did
         return set(range(calls["n"]))
 
-    monkeypatch.setattr(contam, "_ledger_epochs", always_growing)
+    monkeypatch.setattr(epochlog, "ledgered_epochs", always_growing)
     with pytest.raises(RuntimeError, match="quiesce"):
         compact_report(spark, rp, ledger_path=lp, max_retries=3)
 
@@ -139,7 +140,7 @@ def test_compact_report_survives_real_interleaved_commit(spark, tmp_path):
     exactly once through two compaction passes."""
     ev, b1, b2 = _fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
     # epoch 1 delta lands without its ledger row (crash window)
     from lakehouse_ingestion_spark.operators.decontaminate import (
         contamination_report,
@@ -155,7 +156,8 @@ def test_compact_report_survives_real_interleaved_commit(spark, tmp_path):
         .parquet(rp)
     )
     compact_report(spark, rp, ledger_path=lp)  # carries epoch 1 forward
-    contamination_epoch(b2, 1, ev, rp, lp)  # retry commits epoch 1
+    # retry commits epoch 1
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     compact_report(spark, rp, ledger_path=lp)  # folds it
     import glob
     import os

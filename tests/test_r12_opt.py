@@ -192,7 +192,8 @@ def test_share_admission_single_pass_contracts(spark, tmp_path):
     ]
     for e, rows in enumerate(batches):
         df = spark.createDataFrame(rows, "doc_id long, score double")
-        admit_epoch_share(df, e, out, led, "score", 0.5, "doc_id")
+        admit_epoch_share(df, e, out_path=out, ledger_path=led,
+                          score_col="score", p=0.5, key_col="doc_id")
         ledger = spark.read.parquet(led).orderBy("epoch").collect()
         assert ledger[-1]["admitted_after"] >= 0.5 * ledger[-1]["seen_after"]
 
@@ -200,7 +201,8 @@ def test_share_admission_single_pass_contracts(spark, tmp_path):
     # redelivery of a ledgered epoch: no new rows, no new ledger entries
     admit_epoch_share(
         spark.createDataFrame(batches[1], "doc_id long, score double"),
-        1, out, led, "score", 0.5, "doc_id",
+        1, out_path=out, ledger_path=led, score_col="score", p=0.5,
+        key_col="doc_id",
     )
     assert spark.read.parquet(out).count() == n_before
     assert spark.read.parquet(led).count() == 3
@@ -208,6 +210,7 @@ def test_share_admission_single_pass_contracts(spark, tmp_path):
     with pytest.raises(ConfigError, match="non-negative"):
         admit_epoch_share(
             spark.createDataFrame([(9, -1.0)], "doc_id long, score double"),
-            7, out, led, "score", 0.5, "doc_id",
+            7, out_path=out, ledger_path=led, score_col="score", p=0.5,
+            key_col="doc_id",
         )
     assert spark.read.parquet(led).count() == 3  # nothing ledgered

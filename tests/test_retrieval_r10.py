@@ -374,12 +374,12 @@ def test_streaming_contamination_accumulates_and_replays(spark, tmp_path):
 
     ev, b1, b2 = _contam_fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
     r0 = {r["eval_id"]: r for r in current_report(spark, rp).collect()}
     assert (r0[100]["n_dirty_docs"], r0[100]["max_overlap"]) == (1, 3)
     assert r0[200]["n_hit_docs"] == 0
 
-    contamination_epoch(b2, 1, ev, rp, lp)
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     r1 = {r["eval_id"]: r for r in current_report(spark, rp).collect()}
     # doc 2 shares 2 shingles with eval 100 -> second dirty doc,
     # max_overlap stays at doc 1's 3
@@ -387,7 +387,7 @@ def test_streaming_contamination_accumulates_and_replays(spark, tmp_path):
             r1[100]["max_overlap"]) == (2, 2, 3)
 
     # ledgered epoch redelivered: skipped, report unchanged
-    contamination_epoch(b2, 1, ev, rp, lp)
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     r2 = {r["eval_id"]: r for r in current_report(spark, rp).collect()}
     assert (r2[100]["n_dirty_docs"], r2[100]["n_hit_docs"]) == (2, 2)
 
@@ -404,7 +404,8 @@ def test_streaming_contamination_accumulates_and_replays(spark, tmp_path):
     pre = contamination_report(b3, ev).withColumn("_epoch", F.lit(2).cast("long"))
     (pre.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("_epoch").parquet(rp))
-    contamination_epoch(b3, 2, ev, rp, lp)  # no epoch-2 ledger row yet
+    # no epoch-2 ledger row yet
+    contamination_epoch(b3, 2, eval_df=ev, report_path=rp, ledger_path=lp)
     r3 = {r["eval_id"]: r for r in current_report(spark, rp).collect()}
     assert r3[100]["n_dirty_docs"] == 3  # exactly once despite the crash
 
@@ -419,8 +420,8 @@ def test_streaming_contamination_compact_preserves_report(spark, tmp_path):
 
     ev, b1, b2 = _contam_fixture(spark)
     rp, lp = str(tmp_path / "report"), str(tmp_path / "ledger")
-    contamination_epoch(b1, 0, ev, rp, lp)
-    contamination_epoch(b2, 1, ev, rp, lp)
+    contamination_epoch(b1, 0, eval_df=ev, report_path=rp, ledger_path=lp)
+    contamination_epoch(b2, 1, eval_df=ev, report_path=rp, ledger_path=lp)
     before = sorted(
         tuple(r) for r in current_report(spark, rp).collect()
     )

@@ -49,3 +49,74 @@ def test_iceberg_gated(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "id int")
     with pytest.raises(UnsupportedFeatureError, match="iceberg"):
         get_writer("iceberg").write_batch(df, WriteOptions(table="ns.t"))
+
+
+class _RecordingWriterV2:
+    """Stands in for ``DataFrame.writeTo(table)``: records every builder
+    call instead of talking to a catalog."""
+
+    def __init__(self, calls, table):
+        self.calls = calls
+        calls.append(("writeTo", table))
+
+    def options(self, **kw):
+        self.calls.append(("options", kw))
+        return self
+
+    def partitionedBy(self, *cols):
+        self.calls.append(("partitionedBy", cols))
+        return self
+
+    def __getattr__(self, terminal):  # append / create / createOrReplace
+        return lambda: self.calls.append((terminal,))
+
+
+class _FakeSpark:
+    def __init__(self, exists):
+        self.exists = exists
+        self.catalog = self
+
+    def sql(self, _stmt):
+        return None
+
+    def tableExists(self, _table):
+        return self.exists
+
+
+class _FakeFrame:
+    def __init__(self, exists):
+        self.sparkSession = _FakeSpark(exists)
+        self.calls = []
+
+    def writeTo(self, table):
+        return _RecordingWriterV2(self.calls, table)
+
+
+@pytest.mark.parametrize(
+    "mode, exists, terminal, partitioned",
+    [
+        ("append", False, "create", True),
+        ("overwrite", True, "createOrReplace", True),
+        ("append", True, "append", False),
+    ],
+)
+def test_iceberg_forwards_partitioning_and_options(
+    monkeypatch, mode, exists, terminal, partitioned
+):
+    """The target's options reach the writeTo builder, and partition_by
+    partitions the table wherever the write defines it (create /
+    createOrReplace); an append to an existing table keeps its spec."""
+    import lakehouse_ingestion_spark.sinks.iceberg as ice
+
+    monkeypatch.setattr(ice, "iceberg_available", lambda _spark: True)
+    df = _FakeFrame(exists)
+    opts = WriteOptions.from_target(
+        {"table": "ns.t", "mode": mode, "partition_by": ["d"],
+         "write.format.default": "orc"}
+    )
+    get_writer("iceberg").write_batch(df, opts)
+    want = [("writeTo", "ns.t"), ("options", {"write.format.default": "orc"})]
+    if partitioned:
+        want.append(("partitionedBy", ("d",)))
+    want.append((terminal,))
+    assert df.calls == want

@@ -1,5 +1,6 @@
 import json
 import time
+from functools import partial
 
 import pytest
 from pyspark.sql.types import (
@@ -13,7 +14,7 @@ from pyspark.sql.types import (
 from lakehouse_ingestion_spark.dq.checks import RangeCheck
 from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
 from lakehouse_ingestion_spark.sources.files import FileReader
-from lakehouse_ingestion_spark.streaming.foreach_batch import dq_foreach_batch
+from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
 from lakehouse_ingestion_spark.streaming.manager import StreamManager
 
 SCHEMA = StructType(
@@ -53,9 +54,10 @@ def test_streaming_file_source_with_dq(spark, stream_dir, tmp_path):
     assert df.isStreaming
 
     rs = DQRuleSet([RangeCheck(column="v", min_value=0.0)])
-    fn = dq_foreach_batch(
-        rs,
-        OnFailPolicy.QUARANTINE,
+    fn = partial(
+        dq_epoch,
+        ruleset=rs,
+        policy=OnFailPolicy.QUARANTINE,
         sink=lambda b, e: b.write.mode("append").parquet(out),
         quarantine_sink=lambda b, e: b.write.mode("append").parquet(quarantine),
     )
@@ -191,11 +193,11 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert drops >= 1
 
 
-def test_streaming_cdc_foreach_batch(spark, tmp_path):
+def test_streaming_cdc_epoch(spark, tmp_path):
     """Two CDC micro-batches fold into the parquet state: upserts land,
     deletes remove, and the final state matches the batch cdc_apply of
     the full history."""
-    from lakehouse_ingestion_spark.streaming.cdc import cdc_foreach_batch
+    from lakehouse_ingestion_spark.streaming.cdc import cdc_epoch
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     indir = tmp_path / "cdc_in"
@@ -228,7 +230,8 @@ def test_streaming_cdc_foreach_batch(spark, tmp_path):
     state = str(tmp_path / "cdc_state")
     q = (
         stream.writeStream.foreachBatch(
-            cdc_foreach_batch(spark, state, ["id"], ["seq"])
+            partial(cdc_epoch, state_path=state, key_columns=["id"],
+                    order_by=["seq"])
         )
         .option("checkpointLocation", str(tmp_path / "cdc_cp"))
         .trigger(availableNow=True)
@@ -322,10 +325,11 @@ def test_cdc_crash_recovery_restores_backup(spark, tmp_path):
     not rebuild state from the micro-batch alone (silent state loss)."""
     import shutil
 
-    from lakehouse_ingestion_spark.streaming.cdc import cdc_foreach_batch
+    from lakehouse_ingestion_spark.streaming.cdc import cdc_epoch
 
     state = str(tmp_path / "state")
-    fn = cdc_foreach_batch(spark, state, ["id"], ["seq"])
+    fn = partial(cdc_epoch, state_path=state, key_columns=["id"],
+                 order_by=["seq"])
 
     b1 = spark.createDataFrame(
         [(1, 100, "c", "a1"), (2, 110, "c", "b1")],
@@ -634,7 +638,7 @@ def test_streaming_near_dup_index_maintained(spark, tmp_path):
     import json as _json
 
     from lakehouse_ingestion_spark.streaming.near_dup import (
-        near_dup_foreach_batch,
+        near_dup_epoch,
     )
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -671,8 +675,9 @@ def test_streaming_near_dup_index_maintained(spark, tmp_path):
     bands_p = str(tmp_path / "nd_bands")
     hashes_p = str(tmp_path / "nd_hashes")
 
-    fn = near_dup_foreach_batch(
-        (bands_p, hashes_p),
+    fn = partial(
+        near_dup_epoch,
+        index_paths=(bands_p, hashes_p),
         threshold=0.3,
         sink=lambda df, _e: df.write.mode("append").parquet(out),
         dup_sink=lambda df, _e: df.write.mode("append").parquet(dups),
@@ -711,7 +716,7 @@ def test_streaming_sticky_split_across_batches(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakehouse_ingestion_spark.streaming.curation import (
-        sticky_split_foreach_batch,
+        sticky_split_epoch,
     )
 
     t1 = "the quick brown fox jumps over the lazy dog again and again"
@@ -720,9 +725,10 @@ def test_streaming_sticky_split_across_batches(spark, tmp_path):
     state = str(tmp_path / "cur_state")
     out = str(tmp_path / "cur_out")
     audits = []
-    fn = sticky_split_foreach_batch(
-        state,
-        {"train": 0.5, "test": 0.5},
+    fn = partial(
+        sticky_split_epoch,
+        state_dir=state,
+        fractions={"train": 0.5, "test": 0.5},
         threshold=0.3,
         sink=lambda df, e: df.withColumn(
             "epoch", F.lit(e)
@@ -801,7 +807,7 @@ def test_streaming_bloom_dedup_exact_forever(spark, tmp_path):
 
     from lakehouse_ingestion_spark.operators.bloom import bloom_screen
     from lakehouse_ingestion_spark.streaming.bloom_dedup import (
-        bloom_dedup_foreach_batch,
+        bloom_dedup_epoch,
     )
 
     indir = tmp_path / "bd_in"
@@ -840,8 +846,9 @@ def test_streaming_bloom_dedup_exact_forever(spark, tmp_path):
     bloom_p = str(tmp_path / "bd_bloom")
     keys_p = str(tmp_path / "bd_keys")
 
-    fn = bloom_dedup_foreach_batch(
-        (bloom_p, keys_p),
+    fn = partial(
+        bloom_dedup_epoch,
+        state_paths=(bloom_p, keys_p),
         sink=lambda df, _e: df.write.mode("append").parquet(out),
         key_col="k",
         expected_items=1000,
@@ -879,12 +886,13 @@ def test_streaming_bloom_dedup_redelivery_idempotent(spark, tmp_path):
     so redelivery self-deduplicates (the property the module docstring
     claims over fuzzy near-dup)."""
     from lakehouse_ingestion_spark.streaming.bloom_dedup import (
-        bloom_dedup_foreach_batch,
+        bloom_dedup_epoch,
     )
 
     out = str(tmp_path / "rd_out")
-    fn = bloom_dedup_foreach_batch(
-        (str(tmp_path / "rd_bloom"), str(tmp_path / "rd_keys")),
+    fn = partial(
+        bloom_dedup_epoch,
+        state_paths=(str(tmp_path / "rd_bloom"), str(tmp_path / "rd_keys")),
         sink=lambda df, _e: df.write.mode("append").parquet(out),
         key_col="k",
         expected_items=100,
@@ -904,7 +912,7 @@ def test_streaming_bloom_dedup_stale_keys_fail_safe(spark, tmp_path):
     order's stale-bloom window would silently pass duplicates.)"""
     from lakehouse_ingestion_spark.operators.bloom import bloom_build
     from lakehouse_ingestion_spark.streaming.bloom_dedup import (
-        bloom_dedup_foreach_batch,
+        bloom_dedup_epoch,
     )
 
     bloom_p = str(tmp_path / "fs_bloom")
@@ -917,8 +925,9 @@ def test_streaming_bloom_dedup_stale_keys_fail_safe(spark, tmp_path):
     bloom_build(b1, "k", expected_items=100).write.parquet(bloom_p)
     spark.createDataFrame([], "k string").write.parquet(keys_p)
 
-    fn = bloom_dedup_foreach_batch(
-        (bloom_p, keys_p),
+    fn = partial(
+        bloom_dedup_epoch,
+        state_paths=(bloom_p, keys_p),
         sink=lambda df, _e: df.write.mode("append").parquet(out),
         key_col="k",
         expected_items=100,
@@ -947,8 +956,8 @@ def test_multi_sink_exactly_once_fanout(spark, tmp_path):
 
     from lakehouse_ingestion_spark.streaming.multi_sink import (
         SinkSpec,
-        multi_sink_foreach_batch,
         read_committed,
+        write_epoch,
     )
 
     indir = tmp_path / "ms_in"
@@ -969,14 +978,15 @@ def test_multi_sink_exactly_once_fanout(spark, tmp_path):
     bronze = str(tmp_path / "ms_bronze")
     silver = str(tmp_path / "ms_silver")
     ledger = str(tmp_path / "ms_ledger")
-    fn = multi_sink_foreach_batch(
-        {
+    fn = partial(
+        write_epoch,
+        sinks={
             "bronze": SinkSpec(bronze),
             "silver": SinkSpec(
                 silver, transform=lambda df: df.select("id")
             ),
         },
-        ledger,
+        ledger_path=ledger,
     )
     q = (
         stream.writeStream.foreachBatch(fn)
@@ -1003,7 +1013,7 @@ def test_multi_sink_retry_converges(spark, tmp_path):
 
     from lakehouse_ingestion_spark.streaming.multi_sink import (
         SinkSpec,
-        multi_sink_foreach_batch,
+        write_epoch,
     )
 
     a_path = str(tmp_path / "r_a")
@@ -1017,9 +1027,10 @@ def test_multi_sink_retry_converges(spark, tmp_path):
             raise RuntimeError("sink B transform died")
         return df
 
-    fn = multi_sink_foreach_batch(
-        {"a": SinkSpec(a_path), "b": SinkSpec(b_path, transform=flaky)},
-        ledger,
+    fn = partial(
+        write_epoch,
+        sinks={"a": SinkSpec(a_path), "b": SinkSpec(b_path, transform=flaky)},
+        ledger_path=ledger,
     )
     batch = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
     with _pytest.raises(Exception, match="sink B"):
@@ -1043,13 +1054,13 @@ def test_multi_sink_read_committed_hides_inflight(spark, tmp_path):
 
     from lakehouse_ingestion_spark.streaming.multi_sink import (
         SinkSpec,
-        multi_sink_foreach_batch,
         read_committed,
+        write_epoch,
     )
 
     path = str(tmp_path / "ic_sink")
     ledger = str(tmp_path / "ic_ledger")
-    fn = multi_sink_foreach_batch({"s": SinkSpec(path)}, ledger)
+    fn = partial(write_epoch, sinks={"s": SinkSpec(path)}, ledger_path=ledger)
     fn(spark.createDataFrame([(1,)], "id long"), 0)
     # torn epoch: data present, no ledger row
     (
@@ -1071,13 +1082,14 @@ def test_streaming_bloom_dedup_null_keys_not_collapsed(spark, tmp_path):
     'NULL keys always survive' contract), and none of them lands in
     the dup sink or the key store."""
     from lakehouse_ingestion_spark.streaming.bloom_dedup import (
-        bloom_dedup_foreach_batch,
+        bloom_dedup_epoch,
     )
 
     out = str(tmp_path / "nk_out")
     dups = str(tmp_path / "nk_dups")
-    fn = bloom_dedup_foreach_batch(
-        (str(tmp_path / "nk_bloom"), str(tmp_path / "nk_keys")),
+    fn = partial(
+        bloom_dedup_epoch,
+        state_paths=(str(tmp_path / "nk_bloom"), str(tmp_path / "nk_keys")),
         sink=lambda df, _e: df.write.mode("append").parquet(out),
         key_col="k",
         expected_items=100,
@@ -1121,14 +1133,14 @@ def test_multi_sink_ledger_rows_from_observe(spark, tmp_path):
         spark.createDataFrame(
             [(1, "a"), (2, "b"), (3, "a")], "id long, g string"
         ),
-        {
+        sinks={
             "all": SinkSpec(str(tmp_path / "lr_all")),
             "only_a": SinkSpec(
                 str(tmp_path / "lr_a"),
                 transform=lambda df: df.where("g = 'a'"),
             ),
         },
-        ledger,
+        ledger_path=ledger,
         epoch_id=0,
     )
     rows = {
@@ -1159,8 +1171,8 @@ def test_multi_sink_read_committed_tolerates_missing_and_empty(
     empty_path = str(tmp_path / "mt_empty")
     write_epoch(
         spark.createDataFrame([], "id long").where("id < 0"),
-        {"e": SinkSpec(empty_path)},
-        ledger,
+        sinks={"e": SinkSpec(empty_path)},
+        ledger_path=ledger,
         epoch_id=0,
     )
     led = spark.read.parquet(ledger)
@@ -1189,16 +1201,16 @@ def test_multi_sink_forced_rerun_with_empty_input_clears_partition(
     out = str(tmp_path / "fe_out")
     write_epoch(
         spark.createDataFrame([(1,), (2,)], "id long"),
-        {"s": SinkSpec(out)},
-        ledger,
+        sinks={"s": SinkSpec(out)},
+        ledger_path=ledger,
         epoch_id=7,
     )
     assert read_committed(spark, out, ledger, "s").count() == 2
     # deliberate re-run of epoch 7 with corrected (empty) input
     write_epoch(
         spark.createDataFrame([], "id long"),
-        {"s": SinkSpec(out)},
-        ledger,
+        sinks={"s": SinkSpec(out)},
+        ledger_path=ledger,
         epoch_id=7,
         force=True,
     )
@@ -1207,14 +1219,14 @@ def test_multi_sink_forced_rerun_with_empty_input_clears_partition(
     # other epochs are untouched by the targeted delete
     write_epoch(
         spark.createDataFrame([(9,)], "id long"),
-        {"s": SinkSpec(out)},
-        ledger,
+        sinks={"s": SinkSpec(out)},
+        ledger_path=ledger,
         epoch_id=8,
     )
     write_epoch(
         spark.createDataFrame([(10,), (11,), (12,)], "id long"),
-        {"s": SinkSpec(out)},
-        ledger,
+        sinks={"s": SinkSpec(out)},
+        ledger_path=ledger,
         epoch_id=7,
         force=True,
     )
@@ -1240,8 +1252,8 @@ def test_multi_sink_forced_rerun_failure_keeps_prior_epoch(spark, tmp_path):
     out = str(tmp_path / "ff_out")
     write_epoch(
         spark.createDataFrame([(1,), (2,), (3,)], "id long"),
-        {"s": SinkSpec(out)},
-        ledger,
+        sinks={"s": SinkSpec(out)},
+        ledger_path=ledger,
         epoch_id=4,
     )
 
@@ -1251,8 +1263,8 @@ def test_multi_sink_forced_rerun_failure_keeps_prior_epoch(spark, tmp_path):
     with pytest.raises(RuntimeError, match="died"):
         write_epoch(
             spark.createDataFrame([(9,)], "id long"),
-            {"s": SinkSpec(out, transform=boom)},
-            ledger,
+            sinks={"s": SinkSpec(out, transform=boom)},
+            ledger_path=ledger,
             epoch_id=4,
             force=True,
         )
@@ -1272,8 +1284,8 @@ def test_multi_sink_forced_rerun_failure_keeps_prior_epoch(spark, tmp_path):
     with pytest.raises(Exception, match="job-time failure"):
         write_epoch(
             spark.createDataFrame([(9,)], "id long"),
-            {"s": SinkSpec(out, transform=poison)},
-            ledger,
+            sinks={"s": SinkSpec(out, transform=poison)},
+            ledger_path=ledger,
             epoch_id=4,
             force=True,
         )
@@ -1288,12 +1300,13 @@ def test_streaming_near_dup_posting_cap_passthrough(spark, tmp_path):
     boilerplate band key is dropped (metric emitted), unique near-dups
     still dedup."""
     from lakehouse_ingestion_spark.streaming.near_dup import (
-        near_dup_foreach_batch,
+        near_dup_epoch,
     )
 
     out, dups, metrics = [], [], []
-    fn = near_dup_foreach_batch(
-        (str(tmp_path / "bands"), str(tmp_path / "hashes")),
+    fn = partial(
+        near_dup_epoch,
+        index_paths=(str(tmp_path / "bands"), str(tmp_path / "hashes")),
         threshold=0.3,
         sink=lambda df, e: out.extend(df.collect()),
         dup_sink=lambda df, e: dups.extend(df.collect()),
@@ -1327,14 +1340,12 @@ def test_streaming_dq_drift_gate(spark):
     from lakehouse_ingestion_spark.dq.checks import DriftCheck
     from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
     from lakehouse_ingestion_spark.errors import DataQualityError
-    from lakehouse_ingestion_spark.streaming.foreach_batch import (
-        dq_foreach_batch,
-    )
+    from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
 
     rules = DQRuleSet([DriftCheck(column="value", ref_mean=100.0, ref_std=5.0)])
     seen = []
-    fn = dq_foreach_batch(rules, OnFailPolicy.FAIL_FAST,
-                          sink=lambda df, e: seen.extend(df.collect()))
+    fn = partial(dq_epoch, ruleset=rules, policy=OnFailPolicy.FAIL_FAST,
+                 sink=lambda df, e: seen.extend(df.collect()))
 
     ok = spark.createDataFrame([(1, 99.0), (2, 101.0)], "id long, value double")
     fn(ok, 0)

@@ -3,6 +3,8 @@ maintenance must converge to the one-shot plan, redelivery must be a
 no-op, crashed partials must stay invisible, per-trigger state I/O must
 be batch-sized, and the retrain cadence must fold the epoch log."""
 
+from functools import partial
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +12,7 @@ from pyspark.sql import functions as F
 from lakehouse_ingestion_spark.errors import ConfigError
 from lakehouse_ingestion_spark.operators.ann import ivf_topk, kmeans_refine
 from lakehouse_ingestion_spark.streaming.ann_index import (
-    ann_index_foreach_batch,
+    ann_index_epoch,
     committed_postings,
     current_centroids,
     retrain_index,
@@ -53,7 +55,7 @@ def _rows(df):
 def test_cross_batch_maintenance_matches_one_shot(spark, tmp_path):
     corpus, queries, cent = _parts(spark)
     idx = str(tmp_path / "idx")
-    fn = ann_index_foreach_batch(idx, cent)
+    fn = partial(ann_index_epoch, index_dir=idx, init_centroids=cent)
     for e in range(3):
         fn(corpus.where(F.col("vec_id") % 3 == e), e)
 
@@ -72,7 +74,7 @@ def test_cross_batch_maintenance_matches_one_shot(spark, tmp_path):
 def test_crashed_partial_epoch_stays_invisible_then_reruns(spark, tmp_path):
     corpus, queries, cent = _parts(spark)
     idx = str(tmp_path / "idx")
-    fn = ann_index_foreach_batch(idx, cent)
+    fn = partial(ann_index_epoch, index_dir=idx, init_centroids=cent)
     fn(corpus.where(F.col("vec_id") % 3 == 0), 0)
 
     # simulate a crash: epoch 1's postings land but the ledger row never
@@ -105,7 +107,7 @@ def test_crashed_partial_epoch_stays_invisible_then_reruns(spark, tmp_path):
 def test_per_trigger_state_io_is_batch_sized(spark, tmp_path):
     corpus, _, cent = _parts(spark)
     idx = str(tmp_path / "idx")
-    fn = ann_index_foreach_batch(idx, cent)
+    fn = partial(ann_index_epoch, index_dir=idx, init_centroids=cent)
     fn(corpus.where(F.col("vec_id") % 3 == 0), 0)
     before = {
         r[0]: r[1]
@@ -133,7 +135,8 @@ def test_per_trigger_state_io_is_batch_sized(spark, tmp_path):
 def test_retrain_cadence_folds_and_matches_batch_refine(spark, tmp_path):
     corpus, queries, cent = _parts(spark)
     idx = str(tmp_path / "idx")
-    fn = ann_index_foreach_batch(idx, cent, retrain_every=3, dim=DIM)
+    fn = partial(ann_index_epoch, index_dir=idx, init_centroids=cent,
+                 retrain_every=3, dim=DIM)
     for e in range(3):  # retrain fires after epoch 2's commit
         fn(corpus.where(F.col("vec_id") % 3 == e), e)
 
@@ -160,7 +163,8 @@ def test_retrain_cadence_folds_and_matches_batch_refine(spark, tmp_path):
 
     # post-retrain appends assign against the REFINED set and survive a
     # restart (persisted centroids are authoritative, seeds ignored)
-    fn2 = ann_index_foreach_batch(idx, cent.limit(1), retrain_every=None)
+    fn2 = partial(ann_index_epoch, index_dir=idx,
+                  init_centroids=cent.limit(1), retrain_every=None)
     extra = _emb(spark, n=100).where(F.col("vec_id") >= 90)
     fn2(extra, 3)
     got2 = search_index(spark, idx, queries, k=3, nprobe=2)
@@ -174,8 +178,10 @@ def test_search_before_bootstrap_and_bad_config(spark, tmp_path):
     with pytest.raises(ConfigError):
         search_index(spark, idx, _emb(spark, 5))
     with pytest.raises(ConfigError):
-        ann_index_foreach_batch(idx, None, retrain_every=0)
+        ann_index_epoch(_emb(spark, 5), 0, index_dir=idx, init_centroids=None,
+                        retrain_every=0)
     with pytest.raises(ConfigError):
-        ann_index_foreach_batch(idx, None, retrain_every=5)  # dim missing
+        ann_index_epoch(_emb(spark, 5), 0, index_dir=idx, init_centroids=None,
+                        retrain_every=5)  # dim missing
     with pytest.raises(ConfigError):
         retrain_index(spark, idx, dim=DIM)

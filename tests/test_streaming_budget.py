@@ -1,12 +1,13 @@
 """Streaming budget admission: cross-batch quota, replay convergence,
 batch-sized state I/O."""
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.streaming.budget import (
     admit_epoch,
-    budget_admit_foreach_batch,
     spent,
 )
 
@@ -23,8 +24,8 @@ def paths(tmp_path):
 def _admit(spark, paths, rows, epoch, budget=100):
     out, ledger = paths
     admit_epoch(
-        _batch(spark, rows), epoch, out, ledger,
-        "score", "n_tokens", budget, "doc_id",
+        _batch(spark, rows), epoch, out_path=out, ledger_path=ledger,
+        score_col="score", cost_col="n_tokens", budget=budget, key_col="doc_id",
     )
 
 
@@ -95,9 +96,13 @@ def test_foreach_batch_builder_validates(spark, paths):
     from lakehouse_ingestion_spark.errors import ConfigError
 
     with pytest.raises(ConfigError):
-        budget_admit_foreach_batch(out, ledger, "s", "c", -1, "id")
-    fn = budget_admit_foreach_batch(
-        out, ledger, "score", "n_tokens", 50, "doc_id"
+        admit_epoch(
+            _batch(spark, []), 0, out_path=out, ledger_path=ledger,
+            score_col="s", cost_col="c", budget=-1, key_col="id",
+        )
+    fn = partial(
+        admit_epoch, out_path=out, ledger_path=ledger, score_col="score",
+        cost_col="n_tokens", budget=50, key_col="doc_id",
     )
     fn(_batch(spark, [(1, 5, 30), (2, 4, 30)]), 0)
     assert spent(spark, ledger) == 30
@@ -223,8 +228,9 @@ def _sadmit(spark, tmp, rows, epoch, budgets, default_budget=0):
     )
 
     admit_epoch_stratified(
-        _sbatch(spark, rows), epoch, str(tmp / "out"), str(tmp / "ledger"),
-        "dom", "score", "n_tokens", budgets, "doc_id",
+        _sbatch(spark, rows), epoch, out_path=str(tmp / "out"),
+        ledger_path=str(tmp / "ledger"), strata_col="dom", score_col="score",
+        cost_col="n_tokens", budgets=budgets, key_col="doc_id",
         default_budget=default_budget,
     )
 
@@ -411,7 +417,8 @@ def _share(spark, tmp_path, rows, epoch, p=0.5):
 
     out, ledger = str(tmp_path / "sh_out"), str(tmp_path / "sh_ledger")
     admit_epoch_share(
-        _shbatch(spark, rows), epoch, out, ledger, "quality", p, "doc_id"
+        _shbatch(spark, rows), epoch, out_path=out, ledger_path=ledger,
+        score_col="quality", p=p, key_col="doc_id",
     )
     return out, ledger
 
@@ -460,8 +467,8 @@ def test_share_redelivery_and_crash_replay_converge(spark, tmp_path):
     (pend.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("_epoch").parquet(out))
     admit_epoch_share(
-        _shbatch(spark, [(3, 100.0), (4, 1.0)]), 1, out, ledger,
-        "quality", 0.5, "doc_id",
+        _shbatch(spark, [(3, 100.0), (4, 1.0)]), 1, out_path=out,
+        ledger_path=ledger, score_col="quality", p=0.5, key_col="doc_id",
     )
     led = {r["epoch"]: r for r in spark.read.parquet(ledger).collect()}
     assert led[1]["rows"] == 1 and led[1]["admitted_mass"] == 100.0
@@ -470,12 +477,13 @@ def test_share_redelivery_and_crash_replay_converge(spark, tmp_path):
 
 def test_share_admission_validates(spark, tmp_path):
     from lakehouse_ingestion_spark.errors import ConfigError
-    from lakehouse_ingestion_spark.streaming.budget import (
-        share_admit_foreach_batch,
-    )
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
 
     with pytest.raises(ConfigError, match="p must be"):
-        share_admit_foreach_batch("o", "l", "quality", 0.0, "doc_id")
+        admit_epoch_share(
+            _shbatch(spark, []), 0, out_path="o", ledger_path="l",
+            score_col="quality", p=0.0, key_col="doc_id",
+        )
     with pytest.raises(ConfigError, match="p must be"):
         _share(spark, tmp_path, [(1, 1.0)], 0, p=1.5)
     with pytest.raises(ConfigError, match="non-negative"):
@@ -542,7 +550,8 @@ def test_share_admission_matches_sequential_reference(spark, tmp_path):
     for e, batch in enumerate(epochs):
         admit_epoch_share(
             _shbatch(spark, [(d, float(s)) for d, s in batch]),
-            e, out, ledger, "quality", p, "doc_id",
+            e, out_path=out, ledger_path=ledger, score_col="quality", p=p,
+            key_col="doc_id",
         )
     got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert got == expect
@@ -568,8 +577,9 @@ def _sshare(spark, tmp_path, rows, epoch, p=0.5, default_p=0.0):
 
     out, ledger = str(tmp_path / "ss_out"), str(tmp_path / "ss_ledger")
     admit_epoch_share_stratified(
-        _ssbatch(spark, rows), epoch, out, ledger, "lang", "quality", p,
-        "doc_id", default_p=default_p,
+        _ssbatch(spark, rows), epoch, out_path=out, ledger_path=ledger,
+        strata_col="lang", score_col="quality", p=p, key_col="doc_id",
+        default_p=default_p,
     )
     return out, ledger
 

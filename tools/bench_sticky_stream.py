@@ -1,7 +1,7 @@
 """Per-batch wall for the streaming sticky-split sink (BASELINE.md row).
 
 Slices an sf documents table into N equal batches and drives
-``sticky_split_foreach_batch`` directly (the foreachBatch contract — no
+``sticky_split_epoch`` directly (the foreachBatch contract — no
 broker needed), printing per-batch wall and the per-epoch state-delta
 row counts. The round-9 design claim under test: batch wall tracks the
 BATCH (plus touched-cluster members), not the corpus, as the
@@ -19,6 +19,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, "/root/repo")
 
@@ -30,9 +31,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from lakehouse_ingestion_spark.session import SparkConfig, get_spark
-    from lakehouse_ingestion_spark.streaming.curation import (
-        sticky_split_foreach_batch,
-    )
+    from lakehouse_ingestion_spark.streaming.curation import sticky_split_epoch
 
     spark = get_spark(SparkConfig(app_name="bench-sticky-stream"))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -42,9 +41,10 @@ def main() -> None:
     state = tempfile.mkdtemp(prefix="sticky_bench_")
     out = tempfile.mkdtemp(prefix="sticky_out_")
     try:
-        fn = sticky_split_foreach_batch(
-            f"{state}/s",
-            {"train": 0.8, "val": 0.1, "test": 0.1},
+        fn = partial(
+            sticky_split_epoch,
+            state_dir=f"{state}/s",
+            fractions={"train": 0.8, "val": 0.1, "test": 0.1},
             threshold=0.5,
             sink=lambda df, e: df.write.mode("append").parquet(f"{out}/o"),
             posting_cap=500,

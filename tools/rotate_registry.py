@@ -11,79 +11,33 @@ each round must front-load:
    ``err`` set) — they need re-verification after a fix,
 3. then least-recently-hashed first, until the window is full.
 
-This tool reads every ``CORRECTNESS_r*.json`` at the repo root, computes
-each registry query's last-hashed round and verdict, and either
+``queries()`` applies that order itself at call time
+(``__spark_entry__.priority_order`` over ``load_hash_history()``, read
+from every ``CORRECTNESS_r*.json`` at the repo root), so a new sweep
+needs no hand reordering. This tool either
 
-* prints the priority-ordered window proposal (default), or
-* ``--check`` exits non-zero unless the CURRENT registry order already
-  front-loads the top-``WINDOW`` priority set (the invariant
-  ``tests/test_rotation.py`` pins every round).
+* prints the window with each query's last-hashed round and verdict
+  (default), or
+* ``--check`` exits non-zero unless the registry order front-loads the
+  top-``WINDOW`` priority set (the invariant ``tests/test_rotation.py``
+  pins).
 
-Priority never reorders *within* a tier: ties keep current registry
-order, so the proposal is a stable, minimal shuffle of the dict.
+Priority never reorders *within* a tier: ties keep the registry's dict
+order.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
-import re
 import sys
 from pathlib import Path
 
 WINDOW = 50
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-
-def load_hash_history(repo: Path = REPO) -> dict[str, tuple[int, bool]]:
-    """name -> (last round whose sweep included it, was it green there).
-
-    Green = rows/schema/hash all true and no err. A query appearing in
-    multiple rounds keeps the LATEST round's verdict.
-    """
-    history: dict[str, tuple[int, bool]] = {}
-    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            green = (
-                row.get("rows_match") is True
-                and row.get("schema_match") is True
-                # hash_match None = weaker rows-only check (no oracle SQL);
-                # treat as green — re-running it cannot upgrade the evidence.
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            )
-            prev = history.get(name)
-            if prev is None or rnd >= prev[0]:
-                history[name] = (rnd, green)
-    return history
-
-
-def priority_order(
-    registry_order: list[str], history: dict[str, tuple[int, bool]]
-) -> list[str]:
-    """Stable sort: never-hashed & latest-red first (tier 0), then by
-    last-hashed round ascending; ties keep current registry order."""
-    pos = {name: i for i, name in enumerate(registry_order)}
-
-    def key(name: str) -> tuple[int, int]:
-        entry = history.get(name)
-        if entry is None or not entry[1]:
-            return (0, pos[name])
-        return (entry[0], pos[name])
-
-    return sorted(registry_order, key=key)
+import __spark_entry__ as spark_entry  # noqa: E402
+from __spark_entry__ import load_hash_history, priority_order  # noqa: E402,F401
 
 
 def check_window(
@@ -105,10 +59,7 @@ def check_window(
 
 
 def _registry_order() -> list[str]:
-    sys.path.insert(0, str(REPO))
-    import __spark_entry__ as entry  # noqa: PLC0415
-
-    return list(entry.queries().keys())
+    return list(spark_entry.queries().keys())
 
 
 def main() -> int:
