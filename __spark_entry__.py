@@ -1885,7 +1885,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_ids": q_token_ids,
         "quantile_sketch": q_quantile_sketch,
         "quantile_sketch_merge": q_quantile_sketch_merge,
-        "star_clusters": q_star_clusters,
         "topk_sketch": q_topk_sketch,
         "weighted_sample": q_weighted_sample,
         "pii_scrub": q_pii_scrub,
@@ -3097,23 +3096,6 @@ def q_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_star_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters via the alternating large-star/small-star CC
-    algorithm (operators/graph.py, Kiveris et al. SoCC'14) — the
-    shuffle-volume-optimal alternative to label propagation for
-    edge-heavy graphs. Same input pairs and same cluster summary as
-    dedup_clusters, so the oracle (recursive transitive closure) checks
-    that both algorithms reach the identical fixpoint."""
-    from lakehouse_ingestion_spark.operators.graph import connected_components
-
-    pairs = q_near_dup(spark, sf_dir).select("doc_a", "doc_b")
-    cc = connected_components(pairs, src="doc_a", dst="doc_b", algorithm="star")
-    return cc.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum("node").alias("members_sum"),
-    )
-
-
 TOPK_MIN_SHARE = 0.002  # shared with the DuckDB mirror
 
 
@@ -3652,13 +3634,8 @@ def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(ent, F.lit("x")))
     )
     nodes = c.select(F.col("c_custkey").alias("rec_id"), name.alias("name"))
-    # propagate CC: variant clusters are stars around the canonical
-    # spelling (diameter 2) — label propagation converges in <= 3 rounds
-    # and beats pointer-doubling's per-round overhead here (see
-    # resolve_entities docstring)
     out = resolve_entities(
-        nodes, "rec_id", "name", max_edit_distance=1, max_block=100,
-        algorithm="propagate",
+        nodes, "rec_id", "name", max_edit_distance=1, max_block=100
     )
     return out.select("rec_id", "name", "cluster")
 
@@ -6415,10 +6392,6 @@ JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name
 """
-
-    # large-star/small-star CC must reach the same fixpoint as the
-    # min-label propagation — identical oracle to dedup_clusters
-    qs["star_clusters"] = qs["dedup_clusters"]
 
     qs["topk_sketch"] = rf"""
 WITH toks AS (

@@ -70,15 +70,13 @@ def main() -> None:
 
     bench_only = getattr(entrymod, "bench_extra_queries", dict)()
     for name, fn in {**entrymod.queries(), **bench_only}.items():
-        # timer wraps fn() too (some queries do eager work inside), and a
-        # query must not pin cache into its successors' measurements.
-        # gc.collect() releases this query's py4j proxies so the JVM
-        # ContextCleaner can reclaim whatever localCheckpoint blocks the
-        # explicit release below can't reach (frames internal to an
-        # operator that aren't leaves of the returned plan).
         # timer wraps fn() too (some queries do eager work inside), and
         # a query must not pin cache into its successors' measurements;
-        # probe() clears cache + gc per run. The post-probe checkpoint
+        # probe() clears cache + gc per run — gc.collect() releases the
+        # previous query's py4j proxies so the JVM ContextCleaner can
+        # reclaim whatever localCheckpoint blocks the explicit release
+        # can't reach (frames internal to an operator that aren't
+        # leaves of the returned plan). The post-probe checkpoint
         # release inside probe() obeys the CONTRACT asserted by
         # tests/test_bench_contract.py: it unpersists EVERY LogicalRDD
         # leaf of the returned plan, which is only safe because no

@@ -228,7 +228,6 @@ def kmeans_refine(
     centroid_id_col: str = "cid",
     centroid_vec_col: str = "cv",
     round_to: int | None = 6,
-    cache: bool = True,
 ) -> DataFrame:
     """Lloyd k-means refinement of IVF centroids, MLlib-style.
 
@@ -250,8 +249,6 @@ def kmeans_refine(
     ``round_to`` pins centroid components to a fixed decimal precision
     (half-away-from-zero on the binary double, matching ``ROUND`` in SQL
     engines) so a cross-engine oracle reproduces the refined centroids.
-    ``cache`` is accepted for API compatibility and ignored — there is
-    no longer a distributed centroid frame to cache.
 
     Each iteration emits per-Arrow-batch partial aggregates
     ``(cell index, member count, component sums)`` — ``batches x K``
@@ -260,7 +257,6 @@ def kmeans_refine(
     shuffle stage or a ``dim``-wide codegen'd aggregate (measured 3.4 s
     of compile+exec for 64 ``avg`` columns vs ~0.4 s for this shape).
     """
-    del cache  # driver-resident centroids need no persistence
     sc = vectors.sparkSession.sparkContext
     cent_ids, cent_mat = _centroids_to_driver(
         centroids, centroid_id_col, centroid_vec_col

@@ -39,31 +39,14 @@ def cdc_latest(
     df: DataFrame,
     key_columns: list[str],
     order_by: list[Column | str],
-    strategy: str = "window",
 ) -> DataFrame:
     """Latest event per key. ``order_by`` columns are interpreted
     newest-first when given as plain strings (wrapped in desc()).
 
-    ``strategy="window"`` (default): row_number over a per-key sort —
-    fully codegen'd, measured ~25% faster than the agg form on local[32]
-    at 100k-2M rows (see PLANS.md "formulation trade-off").
-    ``strategy="agg"`` (requires plain-string ``order_by``): ``max_by``
-    aggregation whose map-side partial collapses each partition to <=1
-    row/key BEFORE the shuffle — the right choice when shuffle is
-    network-bound (real clusters) or a key is hot enough to blow a
-    single window partition; null ordering values lose (struct nulls
-    sort smallest), matching desc_nulls_last.
+    row_number over a per-key sort — fully codegen'd, and measured ~25%
+    faster than a ``max_by`` aggregation on local[32] at 100k-2M rows
+    (see PLANS.md "formulation trade-off").
     """
-    if strategy == "agg":
-        if not all(isinstance(c, str) for c in order_by):
-            raise ValueError(
-                "strategy='agg' requires plain-string order_by columns "
-                "(max_by cannot honor per-column sort directions); use "
-                "strategy='window' for Column expressions"
-            )
-        from lakehouse_ingestion_spark.operators.dedup import dedup_latest_agg
-
-        return dedup_latest_agg(df, key_columns, list(order_by))
     w = Window.partitionBy(*key_columns).orderBy(*_order_cols(order_by))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -112,9 +95,9 @@ def cdc_apply_incremental(
             lifted = lifted.withColumn(c, F.lit(None))
     lifted = lifted.withColumn(op_column, F.lit("r")).select(*evt_cols)
     combined = events.unionByName(lifted)
-    # cdc_apply ranks with the default window strategy (desc_nulls_last),
-    # so the lifted snapshot rows' null ordering values sort last and
-    # lose to any real event for the same key
+    # cdc_apply ranks with a desc (nulls-last) window, so the lifted
+    # snapshot rows' null ordering values sort last and lose to any real
+    # event for the same key
     return cdc_apply(
         combined, key_columns, list(order_by), op_column=op_column, delete_ops=delete_ops
     ).drop(op_column)

@@ -96,31 +96,6 @@ def dedup_latest_by_key(
     )
 
 
-def dedup_latest_agg(
-    df: DataFrame,
-    key_columns: list[str],
-    max_by_columns: list[str],
-) -> DataFrame:
-    """Same result as ``dedup_latest_by_key`` with
-    ``order_by=[desc(c) for c in max_by_columns]``, as a ``max_by``
-    aggregation: keep the row whose ``(max_by_columns...)`` tuple is the
-    lexicographic maximum per key.
-
-    Scale: strictly dominates the window form at large N — partial
-    aggregation collapses each map partition to at most one row per key
-    BEFORE the shuffle (the window form shuffles every row), and a hot
-    key degrades gracefully for the same reason. Use the window form
-    when ordering needs mixed asc/desc or explicit null placement.
-
-    ``max_by_columns`` must be non-null for well-defined ordering (null
-    struct fields sort smallest, i.e. lose).
-    """
-    ordering = F.struct(*[F.col(c) for c in max_by_columns])
-    row = F.struct(*[F.col(c) for c in df.columns])
-    out = df.groupBy(*key_columns).agg(F.max_by(row, ordering).alias("__w"))
-    return out.select(*[F.col(f"__w.{c}").alias(c) for c in df.columns])
-
-
 def dedup_by_priority(
     df: DataFrame,
     priorities: dict[str, int],

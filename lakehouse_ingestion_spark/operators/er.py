@@ -101,17 +101,14 @@ def resolve_entities(
     max_edit_distance: int = 1,
     blocking: Callable[[Column], list[Column]] | None = None,
     max_block: int = 100,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """(id, name, cluster) with cluster = min id over the transitive
     match closure; unmatched records are singletons of themselves.
 
-    ``algorithm`` passes through to ``connected_components``: the
-    default pointer-doubling ``jump`` is diameter-safe; pass
-    ``propagate`` when match clusters are known shallow (spelling
-    variants of one canonical form are star-shaped around it, diameter
-    ~2) — it converges in <= 3 rounds there and each round is cheaper
-    than a jump round (measured ~35% off the CC wall at sf1)."""
+    Spelling variants of one canonical form are star-shaped around it
+    (diameter ~2), so ``connected_components`` settles them inside its
+    propagation-only warmup and never pays a pointer-jumping round;
+    long match chains still converge in O(log diameter) rounds."""
     if max_edit_distance < 0:
         raise ConfigError(
             f"max_edit_distance must be >= 0, got {max_edit_distance}"
@@ -125,7 +122,7 @@ def resolve_entities(
     edges = pairs.filter(
         F.levenshtein("name_a", "name_b") <= max_edit_distance
     ).select("a", "b")
-    comps = connected_components(edges, src="a", dst="b", algorithm=algorithm)
+    comps = connected_components(edges, src="a", dst="b")
     base = df.select(F.col(id_col), F.col(name_col))
     out = base.join(
         comps.withColumnRenamed("node", id_col), id_col, "left"

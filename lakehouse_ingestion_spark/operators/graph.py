@@ -6,42 +6,29 @@ EDGES; production dedup needs CLUSTERS: transitively connected groups
 from which one canonical document survives. A doc similar to B and B to
 C must collapse to one cluster even when A-C was never a candidate pair.
 
-Algorithm: iterative min-label propagation, with optional pointer
-jumping. Every node starts labeled with itself; each round every node
-takes the min of its own label and its neighbors' labels; at fixpoint
-every member of a component carries the component's minimum node id
-(which doubles as a stable canonical id).
+Algorithm: iterative min-label propagation with pointer jumping. Every
+node starts labeled with itself; each round every node takes the min of
+its own label and its neighbors' labels; at fixpoint every member of a
+component carries the component's minimum node id (which doubles as a
+stable canonical id).
 
-- ``algorithm="propagate"``: rounds needed = graph diameter. One
-  shuffle join + one aggregation per round, all JVM-side — the leanest
-  round for the shallow components near-dup pair finders emit.
-- ``algorithm="jump"`` (default): propagation plus path halving (the
-  Shiloach-Vishkin pointer-jumping idea) — every label is replaced by
-  its label's label, so label-tree depth halves per round and
-  convergence is O(log diameter). The extra self-join per round buys
-  chain-shaped components (templated/boilerplate documents form them)
-  safety from the round budget: a 200-link chain converges in ~10
-  rounds instead of 200. The hop join is DEFERRED for the first
-  ``_JUMP_WARMUP`` rounds (r12 optimization, guide §2.4/§1.2): the
-  overwhelmingly common near-dup cluster is diameter <= 2, where plain
-  propagation already converges and the hop join is one pure-overhead
-  shuffle per round; deep chains still get halving from round 3 on,
-  keeping the O(log d) budget (2 + log2 d rounds). Final labels are
-  identical either way (min-label fixpoint; property-tested).
+Plain propagation needs rounds = graph diameter. On top of it, every
+round after the first ``_JUMP_WARMUP`` steps also applies path halving
+(the Shiloach-Vishkin pointer-jumping idea): every label is replaced by
+its label's label, so label-tree depth halves per round and convergence
+is O(log diameter). That extra self-join buys chain-shaped components
+(templated/boilerplate documents form them) safety from the round
+budget: a 200-link chain converges in ~10 rounds instead of 200. The
+warmup exists because the overwhelmingly common near-dup cluster is
+diameter <= 2, where plain propagation already converges and the hop
+join would be one pure-overhead shuffle per round; deep chains still
+get halving from round 3 on, keeping the O(log d) budget (2 + log2 d
+rounds). Labels equal a driver-side union-find's (property-tested on
+chains, cliques, and random graphs).
 
-- ``algorithm="star"``: the alternating large-star/small-star
-  algorithm (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SoCC'14). Each round rewrites the EDGE SET itself —
-  large-star hangs every node's larger neighbors off the neighborhood
-  minimum, small-star re-parents the smaller ones — so the graph
-  contracts toward one star per component in O(log n) rounds with
-  per-round shuffle volume proportional to the CURRENT edge set (which
-  shrinks), not to a static node-label table. The right choice when
-  single-round shuffle volume is the binding constraint (edge-heavy
-  graphs at 100 TB).
-
-All three converge to identical labels (property-tested on chains,
-cliques, and random graphs).
+The alternating large-star/small-star algorithm (Kiveris et al.,
+SoCC'14) is not used: on the registry's near-dup pair sets it ran 27
+Spark jobs per call against 10 here (PARITY.md).
 """
 
 from __future__ import annotations
@@ -55,9 +42,9 @@ from ..checkpoint import release_local_checkpoint
 
 log = logging.getLogger(__name__)
 
-# propagate-only warmup rounds before "jump" adds its per-round hop
-# join (see the module docstring): shallow graphs converge inside the
-# warmup at propagate cost, deep chains still halve from round 3 on.
+# propagation-only warmup steps before every round adds the hop join
+# (see the module docstring): shallow graphs converge inside the warmup
+# at plain-propagation cost, deep chains still halve from round 3 on.
 _JUMP_WARMUP = 2
 
 # Relabel-delta broadcast gate for the incremental maintenance path:
@@ -73,7 +60,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """Resolve ``edges`` (undirected; direction of the input pairs is
     ignored) into (node, cluster_id) where ``cluster_id`` is the minimum
@@ -91,10 +77,6 @@ def connected_components(
     (diameter larger than the budget) rather than returning
     half-propagated labels.
     """
-    if algorithm not in ("propagate", "jump", "star"):
-        raise ValueError(
-            f"algorithm must be 'propagate', 'jump' or 'star', got {algorithm!r}"
-        )
     # NULL node ids fail loudly (same stance as operators/sampling.py):
     # a NULL can't label a component; silently emitting a (NULL, NULL)
     # cluster row would corrupt downstream canonical-doc selection
@@ -107,9 +89,6 @@ def connected_components(
                 F.lit("connected_components: edge endpoints must not be NULL")
             ),
         ).otherwise(F.col(c))
-
-    if algorithm == "star":
-        return _star_components(edges, src, dst, _checked, max_iterations)
 
     # bidirectional view via explode, not self-union: the (possibly
     # expensive) upstream edge plan is evaluated ONCE during bi's cache
@@ -193,7 +172,7 @@ def connected_components(
             if first_action and it < max_iterations:
                 stepped = _step(stepped.select("node", "cluster_id"))
                 it += 1
-            if algorithm == "jump" and it - 1 >= _JUMP_WARMUP:
+            if it - 1 >= _JUMP_WARMUP:
                 # path halving: follow the label one hop (every label IS
                 # a node id present in `stepped`, by induction from the
                 # self-labeled start) — label-tree depth halves per round
@@ -234,127 +213,12 @@ def connected_components(
         bi.unpersist()
 
 
-def _star_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    _checked,
-    max_iterations: int,
-) -> DataFrame:
-    """Alternating large-star/small-star CC (Kiveris et al., SoCC'14).
-
-    The edge set is kept in canonical orientation ``(x, y)`` with
-    ``x > y``; each round applies
-
-    - LARGE-STAR: for every node ``u`` (over the bidirectional view),
-      with ``m = min(N(u) + {u})``, emit ``(v, m)`` for each neighbor
-      ``v > u`` — strictly-larger neighbors re-hang off the local
-      minimum;
-    - SMALL-STAR: for every node ``u`` (grouping canonical edges by
-      their LARGER endpoint), with ``m = min`` of its smaller neighbors,
-      emit ``(v, m)`` for each smaller neighbor plus ``(u, m)`` — the
-      smaller neighbors and ``u`` itself all attach to the minimum.
-
-    The fixed point is one star per component rooted at the component's
-    minimum id; labels fall straight out of the final edge set. Each
-    round is two groupBy-min + join passes over the CURRENT edges, and
-    the edge set only shrinks toward n-1 star edges — this is the
-    shuffle-volume-optimal formulation for edge-heavy graphs.
-    """
-    # Pin the (possibly expensive) upstream edge plan ONCE — both the
-    # node set and the canonical edge set derive from it, and without
-    # the pin each materialization re-evaluates the whole pair pipeline
-    # (r12: the LSH near-dup upstream ran twice per star call before).
-    ed = edges.select(
-        _checked(src).alias("s"), _checked(dst).alias("d")
-    ).localCheckpoint(eager=False)  # materialized by all_nodes' job below
-    # full node set BEFORE dropping self-loops: a node whose only edge
-    # is (v, v) must still label itself (propagate/jump include it via
-    # the bidirectional view; the star output must agree). Its EAGER
-    # checkpoint job is what materializes ed's lazy one (r12 v2: ed's
-    # separate eager-checkpoint job folded away — init is now 2 actions,
-    # this one and the cur count, with the same peak block footprint).
-    all_nodes = (
-        ed.select(F.col("s").alias("node"))
-        .union(ed.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    cur = (
-        ed.select(
-            F.greatest(F.col("s"), F.col("d")).alias("x"),
-            F.least(F.col("s"), F.col("d")).alias("y"),
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=False)  # materialized by the count below
-    )
-    cur_count = cur.count()
-    # both derived frames are materialized — the pinned input is dead
-    release_local_checkpoint(ed)
-    for it in range(max_iterations):
-        # -- large-star over the bidirectional neighbor view ------------
-        bi = cur.select(F.col("x").alias("a"), F.col("y").alias("b")).union(
-            cur.select(F.col("y").alias("a"), F.col("x").alias("b"))
-        )
-        mins = bi.groupBy("a").agg(F.min("b").alias("mb"))
-        m = F.least(F.col("a"), F.col("mb"))
-        large = (
-            bi.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("x"), m.alias("y"))
-            .filter(F.col("x") != F.col("y"))
-            .distinct()
-        )
-        # -- small-star over canonical orientation (group by larger) ----
-        mins2 = large.groupBy("x").agg(F.min("y").alias("my"))
-        with_min = large.join(mins2, "x")
-        part_nbrs = with_min.filter(F.col("y") != F.col("my")).select(
-            F.col("y").alias("x"), F.col("my").alias("y")
-        )
-        part_self = mins2.select(F.col("x"), F.col("my").alias("y"))
-        nxt = (
-            part_nbrs.union(part_self)
-            .filter(F.col("x") != F.col("y"))
-            .distinct()
-            # lazy: the count below materializes blocks AND truncates
-            # per-round lineage in the same job (r12 — eager spent a
-            # separate job on the identical scan)
-            .localCheckpoint(eager=False)
-        )
-        # fixed point: same canonical edge set as last round
-        nxt_count = nxt.count()
-        if nxt_count == cur_count and nxt.exceptAll(cur).count() == 0:
-            log.info("star CC converged after %d rounds", it + 1)
-            release_local_checkpoint(cur)
-            attached = nxt.select(
-                F.col("x").alias("node"), F.col("y").alias("cluster_id")
-            )
-            return (
-                all_nodes.join(attached, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("cluster_id", F.col("node")).alias("cluster_id"),
-                )
-            )
-        # round's edge set is materialized and the convergence check
-        # consumed the old one — free its blocks now (checkpoint.py)
-        release_local_checkpoint(cur)
-        cur = nxt
-        cur_count = nxt_count
-    raise RuntimeError(
-        f"star connected components did not converge in {max_iterations} "
-        "rounds; raise max_iterations"
-    )
-
-
 def incremental_components(
     labels: DataFrame | None,
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """Fold a BATCH of new edges into a persisted (node, cluster_id)
     label table without re-running connected components over history —
@@ -390,8 +254,7 @@ def incremental_components(
     """
     if labels is None:
         return connected_components(
-            edges, src=src, dst=dst,
-            max_iterations=max_iterations, algorithm=algorithm,
+            edges, src=src, dst=dst, max_iterations=max_iterations
         )
     for c in ("node", "cluster_id"):
         if c not in labels.columns:
@@ -427,8 +290,7 @@ def incremental_components(
     # persisted row — identical output, one fewer job on the common
     # (non-empty) path.
     delta = connected_components(
-        contracted, src=src, dst=dst,
-        max_iterations=max_iterations, algorithm=algorithm,
+        contracted, src=src, dst=dst, max_iterations=max_iterations
     ).select(
         F.col("node").alias("__old_rep"), F.col("cluster_id").alias("__new_rep")
     )
@@ -502,7 +364,6 @@ def incremental_components_delta(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    algorithm: str = "jump",
     epoch_col: str | None = None,
 ) -> ComponentsDelta:
     """Delta-only face of ``incremental_components`` for callers that
@@ -571,8 +432,7 @@ def incremental_components_delta(
     # ComponentsDelta, one fewer action on the common path.
     cc = (
         connected_components(
-            contracted, src=src, dst=dst,
-            max_iterations=max_iterations, algorithm=algorithm,
+            contracted, src=src, dst=dst, max_iterations=max_iterations
         )
         .select(F.col("node"), F.col("cluster_id"))
         # consumed by moves + new_rows + the member gate count: pin the

@@ -277,7 +277,6 @@ def ngram_novelty(
     id_col: str = "doc_id",
     k: int = 8,
     round_to: int | None = None,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Fraction of each doc's DISTINCT k-shingles first introduced by
     that doc (ids define corpus order; a shingle's introducer is the
@@ -288,16 +287,14 @@ def ngram_novelty(
     # recomputes it: distinct (id, sh) pairs, each pair tagged with its
     # shingle's introducer (min id), then ONE per-doc aggregate
     # producing both n_shingles (pair count) and novel (pairs where
-    # this doc IS the introducer). Two tagging forms, sf1 median-of-5
-    # each (DuckDB oracle 1.3 s):
-    #   - skew_safe=True (default): groupBy(sh).min partial-aggregates
-    #     BEFORE its shuffle, join back on sh — AQE skew-join splits a
-    #     corpus-hot shingle key across tasks. 2.91 s.
-    #   - skew_safe=False: min() window over partitionBy(sh) — ~10%
-    #     faster (2.65 s) but a window partition is never split, so ONE
-    #     task buffers every doc containing a boilerplate shingle;
-    #     only for corpora pre-screened free of corpus-hot shingles.
-    # Measured and rejected at sf1: previous two-branch form 2.95 s
+    # this doc IS the introducer). The introducer is a groupBy(sh).min
+    # that partial-aggregates BEFORE its shuffle, joined back on sh —
+    # AQE skew-join splits a corpus-hot shingle key across tasks. 2.91 s
+    # at sf1 median-of-5 (DuckDB oracle 1.3 s).
+    # Measured and rejected at sf1: a min() window over
+    # partitionBy(sh) at 2.65 s (a window partition is never split, so
+    # ONE task buffers every doc containing a boilerplate shingle),
+    # previous two-branch form 2.95 s
     # (each branch re-ran the explode + per-doc lead window),
     # distinct-then-two-branches 2.92-3.15 s, persisted shared frame
     # 3.45 s warm, collect_set + sentinel single-shuffle 3.24 s, and
@@ -307,13 +304,8 @@ def ngram_novelty(
     # measured-cheapest form; see _doc_shingles) is >half of the total
     # and is the remaining floor vs the oracle.
     dsh = _doc_shingles(df, text_col, id_col, k).select(id_col, "sh").distinct()
-    if skew_safe:
-        intro = dsh.groupBy("sh").agg(F.min(id_col).alias("__fid"))
-        tagged = dsh.join(intro, "sh")
-    else:
-        tagged = dsh.withColumn(
-            "__fid", F.min(id_col).over(Window.partitionBy("sh"))
-        )
+    intro = dsh.groupBy("sh").agg(F.min(id_col).alias("__fid"))
+    tagged = dsh.join(intro, "sh")
     per_doc = (
         tagged.groupBy(id_col)
         .agg(

@@ -30,7 +30,7 @@ import __spark_entry__ as entry  # noqa: E402
 SF_DIR = "/root/testdata/sf0.001"
 
 # queries whose plans are known to carry localCheckpoint leaves
-PINNING_QUERIES = ["dedup_clusters", "star_clusters", "cluster_rep"]
+PINNING_QUERIES = ["dedup_clusters", "er_clusters", "cluster_rep"]
 
 
 def _pinned_rdd_ids(df) -> set[int]:

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.operators import (
@@ -142,42 +143,6 @@ def test_aggregate_and_rollup(spark):
     ru = rollup(df, ["g", "h"], [AggSpec("count", "*", "n")])
     # 3 leaf + 2 subtotal + 1 grand total
     assert ru.count() == 6
-
-
-def test_dedup_latest_agg_matches_window(spark):
-    from lakehouse_ingestion_spark.operators.dedup import (
-        dedup_latest_agg,
-        dedup_latest_by_key,
-    )
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(
-        [
-            (1, 10, "a"), (1, 30, "b"), (1, 20, "c"),
-            (2, 5, "d"),
-            (3, 7, "e"), (3, 7, "f"),  # ts tie -> id tiebreak... both ts=7
-        ],
-        "key int, ts int, payload string",
-    ).withColumn("uid", F.monotonically_increasing_id())
-    # use payload as the unique tiebreaker for determinism
-    w = dedup_latest_by_key(
-        df, ["key"], [F.col("ts").desc(), F.col("payload").desc()]
-    ).select("key", "ts", "payload")
-    a = dedup_latest_agg(df, ["key"], ["ts", "payload"]).select(
-        "key", "ts", "payload"
-    )
-    assert sorted(w.collect()) == sorted(a.collect())
-
-
-def test_dedup_latest_agg_has_partial_aggregation(spark):
-    from lakehouse_ingestion_spark.operators.dedup import dedup_latest_agg
-
-    df = spark.createDataFrame(
-        [(1, 10, "a"), (1, 30, "b")], "key int, ts int, payload string"
-    )
-    out = dedup_latest_agg(df, ["key"], ["ts", "payload"])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "partial_max_by" in plan  # map-side combine before the shuffle
 
 
 def test_hash_split_deterministic_and_stable(spark):
@@ -334,9 +299,28 @@ def test_ensure_parallelism_estimates_and_fans_out(spark, tmp_path):
     assert ensure_parallelism(wide).rdd.getNumPartitions() == 64
 
 
-def test_connected_components_jump_equals_propagate(spark):
-    """Pointer jumping and plain propagation must land on identical
-    labels — random graphs, cliques, and chains."""
+def _union_find_labels(edges):
+    """Driver-side union-find: node -> minimum node id of its component,
+    the labeling connected_components must reproduce."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Labels must equal a driver-side union-find's — random graphs,
+    cliques, and chains."""
     import numpy as np
 
     from lakehouse_ingestion_spark.operators.graph import connected_components
@@ -354,26 +338,11 @@ def test_connected_components_jump_equals_propagate(spark):
     edges = spark.createDataFrame(
         sorted(pairs), "doc_a long, doc_b long"
     )
-    lab_p = {
+    got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(
-            edges, "doc_a", "doc_b", algorithm="propagate"
-        ).collect()
+        for r in connected_components(edges, "doc_a", "doc_b").collect()
     }
-    lab_j = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            edges, "doc_a", "doc_b", algorithm="jump"
-        ).collect()
-    }
-    assert lab_p == lab_j
-    lab_s = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            edges, "doc_a", "doc_b", algorithm="star"
-        ).collect()
-    }
-    assert lab_p == lab_s
+    assert got == _union_find_labels(pairs)
 
 
 def test_incremental_components_equals_full_recompute(spark):
@@ -443,71 +412,17 @@ def test_incremental_components_intra_cluster_batch_is_noop(spark):
         incremental_components(labels.drop("cluster_id"), redundant, "doc_a", "doc_b")
 
 
-def test_connected_components_star_basics(spark):
-    """Large-star/small-star: same fixpoint as propagation on the
-    chain+triangle fixture, logarithmic rounds on a long chain, loud
-    failure on an impossible round budget, NULL endpoints raise."""
-    import pytest
-    from pyspark.errors import PySparkException
-
-    from lakehouse_ingestion_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (4, 3), (10, 11), (12, 10), (11, 12)],
-        "doc_a long, doc_b long",
-    )
-    cc = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            edges, "doc_a", "doc_b", algorithm="star"
-        ).collect()
-    }
-    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
-
-    # 60-link chain: each star round roughly halves component diameter,
-    # so 25 default rounds are plenty (propagate would need 60)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "doc_a long, doc_b long"
-    )
-    full = connected_components(chain, "doc_a", "doc_b", algorithm="star")
-    assert {r["cluster_id"] for r in full.collect()} == {0}
-    assert full.count() == 61
-
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(
-            chain, "doc_a", "doc_b", algorithm="star", max_iterations=1
-        )
-
-    bad = spark.createDataFrame([(1, 2), (3, None)], "doc_a long, doc_b long")
-    with pytest.raises(PySparkException, match="must not be NULL"):
-        connected_components(bad, "doc_a", "doc_b", algorithm="star").collect()
-
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(edges, "doc_a", "doc_b", algorithm="bogus")
-
-
 def test_connected_components_jump_survives_long_chain(spark):
-    """A 200-link chain exceeds the default round budget under plain
-    propagation (rounds = diameter) but converges under pointer jumping
-    (rounds ~ log diameter) — the scale argument for the default."""
-    import pytest
-
+    """A 200-link chain — 8x the default round budget under plain
+    propagation (rounds = diameter) — converges inside it under pointer
+    jumping (rounds ~ log diameter)."""
     from lakehouse_ingestion_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(
-            chain, "doc_a", "doc_b", max_iterations=25, algorithm="propagate"
-        )
-    got = connected_components(
-        chain, "doc_a", "doc_b", max_iterations=25, algorithm="jump"
-    )
+    got = connected_components(chain, "doc_a", "doc_b", max_iterations=25)
     assert {r["cluster_id"] for r in got.collect()} == {0}
-
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(chain, "doc_a", "doc_b", algorithm="stars")
 
 
 def test_dedup_by_content_hash_fns(spark):
@@ -601,14 +516,72 @@ def test_connected_components_releases_round_blocks(spark):
     release_local_checkpoint(got)
     assert sc._jsc.getPersistentRDDs().size() <= before
 
-    before2 = sc._jsc.getPersistentRDDs().size()
-    got2 = connected_components(
-        chain, "doc_a", "doc_b", max_iterations=40, algorithm="star"
+
+@pytest.mark.slow
+def test_cc_deferred_hop_matches_bruteforce_labels(spark):
+    """The r12 round shape (join-free first round, tagged-self-row
+    aggregation, hop deferred past the warmup) must land on the same
+    min-label fixpoint as a driver-side union-find on assorted graph
+    shapes — including one deep enough that the deferred hop is what
+    converges it."""
+    from lakehouse_ingestion_spark.operators.graph import connected_components
+
+    edges = (
+        [(i, i + 1) for i in range(40)]  # deep chain: the hop converges it
+        + [(100, 101), (101, 102), (100, 102)]  # triangle
+        + [(200, 200)]  # self-loop-only node
+        + [(300, 301)]  # single edge
     )
-    assert {r["cluster_id"] for r in got2.collect()} == {0}
-    # stars keeps all_nodes + the final edge set in the returned plan
-    assert sc._jsc.getPersistentRDDs().size() <= before2 + 2
-    release_local_checkpoint(got2)
+    want = _union_find_labels(edges)
+
+    df = spark.createDataFrame(edges, "a long, b long")
+    # the hop engages after the 2-round warmup, so the 40-chain must
+    # converge within the default 25 steps
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in connected_components(df, "a", "b").collect()
+    }
+    assert got == want
+
+
+def test_cc_fused_first_action_budget_counts_steps(spark):
+    """The fused first action (steps 1+2 in one checkpoint+count) must
+    keep ``max_iterations`` a budget on STEPS: a star needs 2 steps
+    (1 effective + 1 detection) — it converges with max_iterations=2 and
+    RAISES with max_iterations=1, exactly like the unfused shape. Input
+    self-loop edges must be absorbed by the self-loop view (not create
+    phantom labels)."""
+    from lakehouse_ingestion_spark.operators.graph import connected_components
+
+    star = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (7, 7)], "a long, b long"
+    )
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in connected_components(
+            star, "a", "b", max_iterations=2
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7}
+    with pytest.raises(RuntimeError, match="converge"):
+        connected_components(star, "a", "b", max_iterations=1)
+
+
+def test_cc_single_checkpoint_rdd_per_round_released(spark):
+    """One lazy checkpoint per round, previous round released: after the
+    final collect + explicit release, no label RDD stays pinned."""
+    from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
+    from lakehouse_ingestion_spark.operators.graph import connected_components
+
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "a long, b long"
+    )
+    got = connected_components(chain, "a", "b")
+    assert {r["cluster_id"] for r in got.collect()} == {0}
+    release_local_checkpoint(got)
+    assert sc._jsc.getPersistentRDDs().size() <= before
 
 
 def test_profile_table_exact_vs_approx_paths(spark):

@@ -7,102 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------------------- CC ----
-@pytest.mark.slow
-def test_cc_deferred_hop_matches_bruteforce_labels(spark):
-    """The r12 round shape (join-free first round, tagged-self-row
-    aggregation, hop deferred past the warmup) must land on the same
-    min-label fixpoint as a driver-side union-find on assorted graph
-    shapes — including one deep enough that the deferred hop is what
-    converges it."""
-    from lakehouse_ingestion_spark.operators.graph import connected_components
-
-    edges = (
-        [(i, i + 1) for i in range(40)]  # deep chain: the hop converges it
-        + [(100, 101), (101, 102), (100, 102)]  # triangle
-        + [(200, 200)]  # self-loop-only node
-        + [(300, 301)]  # single edge
-    )
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for a, b in edges:
-        union(a, b)
-    want = {n: find(n) for n in parent}
-
-    df = spark.createDataFrame(edges, "a long, b long")
-    # propagate needs diameter rounds by design — it gets the raised
-    # budget; jump (hop engages after the 2-round warmup) and star must
-    # converge the 40-chain within the default 25.
-    for alg, kw in (
-        ("propagate", {"max_iterations": 60}),
-        ("jump", {}),
-        ("star", {}),
-    ):
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(
-                df, "a", "b", algorithm=alg, **kw
-            ).collect()
-        }
-        assert got == want, alg
-
-
-def test_cc_fused_first_action_budget_counts_steps(spark):
-    """The fused first action (steps 1+2 in one checkpoint+count) must
-    keep ``max_iterations`` a budget on STEPS: a star needs 2 steps
-    (1 effective + 1 detection) — it converges with max_iterations=2 and
-    RAISES with max_iterations=1, exactly like the unfused shape. Input
-    self-loop edges must be absorbed by the self-loop view (not create
-    phantom labels)."""
-    from lakehouse_ingestion_spark.operators.graph import connected_components
-
-    star = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (7, 7)], "a long, b long"
-    )
-    for alg in ("propagate", "jump"):
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(
-                star, "a", "b", algorithm=alg, max_iterations=2
-            ).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7}, alg
-        with pytest.raises(RuntimeError, match="converge"):
-            connected_components(
-                star, "a", "b", algorithm=alg, max_iterations=1
-            )
-
-
-def test_cc_single_checkpoint_rdd_per_round_released(spark):
-    """One lazy checkpoint per round, previous round released: after the
-    final collect + explicit release, no label RDD stays pinned."""
-    from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
-    from lakehouse_ingestion_spark.operators.graph import connected_components
-
-    sc = spark.sparkContext
-    before = sc._jsc.getPersistentRDDs().size()
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "a long, b long"
-    )
-    got = connected_components(chain, "a", "b")
-    assert {r["cluster_id"] for r in got.collect()} == {0}
-    release_local_checkpoint(got)
-    assert sc._jsc.getPersistentRDDs().size() <= before
-
-
 # ------------------------------------------------------------- spans ----
 def test_duplicated_spans_pin_matches_lazy(spark):
     """pin=True (eager checkpoint + call-scoped shingle cache) returns

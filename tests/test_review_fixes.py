@@ -253,20 +253,19 @@ def test_pushed_filters_nested_brackets():
 
 
 # ------------------------------------------------- round-5 review fixes ----
-def test_star_cc_keeps_self_loop_only_nodes(spark):
+def test_cc_keeps_self_loop_only_nodes(spark):
     from lakehouse_ingestion_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(5, 5), (1, 2)], "doc_a long, doc_b long"
     )
-    for alg in ("propagate", "jump", "star"):
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(
-                edges, src="doc_a", dst="doc_b", algorithm=alg
-            ).collect()
-        }
-        assert got == {5: 5, 1: 1, 2: 1}, alg
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in connected_components(
+            edges, src="doc_a", dst="doc_b"
+        ).collect()
+    }
+    assert got == {5: 5, 1: 1, 2: 1}
 
 
 def test_resample_pre_epoch_floor(spark):
