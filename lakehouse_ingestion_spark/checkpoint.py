@@ -2,19 +2,15 @@
 
 ``DataFrame.localCheckpoint`` persists the materialized rows as RDD
 blocks on the executors and truncates lineage. The blocks are freed
-only when the JVM's ContextCleaner notices the RDD is unreachable —
-which, from PySpark, additionally requires the py4j proxy to be
-garbage-collected AND a JVM GC cycle to enqueue the weak reference
-(the cleaner's own periodic GC defaults to 30 minutes). A long-lived
-session running many checkpoint-heavy queries (the iterative
-connected-components family, the streaming index maintainers)
-accumulates dead blocks for the whole gap and can OOM the executors —
-the round-5 sf10 full-registry run needed a harness-side
-``System.gc()`` every 16 queries to survive.
-
-``release_local_checkpoint`` removes that dependency on GC timing:
-it walks a frame's analyzed plan for ``LogicalRDD`` leaves (what
-``localCheckpoint`` returns) and unpersists their RDDs immediately.
+only when the JVM's ContextCleaner notices the RDD is unreachable: from
+PySpark, after the py4j proxy is garbage-collected AND a JVM GC cycle
+runs (the cleaner's own periodic GC defaults to 30 minutes). A
+long-lived session that pins many frames (the iterative
+connected-components family, the streaming maintainers, the DQ pin of
+every micro-batch) holds dead blocks for that whole gap and can OOM the
+executors. ``release_local_checkpoint`` walks a frame's analyzed plan
+for ``LogicalRDD`` leaves (what ``localCheckpoint`` returns) and
+unpersists their RDDs immediately.
 
 CONTRACT: a released frame — and anything lazily derived from it — is
 unusable afterwards. The lineage was truncated at checkpoint time, so

@@ -7,16 +7,18 @@ timestamps), referential integrity (FK anti-join).
 
 Design difference vs the reference (which runs 2-3 ``df.count()`` actions
 per check — ``dq/checks/NotNullCheck.scala:35-37`` et al.): every
-row-predicate check here contributes *aggregate expressions* to a single
-fused ``df.agg(...)`` pass executed once by ``DQRuleSet`` — N checks, ONE
-scan, no shuffle (all aggregates are map-side partials). Each check also
-exposes ``violation_predicate`` so the quarantine router can split
-pass/fail rows without re-deriving logic.
+row-predicate check here contributes *aggregate expressions* that
+``DQRuleSet`` fuses into one pass — N checks, ONE scan, riding the job
+that pins the batch as ``observe()`` metrics. Each check also exposes
+``violation_predicate`` so the quarantine router can split pass/fail
+rows without re-deriving logic.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
+import operator
 from dataclasses import dataclass, field as dc_field
 from typing import Optional
 
@@ -24,6 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_ingestion_spark.dq.model import DQResult, DQStatus
+
+
+def _all(preds) -> Column:
+    return functools.reduce(operator.and_, preds)
 
 
 def _status(violation_fraction: float, failure_threshold: float) -> DQStatus:
@@ -38,9 +44,11 @@ def _status(violation_fraction: float, failure_threshold: float) -> DQStatus:
 
 class DQCheck:
     """Base: a check either contributes fused aggregate expressions
-    (agg_exprs/evaluate) or runs standalone (run)."""
+    (agg_exprs/evaluate) or runs standalone (run, ``fusable = False``)."""
 
     name: str = "dq_check"
+    fusable = True
+    observable = True  # agg_exprs may ride DataFrame.observe (no DISTINCT)
 
     def required_columns(self) -> list[str]:
         return []
@@ -241,19 +249,16 @@ class UniqueKeyCheck(DQCheck):
     def __post_init__(self):
         self.name = f"unique_key[{','.join(self.key_columns)}]"
 
+    @property
+    def observable(self) -> bool:
+        return self.approx  # observe() rejects the exact count_distinct
+
     def required_columns(self):
         return list(self.key_columns)
 
-    def _all_nonnull(self) -> Column:
-        pred = None
-        for c in self.key_columns:
-            e = F.col(c).isNotNull()
-            pred = e if pred is None else (pred & e)
-        return pred
-
     def agg_exprs(self) -> list[Column]:
         cols = [F.col(c) for c in self.key_columns]
-        all_nonnull = self._all_nonnull()
+        all_nonnull = _all(c.isNotNull() for c in cols)
         # count_distinct skips rows with any null key; total must match
         # that population or null-key rows get miscounted as duplicates
         # (the approx path masks null-key rows for the same reason)
@@ -403,6 +408,7 @@ class ReferentialIntegrityCheck(DQCheck):
     parent_key_columns: list[str] = dc_field(default_factory=list)
     failure_threshold: float = 0.0
     broadcast_parent: bool = True
+    fusable = False
 
     def __post_init__(self):
         self.name = f"ref_integrity[{','.join(self.fk_columns)}]"
@@ -419,18 +425,13 @@ class ReferentialIntegrityCheck(DQCheck):
         ).dropDuplicates()
         if self.broadcast_parent:
             parent = F.broadcast(parent)
-        cond = None
-        for i, fk in enumerate(self.fk_columns):
-            c = F.col(fk) == F.col(f"__parent_{i}")
-            cond = c if cond is None else (cond & c)
+        cond = _all(
+            F.col(fk) == F.col(f"__parent_{i}") for i, fk in enumerate(self.fk_columns)
+        )
         # SQL MATCH SIMPLE semantics: only rows with ALL fk columns
         # non-null participate — a partially-null composite key can never
         # satisfy the equality join and would always count as an orphan
-        all_nonnull = None
-        for c in self.fk_columns:
-            e = F.col(c).isNotNull()
-            all_nonnull = e if all_nonnull is None else (all_nonnull & e)
-        non_null = df.filter(all_nonnull)
+        non_null = df.filter(_all(F.col(c).isNotNull() for c in self.fk_columns))
         # one job: count total + orphans together via left join + agg
         joined = non_null.join(parent, on=cond, how="left")
         row = joined.agg(

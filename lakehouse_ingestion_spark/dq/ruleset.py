@@ -9,25 +9,29 @@ Parity:
   failing rows aside (real here; stubbed log-only in the reference,
   ``IngestionJob.scala:110-113``).
 
-Scale design: all fusable checks execute in ONE ``df.agg`` job (map-side
-partial aggregation, no shuffle); non-fusable checks (referential
-integrity) run as separate broadcast anti-joins. Quarantine split reuses
-each check's ``violation_predicate`` so good/bad routing is two filtered
-writes off one scan (or one pass with ``df.persist`` upstream).
+Scale design: ``enforce`` pins its input with ONE eager ``localCheckpoint``
+that carries the fused check aggregates as ``observe()`` metrics: one
+Spark job materializes the batch and yields the verdict. Checks
+``observe()`` cannot carry (referential integrity, exact
+``UniqueKeyCheck``'s DISTINCT) read the pin afterwards, as do the
+quarantine split's two writes: the rows checked are the rows written.
 """
 
 from __future__ import annotations
 
 import enum
 import logging
+from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
 from lakehouse_ingestion_spark.dq.checks import DQCheck
-from lakehouse_ingestion_spark.dq.model import DQResult, DQStatus, DQSummary
+from lakehouse_ingestion_spark.dq.model import DQStatus, DQSummary
 from lakehouse_ingestion_spark.errors import DataQualityError
+from lakehouse_ingestion_spark.metrics import ObservedMetrics
 
 log = logging.getLogger(__name__)
 
@@ -42,27 +46,24 @@ class OnFailPolicy(enum.Enum):
 class DQRuleSet:
     checks: list[DQCheck] = field(default_factory=list)
 
+    def _fused(self, df: DataFrame) -> list[DQCheck]:
+        """Checks whose aggregates join the one fused pass over ``df``;
+        the rest go through ``check.run`` (a missing column FAILs there)."""
+        return [
+            c for c in self.checks
+            if c.fusable and all(x in df.columns for x in c.required_columns())
+        ]
+
+    def _summary(self, df: DataFrame, fused: list[DQCheck], row) -> DQSummary:
+        results = [c.run(df) for c in self.checks if all(c is not f for f in fused)]
+        results.extend(c.evaluate(row) for c in fused)
+        return DQSummary.fold(results)
+
     def apply(self, df: DataFrame) -> DQSummary:
         """Evaluate all checks. Fusable checks share a single agg pass."""
-        results: list[DQResult] = []
-        fused: list[DQCheck] = []
-        for check in self.checks:
-            missing = [c for c in check.required_columns() if c not in df.columns]
-            if missing:
-                results.append(
-                    DQResult(check.name, DQStatus.FAIL, {}, f"missing columns: {missing}")
-                )
-                continue
-            try:
-                check.agg_exprs()  # probe fusability
-                fused.append(check)
-            except NotImplementedError:
-                results.append(check.run(df))
-        if fused:
-            exprs = [e for c in fused for e in c.agg_exprs()]
-            row = df.agg(*exprs).collect()[0].asDict()
-            results.extend(c.evaluate(row) for c in fused)
-        return DQSummary.fold(results)
+        fused = self._fused(df)
+        row = df.agg(*_exprs(fused)).collect()[0].asDict() if fused else {}
+        return self._summary(df, fused, row)
 
     # -- quarantine ---------------------------------------------------------
     def violation_column(self, df: DataFrame | None = None) -> "F.Column":
@@ -101,39 +102,54 @@ class DQRuleSet:
     ) -> tuple[DataFrame, DQSummary]:
         """Run checks and apply the policy. Returns (rows to continue with,
         summary). ``quarantine_writer: DataFrame -> None`` persists bad rows
-        under the QUARANTINE policy."""
-        summary = self.apply(df)
-        if summary.status is not DQStatus.FAIL:
-            if summary.status is DQStatus.WARNING:
-                for r in summary.warned:
-                    log.warning("DQ WARNING %s: %s", r.check_name, r.message)
-            return df, summary
+        under the QUARANTINE policy.
 
-        if policy is OnFailPolicy.FAIL_FAST:
-            raise DataQualityError(
-                f"DQ failed: {[r.check_name for r in summary.failed]}", summary
-            )
-        if policy is OnFailPolicy.QUARANTINE:
-            good, bad = self.split(df)
+        ``df`` is pinned by ONE eager ``localCheckpoint`` that carries the
+        observable aggregates; DISTINCT ones (``observe()`` rejects them)
+        and standalone checks read the pin. The returned rows are read
+        from the pin: the caller releases it after its last action on
+        them (``checkpoint.release_local_checkpoint``)."""
+        fused = self._fused(df)
+        observed = [c for c in fused if c.observable]
+        observation = Observation()
+        if observed:
+            df = df.observe(observation, *_exprs(observed))
+        pinned = df.localCheckpoint(eager=True)
+        try:
+            # AQE may prove an empty batch empty and drop its CollectMetrics
+            # node (no metrics at all): every check's evaluate reads null as 0
+            row = defaultdict(lambda: None)
+            if observed:
+                row.update(ObservedMetrics(observation, pinned).get())
+            if distinct := [c for c in fused if not c.observable]:
+                row.update(pinned.agg(*_exprs(distinct)).collect()[0].asDict())
+            summary = self._summary(pinned, fused, row)
+            for r in summary.warned + summary.failed:
+                log.warning("DQ %s (%s) %s: %s", r.status.value, policy.value,
+                            r.check_name, r.message)
+            if summary.status is not DQStatus.FAIL or policy is OnFailPolicy.LOG_ONLY:
+                return pinned, summary
+            if policy is OnFailPolicy.FAIL_FAST:
+                raise DataQualityError(
+                    f"DQ failed: {[r.check_name for r in summary.failed]}", summary
+                )
+            good, bad = self.split(pinned)
             if quarantine_writer is not None:
                 quarantine_writer(bad)
             else:
                 log.warning("QUARANTINE policy with no writer; dropping bad rows")
             return good, summary
-        for r in summary.failed:
-            log.warning("DQ FAIL (LOG_ONLY) %s: %s", r.check_name, r.message)
-        return df, summary
+        except BaseException:
+            release_local_checkpoint(pinned)
+            raise
 
     def metrics_df(self, df: DataFrame) -> DataFrame:
         """One-row DataFrame of all fused check metrics — lets callers embed
-        DQ into a pipeline plan (or ``DataFrame.observe``) without a
-        separate collect."""
-        exprs = []
-        for c in self.checks:
-            try:
-                exprs.extend(c.agg_exprs())
-            except NotImplementedError:
-                pass
-        if not exprs:
-            return df.agg(F.count(F.lit(1)).alias("total_rows"))
-        return df.agg(*exprs)
+        DQ into a pipeline plan without a separate collect."""
+        return df.agg(
+            *_exprs(self._fused(df)) or [F.count(F.lit(1)).alias("total_rows")]
+        )
+
+
+def _exprs(checks: list[DQCheck]) -> list[Column]:
+    return [e for c in checks for e in c.agg_exprs()]

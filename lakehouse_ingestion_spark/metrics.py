@@ -14,7 +14,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
@@ -61,10 +60,6 @@ class ObservedMetrics:
                 if ropt.isDefined() and ropt.get().length() == 0:
                     return {}
             raise
-
-
-def row_count_metrics(df: DataFrame, name: str = "ingest") -> ObservedMetrics:
-    return ObservedMetrics.attach(df, name, {"rows": F.count(F.lit(1))})
 
 
 _NAME_BAD = re.compile(r"[^a-zA-Z0-9_:]")

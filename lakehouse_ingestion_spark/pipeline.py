@@ -20,6 +20,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
 from lakehouse_ingestion_spark.config import JobConfig, PipelineConfig
 from lakehouse_ingestion_spark.dq import checks_from_schema
 from lakehouse_ingestion_spark.dq.checks import (
@@ -34,6 +35,7 @@ from lakehouse_ingestion_spark.dq.checks import (
 )
 from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
 from lakehouse_ingestion_spark.errors import ConfigError
+from lakehouse_ingestion_spark.metrics import ObservedMetrics
 from lakehouse_ingestion_spark.operators import add_audit_columns
 from lakehouse_ingestion_spark.registry import Registry
 from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
@@ -237,26 +239,18 @@ class Pipeline:
             # warnings only (SchemaValidator treats extras as warnings)
             validate_or_throw(df, schema, context=f"job={job.name}")
         summary = None
-        persisted = None
         if ruleset.checks:
-            if policy is OnFailPolicy.QUARANTINE:
-                # QUARANTINE runs three actions over df (metrics agg, bad
-                # write, good write); pin the input so a non-deterministic
-                # source (JDBC, changing files) can't route a row into
-                # both outputs or neither
-                persisted = df = df.persist()
+            # both writes read enforce's pin: no row lands in both or neither
             df, summary = ruleset.enforce(df, policy, quarantine_writer=self._quarantine_writer(job))
         # row count rides the write action via observe() — no extra scan
-        from lakehouse_ingestion_spark.metrics import ObservedMetrics
-
         obs = ObservedMetrics.attach(
             df, f"write:{job.name}", {"rows": F.count(F.lit(1))}
         )
         try:
             writer.write_batch(obs.df, opts)
         finally:
-            if persisted is not None:
-                persisted.unpersist()
+            if ruleset.checks:
+                release_local_checkpoint(df)
         rows = int(obs.get().get("rows", 0))
         return JobResult(job.name, streaming=False, rows_written=rows, dq_summary=summary)
 

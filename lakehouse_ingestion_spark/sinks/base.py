@@ -48,7 +48,8 @@ class WriteOptions:
     options: dict = field(default_factory=dict)
 
     def __post_init__(self):
-        self.partition_by = list(self.partition_by or [])
+        p = self.partition_by or []  # a scalar is one column
+        self.partition_by = [p] if isinstance(p, str) else list(p)
 
     @classmethod
     def from_target(cls, options: dict, **defaults) -> "WriteOptions":

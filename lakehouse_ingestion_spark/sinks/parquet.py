@@ -2,9 +2,9 @@
 streaming jobs reach it once per micro-batch through ``foreachBatch``.
 
 Works against any Hadoop-FS path (local, s3a://, ...). Partitioned writes
-(reference D18) via ``partitionBy``; at scale pair with
-``df.repartition(partition_cols)`` upstream if small-files pressure
-matters (exposed as option ``repartitionByPartitionCols``).
+(reference D18) via ``partitionBy`` behind a ``rebalance`` hint on those
+columns: AQE packs a small batch into one file per partition value, and
+splits a skewed value across tasks (``optimizeSkewsInRebalancePartitions``).
 """
 
 from __future__ import annotations
@@ -17,11 +17,11 @@ from lakehouse_ingestion_spark.sinks.base import sink
 @sink("file")
 @sink("files")
 def _parquet(
-    df, opts, *, format="parquet", repartitionByPartitionCols="false",  # noqa: A002,N803
-    bucket_by=None, num_buckets=8, sort_by=None, **options,
+    df, opts, *, format="parquet", bucket_by=None, num_buckets=8,  # noqa: A002
+    sort_by=None, **options,
 ):
-    if str(repartitionByPartitionCols).lower() == "true" and opts.partition_by:
-        df = df.repartition(*opts.partition_by)
+    if opts.partition_by:
+        df = df.hint("rebalance", *opts.partition_by)
     w = df.write.format(format).mode(opts.mode)
     if opts.partition_by:
         w = w.partitionBy(*opts.partition_by)

@@ -17,6 +17,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
+from lakehouse_ingestion_spark.checkpoint import release_local_checkpoint
 from lakehouse_ingestion_spark.dq.ruleset import DQRuleSet, OnFailPolicy
 
 log = logging.getLogger(__name__)
@@ -34,22 +35,17 @@ def dq_epoch(
     """One micro-batch through the DQ gate, then the sink.
 
     ``sink(df, epoch_id)`` persists good rows; ``quarantine_sink`` bad
-    rows. Batch is persisted across the split so the scan runs once.
+    rows. Both read the batch ``enforce`` pinned, released after the sink.
     """
-    if policy is OnFailPolicy.QUARANTINE:
-        batch_df.persist()
-        try:
-            good, summary = ruleset.enforce(
-                batch_df,
-                policy,
-                quarantine_writer=(
-                    (lambda bad: quarantine_sink(bad, epoch_id)) if quarantine_sink else None
-                ),
-            )
-            sink(good, epoch_id)
-        finally:
-            batch_df.unpersist()
-    else:
-        good, summary = ruleset.enforce(batch_df, policy)
+    good, summary = ruleset.enforce(
+        batch_df,
+        policy,
+        quarantine_writer=(
+            (lambda bad: quarantine_sink(bad, epoch_id)) if quarantine_sink else None
+        ),
+    )
+    try:
         sink(good, epoch_id)
+    finally:
+        release_local_checkpoint(good)
     log.info("epoch %s DQ status: %s", epoch_id, summary.status.value)

@@ -224,3 +224,123 @@ def test_drift_check_config_factory():
     assert chk.name == "drift[amount]"
     assert chk.ref_mean == 120.5 and chk.ref_std == 10.0
     assert chk.max_sigmas == 2.0 and chk.max_null_fraction_delta == 0.05
+
+
+# -- enforce: one eager pin carries the verdict ------------------------------
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; the number of jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_quarantine_micro_batch_runs_four_jobs_one_file_per_value(spark, tmp_path):
+    """A QUARANTINE micro-batch into a partitioned parquet target: the
+    pin (data + verdict), the quarantine write, and the rebalanced
+    write's shuffle map and result."""
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
+    from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
+
+    batch = spark.range(0, 40, numPartitions=2).select(
+        F.col("id"), (F.col("id") % 4).alias("d"),
+        F.when(F.col("id") % 10 == 0, -1.0).otherwise(1.0).alias("v"),
+    )
+    assert batch.rdd.getNumPartitions() == 2
+    out, q = str(tmp_path / "out"), str(tmp_path / "q")
+    opts = WriteOptions(path=out, partition_by="d")
+    jobs = _jobs_in_group(spark, "dq-micro-batch", lambda: dq_epoch(
+        batch, 0,
+        ruleset=DQRuleSet([RangeCheck(column="v", min_value=0.0)]),
+        policy=OnFailPolicy.QUARANTINE,
+        sink=lambda b, e: get_writer("parquet").write_epoch_batch(b, opts, e),
+        quarantine_sink=lambda b, e: b.write.mode("append").parquet(q),
+    ))
+    assert jobs == 4
+    assert spark.read.parquet(out).count() == 36
+    assert spark.read.parquet(q).count() == 4
+    for value in range(4):
+        files = list((tmp_path / "out" / f"d={value}").glob("*.parquet"))
+        assert len(files) == 1, files
+
+
+@pytest.mark.parametrize("behind_shuffle", [False, True])
+def test_enforce_empty_batch_passes_with_zero_counts(spark, tmp_path, behind_shuffle):
+    from lakehouse_ingestion_spark.sinks.base import WriteOptions, get_writer
+    from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
+
+    empty = spark.range(0).select(F.col("id"), F.lit(1.0).alias("v"))
+    if behind_shuffle:
+        empty = empty.repartition(3, "id").filter("v > 0")
+    rs = DQRuleSet(
+        [NotNullCheck(column="v"), RangeCheck(column="v", min_value=0.0),
+         UniqueKeyCheck(key_columns=["id"]), RowCountCheck(max_rows=10)]
+    )
+    good, summary = rs.enforce(empty, OnFailPolicy.QUARANTINE)
+    assert summary.status is DQStatus.PASS
+    assert [r.metrics["total_rows"] for r in summary.results] == [0, 0, 0, 0]
+    assert good.count() == 0
+    out = str(tmp_path / "out")
+    opts = WriteOptions(path=out, partition_by=["id"])
+    dq_epoch(
+        empty, 0, ruleset=rs, policy=OnFailPolicy.QUARANTINE,
+        sink=lambda b, e: get_writer("parquet").write_epoch_batch(b, opts, e),
+    )
+    assert spark.read.schema("id long, v double").parquet(out).count() == 0
+
+
+def test_enforce_without_observed_metrics_passes_empty(spark, monkeypatch):
+    """AQE may prove an empty batch empty and drop the CollectMetrics
+    node: the observation then holds no metrics at all."""
+    from lakehouse_ingestion_spark.metrics import ObservedMetrics
+
+    monkeypatch.setattr(ObservedMetrics, "get", lambda self: {})
+    empty = spark.range(0).select(F.col("id"), F.lit(1.0).alias("v"))
+    _, summary = DQRuleSet(
+        [NotNullCheck(column="v"), RangeCheck(column="v", max_value=0.0)]
+    ).enforce(empty, OnFailPolicy.FAIL_FAST)
+    assert summary.status is DQStatus.PASS
+    assert [r.metrics["violations"] for r in summary.results] == [0, 0]
+
+
+def test_enforce_exact_unique_key_matches_apply(df):
+    """observe() rejects count_distinct: the exact check reads the pin
+    and the summary equals the single-agg pass's."""
+    rs = DQRuleSet(
+        [NotNullCheck(column="name"), UniqueKeyCheck(key_columns=["key"]),
+         RangeCheck(column="amount", min_value=0.0)]
+    )
+    good, summary = rs.enforce(df, OnFailPolicy.QUARANTINE)
+    assert summary == rs.apply(df)
+    unique = [r for r in summary.results if r.check_name == "unique_key[key]"][0]
+    assert unique.status is DQStatus.FAIL and unique.metrics["duplicates"] == 1
+    assert good.count() == 3
+
+
+def test_fail_fast_raises_before_output_and_releases_pin(spark, df, tmp_path, monkeypatch):
+    import lakehouse_ingestion_spark.dq.ruleset as ruleset
+    from lakehouse_ingestion_spark.streaming.foreach_batch import dq_epoch
+
+    released = []
+    real = ruleset.release_local_checkpoint
+    monkeypatch.setattr(
+        ruleset, "release_local_checkpoint",
+        lambda *dfs: released.append(real(*dfs)),
+    )
+    out = tmp_path / "out"
+    with pytest.raises(DataQualityError):
+        dq_epoch(
+            df, 0, ruleset=DQRuleSet([NotNullCheck(column="name")]),
+            policy=OnFailPolicy.FAIL_FAST,
+            sink=lambda b, e: b.write.parquet(str(out)),
+        )
+    assert not out.exists()
+    assert released == [1]

@@ -31,6 +31,38 @@ def test_parquet_partitioned_roundtrip(spark, tmp_path):
     assert any(p.name.startswith("d=") for p in (tmp_path / "t").iterdir() if p.is_dir())
 
 
+def test_scalar_partition_by_loads_as_one_column(spark, tmp_path):
+    """``partition_by: transaction_date`` (a YAML/HOCON scalar) is one
+    column, not one per character."""
+    from lakehouse_ingestion_spark.config import load_config
+    from lakehouse_ingestion_spark.pipeline import Pipeline
+
+    spec = tmp_path / "job.yaml"
+    spec.write_text(
+        "jobs:\n"
+        "  - name: j\n"
+        "    source: {type: json, options: {path: /in}}\n"
+        "    target:\n"
+        "      format: parquet\n"
+        "      options: {path: /out, partition_by: transaction_date}\n"
+    )
+    cfg = load_config(spec)
+    opts = Pipeline(spark, cfg)._write_options(cfg.jobs[0])
+    assert opts.partition_by == ["transaction_date"]
+
+
+def test_scalar_partition_by_writes_one_partition_column(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(1, "2024-01-01"), (2, "2024-01-02")], "id int, transaction_date string"
+    )
+    opts = WriteOptions.from_target(
+        {"path": str(tmp_path / "t"), "partition_by": "transaction_date"}
+    )
+    get_writer("parquet").write_batch(df, opts)
+    dirs = sorted(p.name for p in (tmp_path / "t").iterdir() if p.is_dir())
+    assert dirs == ["transaction_date=2024-01-01", "transaction_date=2024-01-02"]
+
+
 def test_delta_gated(spark, tmp_path):
     from lakehouse_ingestion_spark.sinks.delta import DeltaTable
 
