@@ -9,15 +9,32 @@ entry point (tests, bench, pipeline runner) gets the same scale posture:
 - broadcast threshold generous enough that dimension tables broadcast;
 - Arrow enabled for the pandas-UDF paths;
 - shuffle partitions sized for the local core count by default, and meant
-  to be raised (e.g. 2-3x total executor cores) on a real cluster.
+  to be raised (e.g. 2-3x total executor cores) on a real cluster;
+- on a ``local`` master, the ``file:`` scheme is served by the bundled
+  ``lakehouse.fs`` FileSystem (``jvm/``). Without libhadoop, Hadoop's
+  stock local FS forks ``chmod`` for every file and directory it creates
+  and ``readlink`` for every FileContext rename; the bundled one makes the
+  same calls through NIO and otherwise behaves as the default local FS
+  (checksums, rename, listing, the output committer). Other schemes, and
+  JVMs launched without the jar, are untouched.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = Path(__file__).resolve().parent / "jvm" / "lakehouse-localfs.jar"
+_LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "lakehouse.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "lakehouse.fs.NioLocalFs",
+}
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?")
 
 
 @dataclass
@@ -34,6 +51,31 @@ class SparkConfig:
     session_timezone: str = "UTC"
     ui_enabled: bool = False
     extra: dict = field(default_factory=dict)
+
+
+def master_cores(master: str) -> int:
+    """Task slots of a local master: N for ``local[N]`` and ``local[N,F]``, 1
+    for ``local``; for ``local[*]`` and any other master, the CPUs this
+    process may run on."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m and m.group(1) != "*":
+        return int(m.group(1) or 1)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 8
+
+
+def _localfs_loads() -> bool:
+    """Whether the JVM this session runs in can load the bundled FileSystem:
+    yes if the session launches it (with the jar on its classpath), else ask
+    the running one, which may have been launched without the jar."""
+    if SparkContext._gateway is None:
+        if "PYSPARK_GATEWAY_PORT" not in os.environ:
+            return True
+        SparkContext._ensure_initialized()  # connect to the JVM that launched us
+    return SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(
+        _LOCALFS_CONF["spark.hadoop.fs.file.impl"]
+    )
 
 
 def get_spark(cfg: SparkConfig | None = None) -> SparkSession:
@@ -75,9 +117,14 @@ def get_spark(cfg: SparkConfig | None = None) -> SparkSession:
         b = b.config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
     else:
         # local heuristic: 2x cores; on a cluster, set explicitly via extra
-        ncores = os.cpu_count() or 8
-        b = b.config("spark.sql.shuffle.partitions", str(min(2 * ncores, 64)))
-    for k, v in cfg.extra.items():
+        b = b.config("spark.sql.shuffle.partitions", str(min(2 * master_cores(master), 64)))
+    extra = dict(cfg.extra)
+    # executors of a local master share the driver's JVM and classpath
+    if _LOCAL_MASTER.fullmatch(master) and _localfs_loads():
+        cp = extra.get("spark.driver.extraClassPath")
+        extra["spark.driver.extraClassPath"] = f"{cp}{os.pathsep}{LOCALFS_JAR}" if cp else LOCALFS_JAR
+        extra = {**_LOCALFS_CONF, **extra}
+    for k, v in extra.items():
         b = b.config(k, str(v))
 
     spark = b.getOrCreate()
