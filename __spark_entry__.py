@@ -3415,15 +3415,13 @@ def q_semantic_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_domain_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum budget selection (operators/selection.py,
-    stratified_budget_select): every source fills 25% of ITS OWN token
-    total with its best documents — the mixture-shaping counterpart of
-    q_token_budget.  Same two-pass distributed prefix sum, but the
+    token_budget_select with strata_col): every source fills 25% of ITS
+    OWN token total with its best documents — the mixture-shaping
+    counterpart of q_token_budget.  Same two-pass distributed prefix sum, but the
     totals pass is (partition, stratum)-level and the budgets mapping is
     a config-sized dict (computed here from one bounded groupBy — one
     row per source)."""
-    from lakehouse_ingestion_spark.operators.selection import (
-        stratified_budget_select,
-    )
+    from lakehouse_ingestion_spark.operators.selection import token_budget_select
 
     d = ensure_parallelism(_t(spark, sf_dir, "documents"))
     scored = d.select(
@@ -3438,8 +3436,8 @@ def q_domain_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["source"]: int(r["t"]) // TOKEN_BUDGET_DENOM
         for r in scored.groupBy("source").agg(F.sum("n_tokens").alias("t")).collect()
     }
-    return stratified_budget_select(
-        scored, "source", "score", "n_tokens", budgets, "doc_id",
+    return token_budget_select(
+        scored, "score", "n_tokens", budgets, "doc_id", strata_col="source",
         cum_col="cum_tokens",
     )
 

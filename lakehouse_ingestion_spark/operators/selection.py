@@ -25,6 +25,12 @@ distributed prefix sum instead:
    Arrow-batched ``mapInPandas`` (rows arrive pre-sorted from
    ``sortWithinPartitions``; a per-task carry chains the batches).
 
+With ``strata_col`` the same four steps run once for every stratum at
+the same time: the stratum leads the range order, the totals and the
+offsets are per (partition, stratum), and the cumsum carries one running
+total per stratum. A global selection is the case of one stratum, and
+its range exchange carries no stratum key.
+
 The selected SET is independent of the range-partition boundaries (the
 prefix of a total order does not care where the partition cuts fall), so
 the result is deterministic even though ``repartitionByRange`` samples
@@ -47,6 +53,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -72,12 +79,46 @@ def _require_integral_cost(df: DataFrame, cost_col: str, op: str) -> None:
         )
 
 
+def stratum_key(value) -> str | None:
+    """A stratum's key: its string form, NULL staying its own stratum.
+    Budgets, ledgers and the selection all key strata this way, so an
+    ``int`` strata column matches both an int-keyed mapping and the
+    string keys a YAML mapping arrives with."""
+    return None if value is None else str(value)
+
+
+def budget_spec(
+    budget: dict | int, default_budget: int = 0, strata_col: str | None = None
+) -> tuple[dict[str | None, int], int]:
+    """Validate a token quota and normalize it to ``(budgets, default)``:
+    ``budgets`` maps stratum keys to budgets and every other stratum gets
+    ``default``. A global quota is the one stratum ``None``; an int with
+    ``strata_col`` is every stratum's budget."""
+    if int(default_budget) < 0:
+        raise ConfigError(f"default_budget must be >= 0, got {default_budget}")
+    if isinstance(budget, dict):
+        if strata_col is None:
+            raise ConfigError("a per-stratum budget mapping requires strata_col")
+        budgets = {stratum_key(k): int(v) for k, v in budget.items()}
+        if any(b < 0 for b in budgets.values()):
+            raise ConfigError("all stratum budgets must be >= 0")
+        return budgets, int(default_budget)
+    if int(budget) < 0:
+        raise ConfigError(f"budget must be >= 0, got {budget}")
+    if strata_col is None:
+        return {None: int(budget)}, 0
+    return {}, int(budget)
+
+
 def token_budget_select(
     df: DataFrame,
     score_col: str,
     cost_col: str,
-    budget: int,
+    budget: dict | int,
     key_col: str,
+    *,
+    strata_col: str | None = None,
+    default_budget: int = 0,
     cum_col: str = "cum_cost",
     num_partitions: int | None = None,
     cache_registry: list[DataFrame] | None = None,
@@ -88,17 +129,56 @@ def token_budget_select(
     Returns the selected rows with ``cum_col`` appended (the running
     total INCLUDING the row) — the same frame
     ``SUM(cost) OVER (ORDER BY score DESC, key) <= budget`` yields, but
-    with no single-partition window stage.  The returned frame reads
-    from a cached copy of the range exchange; for one-shot batch calls
-    Spark LRU-manages it, but a REPEATED caller (the per-epoch streaming
-    admission) must pass ``cache_registry``: the cached intermediate is
-    appended to it, and the caller unpersists after its consuming action
-    (otherwise a long-running stream accumulates one cached DataFrame
-    per epoch, and evicted-to-disk blocks are never freed until the
-    session ends).
+    with no single-partition window stage.
+
+    With ``strata_col`` every stratum (domain, language, source) keeps
+    its own prefix, ``SUM(cost) OVER (PARTITION BY stratum ...) <=
+    budget(stratum)``: "fill each domain's token quota with its best
+    documents". ``budget`` is then one int for every stratum or a
+    mapping ``stratum -> budget`` (strata it does not name get
+    ``default_budget``, 0 = drop them; loud beats silent inclusion).
+    Strata are keyed by :func:`stratum_key`. The totals pass is
+    (partition, stratum)-level; strata are contiguous across range
+    partitions, so it has at most ``num_partitions + n_strata`` rows.
+    This is not the operator for millions of micro-strata: at that
+    cardinality the budget itself is data and belongs in a join.
+
+    The returned frame reads from a cached copy of the range exchange;
+    for one-shot batch calls Spark LRU-manages it, but a REPEATED caller
+    (the per-epoch streaming admission) must pass ``cache_registry``:
+    the cached intermediate is appended to it, and the caller unpersists
+    after its consuming action (otherwise a long-running stream
+    accumulates one cached DataFrame per epoch, and evicted-to-disk
+    blocks are never freed until the session ends).
     """
-    if budget < 0:
-        raise ConfigError(f"budget must be >= 0, got {budget}")
+    budgets, default = budget_spec(budget, default_budget, strata_col)
+    return prefix_select(
+        df, score_col, cost_col, key_col, budgets, default,
+        strata_col=strata_col, cum_col=cum_col,
+        num_partitions=num_partitions, cache_registry=cache_registry,
+    )[0]
+
+
+_STRATUM = "__stratum"
+
+
+def prefix_select(
+    df: DataFrame,
+    score_col: str,
+    cost_col: str,
+    key_col: str,
+    budgets: dict[str | None, int],
+    default: int,
+    *,
+    strata_col: str | None,
+    cum_col: str,
+    num_partitions: int | None = None,
+    cache_registry: list[DataFrame] | None = None,
+) -> tuple[DataFrame, list[str | None]]:
+    """The selection of :func:`token_budget_select`, over budgets that
+    :func:`budget_spec` normalized. Also returns the keys of the strata
+    in ``df`` (``[None]`` for a non-empty global selection), which its
+    totals pass collects anyway."""
     _require_integral_cost(df, cost_col, "token_budget_select")
     n_parts = int(
         num_partitions
@@ -106,13 +186,18 @@ def token_budget_select(
     )
 
     order = [F.col(score_col).desc(), F.col(key_col).asc()]
-    ranged = df.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
+    keyed, aux = df, ["_pid"]  # aux: the helper columns, dropped on output
+    if strata_col is not None:
+        keyed = df.withColumn(_STRATUM, F.col(strata_col).cast("string"))
+        order.insert(0, F.col(_STRATUM).asc())
+        aux.append(_STRATUM)
+    ranged = keyed.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
     with_pid = ranged.withColumn("_pid", F.spark_partition_id()).cache()
     if cache_registry is not None:
         cache_registry.append(with_pid)
 
     totals_rows = (
-        with_pid.groupBy("_pid")
+        with_pid.groupBy(*aux)
         .agg(
             F.sum(F.col(cost_col).cast("long")).alias("t"),
             F.min(F.col(cost_col).cast("long")).alias("mn"),
@@ -129,185 +214,63 @@ def token_budget_select(
     if any(r["mn"] is not None and r["mn"] < 0 for r in totals_rows):
         with_pid.unpersist()
         raise ConfigError(f"{cost_col} must be non-negative for budget selection")
-    totals = {r["_pid"]: r["t"] or 0 for r in totals_rows}
-    offsets: dict[int, int] = {}
-    running = 0
-    for pid in sorted(totals):
-        offsets[pid] = running
-        running += totals[pid]
 
-    # Partition pruning: a partition starting past the budget contributes
-    # nothing (costs are non-negative, the running sum is monotone).
-    keep = [p for p in sorted(offsets) if offsets[p] <= budget]
+    # Per-(partition, stratum) offsets: a prefix sum over partition order
+    # within each stratum. A partition is pruned when every stratum in it
+    # starts past its budget (costs are non-negative, so each running sum
+    # is monotone).
+    by_stratum: dict[str | None, list[tuple[int, int]]] = {}
+    for r in totals_rows:
+        s = r[_STRATUM] if strata_col is not None else None
+        by_stratum.setdefault(s, []).append((r["_pid"], r["t"] or 0))
+    offsets: dict[tuple[int, str | None], int] = {}
+    keep: set[int] = set()
+    for s, pid_totals in by_stratum.items():
+        running = 0
+        b = budgets.get(s, default)
+        for pid, t in sorted(pid_totals):
+            offsets[(pid, s)] = running
+            if running <= b:
+                keep.add(pid)
+            running += t
+    strata = list(by_stratum)
 
-    out_fields = df.schema.fields
     result_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
+        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
         + f", `{cum_col}` long"
     )
     if not keep:
         with_pid.unpersist()
-        return df.sparkSession.createDataFrame([], result_schema)
+        return df.sparkSession.createDataFrame([], result_schema), strata
 
     def cumsum_batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One input partition per task; batches arrive in the partition's
-        # sorted order, so a running carry chains them exactly.
-        carry: int | None = None
+        # One input partition per task, rows in (stratum, score DESC, key
+        # ASC) order; a carry per stratum chains the batches exactly.
+        carry: dict[str | None, int] = {}
         for pdf in pdfs:
             if pdf.empty:
                 continue
-            if carry is None:
-                carry = offsets[int(pdf["_pid"].iloc[0])]
-            cum = pdf[cost_col].astype("int64").cumsum() + carry
-            carry = int(cum.iloc[-1])
-            pdf = pdf.assign(**{cum_col: cum})
-            yield pdf[pdf[cum_col] <= budget].drop(columns=["_pid"])
-
-    return with_pid.filter(F.col("_pid").isin(keep)).mapInPandas(
-        cumsum_batches, schema=result_schema
-    )
-
-
-def stratified_budget_select(
-    df: DataFrame,
-    strata_col: str,
-    score_col: str,
-    cost_col: str,
-    budgets: dict | int,
-    key_col: str,
-    default_budget: int = 0,
-    cum_col: str = "cum_cost",
-    num_partitions: int | None = None,
-    cache_registry: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Per-stratum budget selection: within every stratum (domain,
-    language, source), keep the (score DESC, key ASC) prefix whose
-    running ``cost_col`` sum fits that stratum's budget — "fill each
-    domain's token quota with its best documents", the mixture-shaping
-    counterpart of :func:`token_budget_select`.
-
-    Equals ``SUM(cost) OVER (PARTITION BY stratum ORDER BY score DESC,
-    key) <= budget(stratum)`` but with the same two-pass distributed
-    prefix sum: ONE range exchange on (stratum, score DESC, key), a
-    (partition, stratum)-level totals pass, then a pruned Arrow cumsum.
-    Because partitions are range-sorted, strata are contiguous across
-    them, so the totals frame has at most ``num_partitions + n_strata``
-    rows — the driver-side state is bounded by the strata count, the
-    same config-sized mapping ``budgets`` itself is (this is NOT the
-    operator for millions of micro-strata; at that cardinality the
-    budget itself is data and belongs in a join).
-
-    ``budgets``: dict ``stratum -> budget`` (missing strata get
-    ``default_budget``, 0 = drop them — loud beats silent inclusion),
-    or a single int applied to every stratum.  NULL strata form their
-    own stratum keyed ``None``.
-    """
-    flat = dict(budgets) if isinstance(budgets, dict) else None
-    if flat is None and int(budgets) < 0:
-        raise ConfigError(f"budget must be >= 0, got {budgets}")
-    if flat is not None and any(int(b) < 0 for b in flat.values()):
-        raise ConfigError("all stratum budgets must be >= 0")
-    if default_budget < 0:
-        raise ConfigError(f"default_budget must be >= 0, got {default_budget}")
-    _require_integral_cost(df, cost_col, "stratified_budget_select")
-
-    def budget_of(stratum) -> int:
-        if flat is None:
-            return int(budgets)
-        return int(flat.get(stratum, default_budget))
-
-    n_parts = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    order = [
-        F.col(strata_col).asc(),
-        F.col(score_col).desc(),
-        F.col(key_col).asc(),
-    ]
-    ranged = df.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).cache()
-    if cache_registry is not None:
-        cache_registry.append(with_pid)
-
-    totals_rows = (
-        with_pid.groupBy("_pid", strata_col)
-        .agg(
-            F.sum(F.col(cost_col).cast("long")).alias("t"),
-            F.min(F.col(cost_col).cast("long")).alias("mn"),
-            F.sum(F.col(cost_col).isNull().cast("long")).alias("nulls"),
-        )
-        .collect()
-    )
-    if any(r["nulls"] for r in totals_rows):
-        with_pid.unpersist()
-        raise ConfigError(
-            f"{cost_col} must be non-null for budget selection "
-            "(NULL costs make the running sum undefined)"
-        )
-    if any(r["mn"] is not None and r["mn"] < 0 for r in totals_rows):
-        with_pid.unpersist()
-        raise ConfigError(f"{cost_col} must be non-negative for budget selection")
-
-    # per-(partition, stratum) offsets: prefix sum over pid order within
-    # each stratum (strata are contiguous across range partitions, so
-    # this loop touches <= n_parts + n_strata rows)
-    by_stratum: dict[object, list[tuple[int, int]]] = {}
-    for r in totals_rows:
-        by_stratum.setdefault(r[strata_col], []).append((r["_pid"], r["t"] or 0))
-    offsets: dict[tuple[int, object], int] = {}
-    keep_pids: set[int] = set()
-    for stratum, pid_totals in by_stratum.items():
-        running = 0
-        b = budget_of(stratum)
-        for pid, t in sorted(pid_totals):
-            offsets[(pid, stratum)] = running
-            if running <= b:
-                keep_pids.add(pid)  # stratum still inside its budget here
-            running += t
-
-    out_fields = df.schema.fields
-    result_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-        + f", `{cum_col}` long"
-    )
-    if not keep_pids:
-        with_pid.unpersist()
-        return df.sparkSession.createDataFrame([], result_schema)
-
-    _UNSET = object()  # sentinel: != any stratum value, including None
-
-    def cumsum_batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive sorted by (stratum, score desc, key); per-stratum
-        # carries chain batches, resetting at each stratum boundary
-        pid: int | None = None
-        cur: object = _UNSET
-        carry = 0
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            if pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-            cums: list[int] = []
-            keeps: list[bool] = []
-            costs = pdf[cost_col].astype("int64").tolist()
-            strata = pdf[strata_col].tolist()
-            for s, c in zip(strata, costs):
-                key = None if (s is None or (isinstance(s, float) and pd.isna(s))) else s
-                if cur is _UNSET or key != cur:
-                    cur = key
-                    carry = offsets.get((pid, key), 0)
-                carry += int(c)
-                cums.append(carry)
-                keeps.append(carry <= budget_of(key))
-            pdf = pdf.assign(
-                **{cum_col: pd.Series(cums, index=pdf.index, dtype="int64")}
+            pid = int(pdf["_pid"].iloc[0])
+            if strata_col is None:
+                codes, keys = np.zeros(len(pdf), dtype=np.int64), [None]
+            else:
+                codes, uniq = pd.factorize(pdf[_STRATUM], use_na_sentinel=False)
+                keys = [None if pd.isna(k) else k for k in uniq]
+            start = np.array(
+                [carry.get(k, offsets.get((pid, k), 0)) for k in keys], "int64"
             )
-            yield pdf[pd.Series(keeps, index=pdf.index)].drop(columns=["_pid"])
+            limit = np.array([budgets.get(k, default) for k in keys], "int64")
+            cum = pdf[cost_col].astype("int64").groupby(codes).cumsum()
+            cum += start[codes]
+            for code, last in cum.groupby(codes).last().items():
+                carry[keys[code]] = int(last)
+            pdf = pdf.assign(**{cum_col: cum})
+            yield pdf[cum.to_numpy() <= limit[codes]].drop(columns=aux)
 
-    return with_pid.filter(F.col("_pid").isin(sorted(keep_pids))).mapInPandas(
+    selected = with_pid.filter(F.col("_pid").isin(sorted(keep))).mapInPandas(
         cumsum_batches, schema=result_schema
     )
+    return selected, strata
 
 
 def top_p_select(
@@ -321,8 +284,9 @@ def top_p_select(
     """Nucleus (top-p) selection per stratum: keep each stratum's best
     rows under (score DESC, key ASC) until they cover fraction ``p`` of
     the stratum's TOTAL score mass — the share-based sibling of
-    :func:`stratified_budget_select` ("keep the documents carrying 90%
-    of each domain's quality mass" instead of a fixed token quota).
+    :func:`token_budget_select` with ``strata_col`` ("keep the documents
+    carrying 90% of each domain's quality mass" instead of a fixed token
+    quota).
 
     A row is kept iff the mass strictly BEFORE it is < ``p * total`` —
     the crossing row is included, so the kept set always covers >= p of

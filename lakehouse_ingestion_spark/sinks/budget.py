@@ -5,7 +5,7 @@ target:
   format: budget_admit
   options:
     path: /data/budget/admitted        # epoch-partitioned output
-    ledger_path: /data/budget/ledger   # (epoch, rows, batch_cost, spent_after)
+    ledger_path: /data/budget/ledger   # see "Ledgers" below
     score_col: quality
     cost_col: n_tokens
     budget: 1000000000
@@ -21,8 +21,7 @@ across both.
 Per-stratum quotas: add ``strata_col`` plus either a ``budgets``
 mapping (stratum -> budget; ``default_budget`` for missing strata,
 0 = drop) or a uniform ``budget`` int — each stratum then fills its
-OWN quota across batches via a (epoch, stratum) ledger
-(``streaming/budget.admit_epoch_stratified``):
+OWN quota across batches (the same ``admit_epoch``):
 
 ```yaml
 target:
@@ -55,8 +54,8 @@ target:
 ```
 
 Per-stratum shares: add ``strata_col``; ``p`` may then be a mapping
-(missing strata get ``default_p``, 0.0 = drop) —
-``streaming/budget.admit_epoch_share_stratified``:
+(missing strata get ``default_p``, 0.0 = drop), through the same
+``admit_epoch_share``:
 
 ```yaml
 target:
@@ -70,6 +69,15 @@ target:
     default_p: 0.0
     key_col: doc_id
 ```
+
+Ledgers: one layout per kind, global or per stratum. A quota ledger is
+``(epoch, stratum, rows, batch_cost, spent_after)`` and a share ledger
+``(epoch, stratum, rows, batch_mass, admitted_mass, seen_after,
+admitted_after)``, one row per (epoch, stratum). ``stratum`` is the
+strata column's string form, so mapping keys match it whether they are
+written as ints or strings; it is NULL for NULL strata and for every row
+of a global admission, which writes one row per epoch. Ledgers written
+without the ``stratum`` column read it as NULL.
 """
 
 from __future__ import annotations
@@ -89,12 +97,11 @@ def _budget_admit(
 
     common = dict(
         out_path=opts.target, ledger_path=ledger_path, score_col=score_col,
-        key_col=key_col,
+        key_col=key_col, strata_col=strata_col,
     )
     if p is not None:
         # mass-share admission ("keep the docs carrying p of the quality
-        # mass seen so far") — no cost column, the score IS the mass;
-        # add strata_col for per-stratum shares (p may then be a mapping)
+        # mass seen so far") — no cost column, the score IS the mass
         for clash, val in (("budget", budget), ("budgets", budgets),
                            ("cost_col", cost_col)):
             if val is not None:
@@ -103,42 +110,28 @@ def _budget_admit(
                     f"with options.{clash} — share admission has no quota "
                     "surface"
                 )
-        common["cum_col"] = "cum_score" if cum_col is None else cum_col
-        if strata_col is not None:
-            sb.admit_epoch_share_stratified(
-                df, epoch, **common, strata_col=strata_col,
-                p={k: float(v) for k, v in p.items()}
-                if isinstance(p, dict) else float(p),
-                default_p=float(default_p),
-            )
-        elif isinstance(p, dict):
+        if isinstance(p, dict) and strata_col is None:
             raise ConfigError(
                 "budget_admit options.p as a per-stratum mapping requires "
                 "options.strata_col"
             )
-        else:
-            sb.admit_epoch_share(df, epoch, **common, p=float(p))
+        sb.admit_epoch_share(
+            df, epoch, **common, p=p, default_p=default_p,
+            cum_col="cum_score" if cum_col is None else cum_col,
+        )
         return
     if cost_col is None:
         raise ConfigError("budget_admit target needs options.cost_col")
     quota = budget if budgets is None else budgets
     if quota is None:
         raise ConfigError("budget_admit target needs options.budget")
-    common.update(cost_col=cost_col,
-                  cum_col="cum_cost" if cum_col is None else cum_col)
-    if strata_col is not None:
-        # per-stratum quotas: options.budgets mapping (or a uniform
-        # options.budget int) routed through admit_epoch_stratified
-        sb.admit_epoch_stratified(
-            df, epoch, **common, strata_col=strata_col,
-            budgets={k: int(v) for k, v in quota.items()}
-            if isinstance(quota, dict) else int(quota),
-            default_budget=int(default_budget),
-        )
-    elif budgets is not None:
+    if budgets is not None and strata_col is None:
         raise ConfigError(
             "budget_admit options.budgets (per-stratum mapping) requires "
             "options.strata_col"
         )
-    else:
-        sb.admit_epoch(df, epoch, **common, budget=int(budget))
+    sb.admit_epoch(
+        df, epoch, **common, cost_col=cost_col, budget=quota,
+        default_budget=default_budget,
+        cum_col="cum_cost" if cum_col is None else cum_col,
+    )

@@ -733,8 +733,7 @@ def _token_budget_select(
     from lakehouse_ingestion_spark.operators.selection import token_budget_select
 
     return token_budget_select(
-        df, score_col=score_col, cost_col=cost_col, budget=int(budget),
-        key_col=key_col, cum_col=cum_col,
+        df, score_col, cost_col, budget, key_col, cum_col=cum_col
     )
 
 
@@ -759,19 +758,11 @@ def _stratified_budget_select(
 ):
     # per-stratum budgets ("fill each domain's token quota") — `budgets`
     # is a config mapping stratum -> budget, or one int
-    from lakehouse_ingestion_spark.operators.selection import (
-        stratified_budget_select,
-    )
+    from lakehouse_ingestion_spark.operators.selection import token_budget_select
 
-    return stratified_budget_select(
-        df,
-        strata_col=strata_col,
-        score_col=score_col,
-        cost_col=cost_col,
-        budgets=dict(budgets) if isinstance(budgets, dict) else int(budgets),
-        key_col=key_col,
-        default_budget=int(default_budget),
-        cum_col=cum_col,
+    return token_budget_select(
+        df, score_col, cost_col, budgets, key_col, strata_col=strata_col,
+        default_budget=default_budget, cum_col=cum_col,
     )
 
 

@@ -68,14 +68,12 @@ def _quota(spark, root, epoch):
 
 
 def _stratified(spark, root, epoch):
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch_stratified,
-    )
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch
 
-    admit_epoch_stratified(
+    admit_epoch(
         _quota_batch(spark, epoch), epoch, out_path=f"{root}/out",
         ledger_path=f"{root}/ledger", strata_col="dom", score_col="score",
-        cost_col="n_tokens", budgets={"wiki": 60, "web": 40},
+        cost_col="n_tokens", budget={"wiki": 60, "web": 40},
         key_col="doc_id",
     )
 
@@ -91,11 +89,9 @@ def _share(spark, root, epoch):
 
 
 def _stratified_share(spark, root, epoch):
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch_share_stratified,
-    )
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
 
-    admit_epoch_share_stratified(
+    admit_epoch_share(
         _share_batch(spark, epoch), epoch, out_path=f"{root}/out",
         ledger_path=f"{root}/ledger", strata_col="lang",
         score_col="quality", p={"en": 0.5, "de": 0.7}, key_col="doc_id",

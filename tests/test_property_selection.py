@@ -8,10 +8,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from lakehouse_ingestion_spark.operators.selection import (
-    stratified_budget_select,
-    token_budget_select,
-)
+from lakehouse_ingestion_spark.operators.selection import token_budget_select
 
 rows_strategy = st.lists(
     st.tuples(
@@ -72,8 +69,8 @@ def test_token_budget_matches_window(spark, data, budget_frac, n_parts):
 @pytest.mark.slow
 def test_stratified_budget_matches_window(spark, data, budgets, n_parts):
     df = _df(spark, data)
-    got = stratified_budget_select(
-        df, "dom", "score", "cost", budgets, "id",
+    got = token_budget_select(
+        df, "score", "cost", budgets, "id", strata_col="dom",
         default_budget=7, num_partitions=n_parts,
     )
     w = Window.partitionBy("dom").orderBy(

@@ -5,13 +5,8 @@ Covers:
   wrong #2"): small frames bucket exactly; oversized partitionless
   frames raise ConfigError pointing at the sketch path; partition_by
   and an explicit ``max_global_rows=None`` bypass the gate.
-- selection.py cache lifecycle (ADVICE r9 medium #1): the cached
-  intermediate is unpersisted after the consuming action so a
-  long-running budget_admit stream does not accumulate one cached
-  DataFrame per epoch.
 - streaming budget ledger read errors (ADVICE r9 medium #2): only
   path-not-found means first-run; other read errors propagate.
-- NULL cost_col -> clean ConfigError (ADVICE r9 low #1).
 - dedup_by_priority string-id tie-break (ADVICE r9 low #2).
 - html extraction \\x0B cross-engine whitespace parity (ADVICE r9
   low #3).
@@ -79,73 +74,6 @@ def test_quantile_buckets_gate_opt_out(spark):
         _val_frame(spark, 500), "v", 4, tiebreak=["k"], max_global_rows=None
     )
     assert out.count() == 500
-
-
-# ------------------------------------------------------------- selection
-
-
-def test_null_cost_raises_clean_config_error(spark):
-    from lakehouse_ingestion_spark.operators.selection import (
-        stratified_budget_select,
-        token_budget_select,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 1.0, 10, "a"), (2, 0.5, None, "a")],
-        "id long, score double, cost long, dom string",
-    )
-    with pytest.raises(ConfigError, match="non-null"):
-        token_budget_select(df, "score", "cost", 100, "id")
-    with pytest.raises(ConfigError, match="non-null"):
-        stratified_budget_select(df, "dom", "score", "cost", 100, "id")
-
-
-def test_cache_registry_collects_and_releases(spark):
-    from lakehouse_ingestion_spark.operators.selection import (
-        token_budget_select,
-    )
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (100 - F.col("id")).cast("double").alias("score"),
-        F.lit(5).alias("cost"),
-    )
-    caches: list = []
-    out = token_budget_select(
-        df, "score", "cost", 50, "id", cache_registry=caches
-    )
-    assert out.count() == 10
-    assert len(caches) == 1 and caches[0].is_cached
-    caches[0].unpersist()
-    assert not caches[0].is_cached
-
-
-def test_admit_epoch_leaves_no_cached_dataframes(spark, tmp_path):
-    """ADVICE r9 medium #1: one cached DF per epoch must NOT accumulate
-    across admit_epoch calls."""
-    from lakehouse_ingestion_spark.streaming.budget import admit_epoch
-
-    def n_persistent() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    base = n_persistent()
-    df = spark.range(50).select(
-        F.col("id"),
-        F.col("id").cast("double").alias("score"),
-        F.lit(3).alias("cost"),
-    )
-    for epoch in range(3):
-        admit_epoch(
-            df,
-            epoch,
-            out_path=str(tmp_path / "out"),
-            ledger_path=str(tmp_path / "ledger"),
-            score_col="score",
-            cost_col="cost",
-            budget=60,
-            key_col="id",
-        )
-    assert n_persistent() == base
 
 
 # --------------------------------------------------------- budget ledger

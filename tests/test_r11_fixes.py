@@ -3,7 +3,7 @@ and the r10 ADVICE findings).
 
 1. top_p_select fractional-score truncation (judge-confirmed empty
    result for quality scores in [0,1)) — now a double mass path.
-2. token_budget_select / stratified_budget_select integral-cost
+2. token_budget_select (global and per-stratum) integral-cost
    validate-or-raise (same silent-truncation cast pattern).
 """
 
@@ -13,7 +13,6 @@ import pytest
 
 from lakehouse_ingestion_spark.errors import ConfigError
 from lakehouse_ingestion_spark.operators.selection import (
-    stratified_budget_select,
     token_budget_select,
     top_p_select,
 )
@@ -96,7 +95,7 @@ def test_stratified_budget_select_rejects_fractional_costs(spark):
         [("a", 1, 9.0, 0.7)], "dom string, id long, score double, cost float"
     )
     with pytest.raises(ConfigError, match="integral"):
-        stratified_budget_select(df, "dom", "score", "cost", 10, "id")
+        token_budget_select(df, "score", "cost", 10, "id", strata_col="dom")
 
 
 # --------------------------------------------- r10 ADVICE low findings

@@ -3,7 +3,6 @@ optimized internal form against its straightforward counterpart, so a
 future refactor that changes results (not just speed) fails loudly.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -77,44 +76,3 @@ def test_robust_scale_fused_percentile_matches_scalar_edges(spark):
     f = {r["g"]: (r["lo"], r["hi"]) for r in fused.collect()}
     s = {r["g"]: (r["lo"], r["hi"]) for r in scalar.collect()}
     assert f == s
-
-
-# ---------------------------------------------------- share admission ----
-def test_share_admission_single_pass_contracts(spark, tmp_path):
-    """The fused-ledger / single-materialization admit_epoch_share keeps
-    its contracts: coverage (admitted >= p * seen) after every epoch,
-    ledgered-epoch redelivery is a no-op, and negative scores still
-    raise before anything is written."""
-    from lakehouse_ingestion_spark.errors import ConfigError
-    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
-
-    out, led = str(tmp_path / "out"), str(tmp_path / "led")
-    batches = [
-        [(1, 10.0), (2, 30.0), (3, 20.0)],
-        [(4, 40.0), (5, 5.0)],
-        [(6, 1.0)],
-    ]
-    for e, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, score double")
-        admit_epoch_share(df, e, out_path=out, ledger_path=led,
-                          score_col="score", p=0.5, key_col="doc_id")
-        ledger = spark.read.parquet(led).orderBy("epoch").collect()
-        assert ledger[-1]["admitted_after"] >= 0.5 * ledger[-1]["seen_after"]
-
-    n_before = spark.read.parquet(out).count()
-    # redelivery of a ledgered epoch: no new rows, no new ledger entries
-    admit_epoch_share(
-        spark.createDataFrame(batches[1], "doc_id long, score double"),
-        1, out_path=out, ledger_path=led, score_col="score", p=0.5,
-        key_col="doc_id",
-    )
-    assert spark.read.parquet(out).count() == n_before
-    assert spark.read.parquet(led).count() == 3
-
-    with pytest.raises(ConfigError, match="non-negative"):
-        admit_epoch_share(
-            spark.createDataFrame([(9, -1.0)], "doc_id long, score double"),
-            7, out_path=out, ledger_path=led, score_col="score", p=0.5,
-            key_col="doc_id",
-        )
-    assert spark.read.parquet(led).count() == 3  # nothing ledgered

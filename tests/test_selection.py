@@ -88,12 +88,8 @@ def test_result_independent_of_partition_count(spark, corpus):
 
 
 # ---------------------------------------------------------------------------
-# stratified_budget_select
+# token_budget_select with strata_col
 # ---------------------------------------------------------------------------
-
-from lakehouse_ingestion_spark.operators.selection import (  # noqa: E402
-    stratified_budget_select,
-)
 
 
 def _sframe(spark, rows):
@@ -122,8 +118,9 @@ def strat_corpus(spark):
 
 def test_stratified_matches_window(spark, strat_corpus):
     budgets = {"web": 300, "code": 150, "wiki": 2_000_000}
-    got = stratified_budget_select(
-        strat_corpus, "dom", "score", "cost", budgets, "id", num_partitions=7
+    got = token_budget_select(
+        strat_corpus, "score", "cost", budgets, "id", strata_col="dom",
+        num_partitions=7,
     )
     want = _strat_reference(strat_corpus, lambda d: budgets[d])
     assert _rows(got) == _rows(want)
@@ -134,14 +131,15 @@ def test_stratified_matches_window(spark, strat_corpus):
 
 @pytest.mark.slow
 def test_stratified_int_budget_and_default(spark, strat_corpus):
-    got = stratified_budget_select(
-        strat_corpus, "dom", "score", "cost", 200, "id", num_partitions=5
+    got = token_budget_select(
+        strat_corpus, "score", "cost", 200, "id", strata_col="dom",
+        num_partitions=5,
     )
     want = _strat_reference(strat_corpus, lambda d: 200)
     assert _rows(got) == _rows(want)
     # dict missing a stratum: default 0 drops it entirely
-    sel = stratified_budget_select(
-        strat_corpus, "dom", "score", "cost", {"web": 200}, "id"
+    sel = token_budget_select(
+        strat_corpus, "score", "cost", {"web": 200}, "id", strata_col="dom"
     )
     assert sel.filter(F.col("dom") != "web").count() == 0
     assert sel.count() > 0
@@ -150,8 +148,9 @@ def test_stratified_int_budget_and_default(spark, strat_corpus):
 def test_stratified_null_stratum(spark):
     rows = [(1, None, 5, 10), (2, None, 4, 10), (3, "a", 9, 10)]
     df = _sframe(spark, rows)
-    got = stratified_budget_select(
-        df, "dom", "score", "cost", {"a": 10}, "id", default_budget=10
+    got = token_budget_select(
+        df, "score", "cost", {"a": 10}, "id", strata_col="dom",
+        default_budget=10,
     )
     ids = sorted(r["id"] for r in got.collect())
     assert ids == [1, 3]  # null stratum gets default_budget; doc 2 overflows
@@ -159,31 +158,36 @@ def test_stratified_null_stratum(spark):
 
 def test_stratified_negative_budget_raises(spark, strat_corpus):
     with pytest.raises(ConfigError):
-        stratified_budget_select(strat_corpus, "dom", "score", "cost", -5, "id")
+        token_budget_select(
+            strat_corpus, "score", "cost", -5, "id", strata_col="dom"
+        )
     with pytest.raises(ConfigError):
-        stratified_budget_select(
-            strat_corpus, "dom", "score", "cost", {"web": -1}, "id"
+        token_budget_select(
+            strat_corpus, "score", "cost", {"web": -1}, "id", strata_col="dom"
         )
 
 
 def test_stratified_partition_count_invariance(spark, strat_corpus):
     budgets = {"web": 333, "code": 111, "wiki": 555}
     a = _rows(
-        stratified_budget_select(
-            strat_corpus, "dom", "score", "cost", budgets, "id", num_partitions=2
+        token_budget_select(
+            strat_corpus, "score", "cost", budgets, "id", strata_col="dom",
+            num_partitions=2,
         )
     )
     b = _rows(
-        stratified_budget_select(
-            strat_corpus, "dom", "score", "cost", budgets, "id", num_partitions=31
+        token_budget_select(
+            strat_corpus, "score", "cost", budgets, "id", strata_col="dom",
+            num_partitions=31,
         )
     )
     assert a == b
 
 
 def test_stratified_no_global_window(spark, strat_corpus):
-    out = stratified_budget_select(
-        strat_corpus, "dom", "score", "cost", 100, "id", num_partitions=7
+    out = token_budget_select(
+        strat_corpus, "score", "cost", 100, "id", strata_col="dom",
+        num_partitions=7,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
@@ -261,3 +265,33 @@ def test_top_p_pipeline_op(spark):
          "key_col": "doc_id"},
     )
     assert {r["doc_id"] for r in out.collect()} == {1, 2}
+
+
+# ---------------------------------------------------- nulls and caching
+
+
+def test_null_cost_raises_clean_config_error(spark):
+    df = spark.createDataFrame(
+        [(1, 1.0, 10, "a"), (2, 0.5, None, "a")],
+        "id long, score double, cost long, dom string",
+    )
+    with pytest.raises(ConfigError, match="non-null"):
+        token_budget_select(df, "score", "cost", 100, "id")
+    with pytest.raises(ConfigError, match="non-null"):
+        token_budget_select(df, "score", "cost", 100, "id", strata_col="dom")
+
+
+def test_cache_registry_collects_and_releases(spark):
+    df = spark.range(100).select(
+        F.col("id"),
+        (100 - F.col("id")).cast("double").alias("score"),
+        F.lit(5).alias("cost"),
+    )
+    caches: list = []
+    out = token_budget_select(
+        df, "score", "cost", 50, "id", cache_registry=caches
+    )
+    assert out.count() == 10
+    assert len(caches) == 1 and caches[0].is_cached
+    caches[0].unpersist()
+    assert not caches[0].is_cached

@@ -223,14 +223,10 @@ def _sbatch(spark, rows):
 
 
 def _sadmit(spark, tmp, rows, epoch, budgets, default_budget=0):
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch_stratified,
-    )
-
-    admit_epoch_stratified(
+    admit_epoch(
         _sbatch(spark, rows), epoch, out_path=str(tmp / "out"),
         ledger_path=str(tmp / "ledger"), strata_col="dom", score_col="score",
-        cost_col="n_tokens", budgets=budgets, key_col="doc_id",
+        cost_col="n_tokens", budget=budgets, key_col="doc_id",
         default_budget=default_budget,
     )
 
@@ -281,10 +277,6 @@ def test_stratified_cum_col_is_global_per_stratum(spark, tmp_path):
 def test_stratified_redelivery_and_crash_replay_converge(spark, tmp_path):
     """Ledgered epoch redelivered -> skipped; epoch whose data landed but
     ledger did not -> recomputed identically and overwritten."""
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch_stratified,
-    )
-
     budgets = {"wiki": 60, "web": 60}
     rows0 = [(1, "wiki", 9, 40), (2, "web", 9, 40)]
     _sadmit(spark, tmp_path, rows0, 0, budgets)
@@ -562,7 +554,7 @@ def test_share_admission_matches_sequential_reference(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# Per-stratum mass-share admission — admit_epoch_share_stratified
+# Per-stratum mass-share admission — admit_epoch_share with strata_col
 # --------------------------------------------------------------------------
 
 
@@ -571,12 +563,10 @@ def _ssbatch(spark, rows):
 
 
 def _sshare(spark, tmp_path, rows, epoch, p=0.5, default_p=0.0):
-    from lakehouse_ingestion_spark.streaming.budget import (
-        admit_epoch_share_stratified,
-    )
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
 
     out, ledger = str(tmp_path / "ss_out"), str(tmp_path / "ss_ledger")
-    admit_epoch_share_stratified(
+    admit_epoch_share(
         _ssbatch(spark, rows), epoch, out_path=out, ledger_path=ledger,
         strata_col="lang", score_col="quality", p=p, key_col="doc_id",
         default_p=default_p,
@@ -746,3 +736,215 @@ def test_share_admit_example_config_parses(tmp_path):
     assert params["p"] == {"en": 0.9, "de": 0.9}
     assert params["default_p"] == 0.5
     assert params["strata_col"] == "lang"
+
+
+def test_share_admission_single_pass_contracts(spark, tmp_path):
+    """The fused-ledger / single-materialization admit_epoch_share keeps
+    its contracts: coverage (admitted >= p * seen) after every epoch,
+    ledgered-epoch redelivery is a no-op, and negative scores still
+    raise before anything is written."""
+    from lakehouse_ingestion_spark.errors import ConfigError
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
+
+    out, led = str(tmp_path / "out"), str(tmp_path / "led")
+    batches = [
+        [(1, 10.0), (2, 30.0), (3, 20.0)],
+        [(4, 40.0), (5, 5.0)],
+        [(6, 1.0)],
+    ]
+    for e, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "doc_id long, score double")
+        admit_epoch_share(df, e, out_path=out, ledger_path=led,
+                          score_col="score", p=0.5, key_col="doc_id")
+        ledger = spark.read.parquet(led).orderBy("epoch").collect()
+        assert ledger[-1]["admitted_after"] >= 0.5 * ledger[-1]["seen_after"]
+
+    n_before = spark.read.parquet(out).count()
+    # redelivery of a ledgered epoch: no new rows, no new ledger entries
+    admit_epoch_share(
+        spark.createDataFrame(batches[1], "doc_id long, score double"),
+        1, out_path=out, ledger_path=led, score_col="score", p=0.5,
+        key_col="doc_id",
+    )
+    assert spark.read.parquet(out).count() == n_before
+    assert spark.read.parquet(led).count() == 3
+
+    with pytest.raises(ConfigError, match="non-negative"):
+        admit_epoch_share(
+            spark.createDataFrame([(9, -1.0)], "doc_id long, score double"),
+            7, out_path=out, ledger_path=led, score_col="score", p=0.5,
+            key_col="doc_id",
+        )
+    assert spark.read.parquet(led).count() == 3  # nothing ledgered
+
+
+# --------------------------------------------------------------------------
+# All four modes: quota or share, global or per stratum
+# --------------------------------------------------------------------------
+
+
+def _admit_mode(mode, df, epoch, root):
+    """One epoch of ``mode`` over ``df`` (doc_id, dom, score, n_tokens)."""
+    from lakehouse_ingestion_spark.streaming.budget import admit_epoch_share
+
+    paths = dict(out_path=f"{root}/out", ledger_path=f"{root}/ledger",
+                 score_col="score", key_col="doc_id")
+    if mode == "quota":
+        admit_epoch(df, epoch, **paths, cost_col="n_tokens", budget=200)
+    elif mode == "stratified":
+        admit_epoch(df, epoch, **paths, cost_col="n_tokens",
+                    budget={"wiki": 100, "web": 100}, strata_col="dom")
+    elif mode == "share":
+        admit_epoch_share(df, epoch, **paths, p=0.5)
+    else:
+        admit_epoch_share(df, epoch, **paths, p={"wiki": 0.5, "web": 0.7},
+                          strata_col="dom")
+
+
+MODES = ("quota", "stratified", "share", "stratified_share")
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_admit_epoch_leaves_no_cached_dataframes(spark, tmp_path, mode):
+    """One cached or pinned DataFrame per epoch must NOT accumulate
+    across admission calls."""
+
+    def n_persistent() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = n_persistent()
+    df = spark.range(50).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, "wiki").otherwise("web").alias("dom"),
+        F.col("id").cast("double").alias("score"),
+        F.lit(3).alias("n_tokens"),
+    )
+    for epoch in range(3):
+        _admit_mode(mode, df, epoch, str(tmp_path))
+    assert n_persistent() == base
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; the number of jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "mode,first,redelivered",
+    [("quota", 9, 2), ("stratified", 9, 2), ("share", 7, 2),
+     ("stratified_share", 7, 2)],
+)
+def test_jobs_per_trigger(spark, tmp_path, mode, first, redelivered):
+    """Spark jobs of one trigger after a warm epoch, on first delivery
+    and on a ledgered redelivery. The counted epoch admits rows in every
+    mode; the per-stratum ledger stats ride the epoch write, so no mode
+    reads its partition back."""
+    batches = [
+        [(1, "wiki", 9.0, 30), (2, "web", 8.0, 30), (3, "wiki", 2.0, 30)],
+        [(4, "web", 9.0, 30), (5, "wiki", 7.0, 30), (6, "web", 1.0, 30)],
+    ]
+    df = [
+        spark.createDataFrame(
+            b, "doc_id long, dom string, score double, n_tokens long"
+        )
+        for b in batches
+    ]
+    root = str(tmp_path)
+    _admit_mode(mode, df[0], 0, root)
+    group = f"budget-{mode}-{tmp_path.name}"
+    assert _jobs_in_group(
+        spark, f"{group}-1", lambda: _admit_mode(mode, df[1], 1, root)
+    ) == first
+    assert _jobs_in_group(
+        spark, f"{group}-2", lambda: _admit_mode(mode, df[1], 1, root)
+    ) == redelivered
+
+
+@pytest.mark.parametrize("key", [1, "1"], ids=["int_keys", "str_keys"])
+def test_int_strata_column_matches_either_mapping_key(spark, tmp_path, key):
+    """Strata are keyed by their string form everywhere: an int strata
+    column matches an int-keyed mapping and the string keys of a YAML
+    mapping alike, and its quota holds across epochs."""
+    from lakehouse_ingestion_spark.streaming.budget import (
+        admit_epoch_share,
+        spent_by_stratum,
+    )
+
+    out, ledger = str(tmp_path / "q_out"), str(tmp_path / "q_ledger")
+    for e in range(3):
+        admit_epoch(
+            spark.createDataFrame(
+                [(2 * e + 1, 1, 9, 30), (2 * e + 2, 1, 8, 30)],
+                "doc_id long, dom int, score long, n_tokens long",
+            ),
+            e, out_path=out, ledger_path=ledger, score_col="score",
+            cost_col="n_tokens", budget={key: 60}, key_col="doc_id",
+            strata_col="dom",
+        )
+        assert spent_by_stratum(spark, ledger)["1"] == 60
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2}
+
+    out, ledger = str(tmp_path / "s_out"), str(tmp_path / "s_ledger")
+    admit_epoch_share(
+        spark.createDataFrame(
+            [(1, 1, 10.0), (2, 1, 6.0), (3, 2, 4.0)],
+            "doc_id long, dom int, quality double",
+        ),
+        0, out_path=out, ledger_path=ledger, score_col="quality",
+        p={key: 0.5}, key_col="doc_id", strata_col="dom",
+    )
+    # stratum 1: mass 16, allowed 8 -> doc 1; stratum 2 has p 0
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1}
+    assert {r["stratum"] for r in spark.read.parquet(ledger).collect()} == {
+        "1", "2",
+    }
+
+
+def test_ledgers_without_stratum_column_carry_on(spark, tmp_path):
+    """Ledgers written in the global layouts that had no ``stratum``
+    column keep their totals: epoch 2 admits only what remains."""
+    from lakehouse_ingestion_spark.streaming import epochlog
+    from lakehouse_ingestion_spark.streaming.budget import (
+        SHARE_LEDGER_SCHEMA,
+        admit_epoch_share,
+    )
+
+    out, ledger = str(tmp_path / "q_out"), str(tmp_path / "q_ledger")
+    epochlog.append_ledger(
+        spark, ledger, "epoch long, rows long, batch_cost long, spent_after long",
+        [(0, 2, 60, 60), (1, 1, 30, 90)],
+    )
+    assert spent(spark, ledger) == 90
+    _admit(spark, (out, ledger), [(7, 9, 30)], 1)  # ledgered: skipped
+    _admit(spark, (out, ledger), [(7, 9, 8), (8, 8, 5)], 2)
+    got = {r["doc_id"]: r["cum_cost"] for r in spark.read.parquet(out).collect()}
+    assert got == {7: 98}  # 10 remained: doc 8 would overflow to 103
+    assert spent(spark, ledger) == 98
+
+    out, ledger = str(tmp_path / "s_out"), str(tmp_path / "s_ledger")
+    epochlog.append_ledger(
+        spark, ledger,
+        "epoch long, rows long, batch_mass double, admitted_mass double, "
+        "seen_after double, admitted_after double",
+        [(0, 1, 20.0, 10.0, 20.0, 10.0), (1, 1, 4.0, 2.0, 24.0, 12.0)],
+    )
+    admit_epoch_share(
+        _shbatch(spark, [(5, 10.0), (6, 6.0)]), 2, out_path=out,
+        ledger_path=ledger, score_col="quality", p=0.5, key_col="doc_id",
+    )
+    # seen 24 + 16 = 40, allowed 0.5 * 40 - 12 = 8: doc 5 only
+    got = {r["doc_id"]: r["cum_score"] for r in spark.read.parquet(out).collect()}
+    assert got == {5: 22.0}
+    led = epochlog.read_ledger(spark, ledger, SHARE_LEDGER_SCHEMA)
+    row = led.filter(F.col("epoch") == 2).collect()
+    assert len(row) == 1 and row[0]["stratum"] is None
+    assert (row[0]["seen_after"], row[0]["admitted_after"]) == (40.0, 22.0)
