@@ -4315,15 +4315,15 @@ _bloom_sharded_built_for: str | None = None
 
 
 def bloom_sharded_setup(spark: SparkSession, sf_dir: str) -> None:
-    """Build phase of q_bloom_dedup_sharded: persist the sharded filter
-    (operators/bloom.bloom_build_sharded — the scale path past
-    MAX_WORDS, here at num_shards=8 so the shard dispatch is exercised
-    at fixture scale)."""
+    """Build phase of q_bloom_dedup_sharded: persist an 8-shard filter
+    (operators/bloom.bloom_build with num_shards=8 — the layout past
+    MAX_WORDS, forced here so the per-row shard join is exercised at
+    fixture scale)."""
     global _bloom_sharded_built_for
-    from lakehouse_ingestion_spark.operators.bloom import bloom_build_sharded
+    from lakehouse_ingestion_spark.operators.bloom import bloom_build
 
     hist = _bloom_keyed(spark, sf_dir).where(F.col("doc_id") % 5 != 0)
-    blm = bloom_build_sharded(
+    blm = bloom_build(
         hist, "fp", expected_items=BLOOM_EXPECTED, fpp=BLOOM_FPP, num_shards=8
     )
     blm.write.mode("overwrite").parquet(_BLOOM_SHARDED_PATH)
@@ -4331,10 +4331,10 @@ def bloom_sharded_setup(spark: SparkSession, sf_dir: str) -> None:
 
 
 def q_bloom_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_bloom_dedup over a SHARDED filter (operators/bloom
-    .bloom_build_sharded): keys hash-partition across 8 shard filters,
-    the screen equi-joins each row's shard, and the answer is the same
-    EXACT dedup — same oracle as bloom_dedup by construction."""
+    """q_bloom_dedup over an 8-SHARD filter (bloom_sharded_setup): keys
+    hash-partition across 8 shard filters, the screen equi-joins each
+    row's shard, and the answer is the same EXACT dedup — same oracle
+    as bloom_dedup by construction."""
     from lakehouse_ingestion_spark.operators.bloom import bloom_dedup
 
     if _bloom_sharded_built_for != sf_dir:

@@ -13,23 +13,31 @@ the answer; it only shrinks the expensive path.
 PySpark 4 does not expose the JVM ``bloomFilter`` stat helper or the
 internal ``bloom_filter_agg`` expression, so this module builds the
 filter as DataFrame algebra — which buys properties the JVM object
-lacks for free:
+lacks for free.
+
+**One layout.** A filter is one row per shard: ``(shard, n_shards,
+n_bits, num_hashes, seed, n_words, words: array<long>)``. The keyspace
+hash-partitions across shards, so each shard is an ordinary Bloom
+filter over its slice, sized for ``expected_items / n_shards`` keys at
+the same fpp. A single filter is simply ``n_shards = 1``; a filter
+outgrows one shard only past ``MAX_WORDS``. One-row filters written
+before the shard columns existed read as shard 0 of 1.
 
 - **build** (``bloom_build``): k positions per key via seeded
   ``xxhash64``, folded with ``bit_or`` into 64-bit words, densified
-  into ONE row holding an ``array<long>`` bitmap plus its config. Two
-  shuffles, both bounded by m/64 words (filter-sized, never
+  into one ``array<long>`` bitmap per shard plus its config. Two
+  shuffles, both bounded by n_shards × m/64 words (filter-sized, never
   data-sized); the result is an ordinary DataFrame — persist it as
   parquet, read it back next batch.
-- **merge** (``bloom_merge``): ``zip_with(.., x | y)`` — the union
-  filter, exactly (same positions OR'd). Per-day filters roll up to
-  per-month ones losslessly, the same contract as the HLL sketches in
-  ``operators/sketches.py``.
-- **probe** (``bloom_screen``): the 1-row filter attaches via
-  broadcast crossJoin (the repo's scalar-attach idiom,
-  ``operators/text_ranking.py``) and membership is a ``forall`` over
-  the k recomputed positions — whole-stage-codegen JVM expressions,
-  zero shuffle, zero Python.
+- **merge** (``bloom_merge``): join on shard, ``zip_with(.., x | y)``
+  — the union filter, exactly (same positions OR'd). Per-day filters
+  roll up to per-month ones losslessly, the same contract as the HLL
+  sketches in ``operators/sketches.py``.
+- **probe** (``bloom_screen``): the filter rows attach via broadcast
+  (a scalar attach for one shard — the repo's idiom,
+  ``operators/text_ranking.py`` — a broadcast join on the row's shard
+  otherwise) and membership is the k recomputed positions —
+  whole-stage-codegen JVM expressions, zero shuffle, zero Python.
 
 Sizing follows the standard formulae m = -n·ln p/(ln 2)²,
 k = (m/n)·ln 2 (Bloom 1970; Broder & Mitzenmacher's survey). NULL keys
@@ -45,115 +53,23 @@ incremental-ingest posture that replaces it, same spirit as
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# 2^27 words = 1 GiB of bitmap — past any sane broadcast. The cap is a
-# loud guard, not a tuning knob: at that size you want partitioned
-# filters (one per key range), not a bigger array.
+# 2^27 words = 1 GiB of bitmap per shard — past any sane broadcast. The
+# cap is a loud guard, not a tuning knob: past it the keyspace splits
+# into more shards, not a bigger array.
 MAX_WORDS = 1 << 27
 
 
-@dataclass(frozen=True)
-class BloomConfig:
-    """Derived filter geometry (see bloom_build)."""
-
-    n_bits: int
-    num_hashes: int
-    seed: int
-
-
-def _geometry(expected_items: int, fpp: float) -> tuple[int, int]:
-    if expected_items <= 0:
-        raise ValueError(f"expected_items must be > 0, got {expected_items}")
-    if not 0.0 < fpp < 1.0:
-        raise ValueError(f"fpp must be in (0, 1), got {fpp}")
-    m = math.ceil(-expected_items * math.log(fpp) / (math.log(2) ** 2))
-    # round up to a whole word so the dense array has no ragged tail
-    m = ((m + 63) // 64) * 64
-    if m // 64 > MAX_WORDS:
-        raise ValueError(
-            f"filter would need {m // 64} words (> {MAX_WORDS}); shard the"
-            " keyspace into partitioned filters instead"
-        )
-    k = max(1, round(m / expected_items * math.log(2)))
-    return m, k
-
-
-def _positions(key: Column, cfg: BloomConfig) -> Column:
-    """array<long> of the k bit positions for a key — seeded xxhash64
-    per probe index, reduced mod n_bits. The k hashes genuinely differ
-    (the index is an argument), so per-element re-evaluation inside the
-    HOF lambda is inherent work, not the CSE trap."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(cfg.num_hashes - 1)),
-        lambda i: F.pmod(
-            F.xxhash64(key, F.lit(cfg.seed), i), F.lit(cfg.n_bits)
-        ),
-    )
-
-
-def bloom_build(
-    df: DataFrame,
-    key_col: str,
-    expected_items: int,
-    fpp: float = 0.01,
-    seed: int = 42,
-) -> DataFrame:
-    """ONE-row filter frame: (n_bits, num_hashes, seed, n_words,
-    words: array<long>). NULL keys are skipped (they screen as NULL).
-
-    The sparse word aggregation keeps every shuffle bounded by the
-    bitmap size: (n_bits/64)-row worst case regardless of input rows.
-    """
-    m, k = _geometry(expected_items, fpp)
-    cfg = BloomConfig(m, k, seed)
-    n_words = m // 64
-    pos = (
-        df.where(F.col(key_col).isNotNull())
-        .select(F.explode(_positions(F.col(key_col), cfg)).alias("__pos"))
-    )
-    sparse = pos.groupBy(
-        F.shiftright("__pos", 6).alias("__w")
-    ).agg(
-        F.bit_or(
-            F.expr("shiftleft(1L, cast(__pos % 64 as int))")
-        ).alias("__bits")
-    )
-    # densify via a range left-join + one sorted-struct fold — NOT a
-    # per-word map lookup: Spark MapType element_at is a LINEAR scan of
-    # the entry array, so `transform(sequence(0, n_words), w -> m[w])`
-    # is O(n_words x set_words) interpreted (measured 135 s for a 75k-
-    # word filter over 23k set words; this shape is <1 s)
-    grid = df.sparkSession.range(n_words).withColumnRenamed("id", "__w")
-    dense = (
-        grid.join(sparse, "__w", "left")
-        .select("__w", F.coalesce("__bits", F.lit(0)).alias("__bits"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__w", "__bits"))
-            ).alias("__e")
-        )
-        .select(
-            F.lit(m).alias("n_bits"),
-            F.lit(k).alias("num_hashes"),
-            F.lit(seed).alias("seed"),
-            F.lit(n_words).alias("n_words"),
-            F.expr("transform(__e, x -> x.__bits)").alias("words"),
-        )
-    )
-    return dense
-
-
-def sharded_geometry(
+def _geometry(
     expected_items: int, fpp: float, num_shards: int | None = None
 ) -> tuple[int, int, int]:
-    """(num_shards, n_bits_per_shard, num_hashes) for a keyspace too
-    big for one filter. Pure math — unit-testable past MAX_WORDS
-    without materializing a bitmap. ``num_shards=None`` picks the
-    smallest shard count whose per-shard bitmap fits MAX_WORDS."""
+    """(num_shards, n_bits per shard, num_hashes). Pure math — unit-
+    testable past MAX_WORDS without materializing a bitmap.
+    ``num_shards=None`` picks the fewest shards whose bitmap fits
+    MAX_WORDS (1 for any broadcastable filter)."""
     if expected_items <= 0:
         raise ValueError(f"expected_items must be > 0, got {expected_items}")
     if not 0.0 < fpp < 1.0:
@@ -164,17 +80,49 @@ def sharded_geometry(
     if num_shards < 1:
         raise ValueError(f"num_shards must be >= 1, got {num_shards}")
     per_shard = math.ceil(expected_items / num_shards)
-    m, k = _geometry(per_shard, fpp)
+    m = math.ceil(-per_shard * math.log(fpp) / (math.log(2) ** 2))
+    # round up to a whole word so the dense array has no ragged tail
+    m = ((m + 63) // 64) * 64
+    if m // 64 > MAX_WORDS:
+        raise ValueError(
+            f"each of {num_shards} shard(s) would need {m // 64} words"
+            f" (> {MAX_WORDS}); raise num_shards or leave it None"
+        )
+    k = max(1, round(m / per_shard * math.log(2)))
     return num_shards, m, k
+
+
+def _positions(key: Column, n_bits: int, num_hashes: int, seed: int) -> Column:
+    """array<long> of the k bit positions for a key — seeded xxhash64
+    per probe index, reduced mod n_bits. The k hashes genuinely differ
+    (the index is an argument), so per-element re-evaluation inside the
+    HOF lambda is inherent work, not the CSE trap."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda i: F.pmod(F.xxhash64(key, F.lit(seed), i), F.lit(n_bits)),
+    )
 
 
 def _shard_of(key: Column, seed: int, num_shards: int) -> Column:
     """Shard assignment — probe index -1 keeps it independent of every
-    position hash (``_positions`` uses indexes 0..k-1)."""
+    position hash (``_positions`` uses indexes 0..k-1). One shard is
+    the literal 0: no per-row hash."""
+    if num_shards == 1:
+        return F.lit(0).cast("long")
     return F.pmod(F.xxhash64(key, F.lit(seed), F.lit(-1)), F.lit(num_shards))
 
 
-def bloom_build_sharded(
+def _as_sharded(bloom: DataFrame) -> DataFrame:
+    """The one layout: a one-row filter written before the shard
+    columns existed reads as shard 0 of 1."""
+    if "shard" in bloom.columns:
+        return bloom
+    return bloom.select(
+        F.lit(0).cast("long").alias("shard"), F.lit(1).alias("n_shards"), "*"
+    )
+
+
+def bloom_build(
     df: DataFrame,
     key_col: str,
     expected_items: int,
@@ -182,29 +130,23 @@ def bloom_build_sharded(
     seed: int = 42,
     num_shards: int | None = None,
 ) -> DataFrame:
-    """One filter row PER SHARD: (shard, n_shards, n_bits, num_hashes,
-    seed, n_words, words). The keyspace hash-partitions across shards
-    (``_shard_of``), so each shard is an ordinary Bloom filter over its
-    slice — the scale path the MAX_WORDS guard on ``bloom_build``
-    points at. Same no-false-negative contract; per-shard fpp equals
-    the single-filter fpp because each shard is sized for its expected
-    slice. Screens join on the shard id (``bloom_screen`` dispatches on
-    the ``shard`` column); merges OR word arrays per shard
-    (``bloom_merge`` joins on shard for sharded inputs).
+    """Filter frame, one row per shard: (shard, n_shards, n_bits,
+    num_hashes, seed, n_words, words: array<long>). NULL keys are
+    skipped (they screen as NULL). ``num_shards=None`` is one shard
+    unless the bitmap would pass MAX_WORDS (see ``_geometry``); an
+    explicit count too small for MAX_WORDS raises. Per-shard fpp equals
+    the configured fpp because each shard is sized for its slice.
 
-    Shuffle bound: num_shards × n_words rows — filter-sized, never
-    data-sized, same as the single-filter build.
+    The sparse word aggregation keeps every shuffle bounded by the
+    bitmap size: num_shards × n_words rows worst case regardless of
+    input rows.
     """
-    num_shards, m, k = sharded_geometry(expected_items, fpp, num_shards)
-    cfg = BloomConfig(m, k, seed)
+    num_shards, m, k = _geometry(expected_items, fpp, num_shards)
     n_words = m // 64
     key = F.col(key_col)
-    pos = (
-        df.where(key.isNotNull())
-        .select(
-            _shard_of(key, seed, num_shards).alias("__shard"),
-            F.explode(_positions(key, cfg)).alias("__pos"),
-        )
+    pos = df.where(key.isNotNull()).select(
+        _shard_of(key, seed, num_shards).alias("__shard"),
+        F.explode(_positions(key, m, k, seed)).alias("__pos"),
     )
     sparse = pos.groupBy(
         "__shard", F.shiftright("__pos", 6).alias("__w")
@@ -213,8 +155,11 @@ def bloom_build_sharded(
             F.expr("shiftleft(1L, cast(__pos % 64 as int))")
         ).alias("__bits")
     )
-    # dense grid over shard × word — same range-join + sorted fold as
-    # bloom_build (the MapType-densify trap documented there)
+    # densify via a range left-join + one sorted-struct fold per shard —
+    # NOT a per-word map lookup: Spark MapType element_at is a LINEAR
+    # scan of the entry array, so `transform(sequence(0, n_words), w ->
+    # m[w])` is O(n_words x set_words) interpreted (measured 135 s for a
+    # 75k-word filter over 23k set words; this shape is <1 s)
     grid = df.sparkSession.range(num_shards * n_words).select(
         (F.col("id") / n_words).cast("long").alias("__shard"),
         F.pmod(F.col("id"), F.lit(n_words)).alias("__w"),
@@ -240,11 +185,13 @@ def bloom_build_sharded(
     )
 
 
-def bloom_merge_sharded(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Per-shard union of two sharded filters (same geometry AND same
-    shard count — shard assignment must agree or the union is
-    meaningless). Join on shard, OR the word arrays."""
-    bb = b.select(
+def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """The filter of the UNION of the two build inputs — exact, not
+    approximate: identical geometry hashes identical keys to identical
+    shards and positions, so OR-ing each shard's bitmaps is set union.
+    Mismatched geometry (n_shards/n_bits/num_hashes/seed) raises at
+    action time (the frames stay lazy)."""
+    bb = _as_sharded(b).select(
         F.col("shard"),
         F.col("n_shards").alias("__ns"),
         F.col("n_bits").alias("__nb"),
@@ -259,7 +206,8 @@ def bloom_merge_sharded(a: DataFrame, b: DataFrame) -> DataFrame:
         & (F.col("seed") == F.col("__sd"))
     )
     return (
-        a.join(bb, "shard")
+        _as_sharded(a)
+        .join(F.broadcast(bb), "shard")
         .select(
             "shard",
             "n_shards",
@@ -273,47 +221,8 @@ def bloom_merge_sharded(a: DataFrame, b: DataFrame) -> DataFrame:
             .otherwise(
                 F.raise_error(
                     F.lit(
-                        "bloom_merge_sharded: filters have different geometry"
-                        " (n_shards/n_bits/num_hashes/seed must match)"
-                    )
-                )
-            )
-            .alias("words"),
-        )
-    )
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """The filter of the UNION of the two build inputs — exact, not
-    approximate: identical geometry hashes identical keys to identical
-    positions, so OR-ing bitmaps is set union. Mismatched geometry
-    raises at action time (the frames stay lazy)."""
-    bb = b.select(
-        F.col("n_bits").alias("__nb"),
-        F.col("num_hashes").alias("__nh"),
-        F.col("seed").alias("__sd"),
-        F.col("words").alias("__wb"),
-    )
-    same = (
-        (F.col("n_bits") == F.col("__nb"))
-        & (F.col("num_hashes") == F.col("__nh"))
-        & (F.col("seed") == F.col("__sd"))
-    )
-    return (
-        a.crossJoin(F.broadcast(bb))
-        .select(
-            "n_bits",
-            "num_hashes",
-            "seed",
-            "n_words",
-            F.when(
-                same, F.zip_with("words", "__wb", lambda x, y: x.bitwiseOR(y))
-            )
-            .otherwise(
-                F.raise_error(
-                    F.lit(
                         "bloom_merge: filters have different geometry"
-                        " (n_bits/num_hashes/seed must match)"
+                        " (n_shards/n_bits/num_hashes/seed must match)"
                     )
                 )
             )
@@ -330,8 +239,12 @@ def bloom_screen(
 ) -> DataFrame:
     """batch + a ``maybe_seen`` boolean: False is definitive (no false
     negatives), True is probabilistic (fp-bounded by the build's fpp),
-    NULL key screens NULL. Map-side only: the 1-row filter broadcasts
-    and the k probes are codegen'd expressions.
+    NULL key screens NULL. Map-side only: the filter broadcasts, each
+    row attaches its shard's bitmap (one shard: a scalar attach with no
+    per-row shard hash; more: a broadcast join on the recomputed shard
+    id), and the k probes are codegen'd expressions. A sharded filter
+    whose union outgrows broadcast wants batch and filter store
+    pre-partitioned by shard and screened shard-partition-wise.
 
     The k probes are UNROLLED into plain expressions rather than a
     ``forall`` over a ``transform``: a filter on the screen output
@@ -344,7 +257,7 @@ def bloom_screen(
     carry sound reference sets; codegen CSE dedups the repeated
     position hash within each conjunct.
     """
-    # localCheckpoint pins the 1-row filter: (a) it severs lineage, so a
+    # localCheckpoint pins the filter rows: (a) it severs lineage, so a
     # batch sharing a scan with the filter's build input can't trip
     # Spark's self-join attribute rewrite under the name-parsed probe
     # expression; (b) callers that branch on the screen (bloom_dedup's
@@ -352,15 +265,15 @@ def bloom_screen(
     # re-running the build per branch; (c) the geometry row is on hand
     # to unroll the probes. The filter is broadcast-sized by contract,
     # so eager materialization costs what any action would.
-    if "shard" in bloom.columns:
-        return _bloom_screen_sharded(batch, bloom, key_col, out_col)
-    blm = bloom.select(
+    blm = _as_sharded(bloom).select(
+        F.col("shard").alias("__bf_shard"),
+        F.col("n_shards").alias("__bf_ns"),
         F.col("n_bits").alias("__bf_m"),
         F.col("num_hashes").alias("__bf_k"),
         F.col("seed").alias("__bf_seed"),
         F.col("words").alias("__bf_words"),
     ).localCheckpoint(eager=True)
-    m, k, seed = blm.select("__bf_m", "__bf_k", "__bf_seed").first()
+    ns, m, k, seed = blm.select("__bf_ns", "__bf_m", "__bf_k", "__bf_seed").first()
     key = f"`{key_col}`"
     # literal TYPES must match bloom_build's _positions exactly (int
     # seed, int probe index) — xxhash64 hashes by argument type
@@ -373,50 +286,7 @@ def bloom_screen(
         )
     probe = F.expr("(" + ") AND (".join(terms) + ")")
     return (
-        batch.crossJoin(F.broadcast(blm.select("__bf_words")))
-        .withColumn(
-            out_col,
-            F.when(F.col(key_col).isNull(), F.lit(None).cast("boolean"))
-            .otherwise(probe),
-        )
-        .drop("__bf_words")
-    )
-
-
-def _bloom_screen_sharded(
-    batch: DataFrame,
-    bloom: DataFrame,
-    key_col: str,
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Sharded variant of the screen: each batch row recomputes its
-    shard id and equi-joins its shard's filter row (broadcast — the
-    whole sharded filter is n_shards × n_words × 8 B; callers whose
-    union filter outgrows broadcast should pre-partition batch AND
-    filter store by shard and screen shard-partition-wise). Probes are
-    the same unrolled codegen expressions as the single-filter path —
-    see bloom_screen's docstring for why not forall/transform."""
-    blm = bloom.select(
-        F.col("shard").alias("__bf_shard"),
-        F.col("n_shards").alias("__bf_ns"),
-        F.col("n_bits").alias("__bf_m"),
-        F.col("num_hashes").alias("__bf_k"),
-        F.col("seed").alias("__bf_seed"),
-        F.col("words").alias("__bf_words"),
-    ).localCheckpoint(eager=True)
-    ns, m, k, seed = blm.select("__bf_ns", "__bf_m", "__bf_k", "__bf_seed").first()
-    key = f"`{key_col}`"
-    terms = []
-    for i in range(k):
-        pos = f"pmod(xxhash64({key}, {seed}, {i}), {m}L)"
-        terms.append(
-            f"(element_at(__bf_words, cast(shiftright({pos}, 6) as int) + 1)"
-            f" & shiftleft(1L, cast({pos} % 64 as int))) != 0L"
-        )
-    probe = F.expr("(" + ") AND (".join(terms) + ")")
-    shard = F.expr(f"pmod(xxhash64({key}, {seed}, -1), {ns}L)")
-    return (
-        batch.withColumn("__bf_shard", shard)
+        batch.withColumn("__bf_shard", _shard_of(F.col(key_col), seed, ns))
         .join(
             F.broadcast(blm.select("__bf_shard", "__bf_words")),
             "__bf_shard",

@@ -21,7 +21,9 @@ of a persisted key store, maintained per micro-batch via foreachBatch.
 Why foreachBatch, not a stateful operator: like the LSH index in
 ``streaming/near_dup.py``, the key set is corpus-sized — it belongs in
 storage, not the state store; the filter is the part small enough to
-broadcast.
+broadcast. The filter is rewritten every batch, so a filter stored in
+the older one-row layout (read as shard 0 of 1) comes back in the
+shard layout after the next batch.
 
 Crash-ordering contract (same at-least-once posture as
 ``streaming/near_dup.py``, but strictly better): writes run sink →
@@ -103,8 +105,13 @@ def bloom_dedup_epoch(
     batch = batch_df.where(F.col(key_col).isNotNull()).dropDuplicates(
         [key_col]
     )
+    # frames whose LogicalRDD leaves this batch pins: bloom_screen's
+    # filter row (via the screened plan), the verified-dup key set and
+    # the merged filter
+    pins: list[DataFrame] = []
     if stored is not None:
         screened = bloom_screen(batch, stored, key_col, out_col="__maybe")
+        pins.append(screened)
         maybe = screened.where(F.col("__maybe")).drop("__maybe")
         if maybe.isEmpty():
             dup_keys = None
@@ -116,6 +123,7 @@ def bloom_dedup_epoch(
                 # never leak into a lazy re-evaluation
                 .localCheckpoint(eager=True)
             )
+            pins.append(dup_keys)
     else:
         dup_keys = None
 
@@ -141,17 +149,11 @@ def bloom_dedup_epoch(
         merged = delta if stored is None else bloom_merge(stored, delta)
         # pin BEFORE overwriting the path the merge plan reads from
         merged = merged.localCheckpoint(eager=True)
+        pins.append(merged)
         merged.write.mode("overwrite").parquet(bloom_path)
         new_keys.write.mode("append").parquet(keys_path)
     finally:
         survivors.unpersist()
-    # state is durably on disk: free this batch's pinned frames now
-    # rather than at ContextCleaner GC leisure (checkpoint.py) —
-    # merged, the verified-dup key set, and (via the screened
-    # plan's LogicalRDD leaf) bloom_screen's pinned filter row
-    rel = [merged]
-    if dup_keys is not None:
-        rel.append(dup_keys)
-    if stored is not None:
-        rel.append(screened)
-    release_local_checkpoint(*rel)
+        # free the pins now, also when a sink raised, rather than at
+        # ContextCleaner GC leisure (checkpoint.py)
+        release_local_checkpoint(*pins)

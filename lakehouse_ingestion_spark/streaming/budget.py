@@ -67,12 +67,17 @@ def spent(spark: SparkSession, ledger_path: str) -> int:
 def spent_by_stratum(
     spark: SparkSession, ledger_path: str
 ) -> dict[str | None, int]:
-    """Cost admitted so far PER STRATUM ({} when nothing committed)."""
+    """Cost admitted so far PER STRATUM ({} when nothing committed).
+    Marker rows (``rows = 0``: an epoch that admitted nothing) are no
+    stratum's spend; every other quota row has ``rows > 0``."""
     led = epochlog.read_ledger(spark, ledger_path, LEDGER_SCHEMA)
     if led is None:
         return {}
     rows = (
-        led.groupBy("stratum").agg(F.sum("batch_cost").alias("s")).collect()
+        led.where(F.col("rows") > 0)
+        .groupBy("stratum")
+        .agg(F.sum("batch_cost").alias("s"))
+        .collect()
     )
     return {r["stratum"]: int(r["s"] or 0) for r in rows}
 

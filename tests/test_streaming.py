@@ -944,6 +944,46 @@ def test_streaming_bloom_dedup_stale_keys_fail_safe(spark, tmp_path):
     }
 
 
+def test_streaming_bloom_dedup_raising_sink_releases_pins(spark, tmp_path):
+    """A sink that raises still frees the batch's pinned frames (the
+    screened filter row and the verified-dup keys): nothing stays in
+    executor storage until ContextCleaner GC."""
+    import time
+
+    from lakehouse_ingestion_spark.operators.bloom import bloom_build
+    from lakehouse_ingestion_spark.streaming.bloom_dedup import (
+        bloom_dedup_epoch,
+    )
+
+    bloom_p = str(tmp_path / "rp_bloom")
+    keys_p = str(tmp_path / "rp_keys")
+    seen = spark.createDataFrame([("alpha",), ("beta",)], "k string")
+    bloom_build(seen, "k", expected_items=100).write.parquet(bloom_p)
+    seen.write.parquet(keys_p)
+
+    def sink(_df, _e):
+        raise RuntimeError("sink down")
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="sink down"):
+        bloom_dedup_epoch(
+            spark.createDataFrame([("alpha",), ("gamma",)], "k string"),
+            1,
+            state_paths=(bloom_p, keys_p),
+            sink=sink,
+            key_col="k",
+            expected_items=100,
+        )
+    # unpersist is async; give the block manager a moment
+    for _ in range(50):
+        if jsc.getPersistentRDDs().size() <= before:
+            break
+        time.sleep(0.1)
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_multi_sink_exactly_once_fanout(spark, tmp_path):
     """Two differently-shaped sinks from one stream: all rows land in
     both, the ledger records every (epoch, sink), and a sink failure
