@@ -70,33 +70,13 @@ def extract_media_features(
     id_column: str = "media_id",
     on_error: str = "null",  # null | fail
 ) -> DataFrame:
-    """mapInPandas pipeline: (id, binary content) -> feature rows.
-
-    The batch function is deliberately SELF-CONTAINED (its own imports, no
-    references to this module's globals): cloudpickle serializes nested
-    functions by value but module globals by reference, and executors'
-    Python workers cannot be assumed to have this package on their
-    PYTHONPATH (they only share the driver's working dir in local mode).
-    """
+    """mapInPandas pipeline: (id, binary content) -> feature rows. Byte
+    statistics are vectorized per Arrow batch; ``_decode`` is the one
+    per-row call."""
     out_schema = media_feature_schema(id_column)
-    feature_dim = FEATURE_DIM
     out_cols = [f.name for f in out_schema.fields]
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _decode_local(blob: bytes) -> "_np.ndarray":
-            # keep in sync with module-level _decode (duplicated so the
-            # closure pickles by value — see docstring)
-            if not blob:
-                raise NotImplementedError("empty blob: no decodable content")
-            seed = int.from_bytes(_hashlib.md5(blob).digest()[:4], "big")
-            rng = _np.random.default_rng(seed)
-            return rng.random(feature_dim)
-
         for pdf in it:
             if pdf.empty:
                 continue
@@ -104,47 +84,47 @@ def extract_media_features(
                 bytes(b) if b is not None else b""
                 for b in pdf[content_column]
             ]
-            lengths = _np.fromiter(
-                (len(b) for b in blobs), dtype=_np.int64, count=len(blobs)
+            lengths = np.fromiter(
+                (len(b) for b in blobs), dtype=np.int64, count=len(blobs)
             )
             bad = lengths == 0
             if bad.any() and on_error == "fail":
                 # surface the codec error exactly as the per-row decode
                 # would — first failing blob wins
-                _decode_local(b"")
+                _decode(b"")
             good = ~bad
             # byte stats vectorized over ONE concatenated buffer:
             # ufunc.reduceat segments at each (non-empty) row's start
             # offset cover exactly that row's bytes (empty rows occupy
             # zero width between segments). Only the decoder itself is
             # a per-row call — it's the hook a real codec replaces.
-            flat = _np.frombuffer(b"".join(blobs), dtype=_np.uint8).astype(
-                _np.float64
+            flat = np.frombuffer(b"".join(blobs), dtype=np.uint8).astype(
+                np.float64
             )
-            mean = _np.array([])
-            std = _np.array([])
+            mean = np.array([])
+            std = np.array([])
             if good.any():
-                starts = _np.concatenate(([0], _np.cumsum(lengths)[:-1]))
+                starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
                 g_starts = starts[good]
                 g_len = lengths[good]
-                mean = _np.add.reduceat(flat, g_starts) / g_len
-                sqdev = (flat - _np.repeat(mean, g_len)) ** 2
-                std = _np.sqrt(_np.add.reduceat(sqdev, g_starts) / g_len)
+                mean = np.add.reduceat(flat, g_starts) / g_len
+                sqdev = (flat - np.repeat(mean, g_len)) ** 2
+                std = np.sqrt(np.add.reduceat(sqdev, g_starts) / g_len)
             embs: list[list[float] | None] = [None] * len(blobs)
-            for i in _np.flatnonzero(good):
-                embs[i] = _decode_local(blobs[i]).tolist()
-            mean_full = _np.full(len(blobs), _np.nan)
-            std_full = _np.full(len(blobs), _np.nan)
+            for i in np.flatnonzero(good):
+                embs[i] = _decode(blobs[i]).tolist()
+            mean_full = np.full(len(blobs), np.nan)
+            std_full = np.full(len(blobs), np.nan)
             mean_full[good] = mean
             std_full[good] = std
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     id_column: pdf[id_column].to_numpy(),
-                    "n_bytes": _np.where(bad, 0, lengths),
-                    "byte_mean": _pd.array(mean_full, dtype="Float64"),
-                    "byte_std": _pd.array(std_full, dtype="Float64"),
+                    "n_bytes": np.where(bad, 0, lengths),
+                    "byte_mean": pd.array(mean_full, dtype="Float64"),
+                    "byte_std": pd.array(std_full, dtype="Float64"),
                     "embedding": embs,
-                    "decoder": _np.where(bad, "error", "stub-md5"),
+                    "decoder": np.where(bad, "error", "stub-md5"),
                 },
                 columns=out_cols,
             )

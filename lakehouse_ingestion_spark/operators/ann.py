@@ -1,17 +1,31 @@
-"""IVF (inverted-file) approximate nearest neighbor — the coarse-
-quantization scale path for similarity search, complementing the
-random-hyperplane LSH variant (``functions/similarity.lsh_bucket``).
+"""Similarity search: ONE top-k scoring kernel plus four candidate masks.
 
-Design (MLlib-style): the centroid set is tiny (K rows) and lives
-DRIVER-SIDE as a numpy matrix between steps — exactly how Spark MLlib's
-KMeans keeps cluster centers. Cell assignment is then a map-only
-vectorized pass over the corpus (one BLAS matmul per Arrow batch,
-centroid matrix broadcast); nothing N-sized ever shuffles for
-assignment. Lloyd refinement needs one aggregation job per iteration
-(per-dimension means, partially aggregated map-side); search fuses
-assignment + probe masking + exact scoring + local top-k into a single
-``mapInPandas`` pass so only the ``queries x ~k`` sliver reaches the
-final global ranking window.
+``_topk_search`` is the only per-batch top-k body in the engine. It
+collects the (small) query set driver-side, broadcasts the normalised
+query matrix once, and runs one ``mapInPandas`` over the corpus: per
+Arrow batch one BLAS matmul scores every row against every query, the
+caller's candidate mask blanks the rows a query may not see, and a
+local partition cut keeps ~k rows per query before anything
+leaves the executor. Scores are rounded to 6 dp and ranked in one
+``row_number`` window, so the only shuffle ranks the
+``partitions x queries x ~k`` sliver. The search paths differ only in
+their mask:
+
+- ``brute_force_topk`` — no mask, every corpus row is a candidate;
+- ``lsh_topk`` — the corpus row's random-hyperplane sign bucket equals
+  the query's (driver-computed) bucket;
+- ``ivf_topk`` — the corpus row's nearest centroid cell, assigned in the
+  same pass, is in the query's ``nprobe`` probe list;
+- ``incremental_ann.search_postings`` — the stored ``cell`` of a posting
+  is in the query's probe list (the scan below is partition-pruned to
+  the union of probed cells).
+
+IVF (inverted-file) design, MLlib-style: the centroid set is tiny (K
+rows) and lives DRIVER-SIDE as a numpy matrix between steps — exactly
+how Spark MLlib's KMeans keeps cluster centers. Cell assignment is a
+map-only vectorized pass (one matmul per Arrow batch, centroid matrix
+broadcast); nothing N-sized ever shuffles for assignment. Lloyd
+refinement needs one aggregation job per iteration.
 
 Determinism contract (for the DuckDB oracle): cell assignment and top-k
 both order by (cosine rounded to 6 dp desc, id asc) — no float-tie
@@ -19,6 +33,8 @@ ambiguity across engines.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -28,6 +44,7 @@ from pyspark.sql.window import Window
 
 _ASSIGN_ROUND = 6  # rounding for assignment tie-stability across engines
 _SIGN_ROUND = 9  # dot-product rounding before LSH sign tests
+_TOPK_SCHEMA = "q_id long, neighbor_id long, cos_sim double"
 
 
 def _round_half_away(a: np.ndarray, digits: int) -> np.ndarray:
@@ -89,86 +106,138 @@ def _probe_cells(
     return cent_ids[order]
 
 
+def _in_probes(cells: np.ndarray, probes: np.ndarray) -> np.ndarray:
+    """(queries, batch) mask: each row's cell is in the query's own
+    ``(queries, nprobe)`` probe list."""
+    return (cells[None, None, :] == probes[:, :, None]).any(axis=1)
+
+
+def _topk_search(
+    op: str,
+    corpus: DataFrame,
+    queries: "DataFrame | pd.DataFrame",
+    k: int,
+    id_col: str,
+    vec_col: str,
+    mask: Callable | None = None,
+    prepare: Callable | None = None,
+    mask_cols: tuple[str, ...] = (),
+    exclude_same_id: bool = False,
+) -> DataFrame:
+    """The ANN family's one top-k pass: exact cosine top-k per query over
+    the candidates ``mask`` admits. Returns (q_id, neighbor_id, cos_sim,
+    rk).
+
+    ``queries`` is a DataFrame or, when the caller already holds the
+    request driver-side, a pandas frame (columns id_col, vec_col) — no
+    collect job then. Query ids must be integral: the broadcast and the
+    output schema are ``long``, and a float id would be truncated.
+
+    ``prepare(q_mat, corpus) -> (state, corpus)`` runs once on the
+    driver with the raw query matrix: ``state`` (sign buckets, probe
+    lists, centroids) rides in the one query broadcast, and the returned
+    corpus may be narrowed (a partition-pruning filter). On the
+    executors ``mask(state, pdf, m)`` gives the ``(queries, batch)``
+    candidate mask of an Arrow batch ``pdf`` with vectors ``m``; it may
+    read the ``mask_cols`` besides id_col and vec_col. No mask makes
+    every row a candidate. ``exclude_same_id`` also drops candidates
+    whose id equals the query id.
+
+    Determinism: the local cut keeps every candidate within
+    ``eps = 1e-6`` of the k-th raw score; rounding to 6 dp is monotone
+    and moves a value by at most half that, so no row that could enter
+    the global top-k after rounding is dropped early. Masked slots
+    score -2 and the cut is clamped at -1.5 (a cosine is >= -1), so
+    they are never emitted.
+    """
+    _require_integral_id(corpus, id_col, op)
+    spark = corpus.sparkSession
+    qpd = (
+        queries[[id_col, vec_col]]
+        if isinstance(queries, pd.DataFrame)
+        else queries.select(id_col, vec_col).toPandas()
+    )
+    if qpd.empty:
+        # np.stack on zero arrays raises; an empty query set is a valid
+        # (if degenerate) request and returns an empty frame
+        return spark.createDataFrame([], f"{_TOPK_SCHEMA}, rk int")
+    if not pd.api.types.is_integer_dtype(qpd[id_col]):
+        raise TypeError(
+            f"{op} requires integral ids; the queries' {id_col!r} is "
+            f"{qpd[id_col].dtype} (the broadcast/mapInPandas schema is long)"
+        )
+    q_ids = qpd[id_col].to_numpy().astype("int64")
+    q_mat = np.stack(qpd[vec_col].to_numpy()).astype("float64")
+    state = None
+    if prepare is not None:
+        state, corpus = prepare(q_mat, corpus)
+    bq = spark.sparkContext.broadcast((q_ids, _normalized(q_mat), state))
+    eps = 10.0 ** (-_ASSIGN_ROUND)
+
+    def _score(batches):
+        qids, q_n, state = bq.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy().astype("int64")
+            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            keep = (
+                np.ones((len(qids), len(ids)), dtype=bool)
+                if mask is None
+                else mask(state, pdf, m)
+            )
+            if exclude_same_id:
+                keep &= ids[None, :] != qids[:, None]
+            sims = np.where(keep, q_n @ _normalized(m).T, -2.0)
+            n = sims.shape[1]
+            cut = np.full(sims.shape[0], -1.5)
+            if n > k:
+                cut = np.maximum(
+                    np.partition(sims, n - k, axis=1)[:, n - k] - eps, cut
+                )
+            qi, ni = np.nonzero(sims >= cut[:, None])
+            yield pd.DataFrame(
+                {
+                    "q_id": qids[qi],
+                    "neighbor_id": ids[ni],
+                    "cos_sim": sims[qi, ni],
+                }
+            )
+
+    scored = (
+        corpus.select(id_col, vec_col, *mask_cols)
+        .mapInPandas(_score, _TOPK_SCHEMA)
+        .withColumn("cos_sim", F.round("cos_sim", _ASSIGN_ROUND))
+    )
+    w = Window.partitionBy("q_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= k
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame | pd.DataFrame,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    round_to: int | None = 6,
 ) -> DataFrame:
-    """Exact cosine top-k per query via broadcast + BLAS scoring.
+    """Exact cosine top-k per query: the shared kernel with no candidate
+    mask. Returns (q_id, neighbor_id, cos_sim, rk), ordered by (cosine
+    rounded to 6 dp desc, neighbor_id asc).
 
-    The query set is collected and broadcast as one normalized float64
-    matrix (top-k search presumes a small query set; the corpus side
-    stays fully distributed and never shuffles until the final
-    ``partitions x queries x ~k``-row candidate window). Each corpus
-    partition is scored against ALL queries with a single ``matmul``
-    per Arrow batch, then reduced to a local top-k per query before
-    anything leaves the executor — the global window only ranks the
-    surviving sliver. Returns (q_id, neighbor_id, cos_sim, rk).
-
-    Determinism: the final order is (cosine rounded to ``round_to``
-    desc, neighbor_id asc). The local cut keeps every row within
-    ``10**-round_to`` of the k-th raw score; rounding is monotone and
-    moves a value by at most half that, so no row that could enter the
-    global top-k after rounding is dropped early.
-
-    ``queries`` may be a pandas DataFrame (columns id_col, vec_col) when
-    the caller already holds the query set driver-side — a top-k search
-    request IS a driver-side input, so skipping the collect job is the
-    normal serving shape.
+    The query set is broadcast as one normalized float64 matrix (top-k
+    search presumes a small query set; the corpus side stays fully
+    distributed and never shuffles until the final
+    ``partitions x queries x ~k``-row candidate window). ``queries`` may
+    be a pandas DataFrame (columns id_col, vec_col) when the caller
+    already holds the query set driver-side — a top-k search request IS
+    a driver-side input, so skipping the collect job is the normal
+    serving shape.
     """
-    _require_integral_id(corpus, id_col, "brute_force_topk")
-    if isinstance(queries, pd.DataFrame):
-        qpd = queries[[id_col, vec_col]]
-    else:
-        qpd = queries.select(id_col, vec_col).toPandas()
-    if qpd.empty:
-        # np.stack on zero arrays raises; an empty query set is a valid
-        # (if degenerate) request and should return an empty frame
-        return corpus.sparkSession.createDataFrame(
-            [], "q_id long, neighbor_id long, cos_sim double, rk int"
-        )
-    if not pd.api.types.is_integer_dtype(qpd[id_col]):
-        raise TypeError(
-            f"brute_force_topk requires integral ids; {id_col!r} is "
-            f"{qpd[id_col].dtype} (the broadcast/mapInPandas schema is long)"
-        )
-    qids = qpd[id_col].to_numpy().astype("int64")
-    qmat = np.stack(qpd[vec_col].to_numpy()).astype("float64")
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, _normalized(qmat)))
-    eps = 0.0 if round_to is None else 10.0 ** (-round_to)
-
-    def _score(batches):
-        q_ids, q_n = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy().astype("int64")
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            sims = q_n @ _normalized(m).T  # (n_queries, batch)
-            n = sims.shape[1]
-            if n > k:
-                cut = np.partition(sims, n - k, axis=1)[:, n - k] - eps
-            else:
-                cut = np.full(sims.shape[0], -2.0)
-            qi, ni = np.nonzero(sims >= cut[:, None])
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[qi],
-                    "neighbor_id": ids[ni],
-                    "cos_sim": sims[qi, ni],
-                }
-            )
-
-    scored = corpus.mapInPandas(_score, "q_id long, neighbor_id long, cos_sim double")
-    if round_to is not None:
-        scored = scored.withColumn("cos_sim", F.round("cos_sim", round_to))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    return _topk_search("brute_force_topk", corpus, queries, k, id_col, vec_col)
 
 
 def ivf_assign(
@@ -323,24 +392,13 @@ def lsh_topk(
     ``functions/similarity.lsh_bucket``: bit j set iff dot(v, plane_j)
     >= 0). Returns (q_id, neighbor_id, cos_sim, rk).
 
-    Fused single corpus pass, like ``ivf_topk``: each Arrow batch
-    computes its sign buckets with one matmul against the plane matrix,
-    masks against the driver-computed query buckets, scores survivors
-    (second matmul), and emits a local top-k — the interpreted
-    higher-order-function formulation (bucket fold per row + cosine fold
-    per candidate pair) was the slowest plan in the ANN family, and the
-    corpus never needs to shuffle for a bucket equi-join anyway."""
-    _require_integral_id(corpus, id_col, "lsh_topk")
-    spark = corpus.sparkSession
-    qpd = (
-        queries[[id_col, vec_col]]
-        if isinstance(queries, pd.DataFrame)
-        else queries.select(id_col, vec_col).toPandas()
-    )
-    if qpd.empty:
-        return spark.createDataFrame(
-            [], "q_id long, neighbor_id long, cos_sim double, rk int"
-        )
+    The query buckets are computed driver-side; in the kernel's single
+    corpus pass each Arrow batch computes its own buckets with one
+    matmul against the plane matrix and masks on equality — the
+    interpreted higher-order-function formulation (bucket fold per row +
+    cosine fold per candidate pair) was the slowest plan in the ANN
+    family, and the corpus never needs to shuffle for a bucket equi-join
+    anyway."""
     plane_mat = np.asarray(planes, dtype="float64")  # (P, dim)
     pow2 = 2.0 ** np.arange(plane_mat.shape[0])
 
@@ -355,48 +413,14 @@ def lsh_topk(
         d = _round_half_away(m @ plane_mat.T, _SIGN_ROUND)
         return (d >= 0.0) @ pow2  # (n,) packed sign bits
 
-    q_ids = qpd[id_col].to_numpy().astype("int64")
-    q_mat = np.stack(qpd[vec_col].to_numpy()).astype("float64")
-    bq = spark.sparkContext.broadcast(
-        (q_ids, _normalized(q_mat), _buckets(q_mat))
-    )
-    eps = 10.0 ** (-_ASSIGN_ROUND)
+    def _same_bucket(q_buckets, pdf, m):
+        return q_buckets[:, None] == _buckets(m)[None, :]
 
-    def _search(batches):
-        qids, q_n, q_buckets = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy().astype("int64")
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            mask = q_buckets[:, None] == _buckets(m)[None, :]
-            if exclude_same_id:
-                mask &= ids[None, :] != qids[:, None]
-            sims = np.where(mask, q_n @ _normalized(m).T, -2.0)
-            n = sims.shape[1]
-            if n > k:
-                cut = np.partition(sims, n - k, axis=1)[:, n - k] - eps
-                cut = np.maximum(cut, -1.5)  # never emit masked-out slots
-            else:
-                cut = np.full(sims.shape[0], -1.5)
-            qi, ni = np.nonzero(sims >= cut[:, None])
-            yield pd.DataFrame(
-                {
-                    "q_id": qids[qi],
-                    "neighbor_id": ids[ni],
-                    "cos_sim": sims[qi, ni],
-                }
-            )
-
-    scored = corpus.mapInPandas(
-        _search, "q_id long, neighbor_id long, cos_sim double"
-    ).withColumn("cos_sim", F.round("cos_sim", _ASSIGN_ROUND))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    return _topk_search(
+        "lsh_topk", corpus, queries, k, id_col, vec_col,
+        mask=_same_bucket,
+        prepare=lambda q_mat, corpus: (_buckets(q_mat), corpus),
+        exclude_same_id=exclude_same_id,
     )
 
 
@@ -414,76 +438,32 @@ def ivf_topk(
     query's ``nprobe`` nearest cells. Returns
     (q_id, neighbor_id, cos_sim, rk).
 
-    Fully fused: ONE ``mapInPandas`` pass over the corpus assigns each
-    corpus row to its cell (matmul vs the broadcast centroid matrix),
-    masks it against each query's driver-computed probe list, scores the
-    survivors (second matmul), and keeps a local top-k per query — so
-    the only shuffle in the whole search ranks the
-    ``partitions x queries x ~k`` sliver. The round-2 formulation ran
-    two assignment windows (N*K-row shuffles) plus a candidate
-    equi-join; at 100 TB the corpus never needs to move at all, and now
-    it doesn't.
+    The probe lists are computed driver-side from the (K-row) centroid
+    set; in the kernel's single corpus pass each Arrow batch assigns its
+    rows to cells (matmul vs the broadcast centroid matrix) and masks
+    them against each query's probe list — so the only shuffle in the
+    whole search ranks the ``partitions x queries x ~k`` sliver. The
+    round-2 formulation ran two assignment windows (N*K-row shuffles)
+    plus a candidate equi-join; at 100 TB the corpus never needs to move
+    at all, and now it doesn't.
 
     ``exclude_same_id`` removes candidates whose id equals the query id —
     correct when queries are drawn FROM the corpus (self-match
     suppression); set False when queries and corpus are distinct datasets
     whose id spaces overlap (an equal id is then a different vector)."""
-    _require_integral_id(vectors, id_col, "ivf_topk")
-    spark = vectors.sparkSession
-    qpd = (
-        queries[[id_col, vec_col]]
-        if isinstance(queries, pd.DataFrame)
-        else queries.select(id_col, vec_col).toPandas()
-    )
-    if qpd.empty:
-        return spark.createDataFrame(
-            [], "q_id long, neighbor_id long, cos_sim double, rk int"
-        )
-    cent_ids, cent_mat = _centroids_to_driver(centroids, "cid", "cv")
-    q_ids = qpd[id_col].to_numpy().astype("int64")
-    q_mat = np.stack(qpd[vec_col].to_numpy()).astype("float64")
-    q_probes = _probe_cells(q_mat, cent_ids, cent_mat, nprobe)  # (nq, nprobe)
-    bq = spark.sparkContext.broadcast(
-        (q_ids, _normalized(q_mat), q_probes, cent_ids, cent_mat)
-    )
-    eps = 10.0 ** (-_ASSIGN_ROUND)
 
-    def _search(batches):
-        qids, q_n, probes, c_ids, c_mat = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy().astype("int64")
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            cells = _probe_cells(m, c_ids, c_mat, 1)[:, 0]  # (batch,)
-            sims = q_n @ _normalized(m).T  # (nq, batch)
-            # candidate mask: corpus cell in the query's probe list
-            mask = (cells[None, None, :] == probes[:, :, None]).any(axis=1)
-            if exclude_same_id:
-                mask &= ids[None, :] != qids[:, None]
-            sims = np.where(mask, sims, -2.0)
-            n = sims.shape[1]
-            if n > k:
-                cut = np.partition(sims, n - k, axis=1)[:, n - k] - eps
-                cut = np.maximum(cut, -1.5)  # never emit masked-out slots
-            else:
-                cut = np.full(sims.shape[0], -1.5)
-            qi, ni = np.nonzero(sims >= cut[:, None])
-            yield pd.DataFrame(
-                {
-                    "q_id": qids[qi],
-                    "neighbor_id": ids[ni],
-                    "cos_sim": sims[qi, ni],
-                }
-            )
+    def _probes(q_mat, corpus):
+        cent_ids, cent_mat = _centroids_to_driver(centroids, "cid", "cv")
+        probes = _probe_cells(q_mat, cent_ids, cent_mat, nprobe)
+        return (probes, cent_ids, cent_mat), corpus
 
-    scored = vectors.mapInPandas(
-        _search, "q_id long, neighbor_id long, cos_sim double"
-    ).withColumn("cos_sim", F.round("cos_sim", _ASSIGN_ROUND))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    def _assigned_cell_probed(state, pdf, m):
+        probes, c_ids, c_mat = state
+        return _in_probes(_probe_cells(m, c_ids, c_mat, 1)[:, 0], probes)
+
+    return _topk_search(
+        "ivf_topk", vectors, queries, k, id_col, vec_col,
+        mask=_assigned_cell_probed,
+        prepare=_probes,
+        exclude_same_id=exclude_same_id,
     )

@@ -20,9 +20,11 @@ index and ``graph.incremental_components``' label state):
 - **search** (``search_postings``) — probe lists come driver-side from
   the (tiny, K-row) centroid set, and the scan filters
   ``cell IN (probes)`` BEFORE reading: parquet partition pruning cuts
-  the read to ~nprobe/K of the corpus bytes. Scoring reuses the fused
-  local-top-k kernel; the only shuffle ranks the
-  ``partitions x queries x ~k`` sliver.
+  the read to ~nprobe/K of the corpus bytes. Scoring is the ANN
+  family's one top-k kernel (``ann._topk_search``) with the fourth of
+  its candidate masks: the stored ``cell`` is in the query's probe
+  list. The only shuffle ranks the ``partitions x queries x ~k``
+  sliver.
 - **retrain** (``retrain_postings``) — Lloyd refinement + full
   reassignment on a cadence (corpus-sized BY DESIGN, like compaction);
   postings carry their vectors, so even retraining never returns to the
@@ -39,15 +41,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ann import (
-    _ASSIGN_ROUND,
     _centroids_to_driver,
-    _normalized,
+    _in_probes,
     _probe_cells,
     _require_integral_id,
+    _topk_search,
     kmeans_refine,
 )
 
@@ -130,73 +132,28 @@ def search_postings(
     ``ivf_topk`` with the same centroids/k/nprobe, minus the corpus
     pass: the probe lists are computed driver-side, the postings scan is
     filtered to the union of probed cells (partition-pruned read), and
-    the stored ``cell`` column replaces the in-pass assignment matmul.
-
-    Per Arrow batch of surviving postings: one scoring matmul, mask by
-    each query's own probe list, local top-k cut — only the
-    ``partitions x queries x ~k`` sliver shuffles for the final rank.
+    the kernel's mask reads the stored ``cell`` column instead of
+    assigning cells in the pass.
     """
-    spark = postings.sparkSession
-    qpd = (
-        queries[[id_col, vec_col]]
-        if isinstance(queries, pd.DataFrame)
-        else queries.select(id_col, vec_col).toPandas()
-    )
-    if qpd.empty:
-        return spark.createDataFrame(
-            [], "q_id long, neighbor_id long, cos_sim double, rk int"
-        )
-    cent_ids, cent_mat = _centroids_to_driver(centroids, "cid", "cv")
-    q_ids = qpd[id_col].to_numpy().astype("int64")
-    q_mat = np.stack(qpd[vec_col].to_numpy()).astype("float64")
-    q_probes = _probe_cells(q_mat, cent_ids, cent_mat, nprobe)  # (nq, nprobe)
 
-    # the pruning filter: a plain IN over the partition column, pushed
-    # to the file listing (PartitionFilters) — the whole point of the
-    # maintained layout
-    probed = sorted({int(c) for c in q_probes.ravel()})
-    pruned = postings.where(F.col("cell").isin(probed))
+    def _probes(q_mat, postings):
+        cent_ids, cent_mat = _centroids_to_driver(centroids, "cid", "cv")
+        probes = _probe_cells(q_mat, cent_ids, cent_mat, nprobe)
+        # the pruning filter: a plain IN over the partition column, pushed
+        # to the file listing (PartitionFilters) — the whole point of the
+        # maintained layout
+        probed = sorted({int(c) for c in probes.ravel()})
+        return probes, postings.where(F.col("cell").isin(probed))
 
-    bq = spark.sparkContext.broadcast((q_ids, _normalized(q_mat), q_probes))
-    eps = 10.0 ** (-_ASSIGN_ROUND)
+    def _stored_cell_probed(probes, pdf, m):
+        return _in_probes(pdf["cell"].to_numpy().astype("int64"), probes)
 
-    def _score(batches):
-        qids, q_n, probes = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy().astype("int64")
-            cells = pdf["cell"].to_numpy().astype("int64")
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            sims = q_n @ _normalized(m).T  # (nq, batch)
-            # candidate mask: stored cell in the query's own probe list
-            mask = (cells[None, None, :] == probes[:, :, None]).any(axis=1)
-            if exclude_same_id:
-                mask &= ids[None, :] != qids[:, None]
-            sims = np.where(mask, sims, -2.0)
-            n = sims.shape[1]
-            if n > k:
-                cut = np.partition(sims, n - k, axis=1)[:, n - k] - eps
-                cut = np.maximum(cut, -1.5)  # never emit masked-out slots
-            else:
-                cut = np.full(sims.shape[0], -1.5)
-            qi, ni = np.nonzero(sims >= cut[:, None])
-            yield pd.DataFrame(
-                {
-                    "q_id": qids[qi],
-                    "neighbor_id": ids[ni],
-                    "cos_sim": sims[qi, ni],
-                }
-            )
-
-    scored = pruned.select(id_col, vec_col, "cell").mapInPandas(
-        _score, "q_id long, neighbor_id long, cos_sim double"
-    ).withColumn("cos_sim", F.round("cos_sim", _ASSIGN_ROUND))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k
+    return _topk_search(
+        "search_postings", postings, queries, k, id_col, vec_col,
+        mask=_stored_cell_probed,
+        prepare=_probes,
+        mask_cols=("cell",),
+        exclude_same_id=exclude_same_id,
     )
 
 

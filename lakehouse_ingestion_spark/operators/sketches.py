@@ -189,19 +189,6 @@ def tdigest_partials(
         import numpy as _np
         import pandas as _pd
 
-        def _compress(means, weights):
-            tot = float(weights.sum())
-            if len(means) <= 1 or tot <= 0.0:
-                return means, weights
-            mid = _np.cumsum(weights) - weights / 2.0
-            j = _np.arange(1, n_bins)
-            bounds = (1.0 - _np.cos(_np.pi * j / n_bins)) / 2.0 * tot
-            idx = _np.searchsorted(bounds, mid, side="right")
-            w = _np.bincount(idx, weights=weights, minlength=n_bins)
-            m = _np.bincount(idx, weights=weights * means, minlength=n_bins)
-            keep = w > 0
-            return m[keep] / w[keep], w[keep]
-
         acc: dict = {}
         for pdf in batches:
             pdf = pdf.dropna(subset=[vcol])
@@ -219,7 +206,7 @@ def tdigest_partials(
                     )
                     allm = _np.concatenate([ms, v])[order]
                     allw = _np.concatenate([ws, w])[order]
-                    ms, ws = _compress(allm, allw)
+                    ms, ws = _td_compress(allm, allw, n_bins)
                     acc[key] = (
                         ms,
                         ws,
@@ -228,7 +215,7 @@ def tdigest_partials(
                         n + len(v),
                     )
                 else:
-                    ms, ws = _compress(v, w)
+                    ms, ws = _td_compress(v, w, n_bins)
                     acc[key] = (ms, ws, float(v[0]), float(v[-1]), len(v))
         if not acc:
             return
@@ -267,25 +254,12 @@ def merge_digests(
         import numpy as _np
         import pandas as _pd
 
-        def _compress(means, weights):
-            tot = float(weights.sum())
-            if len(means) <= 1 or tot <= 0.0:
-                return means, weights
-            mid = _np.cumsum(weights) - weights / 2.0
-            j = _np.arange(1, n_bins)
-            bounds = (1.0 - _np.cos(_np.pi * j / n_bins)) / 2.0 * tot
-            idx = _np.searchsorted(bounds, mid, side="right")
-            w = _np.bincount(idx, weights=weights, minlength=n_bins)
-            m = _np.bincount(idx, weights=weights * means, minlength=n_bins)
-            keep = w > 0
-            return m[keep] / w[keep], w[keep]
-
         allm = _np.concatenate([_np.asarray(x, dtype="float64") for x in pdf["td_means"]])
         allw = _np.concatenate(
             [_np.asarray(x, dtype="float64") for x in pdf["td_weights"]]
         )
         order = _np.argsort(allm, kind="stable")
-        ms, ws = _compress(allm[order], allw[order])
+        ms, ws = _td_compress(allm[order], allw[order], n_bins)
         out = {c: [key[i]] for i, c in enumerate(gcols)}
         out["td_n"] = [int(pdf["td_n"].sum())]
         out["td_min"] = [float(pdf["td_min"].min())]
@@ -383,36 +357,19 @@ def digest_quantile(q: float, col_prefix: str = "td"):
         import numpy as _np
         import pandas as _pd
 
-        out = []
-        for mni, mxi, ms, ws in zip(mn, mx, means, weights):
-            ms = _np.asarray(ms, dtype="float64")
-            ws = _np.asarray(ws, dtype="float64")
-            tot = float(ws.sum())
-            if tot <= 0.0:
-                out.append(None)
-                continue
-            target = qq * tot
-            mid = _np.cumsum(ws) - ws / 2.0
-            if target <= mid[0]:
-                out.append(
-                    float(
-                        mni + (ms[0] - mni) * (target / mid[0])
-                        if mid[0] > 0
-                        else ms[0]
-                    )
+        return _pd.Series(
+            [
+                _td_estimate(
+                    _np.asarray(ms, dtype="float64"),
+                    _np.asarray(ws, dtype="float64"),
+                    mni,
+                    mxi,
+                    qq,
                 )
-            elif target >= mid[-1]:
-                span = tot - mid[-1]
-                out.append(
-                    float(
-                        ms[-1] + (mxi - ms[-1]) * ((target - mid[-1]) / span)
-                        if span > 0
-                        else mxi
-                    )
-                )
-            else:
-                out.append(float(_np.interp(target, mid, ms)))
-        return _pd.Series(out, dtype="float64")
+                for mni, mxi, ms, ws in zip(mn, mx, means, weights)
+            ],
+            dtype="float64",
+        )
 
     return _est(
         F.col(f"{col_prefix}_min"),

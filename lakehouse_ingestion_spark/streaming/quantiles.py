@@ -16,8 +16,9 @@ merging formulation), so
   batch that saw data for the key — the live p50/p95/p99 dashboard row.
 
 Idle keys evict via the optional processing-time timeout, same contract
-as the other stateful operators here. The state/batch function is
-self-contained (no module-global references) so it pickles by value.
+as the other stateful operators here. The fold and the estimate are the
+batch operator's own kernels (``sketches._td_compress`` /
+``_td_estimate``), so streaming and batch digests compress identically.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from lakehouse_ingestion_spark.operators.sketches import _td_compress, _td_estimate
 
 _STATE_SCHEMA = StructType(
     [
@@ -108,38 +111,6 @@ def streaming_quantiles(
             state.remove()
             return
 
-        def _compress(means, weights):
-            tot = float(weights.sum())
-            if len(means) <= 1 or tot <= 0.0:
-                return means, weights
-            mid = _np.cumsum(weights) - weights / 2.0
-            j = _np.arange(1, n_bins)
-            bounds = (1.0 - _np.cos(_np.pi * j / n_bins)) / 2.0 * tot
-            idx = _np.searchsorted(bounds, mid, side="right")
-            w = _np.bincount(idx, weights=weights, minlength=n_bins)
-            m = _np.bincount(idx, weights=weights * means, minlength=n_bins)
-            keep = w > 0
-            return m[keep] / w[keep], w[keep]
-
-        def _estimate(means, weights, mn, mx, q):
-            tot = float(weights.sum())
-            target = q * tot
-            mid = _np.cumsum(weights) - weights / 2.0
-            if target <= mid[0]:
-                return float(
-                    mn + (means[0] - mn) * (target / mid[0])
-                    if mid[0] > 0
-                    else means[0]
-                )
-            if target >= mid[-1]:
-                span = tot - mid[-1]
-                return float(
-                    means[-1] + (mx - means[-1]) * ((target - mid[-1]) / span)
-                    if span > 0
-                    else mx
-                )
-            return float(_np.interp(target, mid, means))
-
         if state.exists:
             n, mn, mx, means_l, weights_l = state.get
             means = _np.asarray(means_l, dtype="float64")
@@ -163,7 +134,7 @@ def streaming_quantiles(
             allm = _np.concatenate([means, v])
             allw = _np.concatenate([weights, _np.ones(len(v))])
             order = _np.argsort(allm, kind="stable")
-            means, weights = _compress(allm[order], allw[order])
+            means, weights = _td_compress(allm[order], allw[order], n_bins)
 
         state.update(
             (int(n), mn, mx, means.tolist(), weights.tolist())
@@ -173,7 +144,7 @@ def streaming_quantiles(
         if saw:
             row = {key_col: [key[0]], "n": [int(n)]}
             for q, nm in zip(qs, qnames):
-                row[nm] = [_estimate(means, weights, mn, mx, q)]
+                row[nm] = [_td_estimate(means, weights, mn, mx, q)]
             yield _pd.DataFrame(row)
 
     return df.groupBy(key_col).applyInPandasWithState(

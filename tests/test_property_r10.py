@@ -1,6 +1,7 @@
-"""Property tests for the round-10 operators: top-p coverage/minimality,
-event-window dedup vs a sequential reference, and value-based quantile
-bucket monotonicity."""
+"""Property tests for the round-10 operators: event-window dedup vs a
+sequential reference, and value-based quantile bucket monotonicity.
+(The top-p coverage/minimality properties live in
+test_property_selection.py.)"""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from lakehouse_ingestion_spark.operators.dedup import event_window_dedup
-from lakehouse_ingestion_spark.operators.selection import top_p_select
 from lakehouse_ingestion_spark.operators.stats import quantile_buckets_agg
 
 _SETTINGS = dict(
@@ -16,86 +16,6 @@ _SETTINGS = dict(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-# ---------------------------------------------------------------- top-p
-
-
-@settings(**_SETTINGS)
-@given(
-    data=st.lists(
-        st.tuples(st.integers(0, 9), st.sampled_from(["a", "b"])),
-        min_size=1,
-        max_size=40,
-    ),
-    p=st.sampled_from([0.1, 0.5, 0.9, 1.0]),
-)
-def test_top_p_covers_and_is_minimal(spark, data, p):
-    """Kept set covers >= p of each stratum's mass, and dropping its
-    weakest member would fall below p (minimal covering prefix)."""
-    rows = [(i, d, s) for i, (s, d) in enumerate(data)]
-    df = spark.createDataFrame(rows, "id long, dom string, score long")
-    kept = top_p_select(df, "dom", "score", p, "id").collect()
-    by_dom: dict[str, list] = {}
-    for r in kept:
-        by_dom.setdefault(r["dom"], []).append(r)
-    totals: dict[str, int] = {}
-    for i, (s, d) in enumerate(data):
-        totals[d] = totals.get(d, 0) + s
-    for dom, total in totals.items():
-        got = sorted(
-            by_dom.get(dom, []),
-            key=lambda r: (-r["score"], r["id"]),
-        )
-        mass = sum(r["score"] for r in got)
-        if total == 0:
-            # zero-mass stratum: prev (0) < p*0 is false -> nothing kept
-            assert not got
-            continue
-        assert mass >= p * total - 1e-9
-        # minimality: the prefix without its last row covers < p
-        assert sum(r["score"] for r in got[:-1]) < p * total
-
-
-@settings(**_SETTINGS)
-@given(
-    data=st.lists(
-        st.tuples(
-            st.floats(0.0, 1.0, allow_nan=False, width=32),
-            st.sampled_from(["a", "b"]),
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    p=st.sampled_from([0.1, 0.5, 0.9, 1.0]),
-)
-def test_top_p_covers_and_is_minimal_float_scores(spark, data, p):
-    """r11 regression (VERDICT r10 'What's wrong #1'): the coverage /
-    minimality contract must hold for FRACTIONAL scores in [0, 1] — the
-    pre-r11 cast('long') truncated them to zero mass and kept nothing."""
-    rows = [(i, d, float(s)) for i, (s, d) in enumerate(data)]
-    df = spark.createDataFrame(rows, "id long, dom string, score double")
-    kept = top_p_select(df, "dom", "score", p, "id").collect()
-    by_dom: dict[str, list] = {}
-    for r in kept:
-        by_dom.setdefault(r["dom"], []).append(r)
-    totals: dict[str, float] = {}
-    for i, (s, d) in enumerate(data):
-        totals[d] = totals.get(d, 0.0) + float(s)
-    for dom, total in totals.items():
-        got = sorted(
-            by_dom.get(dom, []),
-            key=lambda r: (-r["score"], r["id"]),
-        )
-        mass = sum(r["score"] for r in got)
-        if total == 0.0:
-            assert not got
-            continue
-        # never empty for positive mass — the r10 bug returned []
-        assert got
-        assert mass >= p * total - 1e-6
-        # minimality, modulo the documented 9dp boundary rounding
-        assert sum(r["score"] for r in got[:-1]) < p * total + 1e-6
 
 
 # -------------------------------------------------------- event dedup

@@ -219,25 +219,54 @@ def test_kmeans_refine_empty_cell_keeps_seed(spark):
     assert out[0] == [0.95, 0.05]
 
 
-def test_brute_force_topk_empty_and_nonint_queries(spark):
+@pytest.mark.parametrize(
+    "path", ["brute_force_topk", "lsh_topk", "ivf_topk", "search_postings"]
+)
+def test_brute_force_topk_empty_and_nonint_queries(spark, path):
+    """Every search path runs the one top-k kernel: an empty query set
+    answers 0 rows of the 4-column schema, and non-integral query ids
+    raise instead of being truncated by the ``long`` broadcast."""
     import pandas as pd
-    import pytest
 
-    from lakehouse_ingestion_spark.operators.ann import brute_force_topk
+    from lakehouse_ingestion_spark.operators.ann import (
+        brute_force_topk,
+        ivf_topk,
+        lsh_topk,
+    )
+    from lakehouse_ingestion_spark.operators.incremental_ann import (
+        assign_postings,
+        search_postings,
+    )
 
     cdf = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, v array<double>"
     )
+    cents = pd.DataFrame({"cid": [0, 1], "cv": [[1.0, 0.0], [0.0, 1.0]]})
+    search = {
+        "brute_force_topk": lambda q, k: brute_force_topk(cdf, q, k=k),
+        "lsh_topk": lambda q, k: lsh_topk(cdf, q, [[1.0, 0.0]], k=k),
+        "ivf_topk": lambda q, k: ivf_topk(cdf, q, cents, k=k, nprobe=1),
+        "search_postings": lambda q, k: search_postings(
+            assign_postings(cdf, cents), q, cents, k=k, nprobe=1
+        ),
+    }[path]
     # empty query set: valid degenerate request, not an np.stack crash
     empty = pd.DataFrame({"vec_id": pd.Series([], dtype="int64"), "v": []})
-    assert brute_force_topk(cdf, empty, k=2).count() == 0
-    assert brute_force_topk(
-        cdf, cdf.filter("vec_id < 0"), k=2
-    ).count() == 0
+    assert search(empty, 2).count() == 0
+    out = search(cdf.filter("vec_id < 0"), 2)
+    assert out.count() == 0
+    assert out.schema.simpleString() == (
+        "struct<q_id:bigint,neighbor_id:bigint,cos_sim:double,rk:int>"
+    )
+    # a float id would come back as q_id 1 and, with exclude_same_id,
+    # suppress corpus row 1, the query's true nearest neighbour
+    frac = pd.DataFrame({"vec_id": [1.9], "v": [[1.0, 0.1]]})
+    with pytest.raises(TypeError, match="integral ids"):
+        search(frac, 1)
     # non-integral ids fail loudly, not with a numpy cast error
     bad = pd.DataFrame({"vec_id": ["a"], "v": [[1.0, 0.0]]})
     with pytest.raises(TypeError, match="integral ids"):
-        brute_force_topk(cdf, bad, k=1)
+        search(bad, 1)
 
 
 def test_kmeans_refine_honors_round_to(spark):
