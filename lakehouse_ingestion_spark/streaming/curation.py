@@ -28,6 +28,12 @@ maintain ONE split state):
   (the pre-filtered over-cap set, broadcast-sized by construction) —
   so the LSH cap census never rescans the stored postings per trigger.
 
+Every latest-row read of these logs — per-trigger history reads, the
+ledgered replay, compaction and the offline ``current_*`` views — goes
+through one resolver, ``util.latest``: each column's value from the
+key's highest ``_epoch``, or the columns as they are on a flat
+(pre-epoch) table.
+
 Why foreachBatch and not a stateful operator: all four states are
 corpus-sized and must be queryable offline. The state store keeps
 nothing.
@@ -92,7 +98,7 @@ from lakehouse_ingestion_spark.streaming.epochlog import (
     SNAPSHOT_EPOCH,
 )
 from lakehouse_ingestion_spark.streaming.multi_sink import LEDGER_SCHEMA
-from lakehouse_ingestion_spark.util import read_parquet_if_exists
+from lakehouse_ingestion_spark.util import latest, read_parquet_if_exists
 
 LEDGER_SINK = "curation_state"
 
@@ -123,23 +129,15 @@ def _read_state(
 def current_assignments(raw: DataFrame, id_col: str, split_col: str) -> DataFrame:
     """Latest (id, split) per doc from the assignment delta log — the
     batch pipeline's offline view of streaming-maintained state.
-    Corpus-wide resolution (one max_by shuffle): for batch/backfill
-    reads, not the per-trigger path."""
-    if EPOCH_COL not in raw.columns:
-        return raw.select(id_col, split_col)
-    return raw.groupBy(id_col).agg(
-        F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col)
-    )
+    Corpus-wide resolution (one shuffle): for batch/backfill reads, not
+    the per-trigger path."""
+    return latest(raw, [id_col], [split_col])
 
 
 def current_labels(raw: DataFrame) -> DataFrame:
     """Latest (node, cluster_id) per node from the label delta log —
     same offline-read role as ``current_assignments``."""
-    if EPOCH_COL not in raw.columns:
-        return raw.select("node", "cluster_id")
-    return raw.groupBy("node").agg(
-        F.max_by("cluster_id", F.col(EPOCH_COL)).alias("cluster_id")
-    )
+    return latest(raw, ["node"], ["cluster_id"])
 
 
 def compact_split_state(
@@ -189,18 +187,11 @@ def compact_split_state(
             f"{state_dir}/{name}",
         )
 
-    _fold("labels", lambda df: df.groupBy("node").agg(
-        F.max_by("cluster_id", F.col(EPOCH_COL)).alias("cluster_id")
-    ))
-    _fold("assignments", lambda df: df.groupBy(id_col).agg(
-        F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
-        F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
-    ))
+    _fold("labels", current_labels)
+    _fold("assignments", lambda df: latest(df, [id_col], [split_col, rep_col]))
     _fold("hashes", lambda df: df.drop(EPOCH_COL))
     _fold("bands", lambda df: df.drop(EPOCH_COL))
-    _fold("posting_counts", lambda df: df.groupBy("band", "key").agg(
-        F.max_by("n", F.col(EPOCH_COL)).alias("n")
-    ))
+    _fold("posting_counts", lambda df: latest(df, ["band", "key"], ["n"]))
     # hot entries never retract (totals only grow)
     _fold("hot_keys", lambda df: df.groupBy("band", "key").agg(
         F.max("n_postings").alias("n_postings")
@@ -269,17 +260,11 @@ def _replay(
         raise RuntimeError(
             f"epoch {epoch_id} is ledgered but {assign_path} is missing"
         )
-    matched = assign.join(
-        batch_df.select(id_col).distinct(), id_col, "semi"
+    cur = latest(
+        assign.join(batch_df.select(id_col).distinct(), id_col, "semi"),
+        [id_col], [split_col, rep_col],
     )
-    if EPOCH_COL in matched.columns:
-        latest = matched.groupBy(id_col).agg(
-            F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
-            F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
-        )
-    else:
-        latest = matched.select(id_col, split_col, rep_col)
-    out = batch_df.join(latest, id_col, "inner")
+    out = batch_df.join(cur, id_col, "inner")
     if conflict_action == "drop_cluster":
         # dropped docs ARE assigned (deterministic state), so the
         # drop must be re-derived: a cluster whose latest member
@@ -288,7 +273,7 @@ def _replay(
         # after this epoch drops on replay too (never re-emit
         # leaked rows; epoch-keyed output sinks converge anyway).
         reps_b = F.broadcast(
-            latest.select(F.col(rep_col).alias("__r")).distinct()
+            cur.select(F.col(rep_col).alias("__r")).distinct()
         )
         members = assign.join(
             reps_b, assign[rep_col] == reps_b["__r"], "semi"
@@ -435,14 +420,9 @@ def sticky_split_epoch(
                     ["band", "key"],
                     "semi",
                 )
-                if EPOCH_COL in touch.columns:
-                    touch = touch.groupBy("band", "key").agg(
-                        F.max_by("n", F.col(EPOCH_COL)).alias("__pn")
-                    )
-                else:
-                    touch = touch.select(
-                        "band", "key", F.col("n").alias("__pn")
-                    )
+                touch = latest(
+                    touch, ["band", "key"], ["n"]
+                ).withColumnRenamed("n", "__pn")
                 counts_delta = batch_counts.join(
                     touch, ["band", "key"], "left"
                 ).select(
@@ -492,9 +472,7 @@ def sticky_split_epoch(
         # pairs feed the label fold and the split; one materialization
         pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
         labels_raw = _read_state(spark, labels_path, epoch_id)
-        cd = incremental_components_delta(
-            labels_raw, pairs, "doc_a", "doc_b", epoch_col=EPOCH_COL
-        )
+        cd = incremental_components_delta(labels_raw, pairs, "doc_a", "doc_b")
         # pin the delta frames: their plans read labels_path, which
         # this epoch's partition write below will touch
         label_delta = cd.label_delta.localCheckpoint(eager=True)
@@ -526,15 +504,10 @@ def sticky_split_epoch(
             # set: a legacy-bootstrap doc reprocessed in a batch has
             # both its old and new rows keyed by the same current
             # rep — without this, it votes twice in the majority and
-            # a policy-changed split reads as a permanent conflict
-            if EPOCH_COL in matched.columns:
-                matched = matched.groupBy(id_col).agg(
-                    F.max_by(split_col, F.col(EPOCH_COL)).alias(split_col),
-                    F.max_by(rep_col, F.col(EPOCH_COL)).alias(rep_col),
-                )
-            # both consumers below are O(K) — pin one evaluation
-            matched = matched.select(
-                id_col, split_col, rep_col
+            # a policy-changed split reads as a permanent conflict.
+            # Both consumers below are O(K): pin one evaluation
+            matched = latest(
+                matched, [id_col], [split_col, rep_col]
             ).localCheckpoint(eager=True)
             # re-key merged members to their post-merge rep before
             # the majority census (their stored rep is pre-merge)

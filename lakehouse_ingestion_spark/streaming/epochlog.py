@@ -57,9 +57,8 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ingestion_spark.util import read_parquet_if_exists
+from lakehouse_ingestion_spark.util import EPOCH_COL, read_parquet_if_exists
 
-EPOCH_COL = "_epoch"
 SNAPSHOT_EPOCH = -1
 LEDGERED = "ledgered"
 

@@ -3,6 +3,10 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+# partition column of every epoch-keyed state log
+EPOCH_COL = "_epoch"
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
@@ -93,8 +97,6 @@ def maybe_round(col, digits: "int | None"):
     Spark (HALF_UP) and DuckDB (half-even) break ties in opposite
     directions. Rounding stays opt-in for human-facing reports; keep it
     OUT of oracle-hashed queries (CORRECTNESS corr_panel, round-6)."""
-    from pyspark.sql import functions as F
-
     return F.round(col, digits) if digits is not None else col
 
 
@@ -123,3 +125,15 @@ def read_parquet_if_exists(
         ):
             return None
         raise
+
+
+def latest(df: DataFrame, keys: list[str], cols: list[str]) -> DataFrame:
+    """The latest row per ``keys`` of a state table: ``max_by(col,
+    _epoch)`` for each of ``cols`` when ``df`` is an epoch-partitioned
+    delta log (latest epoch wins), else ``keys`` and ``cols`` as they
+    are (a flat table holds one row per key)."""
+    if EPOCH_COL not in df.columns:
+        return df.select(*keys, *cols)
+    return df.groupBy(*keys).agg(
+        *(F.max_by(c, F.col(EPOCH_COL)).alias(c) for c in cols)
+    )

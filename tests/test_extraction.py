@@ -2,6 +2,8 @@
 RE2-compatibility contract every pattern must keep (the DuckDB oracle
 replays the identical chain)."""
 
+from pathlib import Path
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -103,7 +105,7 @@ def test_spark_duckdb_chain_equivalence(spark):
     spark_out = _extract(spark, page)
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from __spark_entry__ import _duck_html_chain, _duck_lit
 
     duck_out = duckdb.connect().execute(

@@ -13,6 +13,7 @@ from lakehouse_ingestion_spark.config import load_config, parse_config
 from lakehouse_ingestion_spark.errors import ConfigError
 from lakehouse_ingestion_spark.pipeline import Pipeline
 from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
+from test_streaming import _pick_seed
 
 EVENT_SCHEMA = StructType(
     [
@@ -1489,3 +1490,130 @@ def test_shipped_curate_split_export_config_runs_end_to_end(
     assert rows[1]["split"] == rows[2]["split"] == "train"
     # each survivor carries its per-split running budget total
     assert all(r["cum_cost"] >= r["n_tokens"] for r in rows.values())
+
+
+def test_pipeline_sticky_partial_run_keeps_absent_assignments(
+    spark, registry, tmp_path
+):
+    """r8 ADVICE: a partial-corpus sticky run must not discard prior
+    assignments of absent docs (union on write), and the new doc must
+    inherit from cluster-mates that are only in HISTORY (history-wide
+    majority); the audit log APPENDS across runs."""
+    from lakehouse_ingestion_spark.config import parse_config
+    from lakehouse_ingestion_spark.pipeline import Pipeline
+
+    fr = {"a": 0.5, "b": 0.5}
+    # discriminating seed: hash(0) != hash(1) and hash(-1) != hash(1)
+    seed, m = _pick_seed(spark, fr, [-1, 0, 1], [(0, 1), (-1, 1)])
+    state = str(tmp_path / "assigns")
+    audit_p = str(tmp_path / "audit")
+
+    def run(doc_rows, pair_rows, tag):
+        src = tmp_path / f"{tag}.jsonl"
+        src.write_text(
+            "\n".join(
+                json.dumps({"doc_id": d, "text": "x"}) for d in doc_rows
+            )
+        )
+        pp = str(tmp_path / f"pairs_{tag}")
+        spark.createDataFrame(
+            pair_rows, "doc_a long, doc_b long"
+        ).write.parquet(pp)
+        out = str(tmp_path / f"out_{tag}")
+        stage = {
+            "op": "leakage_safe_split",
+            "fractions": fr,
+            "pairs_path": pp,
+            "assignments_path": state,
+            "audit_path": audit_p,
+            "seed": seed,
+        }
+        cfg = parse_config(_doc_config(str(src), out, [stage]), registry)
+        Pipeline(spark, cfg, registry=registry).run()
+        return {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+
+    r1 = run([1, 2, 5], [(1, 2)], "r1")
+    assert r1[1]["split"] == r1[2]["split"] == m[1]
+
+    # run 2: df contains ONLY doc 0 — its cluster-mates are history-only
+    r2 = run([0], [(0, 1)], "r2")
+    assert r2[0]["split"] == m[1] != m[0]  # inherited, not hash-of-rep-0
+    saved = {
+        r["doc_id"]: r["split"] for r in spark.read.parquet(state).collect()
+    }
+    assert set(saved) == {0, 1, 2, 5}  # absent docs kept
+    assert saved[1] == saved[2] == m[1]
+    c2 = spark.read.parquet(audit_p).count()
+    assert c2 >= 1  # doc 0's inherited row
+
+    # run 3: another partial slice; the audit log grows, never resets
+    r3 = run([-1], [(-1, 0)], "r3")
+    assert r3[-1]["split"] == m[1]
+    assert spark.read.parquet(audit_p).count() > c2
+    assert set(
+        r["doc_id"] for r in spark.read.parquet(state).collect()
+    ) == {-1, 0, 1, 2, 5}
+
+
+def test_pipeline_conflict_quarantine_and_drop(spark, registry, tmp_path):
+    """r8 verdict #3 done-criteria: a merged pre-straddled cluster
+    lands train-only under conflict_action=quarantine_eval (and the
+    forced split persists); under drop_cluster its members are withheld
+    from the output while the state keeps them deterministic."""
+    from lakehouse_ingestion_spark.config import parse_config
+    from lakehouse_ingestion_spark.pipeline import Pipeline
+
+    def run(action, tag):
+        state = str(tmp_path / f"assigns_{tag}")
+        spark.createDataFrame(
+            [(1, "train"), (2, "test")], "doc_id long, split string"
+        ).write.parquet(state)
+        src = tmp_path / f"{tag}.jsonl"
+        src.write_text(
+            "\n".join(
+                json.dumps({"doc_id": d, "text": "x"}) for d in (1, 2, 3)
+            )
+        )
+        pp = str(tmp_path / f"pairs_{tag}")
+        spark.createDataFrame([(1, 2)], "doc_a long, doc_b long").write.parquet(pp)
+        out = str(tmp_path / f"out_{tag}")
+        stage = {
+            "op": "leakage_safe_split",
+            "fractions": {"train": 0.5, "test": 0.5},
+            "pairs_path": pp,
+            "assignments_path": state,
+            "audit_path": str(tmp_path / f"audit_{tag}"),
+            "conflict_action": action,
+        }
+        cfg = parse_config(_doc_config(str(src), out, [stage]), registry)
+        Pipeline(spark, cfg, registry=registry).run()
+        got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+        saved = {
+            r["doc_id"]: r["split"]
+            for r in spark.read.parquet(state).collect()
+        }
+        aud = spark.read.parquet(str(tmp_path / f"audit_{tag}")).collect()
+        return got, saved, aud
+
+    got, saved, aud = run("quarantine_eval", "q")
+    assert got[1]["split"] == got[2]["split"] == "train"  # train-only
+    assert saved[1] == saved[2] == "train"  # persisted: conflict melts
+    assert {r["doc_id"] for r in aud if r["reason"] == "cluster_conflict"} \
+        >= {1, 2}
+
+    got, saved, aud = run("drop_cluster", "d")
+    assert 1 not in got and 2 not in got  # withheld from output
+    assert 3 in got
+    assert saved[1] == "train" and saved[2] == "test"  # state deterministic
+    assert any(r["reason"] == "cluster_conflict" for r in aud)
+
+
+def test_pipeline_rejects_unknown_conflict_action(spark, registry, tmp_path):
+    from lakehouse_ingestion_spark.errors import ConfigError
+    from lakehouse_ingestion_spark.operators.split_guard import (
+        apply_conflict_policy,
+    )
+
+    df = spark.createDataFrame([(1, "a", 1)], "doc_id long, split string, rep long")
+    with pytest.raises(ConfigError, match="conflict_action"):
+        apply_conflict_policy(df, df, "explode", {"a": 1.0})

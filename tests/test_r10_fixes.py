@@ -14,6 +14,8 @@ Covers:
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,7 +145,7 @@ def test_vertical_tab_cross_engine_parity(spark):
 
     from lakehouse_ingestion_spark.functions.extraction import html_to_text
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from __spark_entry__ import _duck_html_chain, _duck_lit
 
     page = "\x0b<p>lead\x0bing</p>\x0b \x0b"

@@ -5,6 +5,7 @@ envelope decode."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 import yaml
@@ -14,7 +15,8 @@ from lakehouse_ingestion_spark.config import load_config
 from lakehouse_ingestion_spark.pipeline import Pipeline
 from lakehouse_ingestion_spark.schema_registry import SchemaRegistry
 
-REGISTRY = "/root/repo/schemas_registry"
+ROOT = Path(__file__).resolve().parents[1]
+REGISTRY = str(ROOT / "schemas_registry")
 
 
 def test_shipped_schemas_load():
@@ -42,7 +44,7 @@ def test_payments_config_end_to_end(spark, tmp_path):
     src.mkdir()
     (src / "batch1.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
 
-    raw = yaml.safe_load(open("/root/repo/configs/payments-batch.yaml"))
+    raw = yaml.safe_load(open(ROOT / "configs" / "payments-batch.yaml"))
     job = raw["jobs"][0]
     job["source"]["options"]["path"] = str(src)
     job["data_quality"]["quarantine_path"] = str(tmp_path / "quarantine")

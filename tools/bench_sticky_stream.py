@@ -20,8 +20,9 @@ import sys
 import tempfile
 import time
 from functools import partial
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:

@@ -19,7 +19,7 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from lakehouse_ingestion_spark.operators.audit import add_audit_columns
 from lakehouse_ingestion_spark.session import SparkConfig, get_spark
