@@ -132,9 +132,13 @@ def parse_config(raw: dict, schema_registry: SchemaRegistry | None = None) -> Pi
         validate_transform_options,
     )
     from lakehouse_ingestion_spark.sinks.base import validate_writer_options
+    from lakehouse_ingestion_spark.sources.base import (  # package registers readers
+        validate_source_type,
+    )
 
     for job in cfg.jobs:
         try:
+            validate_source_type(job.source.type)
             validate_writer_options(job.target.format, job.target.options)
             for t in job.transforms:
                 validate_transform_options(t.op, t.options)

@@ -26,7 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from lakehouse_ingestion_spark.operators.dedup import dedup_latest_by_key
 
 DELETE_OPS = ("d",)
 
@@ -43,16 +44,12 @@ def cdc_latest(
     """Latest event per key. ``order_by`` columns are interpreted
     newest-first when given as plain strings (wrapped in desc()).
 
-    row_number over a per-key sort — fully codegen'd, and measured ~25%
-    faster than a ``max_by`` aggregation on local[32] at 100k-2M rows
-    (see PLANS.md "formulation trade-off").
+    The body is ``dedup_latest_by_key``: row_number over a per-key sort
+    — fully codegen'd, and measured ~25% faster than a ``max_by``
+    aggregation on local[32] at 100k-2M rows (see PLANS.md "formulation
+    trade-off").
     """
-    w = Window.partitionBy(*key_columns).orderBy(*_order_cols(order_by))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return dedup_latest_by_key(df, key_columns, _order_cols(order_by))
 
 
 def cdc_apply(

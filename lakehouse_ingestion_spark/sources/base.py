@@ -13,7 +13,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from lakehouse_ingestion_spark.errors import UnsupportedFeatureError
+from lakehouse_ingestion_spark.errors import ConfigError, UnsupportedFeatureError
 
 _READERS: dict[str, type] = {}
 
@@ -26,6 +26,15 @@ def register_reader(name: str):
         return cls
 
     return deco
+
+
+def validate_source_type(source_type: str) -> None:
+    """Load-time check: a source type no reader registers raises
+    ConfigError naming the known types."""
+    if str(source_type).lower() not in _READERS:
+        raise ConfigError(
+            f"unknown source type {source_type!r}; known: {sorted(_READERS)}"
+        )
 
 
 def get_reader(source_type: str) -> "BaseReader":

@@ -28,23 +28,6 @@ from pyspark.sql.types import StructType
 from lakehouse_ingestion_spark.errors import ConfigError, UnsupportedFeatureError
 from lakehouse_ingestion_spark.sources.base import BaseReader, register_reader
 
-#: connection/tuning options forwarded verbatim to the Kafka source
-#: (reference option set: ``configs/cdc-postgres-to-delta.conf:19-42``)
-PASSTHROUGH_OPTIONS = {
-    "kafka.bootstrap.servers",
-    "subscribe",
-    "subscribePattern",
-    "assign",
-    "startingOffsets",
-    "endingOffsets",
-    "failOnDataLoss",
-    "maxOffsetsPerTrigger",
-    "minPartitions",
-    "kafka.group.id",
-    "groupIdPrefix",
-    "includeHeaders",
-}
-
 
 def decode_json_value(raw: DataFrame, schema: StructType, keep_kafka_meta: bool = False) -> DataFrame:
     """CAST value->string, parse JSON with explicit schema, flatten.

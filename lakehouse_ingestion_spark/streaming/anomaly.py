@@ -11,32 +11,32 @@ Welford/Chan triple ``(n, mean, M2)``:
   triple with Chan's parallel-merge formula, so each batch is ONE
   vectorized numpy pass, not a per-row Python loop;
 - constant size (24 bytes/key) — state is bounded by key cardinality,
-  and the optional processing-time timeout evicts idle keys.
+  and the opt-in ``timeout_ms`` evicts idle keys
+  (``stateful.keyed_state``).
 
 Scoring semantics: events in a micro-batch are scored against the state
 as of the END of the previous batch (the batch is an atomic delta, the
 same contract micro-batch joins give), and no scores are emitted until
 a key has seen ``min_count`` events — early batches would otherwise
 flag everything against a 2-event "distribution".
-
-The state/batch function is self-contained (no module-global
-references) so it pickles by value for executors without this package
-installed.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
     StructField,
     StructType,
 )
+
+from lakehouse_ingestion_spark.streaming.stateful import keyed_state
 
 _STATE_SCHEMA = StructType(
     [
@@ -46,11 +46,6 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-_TIMEOUTS = {
-    "NoTimeout": GroupStateTimeout.NoTimeout,
-    "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-}
-
 
 def streaming_zscore(
     df: DataFrame,
@@ -58,74 +53,46 @@ def streaming_zscore(
     value_column: str,
     z: float = 3.0,
     min_count: int = 30,
-    timeout: str = "NoTimeout",
-    timeout_duration_ms: int = 3_600_000,
+    timeout_ms: int | None = None,
 ) -> DataFrame:
     """Per-key streaming outliers: emits ``(key, value, zscore)`` for
     events more than ``z`` population standard deviations from their
     key's running mean (state: Welford ``(n, mean, M2)``; update output
-    mode). Keys idle past ``timeout_duration_ms`` are evicted when
-    ``timeout="ProcessingTimeTimeout"``."""
+    mode). ``timeout_ms`` evicts idle keys (see
+    ``stateful.keyed_state``)."""
     if z <= 0:
         raise ValueError(f"z must be positive, got {z}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    if timeout not in _TIMEOUTS:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected one of {sorted(_TIMEOUTS)}"
-        )
-    key_field = df.schema[key_column]
-    out_schema = StructType(
-        [
-            StructField(key_column, key_field.dataType, True),
-            StructField("value", DoubleType(), True),
-            StructField("zscore", DoubleType(), True),
-        ]
-    )
-    key_col = key_column
-    val_col = value_column
     z_limit = float(z)
     need = int(min_count)
-    armed = timeout == "ProcessingTimeTimeout"
-    duration = int(timeout_duration_ms)
 
-    def _update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math as _math
-
-        import numpy as _np
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        # `batches` arrives in Arrow-sized chunks; the scoring snapshot is
-        # the PRE-batch state for EVERY chunk (never state mid-updated by
-        # an earlier chunk of the same batch), so output is independent of
+    def fold(st: tuple, chunks: Iterator[pd.DataFrame]):
+        n, mean, m2 = st
+        # `chunks` arrive Arrow-sized; the scoring snapshot is the
+        # PRE-batch state for EVERY chunk (never state mid-updated by an
+        # earlier chunk of the same batch), so output is independent of
         # spark.sql.execution.arrow.maxRecordsPerBatch — the documented
         # "score against the state as of the END of the previous batch"
         # contract. Chunk stats fold into separate accumulators committed
         # once after the loop.
         snap_n, snap_mean, snap_m2 = n, mean, m2
         snap_std = (
-            _math.sqrt(snap_m2 / snap_n)
+            math.sqrt(snap_m2 / snap_n)
             if snap_n >= need and snap_m2 > 0.0
             else None
         )
         hits_v: list = []
         hits_z: list = []
-        for pdf in batches:
-            v = pdf[val_col].astype("float64").to_numpy()
-            v = v[~_np.isnan(v)]
+        for pdf in chunks:
+            v = pdf[value_column].astype("float64").to_numpy()
+            v = v[~np.isnan(v)]
             if len(v) == 0:
                 continue
             # score against the pre-batch snapshot
             if snap_std is not None:
                 zs = (v - snap_mean) / snap_std
-                mask = _np.abs(zs) > z_limit
+                mask = np.abs(zs) > z_limit
                 if mask.any():
                     hits_v.append(v[mask])
                     hits_z.append(zs[mask])
@@ -139,20 +106,19 @@ def streaming_zscore(
             mean = mean + delta * bn / tot
             m2 = m2 + bm2 + delta * delta * n * bn / tot
             n = tot
-        state.update((int(n), float(mean), float(m2)))
-        if armed:
-            state.setTimeoutDuration(duration)
+        out = []
         if hits_v:
-            v = _np.concatenate(hits_v)
-            zs = _np.concatenate(hits_z)
-            yield _pd.DataFrame(
-                {key_col: [key[0]] * len(v), "value": v, "zscore": zs}
+            out.append(
+                pd.DataFrame({"value": np.concatenate(hits_v), "zscore": np.concatenate(hits_z)})
             )
+        return (int(n), float(mean), float(m2)), out
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=_TIMEOUTS[timeout],
+    return keyed_state(
+        df,
+        [key_column],
+        fold,
+        _STATE_SCHEMA,
+        (0, 0.0, 0.0),
+        [StructField("value", DoubleType(), True), StructField("zscore", DoubleType(), True)],
+        timeout_ms=timeout_ms,
     )

@@ -9,11 +9,11 @@ timestamp, one float per live key).  Within a batch, rows are ordered
 by (ts, tiebreak) before the gap test, so intra-batch bursts collapse
 exactly as the batch operator's lag window does.
 
-State is ONE row per live key; ``ProcessingTimeTimeout`` evicts keys
-idle longer than the timeout so high-cardinality key spaces stay
-bounded — after eviction the key's next event is treated as first-seen
-(kept), the same judgement the batch operator makes at the top of a
-partition.
+State is ONE row per live key. The opt-in ``timeout_ms`` evicts keys
+idle that long so high-cardinality key spaces stay bounded — after
+eviction the key's next event is treated as first-seen (kept), the same
+judgement the batch operator makes at the top of a partition. Eviction
+needs a ``processingTime`` trigger (see ``stateful.keyed_state``).
 
 Out-of-order arrivals ACROSS batches are resolved against the newest
 timestamp seen so far (the state keeps ``max`` of seen ts): a straggler
@@ -29,8 +29,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from lakehouse_ingestion_spark.streaming.stateful import keyed_state
 
 _STATE_SCHEMA = StructType([StructField("last_ts", DoubleType(), True)])
 
@@ -41,54 +42,34 @@ def streaming_event_dedup(
     ts_col: str,
     min_gap_seconds: int,
     tiebreak: list[str] | None = None,
-    timeout_ms: int | None = 3_600_000,
+    timeout_ms: int | None = None,
 ) -> DataFrame:
     """Suppress same-key repeats within ``min_gap_seconds`` across
     micro-batches.  Emits kept rows with the input schema (append-style
-    update output).  ``timeout_ms=None`` disables state eviction —
-    only safe on bounded key spaces.
+    update output).  ``timeout_ms`` evicts idle keys; without it state
+    grows with the key space.
     """
     if min_gap_seconds <= 0:
         raise ValueError(
             f"min_gap_seconds must be positive, got {min_gap_seconds}"
         )
-    out_schema = df.schema
     sort_cols = [ts_col] + list(tiebreak or [])
     gap = float(min_gap_seconds)
-    ts_name = ts_col
 
-    def _update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last = state.get[0] if state.exists else None
-        for pdf in pdfs:
+    def fold(st: tuple, chunks: Iterator[pd.DataFrame]):
+        last = st[0]
+        out = []
+        for pdf in chunks:
             if pdf.empty:
                 continue
             pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            ts_vals = pdf[ts_name].astype("float64").tolist()
             keep = []
-            for t in ts_vals:
-                ok = last is None or t - last >= gap
-                keep.append(ok)
+            for t in pdf[ts_col].astype("float64").tolist():
+                keep.append(last is None or t - last >= gap)
                 last = t if last is None else max(last, t)
-            kept = pdf[pd.Series(keep, index=pdf.index)]
-            if not kept.empty:
-                yield kept
-        if last is not None:
-            state.update((float(last),))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(int(timeout_ms))
+            out.append(pdf[pd.Series(keep, index=pdf.index)])
+        return (last,), out
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        _update, out_schema, _STATE_SCHEMA, "update", timeout
+    return keyed_state(
+        df, key_cols, fold, _STATE_SCHEMA, (None,), None, timeout_ms=timeout_ms
     )

@@ -4,7 +4,8 @@ The streaming counterpart to ``operators/funnel.funnel_stages``: batch
 funnels re-fold every user's full history each run; the stream carries
 each user's progress as TWO values — (stage reached, timestamp of the
 last matched step) — and advances it per micro-batch. State is constant
-size per user regardless of event volume, with optional idle eviction.
+size per user regardless of event volume, with opt-in idle eviction
+(``timeout_ms``, ``stateful.keyed_state``).
 
 Semantics match the batch operator's greedy strict-ordering fold
 (events sorted by time; a step matches only strictly after the previous
@@ -24,13 +25,14 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     StructField,
     StructType,
 )
+
+from lakehouse_ingestion_spark.streaming.stateful import keyed_state
 
 _STATE_SCHEMA = StructType(
     [
@@ -39,11 +41,6 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-_TIMEOUTS = {
-    "NoTimeout": GroupStateTimeout.NoTimeout,
-    "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-}
-
 
 def streaming_funnel(
     df: DataFrame,
@@ -51,77 +48,52 @@ def streaming_funnel(
     ts_column: str,
     step_column: str,
     steps: list[str],
-    timeout: str = "NoTimeout",
-    timeout_duration_ms: int = 86_400_000,
+    timeout_ms: int | None = None,
 ) -> DataFrame:
     """Per-user funnel stage across micro-batches: emits
-    ``(user, stage, stage_name)`` whenever a user's stage advances.
-    State: (stage, last-matched epoch seconds) — constant per user."""
+    ``(user, stage)`` whenever a user's stage advances.
+    State: (stage, last-matched epoch seconds) — constant per user.
+    ``timeout_ms`` evicts idle users (see ``stateful.keyed_state``)."""
     if not steps:
         raise ValueError("steps must be non-empty")
-    if timeout not in _TIMEOUTS:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected one of {sorted(_TIMEOUTS)}"
-        )
-    key_field = df.schema[user_column]
-    out_schema = StructType(
-        [
-            StructField(user_column, key_field.dataType, True),
-            StructField("stage", IntegerType(), True),
-        ]
-    )
-    user_col = user_column
-    ts_col = ts_column
-    step_col = step_column
     steps_l = list(steps)
-    armed = timeout == "ProcessingTimeTimeout"
-    duration = int(timeout_duration_ms)
 
-    def _update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        stage, last_ts = state.get if state.exists else (0, None)
+    def fold(st: tuple, chunks: Iterator[pd.DataFrame]):
+        stage, last_ts = st
         start_stage = stage
         # concat the user's Arrow chunks so the time sort spans the WHOLE
         # micro-batch (per-chunk sorting would leak arrival order across
         # chunk boundaries); per-user-per-batch volume bounds the buffer
-        chunks = [pdf[[ts_col, step_col]].dropna() for pdf in batches]
+        parts = [pdf[[ts_column, step_column]].dropna() for pdf in chunks]
         sub = (
-            _pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else (chunks[0] if chunks else _pd.DataFrame({ts_col: [], step_col: []}))
+            pd.concat(parts, ignore_index=True)
+            if len(parts) > 1
+            else (parts[0] if parts else pd.DataFrame({ts_column: [], step_column: []}))
         )
-        sub = sub.sort_values(ts_col, kind="stable")
-        tsv = sub[ts_col]
-        if _pd.api.types.is_datetime64_any_dtype(tsv):
+        sub = sub.sort_values(ts_column, kind="stable")
+        tsv = sub[ts_column]
+        if pd.api.types.is_datetime64_any_dtype(tsv):
             # datetime64[ns] -> epoch seconds; numeric ts columns are
             # already epoch seconds and pass through unscaled (a blanket
             # /1e9 would silently store wrong-unit state)
             tsv = tsv.astype("int64") / 1e9
         else:
             tsv = tsv.astype("float64")
-        for ts, step in zip(tsv, sub[step_col]):
+        for ts, step in zip(tsv, sub[step_column]):
             if stage >= len(steps_l):
                 break
             if step == steps_l[stage] and (last_ts is None or ts > last_ts):
                 stage += 1
                 last_ts = float(ts)
-        state.update((int(stage), last_ts))
-        if armed:
-            state.setTimeoutDuration(duration)
-        if stage > start_stage:
-            yield _pd.DataFrame({user_col: [key[0]], "stage": [stage]})
+        out = [pd.DataFrame({"stage": [stage]})] if stage > start_stage else []
+        return (int(stage), last_ts), out
 
-    return df.groupBy(user_col).applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=_TIMEOUTS[timeout],
+    return keyed_state(
+        df,
+        [user_column],
+        fold,
+        _STATE_SCHEMA,
+        (0, None),
+        [StructField("stage", IntegerType(), True)],
+        timeout_ms=timeout_ms,
     )

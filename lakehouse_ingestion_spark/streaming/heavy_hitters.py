@@ -31,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -39,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from lakehouse_ingestion_spark.streaming.stateful import keyed_state
 
 _STATE_SCHEMA = StructType(
     [
@@ -61,32 +62,13 @@ def streaming_heavy_hitters(
     of the true count (never above it). Update output mode."""
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
-    key_field = df.schema[key_column]
-    out_schema = StructType(
-        [
-            StructField(key_column, key_field.dataType, True),
-            StructField("item", StringType(), True),
-            StructField("est_count", LongType(), True),
-            StructField("total_seen", LongType(), True),
-        ]
-    )
-    key_col = key_column
-    item_col = item_column
     cap = int(capacity)
 
-    def _update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        if state.exists:
-            items, counts, total = state.get
-            summary = dict(zip(items, counts))
-        else:
-            summary, total = {}, 0
-
-        for pdf in batches:
-            vc = pdf[item_col].dropna().astype(str).value_counts()
+    def fold(st: tuple, chunks: Iterator[pd.DataFrame]):
+        items, counts, total = st
+        summary = dict(zip(items, counts))
+        for pdf in chunks:
+            vc = pdf[item_column].dropna().astype(str).value_counts()
             total += int(vc.sum())
             for item, c in vc.items():
                 summary[item] = summary.get(item, 0) + int(c)
@@ -97,24 +79,26 @@ def streaming_heavy_hitters(
                 summary = {
                     i: c - kth for i, c in summary.items() if c - kth > 0
                 }
+        # deterministic emission order: count desc, then item
+        ordered = sorted(summary.items(), key=lambda kv: (-kv[1], kv[0]))
+        out = pd.DataFrame(
+            {
+                "item": [i for i, _ in ordered],
+                "est_count": [c for _, c in ordered],
+                "total_seen": [total] * len(ordered),
+            }
+        )
+        return (list(summary), [int(c) for c in summary.values()], int(total)), [out]
 
-        state.update((list(summary), [int(c) for c in summary.values()], int(total)))
-        if summary:
-            # deterministic emission order: count desc, then item
-            ordered = sorted(summary.items(), key=lambda kv: (-kv[1], kv[0]))
-            yield _pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(ordered),
-                    "item": [i for i, _ in ordered],
-                    "est_count": [c for _, c in ordered],
-                    "total_seen": [total] * len(ordered),
-                }
-            )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df,
+        [key_column],
+        fold,
+        _STATE_SCHEMA,
+        ([], [], 0),
+        [
+            StructField("item", StringType(), True),
+            StructField("est_count", LongType(), True),
+            StructField("total_seen", LongType(), True),
+        ],
     )

@@ -15,8 +15,8 @@ merging formulation), so
 - emission (update mode) is the current quantile estimates after each
   batch that saw data for the key — the live p50/p95/p99 dashboard row.
 
-Idle keys evict via the optional processing-time timeout, same contract
-as the other stateful operators here. The fold and the estimate are the
+Idle keys evict via the opt-in ``timeout_ms``, the same contract as the
+other per-key operators here (``stateful.keyed_state``). The fold and the estimate are the
 batch operator's own kernels (``sketches._td_compress`` /
 ``_td_estimate``), so streaming and batch digests compress identically.
 """
@@ -25,9 +25,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from lakehouse_ingestion_spark.operators.sketches import _td_compress, _td_estimate
+from lakehouse_ingestion_spark.streaming.stateful import keyed_state
 
 _STATE_SCHEMA = StructType(
     [
@@ -48,11 +49,6 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-_TIMEOUTS = {
-    "NoTimeout": GroupStateTimeout.NoTimeout,
-    "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-}
-
 
 def streaming_quantiles(
     df: DataFrame,
@@ -60,14 +56,14 @@ def streaming_quantiles(
     value_column: str,
     quantiles: list[float] = (0.5, 0.95, 0.99),
     compression: int = 400,
-    timeout: str = "NoTimeout",
-    timeout_duration_ms: int = 3_600_000,
+    timeout_ms: int | None = None,
 ) -> DataFrame:
     """Per-key running quantile estimates: emits one row per key per
     micro-batch that carried data for it — ``(key, n, q_50, q_95, ...)``
     with column names derived from the requested quantiles (``0.95`` ->
     ``q_95``; fractional tails keep digits: ``0.999`` -> ``q_999``).
-    State: one bounded t-digest per key. Update output mode."""
+    State: one bounded t-digest per key. Update output mode.
+    ``timeout_ms`` evicts idle keys (see ``stateful.keyed_state``)."""
     qs = [float(q) for q in quantiles]
     if not qs:
         raise ValueError("quantiles must be non-empty")
@@ -75,10 +71,6 @@ def streaming_quantiles(
         raise ValueError(f"quantiles must be in [0,1], got {quantiles}")
     if compression < 8:
         raise ValueError(f"compression must be >= 8, got {compression}")
-    if timeout not in _TIMEOUTS:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected one of {sorted(_TIMEOUTS)}"
-        )
 
     def _qname(q: float) -> str:
         s = f"{q:.10f}".rstrip("0").lstrip("0").strip(".")
@@ -87,70 +79,44 @@ def streaming_quantiles(
     qnames = [_qname(q) for q in qs]
     if len(set(qnames)) != len(qnames):
         raise ValueError(f"duplicate quantiles: {quantiles}")
-    key_field = df.schema[key_column]
-    out_schema = StructType(
-        [
-            StructField(key_column, key_field.dataType, True),
-            StructField("n", LongType(), True),
-            *[StructField(nm, DoubleType(), True) for nm in qnames],
-        ]
-    )
-    key_col = key_column
-    val_col = value_column
     n_bins = int(compression)
-    armed = timeout == "ProcessingTimeTimeout"
-    duration = int(timeout_duration_ms)
 
-    def _update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        if state.exists:
-            n, mn, mx, means_l, weights_l = state.get
-            means = _np.asarray(means_l, dtype="float64")
-            weights = _np.asarray(weights_l, dtype="float64")
-        else:
-            n, mn, mx = 0, None, None
-            means = _np.array([], dtype="float64")
-            weights = _np.array([], dtype="float64")
-
+    def fold(st: tuple, chunks: Iterator[pd.DataFrame]):
+        n, mn, mx, means_l, weights_l = st
+        means = np.asarray(means_l, dtype="float64")
+        weights = np.asarray(weights_l, dtype="float64")
         saw = False
-        for pdf in batches:
-            v = pdf[val_col].astype("float64").to_numpy()
-            v = v[~_np.isnan(v)]
+        for pdf in chunks:
+            v = pdf[value_column].astype("float64").to_numpy()
+            v = v[~np.isnan(v)]
             if len(v) == 0:
                 continue
             saw = True
-            v = _np.sort(v)
+            v = np.sort(v)
             mn = float(v[0]) if mn is None else min(mn, float(v[0]))
             mx = float(v[-1]) if mx is None else max(mx, float(v[-1]))
             n += len(v)
-            allm = _np.concatenate([means, v])
-            allw = _np.concatenate([weights, _np.ones(len(v))])
-            order = _np.argsort(allm, kind="stable")
+            allm = np.concatenate([means, v])
+            allw = np.concatenate([weights, np.ones(len(v))])
+            order = np.argsort(allm, kind="stable")
             means, weights = _td_compress(allm[order], allw[order], n_bins)
-
-        state.update(
-            (int(n), mn, mx, means.tolist(), weights.tolist())
-        )
-        if armed:
-            state.setTimeoutDuration(duration)
+        out = []
         if saw:
-            row = {key_col: [key[0]], "n": [int(n)]}
+            row = {"n": [int(n)]}
             for q, nm in zip(qs, qnames):
                 row[nm] = [_td_estimate(means, weights, mn, mx, q)]
-            yield _pd.DataFrame(row)
+            out.append(pd.DataFrame(row))
+        return (int(n), mn, mx, means.tolist(), weights.tolist()), out
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=_TIMEOUTS[timeout],
+    return keyed_state(
+        df,
+        [key_column],
+        fold,
+        _STATE_SCHEMA,
+        (0, None, None, [], []),
+        [
+            StructField("n", LongType(), True),
+            *[StructField(nm, DoubleType(), True) for nm in qnames],
+        ],
+        timeout_ms=timeout_ms,
     )

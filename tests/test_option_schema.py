@@ -177,6 +177,23 @@ def test_closed_sink_modules_listed():
     assert closed == set(_CLOSED_SINK_MODULES)
 
 
+# --- sources --------------------------------------------------------------
+
+
+def test_unknown_source_type_raises_at_load():
+    """A misspelled source type fails in parse_config, naming the job and
+    the registered types, not later in run_job."""
+    raw = {"jobs": [{
+        "name": "orders",
+        "source": {"type": "kafak", "options": {}},
+        "target": {"format": "parquet", "options": {"path": "/tmp/out"}},
+    }]}
+    with pytest.raises(ConfigError, match=r"job 'orders': unknown source type 'kafak'.*'kafka'"):
+        parse_config(raw)
+    raw["jobs"][0]["source"]["type"] = "Kafka"  # dispatch is case-insensitive
+    assert parse_config(raw).jobs[0].source.type == "Kafka"
+
+
 # --- transforms -----------------------------------------------------------
 
 

@@ -216,101 +216,6 @@ def test_pipeline_ops_for_r10_operators(spark, tmp_path):
     assert {r["event_id"] for r in kept.collect()} == {1}
 
 
-# ------------------------------------------------ streaming event dedup
-
-
-@pytest.mark.slow
-def test_streaming_event_dedup_parity_and_restart(spark, tmp_path):
-    """Cross-batch gap suppression matches the batch operator's lag
-    semantics, and a fresh query instance resuming from the checkpoint
-    keeps the per-key last-seen state (no re-emission)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from lakehouse_ingestion_spark.streaming.event_dedup import (
-        streaming_event_dedup,
-    )
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    (indir / "b1.jsonl").write_text(
-        "\n".join(
-            _json.dumps({"user_id": 1, "event_type": "c", "ts": t,
-                         "event_id": i})
-            for i, t in [(1, 100.0), (2, 102.0), (3, 109.0)]
-        )
-    )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts double, event_id long"
-        )
-        .format("json")
-        .load(str(indir))
-    )
-    out = streaming_event_dedup(
-        stream, ["user_id", "event_type"], "ts", 5, tiebreak=["event_id"]
-    )
-    sink, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-
-    def run():
-        q = (
-            out.writeStream.foreachBatch(
-                lambda b, e: b.write.mode("append").parquet(sink)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    kept1 = {r["event_id"] for r in spark.read.parquet(sink).collect()}
-    assert kept1 == {1, 3}  # event 2 is 2s after 1 -> suppressed
-
-    # batch 2 resumes from state: 111.0 is 2s after the stored 109.0 ->
-    # suppressed even though it's the first event of ITS batch
-    (indir / "b2.jsonl").write_text(
-        "\n".join(
-            _json.dumps({"user_id": 1, "event_type": "c", "ts": t,
-                         "event_id": i})
-            for i, t in [(4, 111.0), (5, 120.0)]
-        )
-    )
-    run()
-    kept2 = {r["event_id"] for r in spark.read.parquet(sink).collect()}
-    assert kept2 == {1, 3, 5}
-
-    # parity: the batch operator over the full event log agrees
-    from lakehouse_ingestion_spark.operators.dedup import event_window_dedup
-
-    full = spark.createDataFrame(
-        [(1, "c", 100.0, 1), (1, "c", 102.0, 2), (1, "c", 109.0, 3),
-         (1, "c", 111.0, 4), (1, "c", 120.0, 5)],
-        "user_id long, event_type string, ts double, event_id long",
-    )
-    batch_kept = {
-        r["event_id"]
-        for r in event_window_dedup(
-            full, ["user_id", "event_type"], "ts", 5, tiebreak=["event_id"]
-        ).collect()
-    }
-    assert batch_kept == kept2
-
-
-def test_streaming_event_dedup_validates(spark):
-    import pytest as _pytest
-
-    from lakehouse_ingestion_spark.streaming.event_dedup import (
-        streaming_event_dedup,
-    )
-
-    df = spark.createDataFrame([], "user_id long, ts double")
-    with _pytest.raises(ValueError, match="min_gap_seconds"):
-        streaming_event_dedup(df, ["user_id"], "ts", 0)
-
-
 def test_shipped_corpus_audit_config_runs(spark, tmp_path):
     """configs/corpus-audit.yaml: both audit jobs run end-to-end with
     repointed paths."""

@@ -1,4 +1,6 @@
 import json
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -172,7 +174,7 @@ def test_stateful_long_key_and_timeout_validation(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="timeout"):
-        running_aggregate(stream, "uid", "v", timeout="EventTimeTimeout?!")
+        running_aggregate(stream, "uid", "v", timeout_ms=0)
 
 
 def test_streaming_zscore_accumulates_and_flags(spark, tmp_path):
@@ -240,7 +242,7 @@ def test_streaming_zscore_validates(spark, tmp_path):
     with pytest.raises(ValueError, match="min_count"):
         streaming_zscore(stream, "key", "v", min_count=1)
     with pytest.raises(ValueError, match="timeout"):
-        streaming_zscore(stream, "key", "v", timeout="whenever")
+        streaming_zscore(stream, "key", "v", timeout_ms=0)
 
 
 def test_streaming_heavy_hitters_bounds(spark, tmp_path):
@@ -418,7 +420,7 @@ def test_streaming_funnel_validates(spark, tmp_path):
     with pytest.raises(ValueError, match="steps"):
         streaming_funnel(stream, "user", "ts", "step", [])
     with pytest.raises(ValueError, match="timeout"):
-        streaming_funnel(stream, "user", "ts", "step", ["view"], timeout="never")
+        streaming_funnel(stream, "user", "ts", "step", ["view"], timeout_ms=0)
 
 
 def test_streaming_zscore_chunk_size_independent(spark, tmp_path):
@@ -599,6 +601,200 @@ def test_streaming_quantiles_validates(spark, tmp_path):
     with pytest.raises(ValueError, match="compression"):
         streaming_quantiles(stream, "key", "v", compression=2)
     with pytest.raises(ValueError, match="timeout"):
-        streaming_quantiles(stream, "key", "v", timeout="sometimes")
+        streaming_quantiles(stream, "key", "v", timeout_ms=0)
     with pytest.raises(ValueError, match="duplicate"):
         streaming_quantiles(stream, "key", "v", quantiles=[0.5, 0.50])
+
+
+def test_streaming_event_dedup_parity_and_restart(spark, tmp_path):
+    """Cross-batch gap suppression matches the batch operator's lag
+    semantics, and a fresh query instance resuming from the checkpoint
+    keeps the per-key last-seen state (no re-emission)."""
+    from lakehouse_ingestion_spark.streaming.event_dedup import (
+        streaming_event_dedup,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "b1.jsonl").write_text(
+        "\n".join(
+            json.dumps({"user_id": 1, "event_type": "c", "ts": t,
+                        "event_id": i})
+            for i, t in [(1, 100.0), (2, 102.0), (3, 109.0)]
+        )
+    )
+    stream = (
+        spark.readStream.schema(
+            "user_id long, event_type string, ts double, event_id long"
+        )
+        .format("json")
+        .load(str(indir))
+    )
+    out = streaming_event_dedup(
+        stream, ["user_id", "event_type"], "ts", 5, tiebreak=["event_id"]
+    )
+    sink, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+
+    def run():
+        q = (
+            out.writeStream.foreachBatch(
+                lambda b, e: b.write.mode("append").parquet(sink)
+            )
+            .outputMode("update")
+            .option("checkpointLocation", cp)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+
+    run()
+    kept1 = {r["event_id"] for r in spark.read.parquet(sink).collect()}
+    assert kept1 == {1, 3}  # event 2 is 2s after 1 -> suppressed
+
+    # batch 2 resumes from state: 111.0 is 2s after the stored 109.0 ->
+    # suppressed even though it's the first event of ITS batch
+    (indir / "b2.jsonl").write_text(
+        "\n".join(
+            json.dumps({"user_id": 1, "event_type": "c", "ts": t,
+                        "event_id": i})
+            for i, t in [(4, 111.0), (5, 120.0)]
+        )
+    )
+    run()
+    kept2 = {r["event_id"] for r in spark.read.parquet(sink).collect()}
+    assert kept2 == {1, 3, 5}
+
+    # parity: the batch operator over the full event log agrees
+    from lakehouse_ingestion_spark.operators.dedup import event_window_dedup
+
+    full = spark.createDataFrame(
+        [(1, "c", 100.0, 1), (1, "c", 102.0, 2), (1, "c", 109.0, 3),
+         (1, "c", 111.0, 4), (1, "c", 120.0, 5)],
+        "user_id long, event_type string, ts double, event_id long",
+    )
+    batch_kept = {
+        r["event_id"]
+        for r in event_window_dedup(
+            full, ["user_id", "event_type"], "ts", 5, tiebreak=["event_id"]
+        ).collect()
+    }
+    assert batch_kept == kept2
+
+
+def test_streaming_event_dedup_validates(spark):
+    from lakehouse_ingestion_spark.streaming.event_dedup import (
+        streaming_event_dedup,
+    )
+
+    df = spark.createDataFrame([], "user_id long, ts double")
+    with pytest.raises(ValueError, match="min_gap_seconds"):
+        streaming_event_dedup(df, ["user_id"], "ts", 0)
+
+
+def _drop_file(indir, name, rows):
+    """Move a complete JSON-lines file into a watched source directory."""
+    tmp = indir.parent / f".{name}"
+    tmp.write_text("\n".join(json.dumps(r) for r in rows))
+    os.replace(tmp, indir / name)
+
+
+def _wait_for(cond, what, q, deadline_s=90.0):
+    """Poll ``cond`` until it holds; fail on the deadline or a dead query.
+    Eviction needs a processingTime trigger, so these queries never
+    terminate on their own and cannot use ``processAllAvailable``."""
+    end = time.monotonic() + deadline_s
+    while not cond():
+        if q.exception() is not None:
+            raise AssertionError(f"query failed waiting for {what}: {q.exception()}")
+        assert time.monotonic() < end, f"no {what} within {deadline_s}s"
+        time.sleep(0.2)
+
+
+def test_running_aggregate_evicts_idle_key(spark, tmp_path):
+    """``timeout_ms`` arms eviction under a processingTime trigger: the
+    idle key emits ``is_final=True`` with its totals, and its next event
+    starts over from fresh state."""
+    from lakehouse_ingestion_spark.streaming.stateful import running_aggregate
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _drop_file(indir, "b1.jsonl", [{"key": "a", "v": 1.0}, {"key": "a", "v": 2.0}])
+    stream = spark.readStream.schema("key string, v double").format("json").load(str(indir))
+    rows = []
+    q = (
+        running_aggregate(stream, "key", "v", timeout_ms=500)
+        .writeStream.foreachBatch(lambda b, e: rows.extend(b.collect()))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        _wait_for(lambda: any(r.is_final for r in rows), "eviction", q)
+        seen = [(r.key, r.n_events, r.total_value, r.is_final) for r in rows]
+        assert seen == [("a", 2, 3.0, False), ("a", 2, 3.0, True)]
+        _drop_file(indir, "b2.jsonl", [{"key": "a", "v": 10.0}])
+        _wait_for(lambda: len(rows) > 2, "row after eviction", q)
+        r = rows[2]
+        assert (r.key, r.n_events, r.total_value, r.is_final) == ("a", 1, 10.0, False)
+    finally:
+        q.stop()
+
+
+def test_streaming_event_dedup_keeps_repeat_after_eviction(spark, tmp_path):
+    """An evicted key's next event is first-seen again: a repeat inside
+    ``min_gap_seconds`` of the stored timestamp is kept once the key has
+    idled past ``timeout_ms``."""
+    from lakehouse_ingestion_spark.streaming.event_dedup import (
+        streaming_event_dedup,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _drop_file(indir, "b1.jsonl", [{"user_id": 1, "ts": 100.0, "event_id": 1},
+                                   {"user_id": 1, "ts": 102.0, "event_id": 3}])
+    stream = (
+        spark.readStream.schema("user_id long, ts double, event_id long")
+        .format("json")
+        .load(str(indir))
+    )
+    kept = []
+    q = (
+        streaming_event_dedup(stream, ["user_id"], "ts", 60, tiebreak=["event_id"],
+                              timeout_ms=500)
+        .writeStream.foreachBatch(lambda b, e: kept.extend(r.event_id for r in b.collect()))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+
+    def evicted():
+        return any(
+            p["stateOperators"] and p["stateOperators"][0]["numRowsRemoved"] > 0
+            for p in q.recentProgress
+        )
+
+    try:
+        _wait_for(evicted, "eviction", q)
+        assert kept == [1]  # event 3 is 2 s after event 1
+        # 101.0 is inside the gap of (and older than) the evicted 102.0
+        _drop_file(indir, "b2.jsonl", [{"user_id": 1, "ts": 101.0, "event_id": 2}])
+        _wait_for(lambda: len(kept) > 1, "repeat after eviction", q)
+        assert kept == [1, 2]
+    finally:
+        q.stop()
+
+
+@pytest.mark.parametrize("bad", [0, -1, 1.5, "500", True])
+def test_timeout_ms_must_be_none_or_positive_int(spark, bad):
+    from lakehouse_ingestion_spark.streaming.event_dedup import (
+        streaming_event_dedup,
+    )
+    from lakehouse_ingestion_spark.streaming.stateful import running_aggregate
+
+    df = spark.createDataFrame([], "user_id long, ts double")
+    with pytest.raises(ValueError, match="timeout_ms"):
+        running_aggregate(df, "user_id", "ts", timeout_ms=bad)
+    with pytest.raises(ValueError, match="timeout_ms"):
+        streaming_event_dedup(df, ["user_id"], "ts", 5, timeout_ms=bad)
